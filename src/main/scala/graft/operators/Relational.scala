@@ -139,6 +139,17 @@ object Relational {
       element_at(col("__ps"), i + 1).as(name) }: _*)
   }
 
+  /** Total sort for an AGGREGATION tail whose post-exchange stage is
+    * trivial (final agg over a bounded group set): `coalesce(1)` is a
+    * narrow dependency, so the final agg, total sort and sink fuse into ONE
+    * single-task stage — no range-sampling job and one exchange fewer than
+    * `orderBy` (or `repartition(1)`). Only safe where the collapsed stage
+    * does O(groups) work; the map side (scan, partial agg, joins) keeps
+    * full parallelism behind the agg exchange. Ranking/join tails must not
+    * use it: coalesce would pull their real per-row work into one task. */
+  def reportSortFused(df: DataFrame, cols: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols: _*)
+
   /** Skew-safe exact distinct count: salt by `hash(valueCol) % nSalts` so one
     * hot group key fans out over `nSalts` reducers, then sum the per-salt
     * distinct counts. Exactness holds because each VALUE maps to exactly one

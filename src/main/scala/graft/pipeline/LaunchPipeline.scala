@@ -3,8 +3,11 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's full pipeline surface re-expressed Spark-first
   * (SURVEY.md §3): three zones (raw / processed / reports) over a filesystem
@@ -25,6 +28,9 @@ object LaunchPipeline {
   final case class LaunchEvent(id: String, url: String, name: String,
                                status: String, image_url: String,
                                license: String, net: java.sql.Date)
+
+  /** The public table's schema, `net` last (the partition column). */
+  private val launchEventSchema: StructType = Encoders.product[LaunchEvent].schema
 
   /** Typed view of the transform output. */
   def launchEventsDs(raw: DataFrame): Dataset[LaunchEvent] = {
@@ -89,6 +95,14 @@ object LaunchPipeline {
   private[pipeline] def hasNext(body: String): Boolean =
     nextNonNull.findFirstIn(body).isDefined
 
+  /** The active session's Hadoop conf — so a scheme or credentials set on
+    * the session (`fs.<scheme>.impl`, `spark.hadoop.fs.s3a.*`) resolve the
+    * zones here exactly as they do for Spark's readers and writers — or a
+    * default conf when no session is running. */
+  private def sessionHadoopConf(): Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new Configuration())(_.sessionState.newHadoopConf())
+
   /** Raw-zone landing with the reference's at-most-once semantics
     * (dags/rocket_launch_etl.py:53-63: `load_string` guarded by a key-exists
     * check). Returns true if written, false if the key already existed.
@@ -96,9 +110,8 @@ object LaunchPipeline {
     * filesystem URI the `Zones` base names (local, s3a, custom scheme).
     */
   def putRaw(zones: Zones, date: LocalDate, body: String,
-             conf: org.apache.hadoop.conf.Configuration =
-               new org.apache.hadoop.conf.Configuration()): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(zones.raw(date))
+             conf: Configuration = sessionHadoopConf()): Boolean = {
+    val p = new Path(zones.raw(date))
     val fs = p.getFileSystem(conf)
     if (fs.exists(p)) return false
     try {
@@ -117,9 +130,9 @@ object LaunchPipeline {
     * against a rate-limited API just to discard it); the create-no-overwrite
     * in putRaw still holds at-most-once under concurrent racers. */
   def ingest(zones: Zones, runDate: LocalDate, fetch: PageFetcher): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(zones.raw(runDate))
-    if (p.getFileSystem(new org.apache.hadoop.conf.Configuration()).exists(p))
-      return false
+    val conf = sessionHadoopConf()
+    val p = new Path(zones.raw(runDate))
+    if (p.getFileSystem(conf).exists(p)) return false
     val pages = fetchAllPages(fetch, runDate, runDate.plusDays(1))
     // Land page bodies as a JSON-lines document (one envelope per line);
     // the reader uses Ll2.schema either way. A multi-line body would make
@@ -129,7 +142,7 @@ object LaunchPipeline {
       "ingest: page body contains newlines — the raw zone is JSON-lines " +
         "(one envelope per line); configure the fetcher to return compact " +
         "single-line JSON"))
-    putRaw(zones, runDate, pages.mkString("\n"))
+    putRaw(zones, runDate, pages.mkString("\n"), conf)
   }
 
   // ------------------------------------------------------------- transform
@@ -187,18 +200,26 @@ object LaunchPipeline {
 
   // --------------------------------------------------------------- publish
 
-  /** Entry point sign-off (C3+C7): partition-pruned read of exactly the run
-    * date's partition (dags/rocket_launch_etl.py:127-131), promoted to the
-    * reports zone (:134-140). The `net === runDate` predicate is a partition
-    * filter — Catalyst plans a single-directory scan, no data filter.
+  /** Entry point sign-off (C3+C7): read exactly the run date's partition
+    * (dags/rocket_launch_etl.py:127-131) and promote it to the reports zone
+    * (:134-140). The scan's one root path is the `net=<runDate>` directory
+    * (`basePath` keeps `net` as its partition column) and the schema is the
+    * public one, so nothing lists or footer-samples the rest of the zone:
+    * the cost of a day does not grow with the history. A day with no
+    * processed partition (no launches) is a no-op — the dynamic overwrite
+    * of zero rows would change nothing either.
     */
-  def publish(spark: SparkSession, zones: Zones, runDate: LocalDate): Unit =
-    spark.read.parquet(zones.processed)
-      .where(col("net") === lit(java.sql.Date.valueOf(runDate)))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("net")
-      .parquet(zones.reports)
+  def publish(spark: SparkSession, zones: Zones, runDate: LocalDate): Unit = {
+    val day = new Path(zones.processed, s"net=$runDate")
+    if (day.getFileSystem(spark.sessionState.newHadoopConf()).exists(day))
+      spark.read.schema(launchEventSchema)
+        .option("basePath", zones.processed)
+        .parquet(day.toString)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("net")
+        .parquet(zones.reports)
+  }
 
   // --------------------------------------------------------------- serving
 
@@ -215,7 +236,10 @@ object LaunchPipeline {
          |USING PARQUET
          |PARTITIONED BY (net)
          |LOCATION '${zones.reports}'""".stripMargin)
-    spark.catalog.recoverPartitions(table)
+    // nothing published yet (only empty days so far): no partition to sync
+    val reports = new Path(zones.reports)
+    if (reports.getFileSystem(spark.sessionState.newHadoopConf()).exists(reports))
+      spark.catalog.recoverPartitions(table)
   }
 
   /** Schema-drift gate for the serving table (closing a gap SURVEY §1.3
@@ -244,16 +268,23 @@ object LaunchPipeline {
     * `salted = true` swaps in [[graft.operators.Relational.saltedDistinctCount]]
     * — the 100 TB form: a plain COUNT(DISTINCT) makes the hottest day one
     * straggler reducer, salting bounds it at 1/nSalts (same exact result,
-    * per-salt value sets are disjoint). */
+    * per-salt value sets are disjoint).
+    *
+    * The per-day result is one row per day, so the final `ORDER BY net`
+    * runs on one task ([[graft.operators.Relational.reportSortFused]]): no
+    * range-sampling job, one exchange fewer; the scan and partial
+    * aggregation stay parallel. */
   def dailyCounts(spark: SparkSession, table: String = "launch_events",
-                  salted: Boolean = false): DataFrame =
-    if (salted)
-      graft.operators.Relational.saltedDistinctCount(
+                  salted: Boolean = false): DataFrame = {
+    val perDay =
+      if (salted)
+        graft.operators.Relational.saltedDistinctCount(
           spark.table(table), Seq(col("net")), col("id"), "event_count")
-        .orderBy("net")
-    else spark.sql(
-      s"""SELECT net, COUNT(DISTINCT id) AS event_count
-         |FROM $table GROUP BY net ORDER BY net""".stripMargin)
+      else spark.sql(
+        s"""SELECT net, COUNT(DISTINCT id) AS event_count
+           |FROM $table GROUP BY net""".stripMargin)
+    graft.operators.Relational.reportSortFused(perDay, col("net"))
+  }
 
   /** Per-run hardening, opt-in so the default run stays byte-equivalent to
     * the reference's three-task chain:

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Portable, TextAnalysis, VectorFunctions => V}
 import graft.functions.Portable.{Spark => SparkD, Duck => DuckD}
 import graft.operators.{Dedup, Multimodal, Relational, Similarity}
+import graft.operators.Relational.reportSortFused
 import graft.sources.Tables
 
 /** The declared query set (SURVEY.md §2.12 Q1–Q16 + the extended
@@ -68,21 +69,11 @@ object Catalog {
   private def reportSort(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(1).sortWithinPartitions(cols: _*)
 
-  /** [[reportSort]] variant for AGGREGATION tails whose post-exchange stage
-    * is trivial (final agg over a bounded group set): `coalesce(1)` is a
-    * narrow dependency, so the final agg, total sort and sink fuse into ONE
-    * single-task stage — one fewer exchange/job than repartition(1). Only
-    * safe where the collapsed stage does O(groups) work; the map side
-    * (scan, partial agg, joins) keeps full parallelism behind the agg
-    * exchange. Ranking/join tails keep [[reportSort]]: coalesce would pull
-    * their real per-row work into the single task. */
-  private def reportSortFused(df: DataFrame, cols: Column*): DataFrame =
-    df.coalesce(1).sortWithinPartitions(cols: _*)
-
   /** [[reportSort]] that follows a query's [[oneTaskPlan]] decision: in the
     * fused branch everything is already one partition, so the coalesce(1)
-    * variant is a no-op narrow sort (repartition(1) would re-introduce the
-    * one exchange the fusion removed); at scale it is plain [[reportSort]]. */
+    * variant ([[Relational.reportSortFused]]) is a no-op narrow sort
+    * (repartition(1) would re-introduce the one exchange the fusion
+    * removed); at scale it is plain [[reportSort]]. */
   private def reportSortAuto(fused: Boolean)(df: DataFrame, cols: Column*): DataFrame =
     if (fused) reportSortFused(df, cols: _*) else reportSort(df, cols: _*)
 

@@ -122,19 +122,113 @@ class LaunchPipelineSpec extends AnyFunSuite {
 
   test("zones accept any Hadoop FS URI: pipeline runs on a custom scheme") {
     // a scheme that resolves to RawLocalFileSystem proves the pathing goes
-    // through the Hadoop FS layer (the s3a:// seam) without needing live S3
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val dir = Files.createTempDirectory("graft_lp_uri").toString
-    val z = LP.Zones(s"graftfs://$dir")
-    assert(LP.putRaw(z, day, fixtureA1, hc))
-    assert(!LP.putRaw(z, day, """{"count":0,"results":[]}""", hc)) // at-most-once
-    // the bytes really landed on the backing store
-    assert(Files.readString(java.nio.file.Paths.get(s"$dir/raw/launch/$day.json"))
-      == fixtureA1)
-    LP.transform(spark, z, day)
+    // through the Hadoop FS layer (the s3a:// seam) without needing live S3.
+    // It is registered in the session conf only, as s3a credentials would
+    // be, so the raw landing must resolve it through the session too.
+    spark.conf.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    try {
+      val dir = Files.createTempDirectory("graft_lp_uri").toString
+      val z = LP.Zones(s"graftfs://$dir")
+      val fetch: LP.PageFetcher = (_, _, _) => fixtureA1
+      LP.run(spark, z, day, fetch)
+      assert(!LP.ingest(z, day, fetch)) // at-most-once
+      assert(!LP.putRaw(z, day, """{"count":0,"results":[]}"""))
+      // the bytes really landed on the backing store
+      assert(Files.readString(java.nio.file.Paths.get(s"$dir/raw/launch/$day.json"))
+        == fixtureA1)
+      assert(spark.read.parquet(z.reports).count() == 2)
+    } finally spark.conf.unset("fs.graftfs.impl")
+  }
+
+  test("an empty first day publishes nothing and serves no rows; the next " +
+    "day is served exactly") {
+    val z = freshZones()
+    val table = s"launch_events_empty_${math.abs(z.base.hashCode)}"
+    LP.putRaw(z, day, """{"count": 0, "next": null, "previous": null, "results": []}""")
+    LP.transform(spark, z, day) // leaves a processed zone with no parquet file
     LP.publish(spark, z, day)
-    assert(spark.read.parquet(z.reports).count() == 2)
+    LP.registerTable(spark, z, table)
+    assert(LP.dailyCounts(spark, table).collect().isEmpty)
+    val next = day.plusDays(1)
+    LP.putRaw(z, next, fixtureA1.replaceAll("2024-12-01", next.toString))
+    LP.transform(spark, z, next)
+    LP.publish(spark, z, next)
+    LP.registerTable(spark, z, table)
+    assert(LP.dailyCounts(spark, table).collect().toSeq
+      == Seq(Row(java.sql.Date.valueOf(next), 2L)))
+    spark.sql(s"DROP TABLE $table")
+  }
+
+  test("daily interval job shape past 32 partitions: no listing job, publish " +
+    "runs at most one job, registerTable none; served counts exact and " +
+    "refreshed on a re-run") {
+    val z = freshZones()
+    val table = s"launch_events_jobs_${math.abs(z.base.hashCode)}"
+    val days = 40 // every 10th day empty: 36 partitions, past Spark's 32
+    def launches(i: Int): Int = if (i % 10 == 9) 0 else 1 + i % 3
+    def bodyFor(d: LocalDate, n: Int, tag: String): String = {
+      val results = (0 until n).map(k =>
+        s"""{"id": "$tag-$d-$k", "url": "u", "name": "n",
+           | "status": {"name": "s", "abbrev": "s"}, "image": null,
+           | "net": "${d}T0$k:00:00Z", "last_updated": "x"}""".stripMargin)
+      // a launch listed twice counts once
+      val listed = results ++ results.take(1)
+      s"""{"count": ${listed.size}, "next": null, "previous": null,
+         | "results": [${listed.mkString(", ")}]}""".stripMargin.replaceAll("\n", " ")
+    }
+    def dayOf(i: Int): LocalDate = day.plusDays(i)
+    val fetch: LP.PageFetcher = (start, _, _) =>
+      bodyFor(start, launches(start.toEpochDay.toInt - day.toEpochDay.toInt), "a")
+
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.phase")))
+          .foreach(ph => jobs.add(ph -> e.properties.getProperty("spark.job.description", "")))
+    }
+    val sc = spark.sparkContext
+    def phase[T](name: String)(body: => T): T = {
+      sc.setLocalProperty("graft.test.phase", name)
+      try body finally sc.setLocalProperty("graft.test.phase", null)
+    }
+    def served(): Map[LocalDate, Long] = {
+      phase("register")(LP.registerTable(spark, z, table))
+      phase("serve")(LP.dailyCounts(spark, table).collect())
+        .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
+    }
+    def expected(upTo: Int): Map[LocalDate, Long] =
+      (0 to upTo).filter(launches(_) > 0).map(i => dayOf(i) -> launches(i).toLong).toMap
+
+    sc.addSparkListener(listener)
+    try {
+      for (i <- 0 until days) {
+        val d = dayOf(i)
+        phase("ingest")(LP.ingest(z, d, fetch))
+        phase("transform")(LP.transform(spark, z, d))
+        phase(s"publish $d")(LP.publish(spark, z, d))
+        assert(served() == expected(i), s"day $d served wrong counts")
+      }
+      // re-run a served day with new content through the backfill driver:
+      // the refreshed table must not serve the stale file listing
+      val d = dayOf(days - 2)
+      Files.delete(java.nio.file.Paths.get(z.raw(d)))
+      LP.runRange(spark, z, d, d.plusDays(1), (start, _, _) => bodyFor(start, 5, "b"))
+      assert(served() == expected(days - 1).updated(d, 5L))
+      org.apache.spark.GraftListenerBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    assert(seen.exists(_._1 == "serve")) // the listener saw the interval
+    val listing = seen.filter(_._2.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"listing jobs: ${listing.map(_._1)}")
+    val publishJobs = seen.filter(_._1.startsWith("publish")).groupBy(_._1)
+    assert(publishJobs.values.forall(_.size <= 1),
+      s"publish jobs per day: ${publishJobs.map { case (k, v) => k -> v.size }}")
+    // partition sync gathers its stats on the driver
+    assert(!seen.exists(_._1 == "register"))
   }
 
   test("serving-schema drift is detected (C8 gap the reference leaves open)") {

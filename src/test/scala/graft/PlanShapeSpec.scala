@@ -407,4 +407,54 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(q01.contains("rangepartitioning"),
       s"q01's table-sized output must keep the parallel range sort:\n$q01")
   }
+
+  test("launch serving sorts its per-day result on one task (plain and " +
+    "salted); publish scans exactly the run date's directory") {
+    import graft.pipeline.{LaunchPipeline => LP}
+    val day = java.time.LocalDate.parse("2024-12-01")
+    val z = LP.Zones(Files.createTempDirectory("graft_lp_plan").toString)
+    val table = s"launch_events_plan_${math.abs(z.base.hashCode)}"
+    for (d <- Seq(day, day.plusDays(1))) {
+      LP.putRaw(z, d, s"""{"count": 1, "next": null, "results": [{"id": "a",
+        | "url": "u", "name": "n", "status": {"name": "s"}, "image": null,
+        | "net": "${d}T01:00:00Z"}]}""".stripMargin.replaceAll("\n", " "))
+      LP.transform(spark, z, d)
+    }
+    // the write command's analyzed plan names the relation publish scans
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        qe.analyzed.foreach {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation match {
+              case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+                roots.add(r.location.rootPaths.map(_.toString))
+              case _ =>
+            }
+          case _ =>
+        }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try LP.publish(spark, z, day)
+    finally {
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val scans = roots.asScala.toSeq
+    assert(scans.size == 1 && scans.head.size == 1 &&
+      scans.head.head.endsWith(s"/processed/launch/net=$day"),
+      s"publish should scan only net=$day, scanned roots: $scans")
+    LP.publish(spark, z, day.plusDays(1))
+    LP.registerTable(spark, z, table)
+    try for (salted <- Seq(false, true)) {
+      val plan = planOf(LP.dailyCounts(spark, table, salted))
+      assert(!plan.contains("rangepartitioning"),
+        s"dailyCounts(salted=$salted) should sort its per-day rows on one task:\n$plan")
+      assert(plan.contains("Sort"), s"dailyCounts(salted=$salted) lost its sort:\n$plan")
+    } finally spark.sql(s"DROP TABLE $table")
+  }
 }

@@ -14,9 +14,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Shuffle partitions default to the local core count, not Spark's default 200:
   * on a real cluster this would instead be sized to ~2-3× total executor cores
-  * or left to AQE's coalescing with a high initial value. File listing stays
-  * on the driver for the same reason (local mode has no remote executors to
-  * spread it over).
+  * or left to AQE's coalescing with a high initial value.
   */
 object GraftSession {
 
@@ -54,15 +52,6 @@ object GraftSession {
       // while keeping the engine's timestamp kit (unix_micros, window ranges,
       // date_trunc) on the one timestamp type every function supports.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // List files on the driver, whatever the path count. Past 32 paths
-      // (partition discovery) or 10 partitions (recoverPartitions' stats
-      // gather) Spark otherwise runs a "distributed" listing job — in
-      // local[n] the same JVM doing the same listStatus calls plus a job's
-      // scheduling cost: two such jobs per daily launch interval once the
-      // zones pass 32 partitions. A cluster listing thousands of
-      // object-store partitions should restore Spark's defaults.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
-      .config("spark.rdd.parallelListingThreshold", Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
       // Bound the status-store listener state: with the UI off these stores
       // exist only for the status APIs, yet default retention (1000 jobs /

@@ -7,6 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The reference's full pipeline surface re-expressed Spark-first
@@ -206,12 +207,17 @@ object LaunchPipeline {
     * (`basePath` keeps `net` as its partition column) and the schema is the
     * public one, so nothing lists or footer-samples the rest of the zone:
     * the cost of a day does not grow with the history. A day with no
-    * processed partition (no launches) is a no-op — the dynamic overwrite
-    * of zero rows would change nothing either.
+    * processed partition (no launches) publishes no rows — the dynamic
+    * overwrite of zero rows would change nothing either — but leaves the
+    * reports zone in place for [[registerTable]]. A processed zone that does
+    * not exist at all (a wrong base, or `transform` never ran) fails.
     */
   def publish(spark: SparkSession, zones: Zones, runDate: LocalDate): Unit = {
-    val day = new Path(zones.processed, s"net=$runDate")
-    if (day.getFileSystem(spark.sessionState.newHadoopConf()).exists(day))
+    val conf = spark.sessionState.newHadoopConf()
+    val processed = new Path(zones.processed)
+    val day = new Path(processed, s"net=$runDate")
+    val fs = processed.getFileSystem(conf)
+    if (fs.exists(day))
       spark.read.schema(launchEventSchema)
         .option("basePath", zones.processed)
         .parquet(day.toString)
@@ -219,13 +225,33 @@ object LaunchPipeline {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("net")
         .parquet(zones.reports)
+    else if (fs.exists(processed)) {
+      val reports = new Path(zones.reports)
+      reports.getFileSystem(conf).mkdirs(reports)
+    } else
+      throw new java.io.FileNotFoundException(
+        s"publish: processed zone ${zones.processed} does not exist")
   }
 
   // --------------------------------------------------------------- serving
 
   /** C8: external table over the reports zone (src/sql/ddl/launch_events.sql)
-    * + C9: partition discovery (src/sql/sync/launch_events.sql →
-    * `sync_partition_metadata`, Spark-side `recoverPartitions`).
+    * + C9: partition sync (src/sql/sync/launch_events.sql →
+    * `sync_partition_metadata(…, 'ADD')`). The sync lists the zone's root
+    * once, adds the `net=` directories the catalog lacks and refreshes the
+    * table, so a re-published day is read afresh. Unlike `recoverPartitions`
+    * it records no per-partition file statistics, which this parquet table's
+    * planning never reads and which cost a listing of every partition each
+    * day (a Spark job past 10 partitions).
+    *
+    * The sync also sets where the session lists the table's partitions for
+    * a query. A local session over a local-disk zone lists them on the
+    * driver at any count: each `listStatus` takes well under a millisecond,
+    * while Spark's listing job (past 32 paths) costs more to schedule than
+    * it saves. Any other master or filesystem gets the session's configured
+    * threshold back: against an object store each LIST waits on the network
+    * and the job overlaps them. The threshold is a session conf, so it holds
+    * for every table that session reads.
     */
   def registerTable(spark: SparkSession, zones: Zones,
                     table: String = "launch_events"): Unit = {
@@ -236,10 +262,20 @@ object LaunchPipeline {
          |USING PARQUET
          |PARTITIONED BY (net)
          |LOCATION '${zones.reports}'""".stripMargin)
-    // nothing published yet (only empty days so far): no partition to sync
-    val reports = new Path(zones.reports)
-    if (reports.getFileSystem(spark.sessionState.newHadoopConf()).exists(reports))
-      spark.catalog.recoverPartitions(table)
+    val root = new Path(zones.reports)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val known = spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0)).toSet
+    val added = fs.listStatus(root).map(_.getPath.getName)
+      .filter(name => name.startsWith("net=") && !known(name))
+    if (added.nonEmpty)
+      spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
+        added.map(name => s"PARTITION (net = '${name.stripPrefix("net=")}')").mkString(" "))
+    spark.catalog.refreshTable(table)
+
+    val threshold = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD
+    spark.conf.set(threshold.key,
+      if (spark.sparkContext.isLocal && fs.getUri.getScheme == "file") Int.MaxValue.toString
+      else spark.sparkContext.getConf.get(threshold.key, threshold.defaultValueString))
   }
 
   /** Schema-drift gate for the serving table (closing a gap SURVEY §1.3

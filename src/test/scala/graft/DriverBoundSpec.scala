@@ -53,6 +53,9 @@ class DriverBoundSpec extends AnyFunSuite {
     "Sharding.scala" -> (2,
       "expected-count and write-audit aggregates — one row per shard, " +
         "bounded by nShards"),
+    "LaunchPipeline.scala" -> (1,
+      "registerTable's SHOW PARTITIONS — one name per partition of the " +
+        "serving table, catalog metadata the driver already holds"),
     "Catalog.scala" -> (1,
       "toleranceReport max-error aggregates — ONE row per .head() " +
         "(global max over bounded group reports)"))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, date_add, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{LaunchPipeline => LP}
@@ -144,6 +144,8 @@ class LaunchPipelineSpec extends AnyFunSuite {
     "day is served exactly") {
     val z = freshZones()
     val table = s"launch_events_empty_${math.abs(z.base.hashCode)}"
+    // no processed zone at all is a misconfiguration, not an empty day
+    intercept[java.io.FileNotFoundException](LP.publish(spark, z, day))
     LP.putRaw(z, day, """{"count": 0, "next": null, "previous": null, "results": []}""")
     LP.transform(spark, z, day) // leaves a processed zone with no parquet file
     LP.publish(spark, z, day)
@@ -227,8 +229,41 @@ class LaunchPipelineSpec extends AnyFunSuite {
     val publishJobs = seen.filter(_._1.startsWith("publish")).groupBy(_._1)
     assert(publishJobs.values.forall(_.size <= 1),
       s"publish jobs per day: ${publishJobs.map { case (k, v) => k -> v.size }}")
-    // partition sync gathers its stats on the driver
+    // the partition sync lists the zone root on the driver, gathers no stats
     assert(!seen.exists(_._1 == "register"))
+  }
+
+  test("a serving zone off local disk keeps Spark's parallel partition " +
+    "listing; served counts exact") {
+    spark.conf.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    val z = LP.Zones(s"graftfs://${Files.createTempDirectory("graft_lp_remote")}")
+    val table = s"launch_events_remote_${math.abs(z.base.hashCode)}"
+    val days = 34 // past Spark's 32-path threshold
+    val sc = spark.sparkContext
+    val listed = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description", "")
+              .startsWith("Listing leaf files"))) listed.incrementAndGet()
+    }
+    try {
+      spark.range(days * 2).select(
+        concat(lit("id-"), col("id").cast("string")).as("id"),
+        lit("u").as("url"), lit("n").as("name"), lit("s").as("status"),
+        lit(null).cast("string").as("image_url"), lit(null).cast("string").as("license"),
+        date_add(lit(java.sql.Date.valueOf(day)), (col("id") % days).cast("int")).as("net"))
+        .write.partitionBy("net").parquet(z.reports)
+      LP.registerTable(spark, z, table)
+      sc.addSparkListener(listener)
+      val counts = LP.dailyCounts(spark, table).collect().map(_.getLong(1))
+      org.apache.spark.GraftListenerBus.drain(sc)
+      assert(counts.toSeq == Seq.fill(days)(2L))
+      assert(listed.get() >= 1, "a non-local zone should list its partitions in a Spark job")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.conf.unset("fs.graftfs.impl")
+    }
   }
 
   test("serving-schema drift is detected (C8 gap the reference leaves open)") {

@@ -16,10 +16,13 @@ import graft.pipeline.{LaunchPipeline => LP}
   *
   * Two phases in two separate JVMs (Derby's embedded lock is released at
   * process exit, mirroring metastore-backed engines restarting):
-  *   phase1 <base>: run the pipeline, register the external table + recover
-  *     partitions in the metastore, verify the serving query.
-  *   phase2 <base>: a FRESH process resolves the same table purely from the
-  *     metastore (no re-registration) and re-runs the serving query.
+  *   phase1 <base>: run the pipeline for one day and register the external
+  *     table and its partition in the metastore; run a second day, whose
+  *     partition is added to the existing table; re-publish day 1 with
+  *     changed content. The serving query is verified after each step.
+  *   phase2 <base>: a FRESH process resolves the same table and both days
+  *     purely from the metastore (no re-registration) and re-runs the
+  *     serving query.
   * [[graft.HiveCatalogSpec]] forks both phases and asserts the markers.
   */
 object HiveCatalogDemo {
@@ -50,9 +53,20 @@ object HiveCatalogDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
+  /** The served daily counts must be exactly `want`. */
+  private def expect(spark: SparkSession, table: String, what: String,
+                     want: Map[LocalDate, Long]): Unit = {
+    val got = LP.dailyCounts(spark, table).collect()
+      .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
+    require(got == want, s"$what: serving query wrong: $got, expected $want")
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(phase, base) = args
     val day = LocalDate.parse("2024-12-01")
+    val next = day.plusDays(1)
+    // day 1 re-published with both launches under one id: one distinct event
+    val served = Map(day -> 1L, next -> 2L)
     val spark = session(base)
     spark.sparkContext.setLogLevel("WARN")
     val table = "launch_events_hive"
@@ -61,16 +75,24 @@ object HiveCatalogDemo {
         val zones = LP.Zones(s"$base/lake")
         LP.run(spark, zones, day, (_, _, _) => fixture)
         LP.registerTable(spark, zones, table)
-        val got = LP.dailyCounts(spark, table).collect()
-        require(got.length == 1 && got(0).getLong(1) == 2L,
-          s"phase1 serving query wrong: ${got.mkString(",")}")
+        expect(spark, table, "phase1 day 1", Map(day -> 2L))
+        // a second day adds its partition to the existing metastore table
+        LP.run(spark, zones, next, (_, _, _) => fixture.replaceAll(day.toString, next.toString))
+        LP.registerTable(spark, zones, table)
+        expect(spark, table, "phase1 day 2", Map(day -> 2L, next -> 2L))
+        // day 1 again with changed content (the raw landing is at-most-once,
+        // so the old landing goes first): the refresh must drop the cached
+        // file listing of the re-published partition
+        val raw = new org.apache.hadoop.fs.Path(zones.raw(day))
+        raw.getFileSystem(spark.sessionState.newHadoopConf()).delete(raw, false)
+        LP.run(spark, zones, day, (_, _, _) => fixture.replace("\"h2\"", "\"h1\""))
+        LP.registerTable(spark, zones, table)
+        expect(spark, table, "phase1 re-published day 1", served)
         println("HIVE_PHASE1_OK")
       case "phase2" =>
         // no registration here: resolution must come from the metastore
         require(spark.catalog.tableExists(table), s"$table not in metastore")
-        val got = LP.dailyCounts(spark, table).collect()
-        require(got.length == 1 && got(0).getLong(1) == 2L,
-          s"phase2 serving query wrong: ${got.mkString(",")}")
+        expect(spark, table, "phase2", served)
         println("HIVE_PHASE2_OK")
     }
     spark.stop()

@@ -1,14 +1,17 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
+import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
+import org.apache.spark.sql.execution.datasources.PartitioningUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 
 /** The reference's full pipeline surface re-expressed Spark-first
   * (SURVEY.md §3): three zones (raw / processed / reports) over a filesystem
@@ -29,9 +32,6 @@ object LaunchPipeline {
   final case class LaunchEvent(id: String, url: String, name: String,
                                status: String, image_url: String,
                                license: String, net: java.sql.Date)
-
-  /** The public table's schema, `net` last (the partition column). */
-  private val launchEventSchema: StructType = Encoders.product[LaunchEvent].schema
 
   /** Typed view of the transform output. */
   def launchEventsDs(raw: DataFrame): Dataset[LaunchEvent] = {
@@ -201,34 +201,47 @@ object LaunchPipeline {
 
   // --------------------------------------------------------------- publish
 
-  /** Entry point sign-off (C3+C7): read exactly the run date's partition
-    * (dags/rocket_launch_etl.py:127-131) and promote it to the reports zone
-    * (:134-140). The scan's one root path is the `net=<runDate>` directory
-    * (`basePath` keeps `net` as its partition column) and the schema is the
-    * public one, so nothing lists or footer-samples the rest of the zone:
-    * the cost of a day does not grow with the history. A day with no
-    * processed partition (no launches) publishes no rows — the dynamic
-    * overwrite of zero rows would change nothing either — but leaves the
-    * reports zone in place for [[registerTable]]. A processed zone that does
-    * not exist at all (a wrong base, or `transform` never ran) fails.
+  /** Entry point sign-off (C3+C7): promote the run date's processed
+    * partition to the reports zone unchanged (dags/rocket_launch_etl.py:
+    * 127-140, a copy of the day's files). `transform` is the processed zone's
+    * only writer and writes the public [[LaunchEvent]] schema, so the files
+    * are already what the reports zone serves: nothing is read, planned or
+    * re-encoded, and no Spark job runs. The `net=<runDate>` directory is
+    * copied through the session's Hadoop conf into a hidden staging
+    * directory `reports/.../.publish-<uuid>/`, the day's old reports
+    * partition is deleted, and the staged copy is renamed into its place —
+    * the delete-then-rename commit Spark's dynamic partition overwrite
+    * makes, touching no other partition. A crash before the rename also
+    * leaves the hidden staging directory behind; neither [[registerTable]]
+    * nor a table scan reads it, and publishing the day again completes the
+    * promotion.
+    *
+    * A day with no processed partition (no launches) publishes nothing but
+    * leaves the reports zone in place for [[registerTable]]. A processed
+    * zone that does not exist at all (a wrong base, or `transform` never
+    * ran) fails.
     */
   def publish(spark: SparkSession, zones: Zones, runDate: LocalDate): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val processed = new Path(zones.processed)
     val day = new Path(processed, s"net=$runDate")
     val fs = processed.getFileSystem(conf)
-    if (fs.exists(day))
-      spark.read.schema(launchEventSchema)
-        .option("basePath", zones.processed)
-        .parquet(day.toString)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("net")
-        .parquet(zones.reports)
-    else if (fs.exists(processed)) {
-      val reports = new Path(zones.reports)
-      reports.getFileSystem(conf).mkdirs(reports)
-    } else
+    val reports = new Path(zones.reports)
+    val out = reports.getFileSystem(conf)
+    if (fs.exists(day)) {
+      val staging = new Path(reports, s".publish-${UUID.randomUUID()}")
+      val staged = new Path(staging, day.getName)
+      val target = new Path(reports, day.getName)
+      try {
+        if (!FileUtil.copy(fs, day, out, staged, false, conf))
+          throw new IOException(s"publish: could not copy $day to $staged")
+        out.delete(target, true)
+        if (!out.rename(staged, target))
+          throw new IOException(s"publish: could not rename $staged to $target")
+      } finally out.delete(staging, true)
+    } else if (fs.exists(processed))
+      out.mkdirs(reports)
+    else
       throw new java.io.FileNotFoundException(
         s"publish: processed zone ${zones.processed} does not exist")
   }
@@ -237,12 +250,16 @@ object LaunchPipeline {
 
   /** C8: external table over the reports zone (src/sql/ddl/launch_events.sql)
     * + C9: partition sync (src/sql/sync/launch_events.sql →
-    * `sync_partition_metadata(…, 'ADD')`). The sync lists the zone's root
-    * once, adds the `net=` directories the catalog lacks and refreshes the
-    * table, so a re-published day is read afresh. Unlike `recoverPartitions`
-    * it records no per-partition file statistics, which this parquet table's
-    * planning never reads and which cost a listing of every partition each
-    * day (a Spark job past 10 partitions).
+    * `sync_partition_metadata(…, 'ADD')`), through the session catalog's API
+    * rather than SQL statements. The table is created only when the catalog
+    * lacks it. The sync lists the zone's root once and adds the `net=`
+    * directories the catalog lacks, each inheriting the table's storage as
+    * `ALTER TABLE … ADD PARTITION` would; hidden directories (a crashed
+    * [[publish]]'s staging copy) are never added. One `refreshTable` then
+    * drops the cached file listings, so a re-published day is read afresh.
+    * Unlike `recoverPartitions` it records no per-partition file statistics,
+    * which this parquet table's planning never reads and which cost a
+    * listing of every partition each day (a Spark job past 10 partitions).
     *
     * The sync also sets where the session lists the table's partitions for
     * a query. A local session over a local-disk zone lists them on the
@@ -255,21 +272,27 @@ object LaunchPipeline {
     */
   def registerTable(spark: SparkSession, zones: Zones,
                     table: String = "launch_events"): Unit = {
-    spark.sql(
-      s"""CREATE TABLE IF NOT EXISTS $table
-         |  (id STRING, url STRING, name STRING, status STRING,
-         |   image_url STRING, license STRING, net DATE)
-         |USING PARQUET
-         |PARTITIONED BY (net)
-         |LOCATION '${zones.reports}'""".stripMargin)
+    if (!spark.catalog.tableExists(table))
+      spark.sql(
+        s"""CREATE TABLE IF NOT EXISTS $table
+           |  (id STRING, url STRING, name STRING, status STRING,
+           |   image_url STRING, license STRING, net DATE)
+           |USING PARQUET
+           |PARTITIONED BY (net)
+           |LOCATION '${zones.reports}'""".stripMargin)
+    val catalog = spark.sessionState.catalog
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val root = new Path(zones.reports)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val known = spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0)).toSet
+    val known = catalog.listPartitionNames(ident).toSet
     val added = fs.listStatus(root).map(_.getPath.getName)
       .filter(name => name.startsWith("net=") && !known(name))
-    if (added.nonEmpty)
-      spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
-        added.map(name => s"PARTITION (net = '${name.stripPrefix("net=")}')").mkString(" "))
+    if (added.nonEmpty) {
+      val storage = catalog.getTableMetadata(ident).storage.copy(locationUri = None)
+      catalog.createPartitions(ident, added.toSeq.map(name =>
+        CatalogTablePartition(PartitioningUtils.parsePathFragment(name), storage)),
+        ignoreIfExists = true)
+    }
     spark.catalog.refreshTable(table)
 
     val threshold = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD
@@ -298,27 +321,32 @@ object LaunchPipeline {
 
   /** C13: the reference's one analytical query
     * (src/sql/query/daily_launch_events.sql:1-5) — events per day,
-    * deduplicated by id. Plans as partial/final HashAggregate with a distinct
-    * expansion; partition-pruned when filtered by `net`.
+    * deduplicated by id; partition-pruned when filtered by `net`.
+    *
+    * The plain form hash-partitions the scan on `net` once and runs the
+    * whole distinct aggregation (dedup by `(net, id)`, then count by `net`)
+    * inside those partitions: `net` clustering satisfies both steps, so the
+    * plan has one exchange where `COUNT(DISTINCT)` alone plans two. It gives
+    * up only the partial `(net, id)` dedup before the shuffle, which saves
+    * little when ids rarely repeat within a day.
     *
     * `salted = true` swaps in [[graft.operators.Relational.saltedDistinctCount]]
-    * — the 100 TB form: a plain COUNT(DISTINCT) makes the hottest day one
+    * — the 100 TB form: hashing on `net` makes the hottest day one
     * straggler reducer, salting bounds it at 1/nSalts (same exact result,
     * per-salt value sets are disjoint).
     *
     * The per-day result is one row per day, so the final `ORDER BY net`
     * runs on one task ([[graft.operators.Relational.reportSortFused]]): no
-    * range-sampling job, one exchange fewer; the scan and partial
-    * aggregation stay parallel. */
+    * range-sampling job, one exchange fewer; the scan and the aggregation
+    * stay parallel. */
   def dailyCounts(spark: SparkSession, table: String = "launch_events",
                   salted: Boolean = false): DataFrame = {
     val perDay =
       if (salted)
         graft.operators.Relational.saltedDistinctCount(
           spark.table(table), Seq(col("net")), col("id"), "event_count")
-      else spark.sql(
-        s"""SELECT net, COUNT(DISTINCT id) AS event_count
-           |FROM $table GROUP BY net""".stripMargin)
+      else spark.table(table).repartition(col("net"))
+        .groupBy("net").agg(countDistinct("id").as("event_count"))
     graft.operators.Relational.reportSortFused(perDay, col("net"))
   }
 

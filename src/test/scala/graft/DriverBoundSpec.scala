@@ -39,7 +39,7 @@ class DriverBoundSpec extends AnyFunSuite {
         "bytes (conf-capped 8 MB), size fixed by parameters not data; " +
         "embeddingNearDupLsh hot-bucket routing list — limit-bounded at " +
         "MaxHotBuckets + 1 slim (band, key) rows"),
-    "HiveCatalogDemo.scala" -> (2,
+    "HiveCatalogDemo.scala" -> (1,
       "two-JVM demo main: bounded daily-count reports"),
     "X34Probe.scala" -> (1,
       "scratch profiler: ONE (rows, pairs, dots, hits, secs) counter row " +
@@ -53,9 +53,6 @@ class DriverBoundSpec extends AnyFunSuite {
     "Sharding.scala" -> (2,
       "expected-count and write-audit aggregates — one row per shard, " +
         "bounded by nShards"),
-    "LaunchPipeline.scala" -> (1,
-      "registerTable's SHOW PARTITIONS — one name per partition of the " +
-        "serving table, catalog metadata the driver already holds"),
     "Catalog.scala" -> (1,
       "toleranceReport max-error aggregates — ONE row per .head() " +
         "(global max over bounded group reports)"))

@@ -162,8 +162,8 @@ class LaunchPipelineSpec extends AnyFunSuite {
   }
 
   test("daily interval job shape past 32 partitions: no listing job, publish " +
-    "runs at most one job, registerTable none; served counts exact and " +
-    "refreshed on a re-run") {
+    "and registerTable run none, serving at most two a day; served counts " +
+    "exact and refreshed on a re-run") {
     val z = freshZones()
     val table = s"launch_events_jobs_${math.abs(z.base.hashCode)}"
     val days = 40 // every 10th day empty: 36 partitions, past Spark's 32
@@ -193,9 +193,11 @@ class LaunchPipelineSpec extends AnyFunSuite {
       sc.setLocalProperty("graft.test.phase", name)
       try body finally sc.setLocalProperty("graft.test.phase", null)
     }
+    var serves = 0
     def served(): Map[LocalDate, Long] = {
       phase("register")(LP.registerTable(spark, z, table))
-      phase("serve")(LP.dailyCounts(spark, table).collect())
+      serves += 1
+      phase(s"serve $serves")(LP.dailyCounts(spark, table).collect())
         .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
     }
     def expected(upTo: Int): Map[LocalDate, Long] =
@@ -223,14 +225,46 @@ class LaunchPipelineSpec extends AnyFunSuite {
     }
     import scala.jdk.CollectionConverters._
     val seen = jobs.asScala.toSeq
-    assert(seen.exists(_._1 == "serve")) // the listener saw the interval
+    val serveJobs = seen.filter(_._1.startsWith("serve")).groupBy(_._1)
+    assert(serveJobs.size == serves) // the listener saw every serving query
+    assert(serveJobs.values.forall(_.size <= 2),
+      s"serving jobs per day: ${serveJobs.map { case (k, v) => k -> v.size }}")
     val listing = seen.filter(_._2.startsWith("Listing leaf files"))
     assert(listing.isEmpty, s"listing jobs: ${listing.map(_._1)}")
-    val publishJobs = seen.filter(_._1.startsWith("publish")).groupBy(_._1)
-    assert(publishJobs.values.forall(_.size <= 1),
-      s"publish jobs per day: ${publishJobs.map { case (k, v) => k -> v.size }}")
-    // the partition sync lists the zone root on the driver, gathers no stats
+    // publish copies files; the partition sync lists the zone root on the
+    // driver and talks to the catalog, gathering no stats
+    val publishJobs = seen.filter(_._1.startsWith("publish"))
+    assert(publishJobs.isEmpty, s"publish jobs: ${publishJobs.map(_._1)}")
     assert(!seen.exists(_._1 == "register"))
+  }
+
+  test("a publish that crashed before its rename leaves a staging copy that " +
+    "is neither registered nor served; the next publish serves the day exactly") {
+    val z = freshZones()
+    val table = s"launch_events_crash_${math.abs(z.base.hashCode)}"
+    val next = day.plusDays(1)
+    for (d <- Seq(day, next)) {
+      LP.putRaw(z, d, fixtureA1.replaceAll("2024-12-01", d.toString))
+      LP.transform(spark, z, d)
+    }
+    LP.publish(spark, z, day)
+    // the crashed publish of `next` copied its file but never renamed it
+    val stale = java.nio.file.Paths.get(s"${z.reports}/.publish-x/net=$next")
+    Files.createDirectories(stale)
+    new java.io.File(s"${z.processed}/net=$next").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.copy(f.toPath, stale.resolve(f.getName)))
+    try {
+      LP.registerTable(spark, z, table)
+      assert(spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0)).toSeq
+        == Seq(s"net=$day"))
+      assert(LP.dailyCounts(spark, table).collect().toSeq
+        == Seq(Row(java.sql.Date.valueOf(day), 2L)))
+      LP.publish(spark, z, next)
+      LP.registerTable(spark, z, table)
+      assert(LP.dailyCounts(spark, table).collect().toSeq
+        == Seq(Row(java.sql.Date.valueOf(day), 2L), Row(java.sql.Date.valueOf(next), 2L)))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("a serving zone off local disk keeps Spark's parallel partition " +

@@ -408,53 +408,69 @@ class PlanShapeSpec extends AnyFunSuite {
       s"q01's table-sized output must keep the parallel range sort:\n$q01")
   }
 
-  test("launch serving sorts its per-day result on one task (plain and " +
-    "salted); publish scans exactly the run date's directory") {
+  test("launch serving hashes on net once and sorts its per-day result on " +
+    "one task (plain and salted); publish runs no query and no job and " +
+    "leaves every other partition byte-identical") {
     import graft.pipeline.{LaunchPipeline => LP}
     val day = java.time.LocalDate.parse("2024-12-01")
     val z = LP.Zones(Files.createTempDirectory("graft_lp_plan").toString)
     val table = s"launch_events_plan_${math.abs(z.base.hashCode)}"
-    for (d <- Seq(day, day.plusDays(1))) {
+    val days = Seq(day, day.plusDays(1), day.plusDays(2))
+    for (d <- days) {
       LP.putRaw(z, d, s"""{"count": 1, "next": null, "results": [{"id": "a",
         | "url": "u", "name": "n", "status": {"name": "s"}, "image": null,
         | "net": "${d}T01:00:00Z"}]}""".stripMargin.replaceAll("\n", " "))
       LP.transform(spark, z, d)
     }
-    // the write command's analyzed plan names the relation publish scans
-    val roots = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+    days.tail.foreach(LP.publish(spark, z, _))
+    /** Every file under a zone's partition directory (checksums included)
+      * by name, with its bytes. */
+    def files(zone: String, d: java.time.LocalDate): Map[String, Seq[Byte]] =
+      new java.io.File(s"$zone/net=$d").listFiles()
+        .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val others = days.tail.map(d => d -> files(z.reports, d)).toMap
+
+    val sqlRuns = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit =
-        qe.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation match {
-              case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                roots.add(r.location.rootPaths.map(_.toString))
-              case _ =>
-            }
-          case _ =>
-        }
+                    ns: Long): Unit = sqlRuns.incrementAndGet()
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = ()
+                    e: Exception): Unit = sqlRuns.incrementAndGet()
     }
-    spark.listenerManager.register(listener)
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(queries)
+    sc.addSparkListener(jobListener)
     try LP.publish(spark, z, day)
     finally {
-      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(queries)
     }
-    import scala.jdk.CollectionConverters._
-    val scans = roots.asScala.toSeq
-    assert(scans.size == 1 && scans.head.size == 1 &&
-      scans.head.head.endsWith(s"/processed/launch/net=$day"),
-      s"publish should scan only net=$day, scanned roots: $scans")
-    LP.publish(spark, z, day.plusDays(1))
+    assert(sqlRuns.get == 0 && jobs.get == 0,
+      s"publish should run no query and no job: ${sqlRuns.get} queries, ${jobs.get} jobs")
+    for (d <- days.tail)
+      assert(files(z.reports, d) == others(d), s"publish of $day changed net=$d")
+    val parquet = (m: Map[String, Seq[Byte]]) => m.filter(_._1.endsWith(".parquet"))
+    assert(parquet(files(z.reports, day)) == parquet(files(z.processed, day)),
+      s"publish should promote net=$day's files unchanged")
+
     LP.registerTable(spark, z, table)
     try for (salted <- Seq(false, true)) {
       val plan = planOf(LP.dailyCounts(spark, table, salted))
       assert(!plan.contains("rangepartitioning"),
         s"dailyCounts(salted=$salted) should sort its per-day rows on one task:\n$plan")
       assert(plan.contains("Sort"), s"dailyCounts(salted=$salted) lost its sort:\n$plan")
+      if (!salted) {
+        val exchanges = "Exchange (\\w+\\([^)]*\\))".r.findAllMatchIn(plan)
+          .map(_.group(1)).toList
+        assert(exchanges.size == 1 && exchanges.head.matches("hashpartitioning\\(net#\\d+, \\d+\\)"),
+          s"dailyCounts should shuffle once, on net alone: $exchanges\n$plan")
+      }
     } finally spark.sql(s"DROP TABLE $table")
   }
 }

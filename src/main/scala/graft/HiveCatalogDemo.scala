@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.GraftSession
 import graft.pipeline.{LaunchPipeline => LP}
 
 /** Cross-process catalog persistence: the reference serves its table through
@@ -39,18 +40,16 @@ object HiveCatalogDemo {
       |  "net": "2024-12-01T22:45:00Z", "last_updated": "x"}
       |]}""".stripMargin.replaceAll("\n", " ")
 
+  /** The engine's session posture (so the metastore client creates the
+    * warehouse and partition directories through its `file://` filesystem)
+    * plus the Hive catalog over an embedded Derby metastore. */
   private def session(base: String): SparkSession =
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hive-catalog")
+    GraftSession.configure(
+      SparkSession.builder().master("local[4]").appName("graft-hive-catalog"), 4)
       .config("spark.sql.catalogImplementation", "hive")
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
 
   /** The served daily counts must be exactly `want`. */

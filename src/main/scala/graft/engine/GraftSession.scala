@@ -15,6 +15,17 @@ import org.apache.spark.sql.SparkSession
   * Shuffle partitions default to the local core count, not Spark's default 200:
   * on a real cluster this would instead be sized to ~2-3× total executor cores
   * or left to AQE's coalescing with a high initial value.
+  *
+  * `file://` resolves to [[NioLocalFileSystem]]: without native libhadoop,
+  * Hadoop's local filesystem spawns a `chmod` process for every directory and
+  * file it writes, a fixed cost of every local-disk zone write (raw landing,
+  * parquet commit, publish copy, curation state) that dominates a small daily
+  * interval. Object stores and hosts with native libhadoop never take that
+  * path. The class applies to filesystem instances created from a session
+  * conf: Hadoop caches one `file://` instance per JVM, so a JVM that opened
+  * `file://` with a plain `Configuration` before its first session keeps the
+  * default `file` class (Hive's `ProxyLocalFileSystem` when hive-exec is on
+  * the classpath, else Hadoop's `LocalFileSystem`).
   */
 object GraftSession {
 
@@ -53,6 +64,7 @@ object GraftSession {
       // date_trunc) on the one timestamp type every function supports.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       // Bound the status-store listener state: with the UI off these stores
       // exist only for the status APIs, yet default retention (1000 jobs /
       // 1000 stages / 1000 SQL executions) lets a long-lived session accrue

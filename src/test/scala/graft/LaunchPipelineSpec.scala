@@ -1,20 +1,35 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, concat, date_add, lit}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.NioLocalFileSystem
 import graft.pipeline.{LaunchPipeline => LP}
 
 /** Golden-oracle port of the reference's correctness mechanism (SURVEY.md §5):
   * fixture A1 (FIXTURES.md) through the full pipeline must reproduce the
   * expected `launch_events` rows and the daily-count query result.
   */
-class LaunchPipelineSpec extends AnyFunSuite {
+class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestSession.spark
+
+  // Hadoop caches one file:// filesystem per JVM: start the shared session
+  // before a raw landing without one resolves it from a plain conf
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark
+  }
 
   val day: LocalDate = LocalDate.parse("2024-12-01")
 
@@ -297,6 +312,38 @@ class LaunchPipelineSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.conf.unset("fs.graftfs.impl")
+    }
+  }
+
+  test("a daily interval on local zones starts no process: file:// resolves to " +
+    "NioLocalFileSystem, so no directory or file written forks a chmod") {
+    // a file:// instance cached from a plain conf would keep Hadoop's class
+    val fs = FileSystem.get(URI.create("file:///"), spark.sessionState.newHadoopConf())
+    assert(fs.isInstanceOf[NioLocalFileSystem], s"file:// is ${fs.getClass.getName}")
+    val z = freshZones()
+    val table = s"launch_events_forks_${math.abs(z.base.hashCode)}"
+    org.apache.spark.GraftExecutorMetrics.poll() // Spark's one-off page-size probe
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    val got = try {
+      assert(LP.ingest(z, day, (_, _, _) => fixtureA1))
+      LP.transform(spark, z, day)
+      LP.publish(spark, z, day)
+      LP.registerTable(spark, z, table)
+      LP.dailyCounts(spark, table).collect().toSeq
+    } finally recording.stop()
+    val dump = Files.createTempFile("graft_forks", ".jfr")
+    try {
+      recording.dump(dump)
+      val started = RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      assert(got == Seq(Row(java.sql.Date.valueOf(day), 2L)))
+      assert(started.size == 0, s"${started.size} processes started, first: ${started.take(3)}")
+    } finally {
+      recording.close()
+      Files.delete(dump)
+      spark.sql(s"DROP TABLE $table")
     }
   }
 

@@ -20,8 +20,9 @@ import org.apache.spark.sql.SparkSession
   * Hadoop's local filesystem spawns a `chmod` process for every directory and
   * file it writes, a fixed cost of every local-disk zone write (raw landing,
   * parquet commit, publish copy, curation state) that dominates a small daily
-  * interval. Object stores and hosts with native libhadoop never take that
-  * path. The class applies to filesystem instances created from a session
+  * interval. Object stores never take that path; a host with native
+  * libhadoop already chmods in process, and now does so through java.nio
+  * instead. The class applies to filesystem instances created from a session
   * conf: Hadoop caches one `file://` instance per JVM, so a JVM that opened
   * `file://` with a plain `Configuration` before its first session keeps the
   * default `file` class (Hive's `ProxyLocalFileSystem` when hive-exec is on

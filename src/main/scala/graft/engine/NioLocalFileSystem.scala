@@ -1,13 +1,9 @@
 package graft.engine
 
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's checksummed local filesystem (`file://`) with a fork-free
   * `setPermission`.
@@ -17,30 +13,22 @@ import org.apache.hadoop.io.nativeio.NativeIO
   * creates (`.crc` files included): a raw landing, each parquet part file and
   * `_SUCCESS` marker, every directory the commit protocol makes, every copied
   * file. Each call is a process spawn, a reader thread and a wait: ~2.7 ms
-  * from a 4 GB JVM on a 4-core host, against ~0.01 ms for the java.nio call. [[NioLocalFileSystem.Raw]] applies the same nine permission bits
-  * with `Files.setPosixFilePermissions` instead. Everything else is Hadoop's:
+  * from a 4 GB JVM on a 4-core host, against ~0.01 ms for the java.nio call.
+  * [[NioLocalFileSystem.Raw]] sets the same mode bits, sticky bit included,
+  * through the `unix:mode` attribute instead. Everything else is Hadoop's:
   * umask handling, checksums, listing, `getFileStatus`.
   *
-  * Hadoop's own path still runs for a sticky bit (not expressible as a
-  * `PosixFilePermission`), on a filesystem without POSIX attributes, and on a
-  * host with native libhadoop (which already chmods in-process).
-  * [[GraftSession.configure]] registers this class as `fs.file.impl`.
+  * Hadoop's own path still runs on a filesystem without the `unix` attribute
+  * view. [[GraftSession.configure]] registers this class as `fs.file.impl`.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
 object NioLocalFileSystem {
 
-  /** `PosixFilePermission` declares owner, group, others × read, write,
-    * execute in mode-bit order: ordinal i is bit 8 - i. */
-  private def posix(mode: Int): java.util.Set[PosixFilePermission] =
-    PosixFilePermission.values.filter(p => (mode & (1 << (8 - p.ordinal))) != 0)
-      .toSet.asJava
-
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
-      if (permission.getStickyBit || NativeIO.isAvailable) super.setPermission(p, permission)
-      else
-        try Files.setPosixFilePermissions(pathToFile(p).toPath, posix(permission.toShort))
-        catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+      try Files.setAttribute(pathToFile(p).toPath, "unix:mode",
+        Int.box(permission.toShort.toInt))
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
   }
 }

@@ -99,6 +99,9 @@ object GraftSession {
       SparkSession.builder().master(s"local[$n]").appName(appName), n
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // scale decisions stay visible: one line per gate (ScalePolicy)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.engine.ScalePolicy", org.apache.logging.log4j.Level.INFO)
     spark
   }
 }

@@ -1,0 +1,121 @@
+package graft.engine
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.slf4j.LoggerFactory
+
+import graft.sources.Tables
+
+/** The one answer to "is this input small?".
+  *
+  * Every small-input branch in the engine — the catalog's one-task floor
+  * fusion, its per-row kernel spreads, x34's pair-sort merge and
+  * `Relational.keyedRowNumbers`' window route — asks this object, and
+  * nothing else reads a size or row statistic to choose a plan shape.
+  *
+  * Statistics are the two zero-job ones: the optimizer's size estimate
+  * (`optimizedPlan.stats.sizeInBytes`, compressed parquet bytes scaled by
+  * any column projection) and the parquet-footer row count
+  * ([[Tables.rowCount]]), each summed over the named tables. An input is
+  * small for a [[Tier]] iff BOTH statistics are at most the tier's caps:
+  * compressed bytes drift with codec and corpus, row counts do not, and a
+  * wide-row corpus under the row cap is still only small if its bytes are.
+  *
+  * One conf steers every decision, `spark.graft.scale`:
+  *   - `auto` (default): decide on the statistics;
+  *   - `large`: every decision answers "not small", so each query takes
+  *     its at-scale branch on any data (the forced oracle leg and the
+  *     at-scale plan pins run on tiny corpora this way).
+  * Any other value fails the first decision loudly.
+  *
+  * Each decision is logged at INFO (logger `graft.engine.ScalePolicy`) as
+  * one line naming the tier, inputs, statistics, caps and branch, and
+  * [[recorded]] hands them to a caller (JobProfile prints them per query).
+  */
+object ScalePolicy {
+
+  val Conf = "spark.graft.scale"
+
+  /** A size class: inputs of at most `maxBytes` and at most `maxRows` take
+    * the small-input branch. */
+  final case class Tier(name: String, maxBytes: Long, maxRows: Long) {
+    def admits(bytes: BigInt, rows: Long): Boolean =
+      bytes <= maxBytes && rows <= maxRows
+  }
+
+  /** Whole-query one-task fusion: below 16 MiB and 750k rows the entire
+    * query runs as one single-task stage. 750k rows keeps every sf0.1
+    * fusion (lineitem has 600k) and never holds from sf1 (events 1M). */
+  val OneTask = Tier("one-task", 16L << 20, 750L * 1000)
+
+  /** Per-row kernel spread: a kernel input spreads across cores from
+    * 2 MiB or 20k rows (4× sf0.1's 5k documents, 2.5× under sf1's 50k). */
+  val KernelSpread = Tier("kernel-spread", (2L << 20) - 1, 20L * 1000 - 1)
+
+  /** One decision, as logged: `small` is the branch taken. */
+  final case class Decision(tier: String, input: String, statistics: String,
+                            small: Boolean) {
+    override def toString: String =
+      s"scale tier=$tier input=$input $statistics " +
+        s"branch=${if (small) "small" else "at-scale"}"
+  }
+
+  private val log = LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
+  private val sink = new ThreadLocal[ArrayBuffer[Decision]]
+
+  /** True when the conf forces every at-scale branch. */
+  def large(s: SparkSession): Boolean = s.conf.get(Conf, "auto") match {
+    case "auto" => false
+    case "large" => true
+    case other => throw new IllegalArgumentException(
+      s"$Conf=$other: expected 'auto' or 'large'")
+  }
+
+  /** Whether the named tables of `dir` together fit `tier`. `columns`
+    * projects a single table before its bytes are estimated, for gates
+    * whose input is a column subset (the kernel tier's (doc_id, text)). */
+  def fits(s: SparkSession, tier: Tier, dir: String, tables: Seq[String],
+           columns: Seq[String] = Nil): Boolean = {
+    val bytes = tables.map { n =>
+      val df = Tables(s, dir, n)
+      val in = if (columns.isEmpty) df else df.select(columns.map(col): _*)
+      in.queryExecution.optimizedPlan.stats.sizeInBytes
+    }.sum
+    val rows = tables.map(Tables.rowCount(s, dir, _)).sum
+    val forced = large(s)
+    decide(Decision(tier.name,
+      tables.mkString("+") + (if (columns.isEmpty) "" else columns.mkString("(", ",", ")")),
+      s"bytes=$bytes rows=$rows caps=${tier.maxBytes}/${tier.maxRows}" +
+        (if (forced) s" $Conf=large" else ""),
+      !forced && tier.admits(bytes, rows)))
+  }
+
+  /** Whether `df` is already ONE physical partition, so a caller may take
+    * its serial route instead of the distributed one (a zero-job check on
+    * the planned RDD). Under `large` the answer is no without planning. */
+  def onePartition(input: String, df: DataFrame): Boolean =
+    if (large(df.sparkSession))
+      decide(Decision("one-partition", input, s"$Conf=large", small = false))
+    else {
+      val n = df.rdd.getNumPartitions
+      decide(Decision("one-partition", input, s"partitions=$n cap=1", n == 1))
+    }
+
+  /** Runs `body` and returns the decisions it made on this thread. */
+  def recorded[T](body: => T): (T, Seq[Decision]) = {
+    val buf = ArrayBuffer.empty[Decision]
+    sink.set(buf)
+    try {
+      val out = body
+      (out, buf.toSeq)
+    } finally sink.remove()
+  }
+
+  private def decide(d: Decision): Boolean = {
+    log.info(d.toString)
+    Option(sink.get).foreach(_ += d)
+    d.small
+  }
+}

@@ -77,33 +77,12 @@ object Relational {
                    leftKey: String, rightKey: String): DataFrame =
     left.join(right, left(leftKey) === right(rightKey), "left_anti")
 
-  /** Exact interpolated percentiles (SQL `percentile` / `percentile_cont`),
-    * default plan: ONE builtin `percentile(value, array(qs...))` per group —
-    * the array form builds a single per-group map for all requested
-    * percentiles instead of one ObjectHashAggregate buffer per call (the
-    * r15 change; VERDICT r14 directive 4).
-    *
-    * Spark's Percentile is a TypedImperativeAggregate building a per-group
-    * OpenHashMap[value, count] on the INTERPRETED row path, and JobProfile
-    * (r15) measured the x33/x54/x67/x77 residual 0.25–0.40 s to be exactly
-    * that interpreted stage. A COUNT-TABLE feed — groupBy(keys, value)
-    * .count() then percentile(value, array(qs), count) — was hypothesized
-    * to beat it and is implemented below behind
-    * `spark.graft.pctCountTable` (results are bit-identical: the frequency
-    * argument sums into the same OpenHashMap buffer the raw-row form builds
-    * by +1 increments). Measured (PctProbe interleaved A/B, r16): the count
-    * table LOSES at every SF tried — +0.14 s at sf0.1, +0.22 s at sf1,
-    * +0.20 s at sf5 (x33+x67 totals) — because ObjectHashAggregate already
-    * partial-aggregates map-side, so the data crossing the shuffle is the
-    * same bounded (group, value, count) multiset either way and the count
-    * table only adds a full extra hash-agg stage + shuffle. Default is
-    * therefore the direct form at every scale; the flag stays for re-probes
-    * and the equivalence spec.
-    *
-    * (A pure-declarative window-CDF variant was also measured and REVERTED
-    * in r15: two window frames + conditional-min brackets over the 49k-row
-    * count table cost more than the interpreted map they avoided, and the
-    * expression trees tripled planning time — 0.46 s vs 0.30 s at sf0.1.)
+  /** Exact interpolated percentiles (SQL `percentile` / `percentile_cont`):
+    * ONE builtin `percentile(value, array(qs...))` per group — the array
+    * form builds a single per-group map for all requested percentiles
+    * instead of one ObjectHashAggregate buffer per call. A count-table feed
+    * and a window-CDF variant both measured slower (BASELINE.md, "Scale
+    * gate ledgers").
     *
     * NULLs in `value` are ignored (builtin semantics); a group with zero
     * non-null values emits a NULL-percentile row via the builtin as before.
@@ -117,24 +96,9 @@ object Relational {
     // Double.toString is locale-independent and round-trips exactly, so the
     // SQL text reproduces the caller's percentages bit-for-bit
     val qList = qs.map { case (q, _) => q.toString }.mkString(", ")
-    val base = df.select(keys.map(col) :+ valueCol.as("__v"): _*)
-    val useCountTable = df.sparkSession.conf
-      .get("spark.graft.pctCountTable", "false").toBoolean
-    val ps = if (useCountTable) {
-      // Half 1: the codegen count table. Spark's Percentile sums the
-      // frequency argument into the same OpenHashMap[value, count] buffer
-      // that the raw-row form builds by +1 increments, so half 2 is
-      // bit-identical to the direct form on every corpus.
-      base.groupBy((keys :+ "__v").map(col): _*).agg(count(lit(1)).as("__c"))
-        .groupBy(keys.map(col): _*)
-        .agg(expr(s"percentile(__v, array($qList), __c)").as("__ps"))
-    } else {
-      // Direct form (pre-r16; kept A/B-able via spark.graft.pctCountTable):
-      // ONE interpreted ObjectHashAggregate over raw rows, array form so a
-      // single map serves all requested percentiles.
-      base.groupBy(keys.map(col): _*)
-        .agg(expr(s"percentile(__v, array($qList))").as("__ps"))
-    }
+    val ps = df.select(keys.map(col) :+ valueCol.as("__v"): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(expr(s"percentile(__v, array($qList))").as("__ps"))
     ps.select(keys.map(col) ++ qs.zipWithIndex.map { case ((_, name), i) =>
       element_at(col("__ps"), i + 1).as(name) }: _*)
   }
@@ -226,21 +190,12 @@ object Relational {
         s"keyedRowNumbers: key '$k' contains BINARY — its external form has " +
           "no value equality; hash it to a comparable type first")
     }
-    // WINDOW route for 1-partition inputs (r14, the catalog's one-task
-    // floor fusion): the two-pass exists so real volume never serializes
-    // through per-key window sorts — but an input the caller has already
-    // collapsed to ONE partition is serialized by construction, and the
-    // checkpoint + block-stats pass + route-count job + block join would
-    // be four extra jobs to recompute what row_number/count read straight
-    // off that partition. Zero-job route check (physical partition count);
-    // at scale no caller hands this operator a single partition.
-    // The route also honors the fusion disable knob (ADVICE r14): a tiny
-    // single-file scan is 1 partition even with the catalog gate off, and
-    // without this check the equivalence specs' "plain arm" would compare
-    // window-route against window-route instead of pinning the two-pass.
-    val oneTaskEnabled = spark.conf.getOption("spark.graft.oneTaskFloorBytes")
-      .map(_.toLong).forall(_ > 0)
-    if (oneTaskEnabled && df.rdd.getNumPartitions == 1) {
+    // WINDOW route for an input the caller already collapsed to ONE
+    // partition: it is serialized by construction, so the two-pass's
+    // checkpoint, block stats and block join would only add jobs. The
+    // scale policy decides, so `spark.graft.scale=large` pins the two-pass
+    // even on a tiny single-file scan.
+    if (graft.engine.ScalePolicy.onePartition("keyedRowNumbers", df)) {
       lastKeyedRoute = "window"
       val byKey = Window.partitionBy(keys.map(col): _*)
       return df

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.ScalePolicy
 import graft.functions.{Portable, TextAnalysis, VectorFunctions => V}
 import graft.functions.Portable.{Spark => SparkD, Duck => DuckD}
 import graft.operators.{Dedup, Multimodal, Relational, Similarity}
@@ -77,26 +78,13 @@ object Catalog {
   private def reportSortAuto(fused: Boolean)(df: DataFrame, cols: Column*): DataFrame =
     if (fused) reportSortFused(df, cols: _*) else reportSort(df, cols: _*)
 
-  /** Slim, doc_id-ordered input for per-document KERNEL tables: `orderBy`'s
-    * range-sampling pass re-executes its child, so `kernel(docs).orderBy(id)`
-    * evaluates every kernel expression TWICE (sampling + shuffle map).
-    * Sorting the raw (doc_id, text) projection first samples plain scan rows
-    * and runs the kernels once, in the single post-shuffle stage — Catalyst
-    * keeps projections above sorts, so the shape is stable. The shuffle
-    * carries text instead of the (smaller) kernel output; at sf0.1 that is
-    * ~1 MB against a saved kernel pass, and at any scale the trade follows
-    * kernel cost vs output width (these kernels all dominate). */
   /** Ordered (doc_id, text) for the per-document text-feature queries
-    * (x23–x26). Under the kernel-spread gate a plain `orderBy` is the right
-    * shape (AQE coalesces the tiny post-sort read and the kernels fuse with
-    * the output task). Above it the pair-N sf5 profile caught the codec-tier
-    * lesson striking again: AQE sized the post-sort read by COMPRESSED text
-    * bytes and landed the whole kernel projection on 2 tasks (x24: ~1 s of
-    * its 2.6 s wall, 30 cores idle) — so the big branch pins the partition
-    * count the way [[codecDocIds]] does (user-specified counts are exempt
-    * from AQE coalescing), and range partitions concatenate in order so the
-    * global output order is unchanged. Same statistic as every other gate
-    * (zero-job parquet byte estimate). */
+    * (x23–x26). Sorting the raw projection first makes `orderBy`'s sampler
+    * read scan rows, so the kernels run once, after the sort. Above the
+    * kernel tier the sort pins its partition count, as [[codecDocIds]]
+    * does, because AQE sizes the post-sort read by compressed text bytes
+    * and would land the kernels on a couple of tasks (measurements:
+    * BASELINE.md, "Scale gate ledgers"). */
   private def sortedDocs(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents").select("doc_id", "text")
     if (docsUnderSpread(s, d)) base.orderBy("doc_id")
@@ -122,85 +110,33 @@ object Catalog {
       .sortWithinPartitions("doc_id")
 
   /** (doc_id, text) for CPU-heavy per-row kernel chains (x85 chunk+md5,
-    * x89 winnowing, x90/x95 bm25, x91 pmi), hash-spread across cores with
-    * a PINNED partition count when the scan is big enough to earn it: the
-    * corpus parquet is byte-tiny at test scale, so the scan yields a
-    * handful of input splits and AQE cannot see per-row kernel cost (the
-    * codec-tier lesson, see [[codecDocIds]]) — a plain hash repartition
-    * (no range-sampling job) with a user-specified count is exempt from
-    * AQE coalescing and spreads the kernel stage. At real scale
-    * `files.maxPartitionBytes` already splits the scan, the estimate blows
-    * past the gate, and the branch is moot — but hash-clustering by doc_id
-    * is still what the downstream aggregates want.
-    *
-    * The spread is GATED on the scan's size estimate (optimizedPlan.stats
-    * — the parquet file bytes; no job): under the gate the kernel work on
-    * 1-2 input splits costs less than the exchange + its AQE stage jobs
-    * (x85 at sf0.1: an unconditional spread measured +0.33 s of pure
-    * floor), above it the serialized scan dominates (x85 at sf1:
-    * 1.76 → 1.12 s WITH the spread). An ungated variant existed through
-    * r14 (x89/x90/x91/x95) — r15 A/B'd each onto the gate: x89 0.59→0.22,
-    * x95 0.60→0.50, x97 0.64→0.52 (inline form), x91 wash on wall but
-    * 196 → 5 tasks. */
-  private val SpreadBytes = 2L << 20
-  private val SpreadRows = 20L * 1000
-  /** Gate byte floor, conf-overridable (`spark.graft.kernelSpreadBytes`) so
-    * PlanShapeSpec can pin the at-scale spread branch on tiny test data —
-    * the same role `spark.graft.oneTaskFloorBytes` plays for [[oneTaskPlan]]. */
-  private def spreadFloorBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.kernelSpreadBytes")
-      .map(_.toLong).getOrElse(SpreadBytes)
-  /** Row companion to the byte floor (`spark.graft.kernelSpreadRows`,
-    * default 20k): compressed bytes drift with codec/corpus — the r16
-    * one-task lesson, where events-sf1 compressed under a cap calibrated
-    * as unreachable — so the spread also triggers on the parquet-footer
-    * doc count (zero-job, [[graft.sources.Tables.rowCount]]). 20k sits
-    * 4× above sf0.1's 5k docs and 2.5× under sf1's 50k: either statistic
-    * alone keeps today's branches; a recompressed corpus cannot silently
-    * serialize a 50k-doc kernel pass. */
-  private def spreadFloorRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.kernelSpreadRows")
-      .map(_.toLong).getOrElse(SpreadRows)
+    * x89 winnowing, x90/x95 bm25, x91 pmi): above the kernel tier, a hash
+    * spread with a PINNED partition count (exempt from AQE coalescing,
+    * which cannot see per-row kernel cost — the [[codecDocIds]] lesson);
+    * below it, the one or two input splits cost less than the exchange and
+    * its AQE stage jobs (measurements: BASELINE.md, "Scale gate ledgers"). */
   private def kernelDocsAuto(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents").select("doc_id", "text")
     if (!docsUnderSpread(s, d))
       base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    // r15: the under-spread scan is ONE split anyway, but a bare FileScan
-    // reports UnknownPartitioning, so downstream windows/aggs still plan
-    // exchanges + AQE stage jobs. coalesce(1) is a no-op narrow here and
-    // reports SinglePartition — the whole consumer fuses into one task
-    // (x89: 5 jobs → 1, measured)
+    // a bare FileScan reports UnknownPartitioning; coalesce(1) is a no-op
+    // narrow that reports SinglePartition, so the consumer fuses into one task
     else base.coalesce(1)
   }
 
-  /** True iff [[kernelDocsAuto]] takes its FUSED (coalesce(1)) branch —
-    * kernel queries that add window-total tails must gate them on the SAME
-    * statistic, or a 2–16 MB corpus would spread for the kernel and then
-    * funnel back through a global window. */
+  /** The kernel tier's decision on the corpus. Kernel queries that add
+    * window-total tails gate them on this same decision, so a corpus never
+    * spreads for the kernel and then funnels back through a global window. */
   private def docsUnderSpread(s: SparkSession, d: String): Boolean =
-    t(s, d, "documents").select("doc_id", "text")
-      .queryExecution.optimizedPlan.stats.sizeInBytes < spreadFloorBytes(s) &&
-      graft.sources.Tables.rowCount(s, d, "documents") < spreadFloorRows(s)
+    ScalePolicy.fits(s, ScalePolicy.KernelSpread, d, Seq("documents"),
+      Seq("doc_id", "text"))
 
-  /** (doc_id, text) input for x20's shingle-set corpus pass, hash-spread
-    * above the kernel-spread gate (r17 session 2). The corpus parquet is
-    * ONE row group per file at sf0.1–sf1 (and ~7 at sf5), and a parquet
-    * row group is read by exactly one task — so the ShingleSet kernel +
-    * `packed` checkpoint ran effectively single-task at sf1 (JobProfile:
-    * 0.5–0.7 s, 31 cores idle) and every downstream consumer of the
-    * checkpoint (df aggregate, both ShinglePrefix Generates, both verify
-    * broadcast builds) inherited the 2-partition layout. Above the gate
-    * ONE hash exchange carries the projected text once, the kernel runs
-    * `defaultParallelism`-wide and the checkpoint materializes 32-way —
-    * the same statistic and rationale as [[kernelDocsAuto]] (r15/r16:
-    * x47 6.08→1.70 s, x85 1.76→1.12 s at scale). Measured (JobProfile
-    * best-of-5, sf1): 3.316 → 1.476 s. Below the gate the raw scan keeps
-    * its r16-pinned shape: the sf0.1 A/B in minhashGroupPairs (exchange +
-    * 32-task scheduling costs more than the one-task kernel saves on 5k
-    * docs) stands unchanged. x18 measured a wash on the same spread (see
-    * its catalog note) and keeps the raw scan. Package-private so
-    * PlanShapeSpec can pin both branches — the checkpoint hides the spread
-    * exchange from the query's own plan (the minhashGroupPairs pattern). */
+  /** (doc_id, text) input for x20's shingle-set corpus pass: hash-spread
+    * above the kernel tier, because the corpus is one parquet row group per
+    * file and one task reads a row group, so the kernel and every consumer
+    * of its checkpoint would otherwise run single-task. Package-private so
+    * PlanShapeSpec can pin both branches (the checkpoint hides the spread
+    * exchange from the query's own plan). */
   private[graft] def dedupDocs(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents").select("doc_id", "text")
     if (docsUnderSpread(s, d)) base
@@ -213,55 +149,17 @@ object Catalog {
     * keeps the fully-distributed shuffle-join plan. */
   private val MaxBroadcastLmEntries: Int = 1 << 20
 
-  /** ONE-TASK floor fusion for cheap-expression relational queries (r14).
-    *
-    * When a query's entire input is tiny — summed parquet bytes from the
-    * scan relations' `optimizedPlan.stats`, the same zero-job statistic
-    * broadcast thresholds and [[kernelDocsAuto]] gate on — `coalesce(1)`
-    * the scans. A 1-partition child reports `SinglePartition`, which
-    * satisfies every required distribution, so EnsureRequirements inserts
-    * ZERO exchanges and the whole query (scan, join, agg, window, total
-    * sort, sink) fuses into ONE single-task stage: no AQE per-exchange
-    * stage jobs, no range-sampling pass, no 32-task reduce stages. The
-    * floor-class rows in BENCH pay 2-3 jobs × ~0.1 s of pure scheduling
-    * against DuckDB totals of ~0.01 s (BASELINE.md's row-group finding:
-    * every sf0.1 scan is one task regardless); below the cap one task IS
-    * the right plan on any engine — DuckDB runs these same queries on
-    * effectively one morsel. Above the cap the plan is byte-identical to
-    * the ungated one, so the 100 TB posture is untouched: the gate can
-    * never fire on a real corpus (sf1's events already exceeds it).
-    *
-    * EXCLUDED by design: kernel/codec/dedup tiers, whose per-row CPU a
-    * byte gate cannot see (the codec-tier lesson at [[codecDocIds]]) —
-    * those keep their explicit spreads. Gate tunable/disable-able via
-    * `spark.graft.oneTaskFloorBytes` (0 disables; used by PlanShapeSpec
-    * to pin the at-scale plan shapes).
-    *
-    * r16 addition — a ROW cap alongside the byte cap
-    * (`spark.graft.oneTaskFloorRows`, default 750k, 0 disables fusion):
-    * `stats.sizeInBytes` is COMPRESSED file bytes, and the 2026-08-13
-    * corpus regeneration compressed events-sf1 (1M rows) to 11.9 MB —
-    * under the byte cap that was calibrated as "sf1's events already
-    * exceeds it" — so every events-only fused query silently planned a
-    * 1M-row SINGLE-TASK job at sf1 (caught by pair O's per-query rows:
-    * x62 2.50 s/1 task, x74 2.13, x28 1.44). The row count comes from
-    * the parquet footers ([[Tables.rowCount]] — zero-job, cached,
-    * compression-invariant); 750k keeps every bench-SF fusion (sf0.1
-    * max is lineitem's 600k) and can never hold at sf1+ (events 1M,
-    * growing linearly). Both caps must pass: a wide-row corpus under
-    * the row cap still fuses only if its bytes are one-task-sized. */
-  private val OneTaskFloorBytes = 16L << 20
-  private val OneTaskFloorRows = 750L * 1000
-  private def oneTaskPlan(s: SparkSession, d: String, tables: String*): Boolean = {
-    val cap = s.conf.getOption("spark.graft.oneTaskFloorBytes")
-      .map(_.toLong).getOrElse(OneTaskFloorBytes)
-    val rowCap = s.conf.getOption("spark.graft.oneTaskFloorRows")
-      .map(_.toLong).getOrElse(OneTaskFloorRows)
-    cap > 0 && rowCap > 0 &&
-      tables.map(n =>
-        t(s, d, n).queryExecution.optimizedPlan.stats.sizeInBytes).sum <= BigInt(cap) &&
-      tables.map(n => graft.sources.Tables.rowCount(s, d, n)).sum <= rowCap
-  }
+  /** ONE-TASK floor fusion for cheap-expression relational queries: when
+    * the named tables together fit the one-task tier, callers
+    * `coalesce(1)` the scans. A 1-partition child reports
+    * `SinglePartition`, which satisfies every required distribution, so
+    * the whole query (scan, join, agg, window, total sort, sink) plans as
+    * ONE single-task stage with zero exchanges; above the tier the plan is
+    * the ungated one. Kernel, codec and dedup tiers keep their own spreads,
+    * because a byte statistic cannot see per-row CPU (measurements:
+    * BASELINE.md, "Scale gate ledgers"). */
+  private def oneTaskPlan(s: SparkSession, d: String, tables: String*): Boolean =
+    ScalePolicy.fits(s, ScalePolicy.OneTask, d, tables)
 
   /** [[oneTaskPlan]]-gated single-table loader: the common case where the
     * query reads one table (multi-table queries gate on the sum explicitly
@@ -699,34 +597,14 @@ object Catalog {
     * the banded shuffle-per-band variant of x21 (which brute-forces a
     * bounded probe set). */
   val x34 = Q("x34_dedup_embedding_lsh",
-    // r10 kept reportSort because orderBy's sampler would RE-RUN the
-    // banded cosine join (the expensive part); the r17 x18 technique —
-    // EAGER-checkpoint the pair set so the sampler reads memory — postdates
-    // that ledger and flips the trade once the pair set carries real
-    // volume: the one-task merge was ~2 s of the 6.7 s sf5 wall (4.4M
-    // rows through one sort task; at sf25 it is ~2 GB through one task,
-    // the documented OOM shape at 100 TB). Above the gate (embeddings
-    // ≥ 16 MB — sf1+; the checkpoint is constructed inside the timed
-    // region per run, keyed on nothing) the pipeline runs once into the
-    // checkpoint and a PARALLEL range sort emits the total order; below
-    // it the one-task merge stays (checkpoint + sampler + final = 2 extra
-    // scheduling jobs on a report-sized pair set — embeddings are 0.8 MB
-    // at sf0.1 and 5.2 MB at sf1, so both keep the merge). Measured
-    // (JobProfile best-of-5, same-window stash pairs): sf5 6.67 → 4.25 s.
-    // Unlike x18's r10-rejected
-    // pair-level checkpoint (65M exploded rows vs a 4 s pipeline), x34's
-    // pair set is the SMALL side of its query — materializing it costs
-    // less than the join re-runs it stops.
+    // the sort tail follows the pair set's size: below the one-task tier
+    // the report-sized pairs merge on one task; above it the eagerly
+    // checkpointed pair set feeds a PARALLEL range sort, so the sampler
+    // reads memory instead of re-running the banded cosine join
+    // (measurements: BASELINE.md, "Scale gate ledgers")
     (s, d) => {
       val pairs = Dedup.embeddingNearDupLsh(t(s, d, "embeddings"), 0.3)
-      // conf override (`spark.graft.pairSortBytes`) so the oracle gate and
-      // PlanShapeSpec can exercise the at-scale branch on tiny test data —
-      // the same role every other gate's knob plays
-      val cap = s.conf.getOption("spark.graft.pairSortBytes")
-        .map(_.toLong).getOrElse(16L << 20)
-      val small = t(s, d, "embeddings")
-        .queryExecution.optimizedPlan.stats.sizeInBytes < cap
-      if (small) reportSort(pairs, col("a"), col("b"))
+      if (oneTaskPlan(s, d, "embeddings")) reportSort(pairs, col("a"), col("b"))
       else pairs.localCheckpoint(true).orderBy(col("a"), col("b"))
     },
     Some {
@@ -900,8 +778,7 @@ object Catalog {
     * `quantile_cont` share the linear-interpolation definition). */
   val x33 = Q("x33_percentiles",
     // array-form percentile plan (r15): see Relational.exactPercentiles —
-    // one builtin map for all three qs; the count-table variant measured
-    // worse at sf0.1/1/5 and sits behind spark.graft.pctCountTable (r16)
+    // one builtin map for all three qs
     (s, d) => reportSortFused(
       Relational.exactPercentiles(tF(s, d, "events"), Seq("event_type"),
           col("value"), Seq(0.5 -> "p50r", 0.9 -> "p90r", 0.99 -> "p99r"))
@@ -3198,14 +3075,12 @@ object Catalog {
     * report is O(|sources|²). */
   val x97 = Q("x97_source_overlap",
     (s, d) => {
-      // spread gated on scan bytes (r15, the kernelDocsAuto rule): below
-      // SpreadBytes the 32-way kernel exchange on a 1-split scan was pure
-      // floor; above it the winnow kernel earns the spread
+      // the kernel tier decides, as in kernelDocsAuto: above it the winnow
+      // kernel earns the spread; below it one partition fuses the self-join
       val raw = t(s, d, "documents").select("doc_id", "source", "text")
       val spread =
-        if (raw.queryExecution.optimizedPlan.stats.sizeInBytes >= SpreadBytes)
-          raw.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        else raw.coalesce(1) // SinglePartition → the self-join fuses
+        if (docsUnderSpread(s, d)) raw.coalesce(1)
+        else raw.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val fps = spread
         .select(col("source"), explode(graft.functions.TextHashFunctions
           .winnowSet(col("text"), 4, 5)).as("fp"))

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
 
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, ScalePolicy}
 import graft.queries.Catalog
 
 /** Diagnostic main behind the bench tuning loop: per query, counts the
@@ -13,6 +13,8 @@ import graft.queries.Catalog
   * floor (FloorProbe: ~0.05-0.1 s/job at this session shape) times the
   * job count is the irreducible part of a query's wall time — so the
   * tuning loop targets job count first, partition/task count second.
+  * Under each query's row, one line per [[ScalePolicy]] decision its
+  * build made (tier, inputs, statistics, caps, branch).
   *
   * Args: optional query-name filter (same convention as Bench).
   */
@@ -46,11 +48,12 @@ object JobProfile {
       override def onTaskStart(t: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
     })
 
-    def runOnce(name: String): Double = {
+    def runOnce(name: String): (Double, Seq[ScalePolicy.Decision]) = {
       val t0 = System.nanoTime()
-      Catalog.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
+      val (df, decisions) =
+        ScalePolicy.recorded(Catalog.queries(name)(spark, sfDir))
+      df.write.mode("overwrite").format("noop").save()
+      ((System.nanoTime() - t0) / 1e9, decisions)
     }
 
     val names =
@@ -66,12 +69,13 @@ object JobProfile {
       // drain pause stands in for the private listenerBus.waitUntilEmpty)
       Thread.sleep(300)
       jobs.set(0); stages.set(0); tasks.set(0)
-      val t1 = runOnce(name)
+      val (t1, decisions) = runOnce(name)
       Thread.sleep(300)
       val (j, st, tk) = (jobs.get(), stages.get(), tasks.get())
-      val best = math.min(t1, (1 to 4).map(_ => runOnce(name)).min)
+      val best = math.min(t1, (1 to 4).map(_ => runOnce(name)._1).min)
       totBest += best
       println(f"$name%-28s $best%8.3f $j%5d $st%7d $tk%6d")
+      decisions.foreach(d => println(s"  $d"))
     }
     println(f"TOTAL $totBest%.3f")
     spark.stop()

@@ -7,7 +7,7 @@ import graft.queries.Catalog
 /** t1 smoke (SURVEY.md §5): every declared query runs at sf0.001 and its
   * output schema has the exact column names the oracle will compare on. */
 class CatalogSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf0001}
+  import SparkTestSession.{atScale, spark, sf0001}
 
   val expectedCols: Map[String, Seq[String]] = Map(
     "q01_project_rename" -> Seq("okey", "pkey", "rflag"),
@@ -183,29 +183,21 @@ class CatalogSpec extends AnyFunSuite {
 
   test("one-task floor fusion: fused and at-scale branches return identical " +
     "rows (r14) — including x62's join-free array funnel") {
-    // representatives of each fused shape: plain relational (q09 hash-join
-    // route swap), window (q11), two-pass window route (x51/x87), and the
-    // one genuinely different tiny-scale plan (x62's array funnel vs the
-    // join funnel)
-    for (name <- Seq("q09_join_agg", "q11_latest_per_user",
-        "x51_rank_distribution", "x87_shuffle_shards", "x62_funnel",
-        // r15 fused shapes: curation report, window-layered mixture rates,
-        // single-partition bloom decontamination
-        "x49_curation", "x84_mixture_sample", "x102_bloom_decontamination",
-        "x22_sim_lsh")) {
-      // ROW-SET comparison (sorted render), not row order: the driver's
-      // oracle compare sorts before hashing, and e.g. x87's two branches
-      // emit the same total (shard, pos) content from different partition
-      // layouts
-      val fused = Catalog.queries(name)(spark, sf0001).collect()
+    // the suite-level forced leg: `large` takes every at-scale branch (the
+    // one-task fusions, kernel spreads, x34's pair sort, x97's spread and
+    // keyedRowNumbers' two-pass), which sf0.001 never reaches on its own.
+    // ROW-SET comparison (sorted render), not row order: the oracle
+    // compare (tools/check_oracle.py) sorts before hashing, and e.g. x87's
+    // two branches emit the same total (shard, pos) content from different
+    // partition layouts
+    for (q <- Catalog.all) {
+      def rows() = Catalog.queries(q.name)(spark, sf0001).collect()
         .map(_.toString).sorted.toSeq
-      spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-      val plain = try Catalog.queries(name)(spark, sf0001).collect()
-          .map(_.toString).sorted.toSeq
-        finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
-      assert(fused == plain,
-        s"$name: one-task branch diverges from the at-scale branch " +
-          s"(${fused.size} vs ${plain.size} rows)")
+      val auto = rows()
+      val large = atScale { rows() }
+      assert(auto == large,
+        s"${q.name}: the small-input branch diverges from the at-scale " +
+          s"branch (${auto.size} vs ${large.size} rows)")
     }
   }
 

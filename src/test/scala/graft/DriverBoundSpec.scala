@@ -46,10 +46,6 @@ class DriverBoundSpec extends AnyFunSuite {
         "per partition — bounded by partition count"),
     "X102Probe.scala" -> (1,
       "route-stats aggregate .head() — ONE (count, sum) row per probe run"),
-    "CurationBench.scala" -> (2,
-      "max(doc_id) .head() — one row; thresholds collect — ONE " +
-        "(source, cutoff) row per source (discreteThreshold is " +
-        "source-grouped), sources are a fixed small enum in testdata"),
     "Sharding.scala" -> (2,
       "expected-count and write-audit aggregates — one row per shard, " +
         "bounded by nShards"),

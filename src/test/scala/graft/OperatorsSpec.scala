@@ -1206,22 +1206,6 @@ class OperatorsSpec extends AnyFunSuite {
     // exact double equality: the helper IS the builtin fed in array form,
     // so no ulp tolerance is needed — any drift means the form diverged
     assert(got.toSeq == exp.toSeq)
-    // count-table arm (spark.graft.pctCountTable, r16): percentile's
-    // frequency argument sums into the same OpenHashMap buffer the raw-row
-    // form builds by +1 increments, so the arm must be bit-identical too
-    // (duplicate values in the corpus exercise counts > 1)
-    spark.conf.set("spark.graft.pctCountTable", "true")
-    try {
-      val dupd = df.union(df.limit(200))
-      val ct = Relational.exactPercentiles(dupd, Seq("key"), col("value"), qs)
-        .orderBy("key").collect()
-        .map(r => (r.getString(0), qs.indices.map(i => r.getDouble(i + 1))))
-      spark.conf.set("spark.graft.pctCountTable", "false")
-      val direct = Relational.exactPercentiles(dupd, Seq("key"), col("value"), qs)
-        .orderBy("key").collect()
-        .map(r => (r.getString(0), qs.indices.map(i => r.getDouble(i + 1))))
-      assert(ct.toSeq == direct.toSeq)
-    } finally spark.conf.unset("spark.graft.pctCountTable")
   }
 
   test("groupCaps: kept counts respect the cap, dropped is the remainder, " +

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.ScalePolicy
 import graft.queries.Catalog
 import graft.sources.Tables
 
@@ -13,7 +14,7 @@ import graft.sources.Tables
   * actually appear in the physical plan — at 100 TB these are the
   * difference between reading one partition and reading the lake. */
 class PlanShapeSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf0001}
+  import SparkTestSession.{atScale, spark, sf0001}
 
   def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -52,12 +53,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q09 fact⋈dim join broadcasts the dim side (E1, at-scale branch)") {
     // the r14 one-task floor fusion fires at sf0.001; pin the AT-SCALE plan
-    // by disabling the gate for this build
-    spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-    try {
-      val plan = planOf(Catalog.queries("q09_join_agg")(spark, sf0001))
-      assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
-    } finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
+    val plan = atScale { planOf(Catalog.queries("q09_join_agg")(spark, sf0001)) }
+    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
   }
 
   test("q09 one-task floor fusion: tiny inputs plan with ZERO exchanges (r14)") {
@@ -69,27 +66,53 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("one-task fusion also gates on parquet ROW count, not only compressed " +
     "bytes (r16: events-sf1 compressed under the byte cap)") {
-    // with the row cap forced below the table sizes, the same tiny inputs
-    // must take the at-scale branch — exchanges come back
-    spark.conf.set("spark.graft.oneTaskFloorRows", "1")
-    try {
-      val plan = planOf(Catalog.queries("q09_join_agg")(spark, sf0001))
-      assert(plan.contains("Exchange"),
-        s"row cap 1 must disable the one-task fusion:\n$plan")
-    } finally spark.conf.unset("spark.graft.oneTaskFloorRows")
+    // bytes under the cap with rows over it is NOT small
+    val tier = ScalePolicy.OneTask
+    assert(!tier.admits(bytes = 1, rows = tier.maxRows + 1))
+    assert(tier.admits(bytes = 1, rows = tier.maxRows))
+    // the decision reads the summed footer rows of the gated tables
+    val rows = Seq("orders", "customer").map(Tables.rowCount(spark, sf0001, _)).sum
+    val (_, decisions) = ScalePolicy.recorded(
+      Catalog.queries("q09_join_agg")(spark, sf0001))
+    assert(decisions.exists(d => d.tier == tier.name &&
+      d.input == "orders+customer" && d.statistics.contains(s" rows=$rows ")),
+      s"q09's one-task decision must carry rows=$rows: $decisions")
+    // the at-scale branch brings the exchanges back
+    val plan = atScale { planOf(Catalog.queries("q09_join_agg")(spark, sf0001)) }
+    assert(plan.contains("Exchange"),
+      s"the at-scale branch must disable the one-task fusion:\n$plan")
     // and the footer statistic itself is exact
-    assert(graft.sources.Tables.rowCount(spark, sf0001, "events") ==
+    assert(Tables.rowCount(spark, sf0001, "events") ==
       Tables.events(spark, sf0001).count())
+  }
+
+  test("spark.graft.scale accepts only auto and large; anything else fails " +
+    "the first decision") {
+    spark.conf.set(ScalePolicy.Conf, "off")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Catalog.queries("q09_join_agg")(spark, sf0001))
+      assert(e.getMessage.contains("spark.graft.scale=off"), e.getMessage)
+    } finally spark.conf.unset(ScalePolicy.Conf)
   }
 
   test("kernel-spread gate also triggers on doc COUNT, not only compressed " +
     "bytes (r16: the same compression-fragility class as the one-task cap)") {
-    spark.conf.set("spark.graft.kernelSpreadRows", "1")
-    try {
-      val plan = planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
-      assert(plan.contains("Exchange hashpartitioning(doc_id"),
-        s"row floor 1 must force the kernel spread:\n$plan")
-    } finally spark.conf.unset("spark.graft.kernelSpreadRows")
+    // bytes under the cap with rows over it is NOT small
+    val tier = ScalePolicy.KernelSpread
+    assert(!tier.admits(bytes = 1, rows = tier.maxRows + 1))
+    assert(tier.admits(bytes = 1, rows = tier.maxRows))
+    // the decision reads the corpus' footer doc count
+    val docs = Tables.rowCount(spark, sf0001, "documents")
+    val (_, decisions) = ScalePolicy.recorded(
+      Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
+    assert(decisions.exists(d => d.tier == tier.name &&
+      d.statistics.contains(s" rows=$docs ")),
+      s"x47's kernel-spread decision must carry rows=$docs: $decisions")
+    val plan = atScale {
+      planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001)) }
+    assert(plan.contains("Exchange hashpartitioning(doc_id"),
+      s"the at-scale branch must force the kernel spread:\n$plan")
     // default at sf0.001: fused, zero exchanges
     val fused = planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
     assert(!fused.contains("Exchange"),
@@ -111,9 +134,8 @@ class PlanShapeSpec extends AnyFunSuite {
       s"x84's fused branch must be join-free (window-layered rates):\n$x84Fused")
     assert(x84Fused.contains("Window"),
       s"x84's fused branch lost its rate windows:\n$x84Fused")
-    // at-scale branch: gate off restores the distributed shapes
-    spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-    try {
+    // at-scale branch: the distributed shapes
+    atScale {
       val x49 = planOf(Catalog.queries("x49_curation")(spark, sf0001))
       assert(x49.contains("Exchange"),
         s"x49's at-scale branch must keep its aggregate exchanges:\n$x49")
@@ -124,7 +146,10 @@ class PlanShapeSpec extends AnyFunSuite {
         Catalog.queries("x102_bloom_decontamination")(spark, sf0001))
       assert(x102.contains("Exchange"),
         s"x102's at-scale branch must keep its shingle exchanges:\n$x102")
-    } finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
+      // the corpus spread (dedupDocs) runs inside the packed checkpoint
+      assert(x102.contains("ExistingRDD"),
+        s"x102's at-scale branch must read its kernel-once checkpoint:\n$x102")
+    }
   }
 
   test("q05 distinct-count aggregates partially before the shuffle (C13)") {
@@ -168,10 +193,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("x22 ANN broadcasts ONLY the bounded probe side (at-scale branch)") {
     // r15: the one-task fusion fires at sf0.001; pin the AT-SCALE broadcast
-    // shape with the gate off (the fused branch is pinned separately)
-    spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-    val plan = try planOf(Catalog.queries("x22_sim_lsh")(spark, sf0001))
-      finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
+    // shape (the fused branch is pinned separately)
+    val plan = atScale { planOf(Catalog.queries("x22_sim_lsh")(spark, sf0001)) }
     assert(plan.contains("BroadcastHashJoin"),
       s"expected broadcast of the probe side in:\n$plan")
     // the candidate corpus must NOT be broadcast: the only broadcast exchange
@@ -230,16 +253,13 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("x20 corpus pass (dedupDocs) hash-spreads above the kernel-spread " +
     "gate and keeps the raw scan below it (r17)") {
-    // at-scale branch: force the gate off — the checkpoint input must be
-    // hash-spread across defaultParallelism so the ShingleSet kernel and
-    // every checkpoint consumer parallelize (the one-row-group corpus
-    // otherwise serializes them; JobProfile sf1: 3.32 -> 1.48 s)
-    spark.conf.set("spark.graft.kernelSpreadRows", "1")
-    try {
-      val plan = planOf(Catalog.dedupDocs(spark, sf0001))
-      assert(plan.contains("Exchange hashpartitioning(doc_id"),
-        s"row floor 1 must force the x20 corpus spread:\n$plan")
-    } finally spark.conf.unset("spark.graft.kernelSpreadRows")
+    // at-scale branch: the checkpoint input must be hash-spread across
+    // defaultParallelism so the ShingleSet kernel and every checkpoint
+    // consumer parallelize (the one-row-group corpus otherwise serializes
+    // them; JobProfile sf1: 3.32 -> 1.48 s)
+    val plan = atScale { planOf(Catalog.dedupDocs(spark, sf0001)) }
+    assert(plan.contains("Exchange hashpartitioning(doc_id"),
+      s"the at-scale branch must force the x20 corpus spread:\n$plan")
     // bench-SF branch: no exchange — the r16 sf0.1 adjudication (exchange +
     // 32-task scheduling costs more than the one-task kernel saves) stands
     val under = planOf(Catalog.dedupDocs(spark, sf0001))
@@ -259,14 +279,12 @@ class PlanShapeSpec extends AnyFunSuite {
       s"x34 below the gate must not checkpoint the pair set:\n$merge")
     // at-scale branch: the eagerly checkpointed pair set feeds a PARALLEL
     // range sort — the sampler reads memory, never re-runs the banded join
-    spark.conf.set("spark.graft.pairSortBytes", "1")
-    try {
-      val par = planOf(Catalog.queries("x34_dedup_embedding_lsh")(spark, sf0001))
-      assert(par.contains("ExistingRDD"),
-        s"x34's at-scale branch must read the checkpointed pair set:\n$par")
-      assert(par.contains("Exchange rangepartitioning"),
-        s"x34's at-scale branch must range-sort in parallel:\n$par")
-    } finally spark.conf.unset("spark.graft.pairSortBytes")
+    val par = atScale {
+      planOf(Catalog.queries("x34_dedup_embedding_lsh")(spark, sf0001)) }
+    assert(par.contains("ExistingRDD"),
+      s"x34's at-scale branch must read the checkpointed pair set:\n$par")
+    assert(par.contains("Exchange rangepartitioning"),
+      s"x34's at-scale branch must range-sort in parallel:\n$par")
   }
 
   test("one-exchange window fusion: window + output order share a single " +
@@ -275,9 +293,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val names = Seq("q11_latest_per_user", "x36_window_lag",
       "x45_window_frame", "x46_sessionize", "x58_window_range_frame",
       "x73_forward_fill")
-    // at-scale branch: the gate off pins the one-exchange design
-    spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-    try {
+    // at-scale branch: the one-exchange design
+    atScale {
       for (name <- names) {
         val plan = planOf(Catalog.queries(name)(spark, sf0001))
         val dataExchanges = "Exchange (range|hash)partitioning".r
@@ -286,7 +303,7 @@ class PlanShapeSpec extends AnyFunSuite {
           s"$name must shuffle its rows exactly once (found $dataExchanges):\n$plan")
         assert(plan.contains("Window"), s"$name lost its window:\n$plan")
       }
-    } finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
+    }
     // fused branch (default at sf0.001): the whole query plans NO exchange
     for (name <- names) {
       val plan = planOf(Catalog.queries(name)(spark, sf0001))
@@ -301,11 +318,9 @@ class PlanShapeSpec extends AnyFunSuite {
     // ranking machinery — the plan must carry the object-hash aggregate
     // (CollectTopK is a TypedImperativeAggregate) in partial+final form
     // and NO Window or per-group sort anywhere
-    // at-scale branch (pinned via the spread knob, the oneTaskFloorBytes
-    // pattern): kernel spread exchange + the partial-heap exchange, and
-    // still no ranking machinery anywhere
-    spark.conf.set("spark.graft.kernelSpreadBytes", "1")
-    try {
+    // at-scale branch: kernel spread exchange + the partial-heap exchange,
+    // and still no ranking machinery anywhere
+    atScale {
       val plan = planOf(Catalog.queries("x101_topk_exemplars")(spark, sf0001))
       assert(plan.contains("ObjectHashAggregate"),
         s"x101 lost the heap aggregate:\n$plan")
@@ -317,7 +332,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(dataExchanges == 2,
         s"x101 at scale must shuffle exactly twice — the kernel spread and " +
           s"the partial-heap exchange (found $dataExchanges):\n$plan")
-    } finally spark.conf.unset("spark.graft.kernelSpreadBytes")
+    }
     // fused branch (default at sf0.001, the r16 inline spread gate): the
     // single-partition input satisfies the heap agg's distribution, so the
     // whole query plans ZERO exchanges — and keeps the heap, not a window
@@ -340,8 +355,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // output (grows with the data) sorts WITHIN user_id-ranged partitions —
     // never a single-task report merge (the x74 sf1 lesson)
     val names = Seq("x72_gapfill", "x98_interpolate")
-    spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-    try {
+    atScale {
       for (name <- names) {
         val plan = planOf(Catalog.queries(name)(spark, sf0001))
         assert("Exchange (range|hash)partitioning".r.findAllIn(plan).length == 1,
@@ -352,7 +366,7 @@ class PlanShapeSpec extends AnyFunSuite {
         assert(!plan.contains("Exchange SinglePartition"),
           s"$name's table-shaped output must not merge to one task:\n$plan")
       }
-    } finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
+    }
     // fused branch (default at sf0.001): zero exchanges, same operator set
     for (name <- names) {
       val plan = planOf(Catalog.queries(name)(spark, sf0001))
@@ -368,9 +382,7 @@ class PlanShapeSpec extends AnyFunSuite {
     "checkpoint job; the query plan itself is exchange-free (x62)") {
     for (name <- Seq("x62_funnel")) {
       // at-scale branch
-      spark.conf.set("spark.graft.oneTaskFloorBytes", "0")
-      val plan = try planOf(Catalog.queries(name)(spark, sf0001))
-        finally spark.conf.unset("spark.graft.oneTaskFloorBytes")
+      val plan = atScale { planOf(Catalog.queries(name)(spark, sf0001)) }
       // the repartition(user_id) ran once inside the localCheckpoint
       // materialization; every consumer reads the partitioning-preserving
       // RDD scan, so aggregates and user_id joins need NO further shuffle

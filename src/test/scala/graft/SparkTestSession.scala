@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, ScalePolicy}
 
 /** One shared local session for all suites (forked test JVM). */
 object SparkTestSession {
@@ -13,4 +13,12 @@ object SparkTestSession {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with every scale decision forced to its at-scale branch
+    * (`spark.graft.scale=large`), so tiny test data plans the shapes a real
+    * corpus takes. */
+  def atScale[T](body: => T): T = {
+    spark.conf.set(ScalePolicy.Conf, "large")
+    try body finally spark.conf.unset(ScalePolicy.Conf)
+  }
 }

@@ -13,6 +13,10 @@
 # can't overwrite the dump a failure diagnosis needs. Verify runs one SF at
 # a time (never two JVMs concurrently — bench contamination rule; also the
 # 128 GiB heap budget assumes one driver).
+#
+# The forced leg always follows: the FIRST sf dir runs a second time with
+# spark.graft.scale=large into /tmp/gate_out/<name>-large, so every
+# at-scale branch the small SFs never reach keeps an oracle check.
 set -u
 # Zero args (e.g. a typo'd CI variable expanding empty) must NOT read as a
 # green gate — "GATE: GREEN (0 sf dirs)" would turn a misconfiguration into
@@ -32,14 +36,18 @@ if [ -n "${GATE_HEAVY:-}" ]; then
   echo "gate: heavy multi-file+agg-hash route for: $GATE_HEAVY"
 fi
 fail=0
-for sf in "$@"; do
-  name=$(basename "$sf")
-  out="/tmp/gate_out/$name"
+# leg SF_DIR OUT_NAME: Verify into /tmp/gate_out/OUT_NAME, then the oracle
+leg() {
+  local sf=$1 out="/tmp/gate_out/$2"
   rm -rf "$out"; mkdir -p "$out"
-  echo "=== gate: Verify $sf -> $out ==="
-  sbt -batch "runMain graft.Verify $sf $out" || { echo "GATE RED: Verify failed at $sf"; fail=1; continue; }
-  echo "=== gate: oracle check $sf ==="
-  python3 tools/check_oracle.py "$sf" "$out" || { echo "GATE RED: oracle mismatch at $sf"; fail=1; }
+  echo "=== gate: Verify $sf -> $out ${SPARK_GRAFT_CONF:+($SPARK_GRAFT_CONF)} ==="
+  sbt -batch "runMain graft.Verify $sf $out" || { echo "GATE RED: Verify failed at $2"; fail=1; return; }
+  echo "=== gate: oracle check $2 ==="
+  python3 tools/check_oracle.py "$sf" "$out" || { echo "GATE RED: oracle mismatch at $2"; fail=1; }
+}
+for sf in "$@"; do
+  leg "$sf" "$(basename "$sf")"
 done
+SPARK_GRAFT_CONF=spark.graft.scale=large leg "$1" "$(basename "$1")-large"
 if [ "$fail" -ne 0 ]; then echo "GATE: RED"; exit 1; fi
-echo "GATE: GREEN ($# sf dirs)"
+echo "GATE: GREEN ($# sf dirs + forced leg)"

@@ -1,10 +1,14 @@
 package graft
 
 import java.time.LocalDate
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.engine.GraftSession
+import graft.operators.PartitionIncremental
 import graft.pipeline.{LaunchPipeline => LP}
 
 /** Cross-process catalog persistence: the reference serves its table through
@@ -21,9 +25,11 @@ import graft.pipeline.{LaunchPipeline => LP}
   *     table and its partition in the metastore; run a second day, whose
   *     partition is added to the existing table; re-publish day 1 with
   *     changed content. The serving query is verified after each step.
+  *     The re-published day alone is recomputed.
   *   phase2 <base>: a FRESH process resolves the same table and both days
-  *     purely from the metastore (no re-registration) and re-runs the
-  *     serving query.
+  *     purely from the metastore (no re-registration) and serves them from
+  *     phase 1's persisted serving cache with no Spark job; it then deletes
+  *     the cache and serves the same counts again, recomputed.
   * [[graft.HiveCatalogSpec]] forks both phases and asserts the markers.
   */
 object HiveCatalogDemo {
@@ -52,12 +58,32 @@ object HiveCatalogDemo {
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
       .getOrCreate()
 
-  /** The served daily counts must be exactly `want`. */
+  /** The served daily counts must be exactly `want`; returns the serving
+    * call's report and the number of Spark jobs it ran. The job count
+    * waits for a marker job that runs after the call: one listener queue
+    * delivers job starts in order. */
   private def expect(spark: SparkSession, table: String, what: String,
-                     want: Map[LocalDate, Long]): Unit = {
-    val got = LP.dailyCounts(spark, table).collect()
-      .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
-    require(got == want, s"$what: serving query wrong: $got, expected $want")
+                     want: Map[LocalDate, Long]): (PartitionIncremental.Report, Int) = {
+    val sc = spark.sparkContext
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).map(_.getProperty("spark.job.description", ""))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val got = LP.dailyCounts(spark, table).collect()
+        .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
+      require(got == want, s"$what: serving query wrong: $got, expected $want")
+      val report = PartitionIncremental.lastReport
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val jobs = Iterator.continually(Option(started.poll(60, TimeUnit.SECONDS))
+        .getOrElse(sys.error(s"$what: the marker job never started")))
+        .takeWhile(_ != "marker").size
+      (report, jobs)
+    } finally sc.removeSparkListener(listener)
   }
 
   def main(args: Array[String]): Unit = {
@@ -86,12 +112,22 @@ object HiveCatalogDemo {
         raw.getFileSystem(spark.sessionState.newHadoopConf()).delete(raw, false)
         LP.run(spark, zones, day, (_, _, _) => fixture.replace("\"h2\"", "\"h1\""))
         LP.registerTable(spark, zones, table)
-        expect(spark, table, "phase1 re-published day 1", served)
+        val (republished, _) = expect(spark, table, "phase1 re-published day 1", served)
+        require(republished.changed == 1 && republished.state == "hit",
+          s"phase1: the re-published day alone should recompute: $republished")
         println("HIVE_PHASE1_OK")
       case "phase2" =>
-        // no registration here: resolution must come from the metastore
+        // no registration here: resolution must come from the metastore,
+        // and the counts from phase 1's cache, with no Spark job
         require(spark.catalog.tableExists(table), s"$table not in metastore")
-        expect(spark, table, "phase2", served)
+        val (cached, jobs) = expect(spark, table, "phase2", served)
+        require(cached.state == "hit" && cached.changed == 0 && jobs == 0,
+          s"phase2: should serve phase 1's cache with no job: $cached, $jobs jobs")
+        // deleting the cache is always safe: the same counts, recomputed
+        val cache = new Path(s"$base/lake/reports/launch/${PartitionIncremental.CacheDir}")
+        cache.getFileSystem(spark.sessionState.newHadoopConf()).delete(cache, true)
+        val (cold, _) = expect(spark, table, "phase2 without the cache", served)
+        require(cold.state == "cold" && cold.changed == 2, s"phase2: $cold")
         println("HIVE_PHASE2_OK")
     }
     spark.stop()

@@ -99,9 +99,11 @@ object GraftSession {
       SparkSession.builder().master(s"local[$n]").appName(appName), n
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // scale decisions stay visible: one line per gate (ScalePolicy)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "graft.engine.ScalePolicy", org.apache.logging.log4j.Level.INFO)
+    // scale decisions and serving-cache use stay visible: one line per gate
+    // (ScalePolicy) and one per incremental serving call
+    for (logger <- Seq("graft.engine.ScalePolicy", "graft.operators.PartitionIncremental"))
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        logger, org.apache.logging.log4j.Level.INFO)
     spark
   }
 }

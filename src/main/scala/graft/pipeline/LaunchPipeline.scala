@@ -255,7 +255,8 @@ object LaunchPipeline {
     * lacks it. The sync lists the zone's root once and adds the `net=`
     * directories the catalog lacks, each inheriting the table's storage as
     * `ALTER TABLE … ADD PARTITION` would; hidden directories (a crashed
-    * [[publish]]'s staging copy) are never added. One `refreshTable` then
+    * [[publish]]'s staging copy, [[dailyCounts]]' `_serving` cache) are never
+    * added. One `refreshTable` then
     * drops the cached file listings, so a re-published day is read afresh.
     * Unlike `recoverPartitions` it records no per-partition file statistics,
     * which this parquet table's planning never reads and which cost a
@@ -321,9 +322,20 @@ object LaunchPipeline {
 
   /** C13: the reference's one analytical query
     * (src/sql/query/daily_launch_events.sql:1-5) — events per day,
-    * deduplicated by id; partition-pruned when filtered by `net`.
+    * deduplicated by id, one row per day sorted by `net`.
     *
-    * The plain form hash-partitions the scan on `net` once and runs the
+    * Evaluation is eager: the call runs the query and returns the per-day
+    * rows as a local relation, so collecting it runs no job. The rows come
+    * from [[graft.operators.PartitionIncremental]]: each day's count is
+    * cached under a fingerprint of that day's files in
+    * `<table location>/_serving/daily_counts` (`daily_counts_salted` for the
+    * salted arm), and a call recomputes only the days whose files changed
+    * since (the run date's, in a daily run), through the same aggregate
+    * pruned to those days. A day whose files did not change runs no job.
+    * Deleting the cache is always safe: a missing or unreadable cache makes
+    * the call run the aggregate over the whole table. No conf turns it off.
+    *
+    * The plain aggregate hash-partitions the scan on `net` once and runs the
     * whole distinct aggregation (dedup by `(net, id)`, then count by `net`)
     * inside those partitions: `net` clustering satisfies both steps, so the
     * plan has one exchange where `COUNT(DISTINCT)` alone plans two. It gives
@@ -333,22 +345,17 @@ object LaunchPipeline {
     * `salted = true` swaps in [[graft.operators.Relational.saltedDistinctCount]]
     * — the 100 TB form: hashing on `net` makes the hottest day one
     * straggler reducer, salting bounds it at 1/nSalts (same exact result,
-    * per-salt value sets are disjoint).
-    *
-    * The per-day result is one row per day, so the final `ORDER BY net`
-    * runs on one task ([[graft.operators.Relational.reportSortFused]]): no
-    * range-sampling job, one exchange fewer; the scan and the aggregation
-    * stay parallel. */
+    * per-salt value sets are disjoint). */
   def dailyCounts(spark: SparkSession, table: String = "launch_events",
-                  salted: Boolean = false): DataFrame = {
-    val perDay =
+                  salted: Boolean = false): DataFrame =
+    graft.operators.PartitionIncremental(spark, table, "net",
+        if (salted) "daily_counts_salted" else "daily_counts") { events =>
       if (salted)
         graft.operators.Relational.saltedDistinctCount(
-          spark.table(table), Seq(col("net")), col("id"), "event_count")
-      else spark.table(table).repartition(col("net"))
+          events, Seq(col("net")), col("id"), "event_count")
+      else events.repartition(col("net"))
         .groupBy("net").agg(countDistinct("id").as("event_count"))
-    graft.operators.Relational.reportSortFused(perDay, col("net"))
-  }
+    }
 
   /** Per-run hardening, opt-in so the default run stays byte-equivalent to
     * the reference's three-task chain:

@@ -28,6 +28,11 @@ class DriverBoundSpec extends AnyFunSuite {
     "Relational.scala" -> (2,
       "keyedRowNumbers blockStats ≤ parts × |key values|; " +
         "orderedRunningTotal partSums ≤ parts"),
+    "PartitionIncremental.scala" -> (1,
+      "recompute of the partitions whose files changed — the per-partition " +
+        "aggregate's rows for those partitions only (one row per changed " +
+        "day for dailyCounts); the cache it feeds holds one entry per " +
+        "partition"),
     "Merge.scala" -> (3,
       "distinct PARTITION values of the update set / written set — " +
         "bounded by touched partitions, never row counts"),

@@ -9,12 +9,20 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.FileSystem
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.{col, concat, date_add, lit}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.{col, concat, countDistinct, date_add, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.NioLocalFileSystem
+import graft.operators.PartitionIncremental
 import graft.pipeline.{LaunchPipeline => LP}
 
 /** Golden-oracle port of the reference's correctness mechanism (SURVEY.md §5):
@@ -48,6 +56,55 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def freshZones(): LP.Zones =
     LP.Zones(Files.createTempDirectory("graft_lp").toString)
+
+  /** Partitions selected by each scan of `table` in an executed query. */
+  def partitionsScanned(qe: QueryExecution, table: String): Seq[Int] =
+    new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+      case s: FileSourceScanExec if s.tableIdentifier.exists(_.table == table) =>
+        s.selectedPartitions.partitionCount
+    }
+
+  /** Runs `body` with the serving cache's logger at INFO; returns its value
+    * and the (level, message) events that logger emitted meanwhile. */
+  def cacheLog[T](body: => T): (T, Seq[(Level, String)]) = {
+    val name = "graft.operators.PartitionIncremental"
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(Level, String)]()
+    val appender = new AbstractAppender("serving-cache-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        events.add(e.getLevel -> e.getMessage.getFormattedMessage)
+    }
+    val logger = LoggerContext.getContext(false).getLogger(name)
+    val before = logger.getLevel
+    appender.start()
+    Configurator.setLevel(name, Level.INFO)
+    logger.addAppender(appender)
+    try (body, events.asScala.toSeq)
+    finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, before)
+      appender.stop()
+    }
+  }
+
+  /** Today's query over the whole table: the definition served counts must
+    * equal. */
+  def fullCounts(table: String): Seq[Row] =
+    spark.table(table).groupBy("net").agg(countDistinct("id").as("event_count"))
+      .orderBy("net").collect().toSeq
+
+  /** Lands, transforms and publishes `d` with one launch per id (an id
+    * listed twice counts once), replacing an earlier landing of the day. */
+  def publishDay(z: LP.Zones, d: LocalDate, ids: Seq[String]): Unit = {
+    Files.deleteIfExists(java.nio.file.Paths.get(z.raw(d)))
+    val results = ids.zipWithIndex.map { case (id, k) =>
+      s"""{"id": "$id", "url": "u", "name": "n", "status": {"name": "s"},
+         | "image": null, "net": "${d}T0$k:00:00Z"}""".stripMargin }
+    LP.putRaw(z, d, s"""{"count": ${ids.size}, "next": null, "results": [
+      |${results.mkString(", ")}]}""".stripMargin.replaceAll("\n", " "))
+    LP.transform(spark, z, d)
+    LP.publish(spark, z, d)
+  }
 
   test("raw landing is at-most-once (C5 semantics)") {
     val z = freshZones()
@@ -177,8 +234,9 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("daily interval job shape past 32 partitions: no listing job, publish " +
-    "and registerTable run none, serving at most two a day; served counts " +
-    "exact and refreshed on a re-run") {
+    "and registerTable run none; serving runs at most two jobs and scans " +
+    "one partition on a day that publishes one, none on an empty day, and " +
+    "recomputes only a re-run day; served counts exact") {
     val z = freshZones()
     val table = s"launch_events_jobs_${math.abs(z.base.hashCode)}"
     val days = 40 // every 10th day empty: 36 partitions, past Spark's 32
@@ -208,17 +266,30 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setLocalProperty("graft.test.phase", name)
       try body finally sc.setLocalProperty("graft.test.phase", null)
     }
+    // partitions each serving query's scan of the table selected
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val queries = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        partitionsScanned(qe, table).foreach(scanned.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     var serves = 0
+    val scansPerServe = scala.collection.mutable.Map.empty[String, Seq[Int]]
     def served(): Map[LocalDate, Long] = {
       phase("register")(LP.registerTable(spark, z, table))
       serves += 1
-      phase(s"serve $serves")(LP.dailyCounts(spark, table).collect())
-        .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
+      org.apache.spark.GraftListenerBus.drain(sc)
+      scanned.clear()
+      val rows = phase(s"serve $serves")(LP.dailyCounts(spark, table).collect())
+      org.apache.spark.GraftListenerBus.drain(sc)
+      scansPerServe(s"serve $serves") = scanned.asScala.toSeq
+      rows.map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
     }
     def expected(upTo: Int): Map[LocalDate, Long] =
       (0 to upTo).filter(launches(_) > 0).map(i => dayOf(i) -> launches(i).toLong).toMap
 
     sc.addSparkListener(listener)
+    spark.listenerManager.register(queries)
     try {
       for (i <- 0 until days) {
         val d = dayOf(i)
@@ -233,17 +304,28 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Files.delete(java.nio.file.Paths.get(z.raw(d)))
       LP.runRange(spark, z, d, d.plusDays(1), (start, _, _) => bodyFor(start, 5, "b"))
       assert(served() == expected(days - 1).updated(d, 5L))
+      assert(PartitionIncremental.lastReport.changed == 1, PartitionIncremental.lastReport)
       org.apache.spark.GraftListenerBus.drain(sc)
     } finally {
+      spark.listenerManager.unregister(queries)
       sc.removeSparkListener(listener)
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
-    import scala.jdk.CollectionConverters._
     val seen = jobs.asScala.toSeq
     val serveJobs = seen.filter(_._1.startsWith("serve")).groupBy(_._1)
-    assert(serveJobs.size == serves) // the listener saw every serving query
-    assert(serveJobs.values.forall(_.size <= 2),
-      s"serving jobs per day: ${serveJobs.map { case (k, v) => k -> v.size }}")
+      .map { case (k, v) => k -> v.size }.withDefaultValue(0)
+    // serve i follows day i - 1; the last serve follows the re-run
+    for (i <- 1 to serves) {
+      val serve = s"serve $i"
+      if (i <= days && launches(i - 1) == 0) {
+        assert(serveJobs(serve) == 0, s"$serve (nothing published) ran jobs: $serveJobs")
+        assert(scansPerServe(serve).isEmpty, s"$serve scanned: ${scansPerServe(serve)}")
+      } else {
+        assert(serveJobs(serve) >= 1 && serveJobs(serve) <= 2, s"$serve jobs: $serveJobs")
+        assert(scansPerServe(serve) == Seq(1),
+          s"$serve should recompute exactly the published day: ${scansPerServe(serve)}")
+      }
+    }
     val listing = seen.filter(_._2.startsWith("Listing leaf files"))
     assert(listing.isEmpty, s"listing jobs: ${listing.map(_._1)}")
     // publish copies files; the partition sync lists the zone root on the
@@ -251,6 +333,125 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val publishJobs = seen.filter(_._1.startsWith("publish"))
     assert(publishJobs.isEmpty, s"publish jobs: ${publishJobs.map(_._1)}")
     assert(!seen.exists(_._1 == "register"))
+  }
+
+  test("incremental serving equals the full query after a re-publish with " +
+    "the same file count, a deleted, truncated, garbage or foreign cache, a " +
+    "dropped partition and a re-created table; a bad cache WARNs once and " +
+    "fails nothing") {
+    val z = freshZones()
+    val table = s"launch_events_cache_${math.abs(z.base.hashCode)}"
+    val days = Seq(day, day.plusDays(1), day.plusDays(2))
+    val cache = java.nio.file.Paths.get(s"${z.reports}/_serving/daily_counts")
+    /** Serves once: counts equal the full query's, one INFO line per call,
+      * `warns` WARN lines; returns the call's report. */
+    def serve(what: String, warns: Int = 0): PartitionIncremental.Report = {
+      val (got, events) = cacheLog(LP.dailyCounts(spark, table).collect().toSeq)
+      assert(got == fullCounts(table), s"$what: served counts differ from the full query")
+      val report = PartitionIncremental.lastReport
+      assert(events.filter(_._1 == Level.INFO).map(_._2) == Seq(report.toString), what)
+      assert(events.count(_._1 == Level.WARN) == warns, s"$what: $events")
+      report
+    }
+    try {
+      days.foreach(d => publishDay(z, d, Seq("a", "b")))
+      LP.registerTable(spark, z, table)
+      val cold = serve("cold")
+      assert(cold.state == "cold" && cold.listed == 3 && cold.changed == 3 && cold.rows == 3, cold)
+      assert(Files.exists(cache))
+      LP.validateServingSchema(spark, z, table) // the cache is not a data file
+      val hit = serve("hit")
+      assert(hit.state == "hit" && hit.changed == 0 && hit.rows == 0, hit)
+
+      // the same single file, now holding one distinct id
+      publishDay(z, days(1), Seq("a", "a"))
+      LP.registerTable(spark, z, table)
+      val republished = serve("re-published day")
+      assert(republished.changed == 1 && republished.state == "hit", republished)
+      assert(LP.dailyCounts(spark, table).collect().toSeq(1) ==
+        Row(java.sql.Date.valueOf(days(1)), 1L))
+
+      org.apache.commons.io.FileUtils.deleteDirectory(cache.getParent.toFile)
+      assert(serve("deleted cache").state == "cold")
+
+      val good = Files.readAllBytes(cache)
+      val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(good)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      doc.put("table", org.apache.spark.sql.types.StructType.fromDDL("id STRING, net DATE").json)
+      for ((what, bytes) <- Seq(
+             "truncated cache" -> good.take(good.length / 2),
+             "garbage cache" -> "\u0000not a cache{[".getBytes,
+             "foreign-schema cache" -> doc.toString.getBytes)) {
+        Files.write(cache, bytes)
+        val bad = serve(what, warns = 1)
+        assert(bad.state == "unreadable" && bad.changed == 3, bad)
+        assert(serve(s"after the $what").state == "hit") // rewritten
+      }
+
+      spark.sql(s"ALTER TABLE $table DROP PARTITION (net = '${days(1)}')")
+      val dropped = serve("dropped partition")
+      assert(dropped.listed == 2 && dropped.changed == 0, dropped)
+      assert(LP.dailyCounts(spark, table).collect().map(_.getDate(0).toLocalDate).toSeq
+        == Seq(days(0), days(2)))
+
+      spark.sql(s"DROP TABLE $table")
+      LP.registerTable(spark, z, table)
+      val recreated = serve("re-created table")
+      assert(recreated.listed == 3 && recreated.changed == 1, recreated)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a read-only serving cache still serves exact counts, WARNing that " +
+    "the cache cannot be written") {
+    spark.conf.set("fs.graftro.impl", classOf[ReadOnlyServingFs].getName)
+    val dir = Files.createTempDirectory("graft_lp_ro")
+    val z = LP.Zones(s"graftro://$dir")
+    val fetch: LP.PageFetcher = (start, _, _) => fixtureA1.replaceAll("2024-12-01", start.toString)
+    try {
+      LP.run(spark, z, day, fetch, LP.RunHardening(registerServing = true))
+      LP.dailyCounts(spark).collect() // writable: the cache is written
+      ReadOnlyServingFs.readOnly = true
+      LP.run(spark, z, day.plusDays(1), fetch, LP.RunHardening(registerServing = true))
+      val (got, events) = cacheLog(LP.dailyCounts(spark).collect().toSeq)
+      assert(got == fullCounts("launch_events") && got.size == 2)
+      assert(events.count(_._1 == Level.WARN) == 1, events)
+      val report = PartitionIncremental.lastReport
+      assert(report.state == "unwritable" && report.changed == 1, report)
+      // the cache read still works: the unchanged day is served from it
+      assert(cacheLog(LP.dailyCounts(spark).collect().toSeq)._1 == got)
+      assert(PartitionIncremental.lastReport.changed == 1)
+      assert(Files.list(dir.resolve("reports/launch/_serving")).iterator.asScala
+        .map(_.getFileName.toString).toSeq == Seq("daily_counts"))
+    } finally {
+      ReadOnlyServingFs.readOnly = false
+      spark.sql("DROP TABLE IF EXISTS launch_events")
+      spark.conf.unset("fs.graftro.impl")
+    }
+  }
+
+  test("two threads serving one table across publishes both get exact " +
+    "counts, and the cache stays readable") {
+    val z = freshZones()
+    val table = s"launch_events_threads_${math.abs(z.base.hashCode)}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try for (i <- 0 until 4) {
+      publishDay(z, day.plusDays(i), Seq("a", "b", "c").take(1 + i % 3))
+      LP.registerTable(spark, z, table)
+      val want = fullCounts(table)
+      for (salted <- Seq(false, true)) {
+        val calls = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[Row]] {
+          def call(): Seq[Row] = LP.dailyCounts(spark, table, salted).collect().toSeq
+        }))
+        calls.foreach(c => assert(c.get() == want, s"day $i salted=$salted"))
+      }
+    } finally pool.shutdown()
+    try for (salted <- Seq(false, true)) {
+      val (got, events) = cacheLog(LP.dailyCounts(spark, table, salted).collect().toSeq)
+      assert(got == fullCounts(table))
+      assert(!events.exists(_._1 == Level.WARN), events)
+      assert(PartitionIncremental.lastReport.state == "hit" &&
+        PartitionIncremental.lastReport.changed == 0, PartitionIncremental.lastReport)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("a publish that crashed before its rename leaves a staging copy that " +

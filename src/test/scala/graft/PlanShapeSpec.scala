@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -420,9 +423,10 @@ class PlanShapeSpec extends AnyFunSuite {
       s"q01's table-sized output must keep the parallel range sort:\n$q01")
   }
 
-  test("launch serving hashes on net once and sorts its per-day result on " +
-    "one task (plain and salted); publish runs no query and no job and " +
-    "leaves every other partition byte-identical") {
+  test("launch serving recomputes a changed day with one shuffle, hashed on " +
+    "net, and no range sort (plain and salted) and returns a local relation; " +
+    "publish runs no query and no job and leaves every other partition " +
+    "byte-identical") {
     import graft.pipeline.{LaunchPipeline => LP}
     val day = java.time.LocalDate.parse("2024-12-01")
     val z = LP.Zones(Files.createTempDirectory("graft_lp_plan").toString)
@@ -472,17 +476,38 @@ class PlanShapeSpec extends AnyFunSuite {
       s"publish should promote net=$day's files unchanged")
 
     LP.registerTable(spark, z, table)
+    // the recompute query: the aggregate over the days whose files changed
+    val recomputed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val capture = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = recomputed.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
     try for (salted <- Seq(false, true)) {
-      val plan = planOf(LP.dailyCounts(spark, table, salted))
-      assert(!plan.contains("rangepartitioning"),
-        s"dailyCounts(salted=$salted) should sort its per-day rows on one task:\n$plan")
-      assert(plan.contains("Sort"), s"dailyCounts(salted=$salted) lost its sort:\n$plan")
-      if (!salted) {
-        val exchanges = "Exchange (\\w+\\([^)]*\\))".r.findAllMatchIn(plan)
-          .map(_.group(1)).toList
+      LP.dailyCounts(spark, table, salted) // cold: the whole table
+      LP.publish(spark, z, day) // the day's files change
+      LP.registerTable(spark, z, table)
+      spark.listenerManager.register(capture)
+      recomputed.clear()
+      val served = try LP.dailyCounts(spark, table, salted) finally {
+        org.apache.spark.GraftListenerBus.drain(sc)
+        spark.listenerManager.unregister(capture)
+      }
+      assert(served.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"dailyCounts(salted=$salted) should return a local relation:\n" +
+          served.queryExecution.optimizedPlan)
+      assert(recomputed.size == 1, s"dailyCounts(salted=$salted) ran ${recomputed.size} queries")
+      val plan = recomputed.peek()
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning.toString
+      }
+      assert(!exchanges.exists(_.startsWith("rangepartitioning")),
+        s"dailyCounts(salted=$salted) should not range-sort its per-day rows:\n$plan")
+      if (!salted)
         assert(exchanges.size == 1 && exchanges.head.matches("hashpartitioning\\(net#\\d+, \\d+\\)"),
           s"dailyCounts should shuffle once, on net alone: $exchanges\n$plan")
-      }
     } finally spark.sql(s"DROP TABLE $table")
   }
 }

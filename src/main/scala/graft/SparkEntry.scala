@@ -15,7 +15,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Catalog.q09.build(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. A builder plans
+    * its query under the session's own conf and never writes it, so a
+    * caller may build several queries, and run its own work, on one
+    * session. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Catalog.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

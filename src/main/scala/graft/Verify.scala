@@ -9,9 +9,8 @@ import graft.engine.GraftSession
   * The session comes from [[GraftSession]] — the engine's actual posture
   * (extensions, UTC, AQE, nanosAsLong, SPARK_GRAFT_CONF overrides). A
   * hand-rolled builder here had already drifted (no GraftExtensions, no
-  * conf overrides while `Catalog.aqeOverridden` assumed they were applied,
-  * different shuffle-partition default): the plans being VERIFIED must be
-  * the plans the engine actually runs.
+  * conf overrides, different shuffle-partition default): the plans being
+  * VERIFIED must be the plans the engine actually runs.
   */
 object Verify {
   def main(args: Array[String]): Unit = {

@@ -326,10 +326,12 @@ object Dedup {
     // is the standard multi-consumer spill-to-disk materialization (the
     // alternative recomputes the kernel over the full corpus 5×). The
     // checkpointed RDD is dropped by the ContextCleaner with the DataFrame.
-    val packed = docs.select(col("doc_id"),
-        graft.functions.TextHashFunctions.shingleSet(col(textCol)).as("shs"))
-      .withColumn("nsh", size(col("shs")))
-      .localCheckpoint(false)
+    // It keeps a doc_id-spread input's partitioning, so the verify joins on
+    // doc_id do not shuffle the packed sets again.
+    val packed = org.apache.spark.sql.GraftSqlBridge.localCheckpointPartitioned(
+      docs.select(col("doc_id"),
+          graft.functions.TextHashFunctions.shingleSet(col(textCol)).as("shs"))
+        .withColumn("nsh", size(col("shs"))))
     // df stays a plain count agg (never a posting LIST — a boilerplate
     // shingle shared by 10% of a web corpus would make one giant row);
     // partial aggregation slims the shuffle to one row per distinct shingle
@@ -1126,7 +1128,7 @@ object Dedup {
     *  - `bloom` (≤ maxBloomItems): ONE pass over the eval shingles folds
     *    them into a fixed-size bloom sketch (partial-agg: tasks OR-merge
     *    bit arrays; nothing shuffles but the sketch), collected as one
-    *    bounded binary row and embedded as a literal. The train scan then
+    *    bounded binary row and broadcast ([[bloomProbe]]). The train scan then
     *    keeps only shingles that might be shared BEFORE the distinct — the
     *    whole point at 100 TB: the exact shape's `distinct` shuffles every
     *    distinct TRAIN shingle (corpus-sized), the bloom shape shuffles
@@ -1138,15 +1140,14 @@ object Dedup {
     *    shingles, equality join, group-count.
     *
     * An empty train or eval side yields an empty result on both routes (an
-    * empty-input bloom aggregate is NULL; `might_contain(NULL, _)` is NULL,
-    * which the filter drops — empty-set membership). */
+    * empty-input bloom aggregate is NULL, which probes to NULL and the
+    * filter drops — empty-set membership). */
   def contaminationCounts(train: DataFrame, eval: DataFrame,
                           expectedEvalShingles: Long,
                           idCol: String = "doc_id", textCol: String = "text",
                           maxBloomItems: Long = MaxBloomItems,
                           fuseOneTask: Boolean = false,
                           shsCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
     // shsCol (r17): callers that already hold a PACKED shingle-set column
     // (x102's kernel-once checkpoint) pass its name — the per-side kernel
     // evaluation is skipped and both sides (and the bloom build) explode
@@ -1163,8 +1164,7 @@ object Dedup {
       } else {
         lastDecontamRoute = "bloom"
         val bloom = evalShingleBloom(eval, expectedEvalShingles, textCol, shsCol)
-        trainSh.where(GraftSqlBridge.bloomMightContain(
-          GraftSqlBridge.binaryLit(bloom), col("sh"))).distinct()
+        trainSh.where(bloomProbe(train.sparkSession, bloom)(col("sh"))).distinct()
       }
     // fuseOneTask (r15): callers whose inputs are below the one-task floor
     // pass single-partition frames — a broadcast build there costs one
@@ -1177,9 +1177,26 @@ object Dedup {
       .groupBy(idCol).agg(count(lit(1)).as("n_shared"))
   }
 
+  /** Membership probe against a serialized bloom sketch, carried to the
+    * tasks as ONE broadcast variable: as a plan literal the sketch (up to
+    * 8 MB) would be copied into every plan string and serialized task, and
+    * AQE re-optimizes the plan holding it after every stage. A NULL sketch
+    * (empty eval side) probes to NULL, which filters drop: empty-set
+    * membership. No false negatives; false positives at the sketch's fpp,
+    * so exact operators must re-verify. */
+  def bloomProbe(spark: org.apache.spark.sql.SparkSession,
+                 bloom: Array[Byte]): Column => Column =
+    if (bloom == null) _ => lit(null).cast("boolean")
+    else {
+      val sketch = spark.sparkContext.broadcast(
+        org.apache.spark.util.sketch.BloomFilter.readFrom(bloom))
+      val probe = udf((v: Long) => sketch.value.mightContainLong(v))
+      v => probe(v)
+    }
+
   /** Build the serialized bloom sketch of `eval`'s distinct shingles — the
     * shared prefilter state of [[contaminationCounts]] and the streaming
-    * gate. NULL for an empty eval side (might_contain(NULL, _) is NULL =
+    * gate. NULL for an empty eval side ([[bloomProbe]] of NULL is NULL =
     * empty-set membership). Sized ~16 bits/item (fpp ≈ 5e-4), conf-capped;
     * the estimate affects size/fpp only, never correctness.
     *

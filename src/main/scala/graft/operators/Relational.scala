@@ -207,11 +207,13 @@ object Relational {
     }
     val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
     val sortExprs = keys.map(col) ++ order
-    val sorted = df.repartitionByRange(p, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false) // materialized by the block-stats pass below
+    // materialized by the block-stats pass below; the checkpoint keeps the
+    // range partitioning and sort order for the callers' consumers
+    val sorted = org.apache.spark.sql.GraftSqlBridge.localCheckpointPartitioned(
+      df.repartitionByRange(p, sortExprs: _*)
+        .sortWithinPartitions(sortExprs: _*)
+        .withColumn("__pid", spark_partition_id())
+        .withColumn("__mid", monotonically_increasing_id()))
     // block stats in ONE fused job (which also materializes the checkpoint):
     // within a sorted partition each (keys) block is a contiguous run, so a
     // linear per-partition scan replaces the groupBy's exchange + the AQE

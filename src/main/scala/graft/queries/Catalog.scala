@@ -79,19 +79,17 @@ object Catalog {
     if (fused) reportSortFused(df, cols: _*) else reportSort(df, cols: _*)
 
   /** Ordered (doc_id, text) for the per-document text-feature queries
-    * (x23–x26). Sorting the raw projection first makes `orderBy`'s sampler
-    * read scan rows, so the kernels run once, after the sort. Above the
-    * kernel tier the sort pins its partition count, as [[codecDocIds]]
-    * does, because AQE sizes the post-sort read by compressed text bytes
-    * and would land the kernels on a couple of tasks (measurements:
-    * BASELINE.md, "Scale gate ledgers"). */
-  private def sortedDocs(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "documents").select("doc_id", "text")
-    if (docsUnderSpread(s, d)) base.orderBy("doc_id")
-    else base
+    * (x19, x23–x26, x52, x59, x69, x81). Sorting the raw projection first
+    * makes the range sampler read scan rows, so the kernels run once, after
+    * the sort. The sort pins its partition count at every size, as
+    * [[codecDocIds]] does, because AQE sizes the post-sort read by
+    * compressed text bytes and would land the kernels on one or two tasks
+    * (measurements: BASELINE.md, "Scale gate ledgers" and "Planning
+    * posture"). */
+  private def sortedDocs(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").select("doc_id", "text")
       .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
       .sortWithinPartitions("doc_id")
-  }
 
   /** doc_id input for the CODEC queries (x78/x80/x82): range-partitioned by
     * doc_id with a PINNED partition count (user-specified counts are exempt
@@ -1603,8 +1601,9 @@ object Catalog {
       // user_id once and MATERIALIZE it (lazy localCheckpoint, the x20
       // multi-consumer pattern — e feeds four consumers, and without the
       // checkpoint each reference replans its own scan + exchange). The
-      // checkpoint preserves the partitioning, so the three per-user
-      // aggregates and all four user_id joins downstream are exchange-free.
+      // checkpoint carries the partitioning under AQE too
+      // (localCheckpointPartitioned), so the three per-user aggregates and
+      // all four user_id joins downstream are exchange-free.
       // The bounded O(users) report takes the usual reportSort tail.
       val eRaw = t(s, d, "events").select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -1634,7 +1633,8 @@ object Catalog {
               + when(col("t3").isNotNull, 1L).otherwise(0L)).as("depth")),
           col("user_id"))
       } else {
-      val e = eRaw.repartition(col("user_id")).localCheckpoint(false)
+      val e = org.apache.spark.sql.GraftSqlBridge
+        .localCheckpointPartitioned(eRaw.repartition(col("user_id")))
       val s1 = e.where(col("event_type") === "signup")
         .groupBy("user_id").agg(min("us").as("t1"))
       val s2 = e.join(s1, "user_id")
@@ -2376,92 +2376,14 @@ object Catalog {
     * Routing (round 5, x20's gated-broadcast pattern): the LM table is
     * vocab²-bounded but the corpus is not, so the scoring join is routed at
     * build time by an ACTUAL size probe — `Actions.boundedRows` collects the
-    * LM in one job (static: count + window run as chained stages of that
-    * job). Under the cap the LM rides back as a LocalRelation broadcast-hash
+    * LM in one job. Under the cap the LM rides back as a LocalRelation broadcast-hash
     * join: the scoring side never shuffles by bigram and the whole query is
     * lm-build + score-agg + output sort. Over the cap (a web-scale
-    * vocabulary) the original shuffle join comes back UNDER AQE — a hot
-    * bigram ("of the") skews the pairs-side exchange, which is exactly
-    * runtime skew-split territory. The 7-job adaptive shape this replaces
+    * vocabulary) the original shuffle join comes back — a hot bigram
+    * ("of the") skews the pairs-side exchange, which AQE's skew join
+    * splits at runtime. The 7-job adaptive shape this replaces
     * measured 0.54 s with every job under 0.13 s — pure replan floor. */
-  val x81 = Q("x81_lm_score",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      // NOT dedupDocs-spread (r17 session 2, measured): unlike x20's
-      // multi-consumer ShingleSet checkpoint, the LM-build probe is ONE
-      // TokenPairs pass feeding a partial agg — the text exchange costs
-      // what the kernel parallelization saves (JobProfile sf5 2.85 -> 2.93,
-      // sf0.1 0.41 -> 0.38, both within noise). Same adjudication as x18's
-      // signature pass.
-      val pairs = t(s, d, "documents")
-        .select(col("doc_id"), explode(
-          graft.functions.TextHashFunctions.tokenPairs(col("text"))).as("bg"))
-      val bgCounts = pairs.groupBy("bg").agg(count(lit(1)).as("c2"))
-      graft.engine.Actions.boundedRows(bgCounts, MaxBroadcastLmEntries) match {
-        case Some(rows) =>
-          // under-cap route: the probe job was ONE exchange (the bigram
-          // count agg); the w1 prefix totals and log-probs are O(vocab²)
-          // driver arithmetic on rows already in hand. lp replicates
-          // Spark's round(log(c2/c1), 6) bit-for-bit: Math.log IS Spark's
-          // LOG, and BigDecimal.valueOf(_).setScale(6, HALF_UP) IS Spark's
-          // ROUND-on-double (Decimal.fromDecimal path).
-          val counts = rows.map(r => (r.getString(0), r.getLong(1)))
-          val c1 = new scala.collection.mutable.HashMap[String, Long]()
-          counts.foreach { case (bg, c2) =>
-            val w1 = bg.substring(0, bg.indexOf(' '))
-            c1.update(w1, c1.getOrElse(w1, 0L) + c2)
-          }
-          val lmRows: Array[org.apache.spark.sql.Row] = counts.map {
-            case (bg, c2) =>
-              val w1 = bg.substring(0, bg.indexOf(' '))
-              val lp = java.math.BigDecimal
-                .valueOf(math.log(c2.toDouble / c1(w1).toDouble))
-                .setScale(6, java.math.RoundingMode.HALF_UP)
-              org.apache.spark.sql.Row(bg, lp)
-          }
-          val lmSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("bg",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("lp",
-              org.apache.spark.sql.types.DecimalType(18, 6))))
-          val local = s.createDataFrame(
-            java.util.Arrays.asList(lmRows: _*), lmSchema)
-          // one-exchange fusion (the q11/x36 pattern, applied to an
-          // aggregate): range-partition the RAW scan by doc_id — the sort
-          // sampling sees plain scan rows, so the TokenPairs kernel runs
-          // once — then explode and the broadcast join preserve the
-          // partitioning, RangePartitioning(doc_id) satisfies the
-          // aggregate's ClusteredDistribution (no agg exchange), and the
-          // narrow within-partition sort restores the total output order.
-          sortedDocs(s, d)
-            .select(col("doc_id"), explode(
-              graft.functions.TextHashFunctions.tokenPairs(col("text")))
-              .as("bg"))
-            .join(broadcast(local), "bg")
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_bigrams"),
-              sum("lp").cast("double").as("logp_sum"))
-            .sortWithinPartitions("doc_id")
-        case None =>
-          // over-cap fallback (web-scale vocabulary): fully distributed —
-          // prefix totals as an unordered window over the count table (ONE
-          // exchange by w1, no join-back; w1 cardinality = vocabulary, so
-          // the window key is high-cardinality at any scale, x51-audit
-          // clean), then a shuffle join, adaptive for skew-splitting.
-          val lm = bgCounts
-            .withColumn("w1", substring_index(col("bg"), " ", 1))
-            .withColumn("c1", sum("c2").over(Window.partitionBy("w1")))
-            .select(col("bg"),
-              round(log(col("c2") / col("c1")), 6).cast("decimal(18,6)")
-                .as("lp"))
-          if (!aqeOverridden) s.conf.set("spark.sql.adaptive.enabled", "true")
-          pairs.join(lm, "bg")
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_bigrams"),
-              sum("lp").cast("double").as("logp_sum"))
-            .orderBy("doc_id")
-      }
-    },
+  val x81 = Q("x81_lm_score", x81Build(MaxBroadcastLmEntries) _,
     Some(s"""WITH t AS (SELECT doc_id, ${Portable.tokens(DuckD, "text")} AS toks
             |  FROM documents),
             |p AS (SELECT doc_id, unnest(list_transform(range(1, length(toks)),
@@ -2478,6 +2400,86 @@ object Catalog {
             |FROM p JOIN lm USING (bg)
             |GROUP BY 1 ORDER BY 1""".stripMargin),
     bench = false)
+
+  /** x81's builder with the LM cap as a parameter: the catalog entry uses
+    * [[MaxBroadcastLmEntries]]; a cap of 0 takes the over-cap shuffle-join
+    * route on any corpus, so both routes can be checked on the same data. */
+  private[graft] def x81Build(lmCap: Int)(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // NOT dedupDocs-spread (r17 session 2, measured): unlike x20's
+    // multi-consumer ShingleSet checkpoint, the LM-build probe is ONE
+    // TokenPairs pass feeding a partial agg — the text exchange costs
+    // what the kernel parallelization saves (JobProfile sf5 2.85 -> 2.93,
+    // sf0.1 0.41 -> 0.38, both within noise). Same adjudication as x18's
+    // signature pass.
+    val pairs = t(s, d, "documents")
+      .select(col("doc_id"), explode(
+        graft.functions.TextHashFunctions.tokenPairs(col("text"))).as("bg"))
+    val bgCounts = pairs.groupBy("bg").agg(count(lit(1)).as("c2"))
+    graft.engine.Actions.boundedRows(bgCounts, lmCap) match {
+      case Some(rows) =>
+        // under-cap route: the probe job was ONE exchange (the bigram
+        // count agg); the w1 prefix totals and log-probs are O(vocab²)
+        // driver arithmetic on rows already in hand. lp replicates
+        // Spark's round(log(c2/c1), 6) bit-for-bit: Math.log IS Spark's
+        // LOG, and BigDecimal.valueOf(_).setScale(6, HALF_UP) IS Spark's
+        // ROUND-on-double (Decimal.fromDecimal path).
+        val counts = rows.map(r => (r.getString(0), r.getLong(1)))
+        val c1 = new scala.collection.mutable.HashMap[String, Long]()
+        counts.foreach { case (bg, c2) =>
+          val w1 = bg.substring(0, bg.indexOf(' '))
+          c1.update(w1, c1.getOrElse(w1, 0L) + c2)
+        }
+        val lmRows: Array[org.apache.spark.sql.Row] = counts.map {
+          case (bg, c2) =>
+            val w1 = bg.substring(0, bg.indexOf(' '))
+            val lp = java.math.BigDecimal
+              .valueOf(math.log(c2.toDouble / c1(w1).toDouble))
+              .setScale(6, java.math.RoundingMode.HALF_UP)
+            org.apache.spark.sql.Row(bg, lp)
+        }
+        val lmSchema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("bg",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("lp",
+            org.apache.spark.sql.types.DecimalType(18, 6))))
+        val local = s.createDataFrame(
+          java.util.Arrays.asList(lmRows: _*), lmSchema)
+        // one-exchange fusion (the q11/x36 pattern, applied to an
+        // aggregate): range-partition the RAW scan by doc_id — the sort
+        // sampling sees plain scan rows, so the TokenPairs kernel runs
+        // once — then explode and the broadcast join preserve the
+        // partitioning, RangePartitioning(doc_id) satisfies the
+        // aggregate's ClusteredDistribution (no agg exchange), and the
+        // narrow within-partition sort restores the total output order.
+        sortedDocs(s, d)
+          .select(col("doc_id"), explode(
+            graft.functions.TextHashFunctions.tokenPairs(col("text")))
+            .as("bg"))
+          .join(broadcast(local), "bg")
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_bigrams"),
+            sum("lp").cast("double").as("logp_sum"))
+          .sortWithinPartitions("doc_id")
+      case None =>
+        // over-cap fallback (web-scale vocabulary): fully distributed —
+        // prefix totals as an unordered window over the count table (ONE
+        // exchange by w1, no join-back; w1 cardinality = vocabulary, so
+        // the window key is high-cardinality at any scale, x51-audit
+        // clean), then a shuffle join that AQE skew-splits.
+        val lm = bgCounts
+          .withColumn("w1", substring_index(col("bg"), " ", 1))
+          .withColumn("c1", sum("c2").over(Window.partitionBy("w1")))
+          .select(col("bg"),
+            round(log(col("c2") / col("c1")), 6).cast("decimal(18,6)")
+              .as("lp"))
+        pairs.join(lm, "bg")
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_bigrams"),
+            sum("lp").cast("double").as("logp_sum"))
+          .orderBy("doc_id")
+    }
+  }
 
   /** REAL video decode (completing the multimodal triple): standard
     * Motion-JPEG AVIs written through the real JPEG encoder, then demuxed
@@ -2817,8 +2819,9 @@ object Catalog {
     * [[TextAnalysis.pmiCollocations]] — vocabulary-bounded count joins,
     * 1-row broadcast totals, TakeOrderedAndProject top-k. */
   val x91 = Q("x91_pmi_collocations",
-    // kernelDocsAuto (r15 A/B): static-planned, so the 32-task post-shuffle
-    // stages never coalesced — the fused SinglePartition input removes them
+    // kernelDocsAuto (r15 A/B, measured under static planning, where the
+    // 32-task post-shuffle stages never coalesced): the fused
+    // SinglePartition input removes them
     // r17 (VERDICT r16 directive 4): spreading the under-gate corpus pass
     // (repartition(32, doc_id) for the kernel+explode+partial agg, with
     // only the FINAL count aggregation coalesced to one partition so the
@@ -3042,8 +3045,7 @@ object Catalog {
     // the 2-task LangStats job its profile shows is ~0.5 s, but spreading
     // it ships the full text bytes through an exchange that costs the
     // same. The spread pays off for winnowing/codec-class kernels (x85:
-    // 1.76→1.12 at sf1), not a one-pass byte-scan kernel; x97 probed
-    // AQE-unstable and stays adaptive.
+    // 1.76→1.12 at sf1), not a one-pass byte-scan kernel.
     (s, d) => reportSortFused(
       TextAnalysis.qualityGate(t(s, d, "documents")), col("source")),
     Some(s"""WITH t0 AS (SELECT doc_id, source,
@@ -3577,128 +3579,18 @@ object Catalog {
     x78, x79, x80, x81, x82, x83, x84, x85, x86, x87, x88, x89, x90, x91,
     x92, x93, x94, x95, x96, x97, x98, x99, x100, x101, x102)
 
-  /** Queries routed to STATIC planning (AQE off for that execution).
-    *
-    * AQE materializes every exchange as its own job to re-plan on runtime
-    * stats — the right trade wherever a join strategy or skew split can
-    * change (all join-heavy queries keep it), but pure scheduling overhead
-    * for pipelines whose plan has nothing to re-decide: join-free kernels,
-    * window/report tails with fixed 32-partition exchanges, and queries
-    * whose joins are explicit `broadcast()` hints (the strategy is already
-    * decided) or whose skew exposure is designed out (x20's prefix
-    * df-ordering bounds posting lists by construction). Membership is
-    * MEASURED, not guessed — tools/AqeProbe (interleaved A/B, flips the
-    * conf between build and action) times every query both ways at sf0.1;
-    * only stable wins ≥ ~0.02 s land here, and queries where adaptive wins
-    * (q05/q13/x28/x30/x35/x39/x41/x50: partition coalescing on agg-heavy
-    * middle stages, runtime broadcast conversions) stay adaptive. Re-run
-    * AqeProbe after plan reshapes. */
-  private val staticPlanned: Set[String] = Set(
-    "q01_project_rename", "q02_cast_date", "q06_json_extract",
-    "q11_latest_per_user", "q14_cosine_topk",
-    // q16: explicit broadcast join + window over the broadcast output —
-    // nothing for AQE to re-decide (stable +0.03-0.05 s static win probed
-    // 3×; q03 measured unstable and stays adaptive)
-    "q16_join_window",
-    // x17 LEFT this set in round 10: the static route was probed for the
-    // OLD fused-range shape (one exchange, nothing to coalesce); the
-    // agg-then-sort reshape ships ~250 KB of digests through 32 static
-    // post-shuffle tasks that AQE collapses — re-probed 0.374 (on) vs
-    // 0.559 (off) at sf0.1, and at sf5 coalescing is neutral-to-helpful
-    // (12 MB of digests)
-    // x18/x34: the LSH band joins are shuffled equi-joins whose bucket
-    // sizes are bounded by construction (signature grouping / band
-    // hashing), so runtime skew-splitting has nothing to split — the
-    // operators stay AQE-compatible for arbitrary corpora; this routes
-    // only the benched catalog entries. x18 was flipped to adaptive in
-    // r16 on a 3/3 sf0.1 probe (−0.09/−0.11/−0.19 s — AQE coalesces the
-    // 97-task static tail to ~14) and REVERTED the same session when the
-    // sf5 pair showed +2.95 s and the sf5 interleaved probe confirmed
-    // +2.80 (10.63 adaptive vs 7.83 static): at scale the post-shuffle
-    // partitions carry real data, so coalescing buys nothing and the
-    // per-exchange AQE stage jobs re-serialize the 3-stage tail. The
-    // 0.1 s bench-SF win is not worth the scale regression. x20
-    // re-probed r16 at sf0.1: static still wins (+0.165 s with AQE).
-    "x18_dedup_minhash", "x19_dedup_simhash", "x20_dedup_ngram",
-    "x21_dedup_embedding", "x22_sim_lsh", "x23_text_langid",
-    "x24_text_quality", "x25_text_tokencount",
-    "x26_text_fingerprint", "x27_multimodal_decode", "x29_scalar_kit",
-    "x34_dedup_embedding_lsh", "x36_window_lag",
-    "x45_window_frame", "x46_sessionize", "x52_array_ops",
-    "x58_window_range_frame", "x59_text_scrub", "x64_doc_chunks",
-    "x51_rank_distribution",
-    // x62/x72 REQUIRE static planning beyond the measured win: their
-    // repartition+localCheckpoint captures the physical partitioning so
-    // downstream aggregates/joins go exchange-free, but under AQE the
-    // checkpoint sees AdaptiveSparkPlan's UnknownPartitioning and every
-    // exchange reappears (PlanShapeSpec pins the fused shape)
-    "x62_funnel", "x72_gapfill", "x98_interpolate",
-    "x67_winsorize",
-    "x69_repetition", "x71_knn_label", "x73_forward_fill", "x76_rank_ties",
-    "x77_mad", "x78_image_decode",
-    // x81: the gated-broadcast route (see the builder) makes the main plan
-    // an lm-probe job + broadcast-join/agg job — nothing left for AQE to
-    // re-decide; the over-cap fallback re-enables AQE itself at build time
-    "x81_lm_score",
-    // x86: same shape as x81's under-cap route, and the bucket table is
-    // bounded by construction (no fallback exists to re-plan)
-    "x86_dsir_weights",
-    // x87: keyedRowNumbers checkpoint captures the physical partitioning
-    // (the x62/x72 requirement), and the block join is an explicit
-    // broadcast — nothing for AQE to re-decide
-    "x87_shuffle_shards",
-    // x83: the salted pair join is CPU-bound on byte-tiny inputs — AQE's
-    // size-based coalescing folds the scoring stage back onto one task
-    // (the x82-codec blindness); static keeps the salt's parallelism
-    "x83_semantic_dedup",
-    // x91: one checkpointed vocabulary-bounded count table feeds tiny
-    // joins and 1-row totals — nothing data-dependent to re-decide, and
-    // AQE's per-exchange stage jobs cost more than the whole join tier
-    // (stable +0.02-0.10 s static win, probed 3×; x90/x92 measured
-    // neutral and stay adaptive)
-    "x91_pmi_collocations",
-    // x102: the bloom route's prefiltered distinct + join are both
-    // result-sized by construction, so AQE's stage round-trips only add
-    // floor (static win +0.14/+0.18/+0.16 s, probed 3× at sf0.1; sf5 —
-    // the exact route — measured a wash). Bench-entry-local, like x18:
-    // the OPERATOR stays AQE-compatible for arbitrary corpora, where the
-    // runtime broadcast decision on the candidate set is the safe choice
-    "x102_bloom_decontamination",
-    // x93: vocabulary-bounded plan end-to-end (count table, 1-task
-    // window, 1-row slope broadcast) — nothing to re-decide (+0.04 probed;
-    // x94 adaptive wins −0.24, x95 neutral — both stay adaptive)
-    "x93_zipf_spectrum",
-    // x48: re-probed after the NearestCentroids kernel route replaced the
-    // crossJoin+window assignment — the remaining plan is an explicitly
-    // broadcast probe join + bounded ranking tail, nothing for AQE to
-    // re-decide (0.223 static vs 0.269 adaptive, AqeProbe)
-    "x48_ann_ivf")
-
-  /** An explicit SPARK_GRAFT_CONF override of the AQE flag disables the
-    * per-query route entirely — the A/B escape hatch must win, not be
-    * silently clobbered on every catalog build. */
-  private lazy val aqeOverridden: Boolean =
-    sys.env.get("SPARK_GRAFT_CONF").exists(
-      _.contains("spark.sql.adaptive.enabled"))
-
-  /** NOTE for external callers: building a query SETS the session's
-    * `spark.sql.adaptive.enabled` to that query's measured planning mode and
-    * leaves it set — Spark reads the flag at execution start, not build, so
-    * restoring it here would undo the route before the caller's action runs.
-    * Run your own ad-hoc work on a separate session (or re-set the flag)
-    * after touching these builders. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> { (s: SparkSession, d: String) =>
-      // per-query planning mode; runners act on the query right after
-      // building it, so the session conf at action time is this one.
-      // Checkpoint-bearing builds (x20/x51/x62/x72) capture their physical
-      // partitioning at BUILD time, so they stay correct even if the conf
-      // changes before the action.
-      if (!aqeOverridden)
-        s.conf.set("spark.sql.adaptive.enabled",
-          (!staticPlanned.contains(q.name)).toString)
-      q.build(s, d)
-    }).toMap
+  /** Every query by name, its builder as declared. Building a query never
+    * writes session conf: every query plans under the session's one AQE
+    * posture ([[graft.engine.GraftSession]]), and a `SPARK_GRAFT_CONF`
+    * override of the AQE flag turns it off for the whole session. A plan
+    * shape that needs a fixed partitioning carries it in the plan: x72/x98
+    * range-partition to a pinned count, which AQE never coalesces, and x62
+    * and [[Relational.keyedRowNumbers]] (x51, x87) checkpoint through
+    * `GraftSqlBridge.localCheckpointPartitioned`, whose relation keeps the
+    * planned partitioning. The per-query A/B of the retired static-planning
+    * list is in BASELINE.md, "Planning posture". */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap

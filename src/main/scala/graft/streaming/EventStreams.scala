@@ -333,7 +333,8 @@ object EventStreams {
     * [[graft.operators.Dedup.contaminationCounts]]: annotate each arriving
     * document with how many of its 3-gram shingles hit the PINNED
     * benchmark bloom ([[graft.operators.Dedup.evalShingleBloom]] over the
-    * static eval suite, embedded as a literal — built once at query start,
+    * static eval suite, carried as a broadcast variable by
+    * [[graft.operators.Dedup.bloomProbe]] — built once at query start,
     * refreshed by restarting with the next suite snapshot, the
     * streamingQualityGate threshold contract). Per-row kernel + array HOF,
     * no shuffle, no state — nothing for a watermark to bound.
@@ -345,12 +346,11 @@ object EventStreams {
     * ~5e-4 fpp) is result-sized and routes to the offline exact verify
     * (x102's join stage). No row-local operator can do better: exact
     * online membership would stream the whole eval shingle set past every
-    * row. An empty eval suite flags nothing — might_contain(NULL, _) is
-    * NULL, which the HOF filter drops, so every count is 0. */
+    * row. An empty eval suite flags nothing — the probe of a NULL sketch
+    * is NULL, which the HOF filter drops, so every count is 0. */
   def streamingContaminationFlags(docs: DataFrame, evalDocs: DataFrame,
                                   expectedEvalShingles: Long,
                                   textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.{GraftSqlBridge => B}
     // mirror contaminationCounts' routing gate (ADVICE r10): past the conf
     // cap the bit budget clamps and the sketch saturates (fpp → 1), so the
     // prefilter would silently flag nearly EVERYTHING instead of routing to
@@ -361,12 +361,12 @@ object EventStreams {
       s"expectedEvalShingles=$expectedEvalShingles exceeds " +
         s"MaxBloomItems=${graft.operators.Dedup.MaxBloomItems}: the capped " +
         "sketch would saturate; shard the eval suite by shingle range")
-    val bloom = graft.operators.Dedup.evalShingleBloom(
-      evalDocs, expectedEvalShingles, textCol)
+    val probe = graft.operators.Dedup.bloomProbe(docs.sparkSession,
+      graft.operators.Dedup.evalShingleBloom(evalDocs, expectedEvalShingles, textCol))
     docs.withColumn("n_suspect_shingles",
       size(filter(
         graft.functions.TextHashFunctions.shingleSet(col(textCol)),
-        s => B.bloomMightContain(B.binaryLit(bloom), s))).cast("bigint"))
+        probe)).cast("bigint"))
   }
 
   final case class ScoredDoc(source: String, doc_id: Long, quality: Double)

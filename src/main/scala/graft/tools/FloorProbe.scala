@@ -6,7 +6,7 @@ import graft.engine.GraftSession
 
 /** Diagnostic main behind BASELINE.md's floor decomposition: measures the
   * irreducible per-job / per-stage cost of this Spark session shape
-  * (local[N], AQE per current GraftSession posture) with no real data work.
+  * (local[N], the GraftSession posture) with no real data work.
   * Each probe is best-of-5 after a warm-up, in seconds.
   *
   * Probes:
@@ -60,15 +60,7 @@ object FloorProbe {
           .orderBy($"g"))),
       "scan" -> (() => noop(spark.read.parquet(s"$sfDir/region.parquet")))
     )
-    val r = probes.map { case (n, f) =>
-      // Catalog.queries' wrapper routes x18/x20 to STATIC planning and
-      // deliberately leaves the session flag set — restore AQE after every
-      // probe so the generic floor probes measure the documented posture
-      // (AQE on), not whatever the previous probe's query routed to
-      val v = n -> best5(f())
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      v
-    }
+    val r = probes.map { case (n, f) => n -> best5(f()) }
     println(r.map { case (n, s) =>
       s""""$n":${String.format(java.util.Locale.ROOT, "%.4f", Double.box(s))}"""
     }.mkString("{", ",", "}"))

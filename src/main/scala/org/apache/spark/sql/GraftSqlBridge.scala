@@ -50,21 +50,42 @@ object GraftSqlBridge {
         catalyst.expressions.Literal(numBits))
         .toAggregateExpression())
 
-  /** Membership probe against a serialized bloom sketch
-    * (`BloomFilterMightContain`). The bloom side must be foldable (e.g. a
-    * `lit(bytes)` of a collected sketch) — Spark's own restriction; a NULL
-    * bloom (empty input aggregate) probes to NULL, i.e. filters drop every
-    * row, matching empty-set membership. No false negatives ever; false
-    * positives at the sketch's fpp, so exact operators must re-verify. */
-  def bloomMightContain(bloom: Column, value: Column): Column =
-    classic.ExpressionUtils.column(
-      catalyst.expressions.BloomFilterMightContain(
-        classic.ExpressionUtils.expression(bloom),
-        classic.ExpressionUtils.expression(value)))
+  /** Each checkpoint's prepared plan, kept alive while its RDD is: the
+    * plan owns the SQL metrics its tasks report into, and a collected
+    * metric fails every task's accumulator update on the driver. The plan
+    * does not reference the mapped RDD, so entries go with their RDDs. */
+  private val preparedPlans = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], execution.SparkPlan]())
 
-  /** BINARY-typed literal that stays BinaryType even for null (a plain
-    * `lit(null)` is NullType, which `might_contain` rejects). */
-  def binaryLit(b: Array[Byte]): Column =
-    classic.ExpressionUtils.column(
-      catalyst.expressions.Literal(b, types.BinaryType))
+  /** Lazy local checkpoint that carries `df`'s planned physical partitioning
+    * and ordering under any AQE setting. `Dataset.localCheckpoint` takes
+    * them from the executed plan, which under AQE is an
+    * `AdaptiveSparkPlanExec` reporting `UnknownPartitioning`, so every
+    * consumer re-shuffles; executing that adaptive plan also runs its
+    * shuffle stages at build time. Here the checkpointed subtree is prepared
+    * without the adaptive rule: its exchanges keep their planned partition
+    * counts (nothing coalesces them), nothing runs until the first consuming
+    * job, and consumers keyed like the partitioning (aggregates,
+    * co-partitioned joins, windows) plan no exchange. Statistics and
+    * constraints are carried as `Dataset.localCheckpoint` carries them. */
+  def localCheckpointPartitioned(df: Dataset[Row]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val spark = ds.sparkSession
+    val plan = execution.QueryExecution.prepareExecutedPlan(
+      spark, ds.queryExecution.sparkPlan.clone())
+    val rdd = plan.execute().map(_.copy())
+    rdd.localCheckpoint()
+    preparedPlans.put(rdd, plan)
+    def firstLeaf(p: catalyst.plans.physical.Partitioning)
+        : catalyst.plans.physical.Partitioning = p match {
+      case c: catalyst.plans.physical.PartitioningCollection =>
+        firstLeaf(c.partitionings.head)
+      case other => other
+    }
+    val (stats, constraints) = execution.LogicalRDD.rewriteStatsAndConstraints(
+      ds.logicalPlan, ds.queryExecution.optimizedPlan)
+    classic.Dataset.ofRows(spark, execution.LogicalRDD(
+      ds.logicalPlan.output, rdd, firstLeaf(plan.outputPartitioning),
+      plan.outputOrdering, isStreaming = false)(spark, stats, constraints))
+  }
 }

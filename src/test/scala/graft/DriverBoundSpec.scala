@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Each allowlisted site carries its boundedness argument; a NEW site
   * anywhere in main fails this spec until it is justified here.
   * (Complements PlanAuditSpec, which audits executed plans; this audits
-  * the code the planner never sees.)
+  * the code the planner never sees.) The same audit covers session-conf
+  * writes: each is a declared site with its reason.
   */
 class DriverBoundSpec extends AnyFunSuite {
 
@@ -58,15 +59,16 @@ class DriverBoundSpec extends AnyFunSuite {
       "toleranceReport max-error aggregates — ONE row per .head() " +
         "(global max over bounded group reports)"))
 
-  test("every driver-side collect/head/first in main is a declared bounded site") {
-    val pat = java.util.regex.Pattern.compile(
-      "\\.collect\\(\\)|collectAsList|\\.head\\(\\)|\\.first\\(\\)")
+  /** file name → matches of `regex` in the non-comment lines of every
+    * `.scala` file under `root`. */
+  private def siteCounts(root: String, regex: String): Map[String, Int] = {
+    val pat = java.util.regex.Pattern.compile(regex)
     def scalaFiles(dir: java.io.File): Seq[java.io.File] =
       Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    val found = scalaFiles(new java.io.File("src/main/scala/graft")).flatMap { f =>
+    scalaFiles(new java.io.File(root)).flatMap { f =>
       val code = scala.io.Source.fromFile(f, "UTF-8").getLines()
         .map(_.trim)
         .filterNot(l => l.startsWith("//") || l.startsWith("*") ||
@@ -77,6 +79,11 @@ class DriverBoundSpec extends AnyFunSuite {
       while (m.find()) n += 1
       if (n > 0) Some(f.getName -> n) else None
     }.toMap
+  }
+
+  test("every driver-side collect/head/first in main is a declared bounded site") {
+    val found = siteCounts("src/main/scala/graft",
+      "\\.collect\\(\\)|collectAsList|\\.head\\(\\)|\\.first\\(\\)")
     val undeclared = found.filterNot { case (name, n) =>
       allowed.get(name).exists(_._1 == n)
     }
@@ -85,5 +92,27 @@ class DriverBoundSpec extends AnyFunSuite {
         "add/adjust the allowlist entry WITH a boundedness argument")
     val stale = allowed.keySet -- found.keySet
     assert(stale.isEmpty, s"stale allowlist entries (sites removed): $stale")
+  }
+
+  /** file name → (expected site count, why the write is needed). Building
+    * or running a query must not write session conf: a conf set by one
+    * caller changes the plans of every other query on the shared session. */
+  val confWrites: Map[String, (Int, String)] = Map(
+    "LaunchPipeline.scala" -> (1,
+      "registerTable sets the parallel partition-discovery threshold from " +
+        "the zone's filesystem: driver listing on a local session over " +
+        "local disk, Spark's listing job elsewhere"))
+
+  test("every session-conf write in main is a declared site") {
+    val found = siteCounts("src/main/scala",
+      "conf\\.(set|unset)\\(|setConf\\(|setConfString\\(")
+    val undeclared = found.filterNot { case (name, n) =>
+      confWrites.get(name).exists(_._1 == n)
+    }
+    assert(undeclared.isEmpty,
+      s"undeclared or count-changed session-conf writes: $undeclared — " +
+        "express the decision in the plan, or declare the site with its reason")
+    val stale = confWrites.keySet -- found.keySet
+    assert(stale.isEmpty, s"stale conf-write entries (sites removed): $stale")
   }
 }

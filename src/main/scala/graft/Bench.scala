@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, pmod}
 
 import graft.engine.GraftSession
 import graft.queries.Catalog
@@ -67,6 +68,23 @@ object Bench {
   // 0,8812 and invalidate the one JSON line the driver parses
   def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
+  /** Floor-probe seconds above which the host is in the degraded bracket. */
+  val DegradedFloor = 0.25
+
+  /** The machine-load sentinel: a 1-task job plus a one-exchange shuffle
+    * job over no data, best of 5 after a warm-up, in seconds. */
+  def floorProbe(spark: SparkSession): Double = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.range(1000).toDF("v").groupBy(pmod(col("v"), lit(10L))).count()
+        .write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    once() // warm-up
+    (1 to 5).map(_ => once()).min
+  }
 
   /** Names whose best-of-5 exceeds the stall threshold
     * max(5 × history, 10 × floor_post). Pure — spec-covered by
@@ -152,20 +170,6 @@ object Bench {
     def total(results: Seq[(String, Double)]): String =
       fmt(results.map(_._2).filter(_ >= 0).sum)
 
-    def floorProbe(): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        spark.range(1000).toDF("v").groupBy(org.apache.spark.sql.functions
-          .pmod(org.apache.spark.sql.functions.col("v"),
-            org.apache.spark.sql.functions.lit(10L))).count()
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm-up
-      (1 to 5).map(_ => once()).min
-    }
-
     // optional args: query names to bench (local iteration aid; the driver
     // always runs the full set)
     val only = args.toSet
@@ -189,17 +193,17 @@ object Bench {
 
     // headline set first ("metric"/"value" keep their round-1 meaning, so
     // totals stay comparable across rounds); extended tier reported beside it
-    val floorFirst = floorProbe()
+    val floorFirst = floorProbe(spark)
     val (floorPre, floorRetry) =
-      if (floorFirst > 0.25) {
+      if (floorFirst > DegradedFloor) {
         System.err.println(s"[bench] floor_pre ${fmt(floorFirst)} in the " +
           "degraded bracket; sleeping 60s and re-probing once")
         Thread.sleep(60000L)
-        (floorProbe(), Some(floorFirst))
+        (floorProbe(spark), Some(floorFirst))
       } else (floorFirst, None)
     val headFirst = benchSet(pick(Catalog.benchNames))
     val extFirst = benchSet(pick(Catalog.benchNamesExtended))
-    val floorPostFirst = floorProbe()
+    val floorPostFirst = floorProbe(spark)
 
     // Degraded-window FULL-SET retry (VERDICT r13 directive): BENCH_r12 and
     // r13 were both taken on degraded floors, so their round-over-round
@@ -214,15 +218,15 @@ object Bench {
     var headRaw = headFirst; var extRaw = extFirst
     var floorPreEff = floorPre; var floorPost = floorPostFirst
     var setRetry: Option[(Double, Double)] = None
-    if (math.max(floorPre, floorPostFirst) > 0.25) {
+    if (math.max(floorPre, floorPostFirst) > DegradedFloor) {
       System.err.println(s"[bench] window degraded (pre ${fmt(floorPre)}, " +
         s"post ${fmt(floorPostFirst)}); sleeping 60s and retrying the full set")
       Thread.sleep(60000L)
-      val fp = floorProbe()
-      if (fp <= 0.25) {
+      val fp = floorProbe(spark)
+      if (fp <= DegradedFloor) {
         val h2 = benchSet(pick(Catalog.benchNames))
         val e2 = benchSet(pick(Catalog.benchNamesExtended))
-        val fpost2 = floorProbe()
+        val fpost2 = floorProbe(spark)
         // Publish the RECOVERED pass's values ALONE (ADVICE r14): min-merging
         // both passes made retried rounds effectively best-of-10 vs the
         // normal best-of-5 — a small systematic downward bias in cross-round
@@ -277,7 +281,7 @@ object Bench {
     // drifted round is self-describing instead of needing human sentinel
     // forensics against BASELINE.md after the fact.
     val window =
-      if (math.max(floorPreEff, floorPost) > 0.25) "degraded" else "moderate"
+      if (math.max(floorPreEff, floorPost) > DegradedFloor) "degraded" else "moderate"
     // shared prefix for the full and compact metric lines (ADVICE r8: two
     // independent string builders had already half-drifted once).
     // "cpus"/"master" (r17, VERDICT r16 directive 2): the session's ACTUAL

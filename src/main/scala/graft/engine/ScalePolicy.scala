@@ -8,12 +8,17 @@ import org.slf4j.LoggerFactory
 
 import graft.sources.Tables
 
-/** The one answer to "is this input small?".
+/** The one answer to "is this input small?", and the one record of every
+  * branch a build took.
   *
   * Every small-input branch in the engine — the catalog's one-task floor
   * fusion, its per-row kernel spreads, x34's pair-sort merge and
   * `Relational.keyedRowNumbers`' window route — asks this object, and
   * nothing else reads a size or row statistic to choose a plan shape.
+  * Operators that route on a statistic of their own probe job (a bucket,
+  * cell or block count, an eval-size estimate, a bounded row count)
+  * report the route they took through [[route]], with that statistic and
+  * the cap it was held against.
   *
   * Statistics are the two zero-job ones: the optimizer's size estimate
   * (`optimizedPlan.stats.sizeInBytes`, compressed parquet bytes scaled by
@@ -32,7 +37,8 @@ import graft.sources.Tables
   *
   * Each decision is logged at INFO (logger `graft.engine.ScalePolicy`) as
   * one line naming the tier, inputs, statistics, caps and branch, and
-  * [[recorded]] hands them to a caller (JobProfile prints them per query).
+  * [[recorded]] hands the calling thread's decisions to a caller (the
+  * "decisions" of each `graft.tools.JobProfile` record).
   */
 object ScalePolicy {
 
@@ -54,12 +60,15 @@ object ScalePolicy {
     * 2 MiB or 20k rows (4× sf0.1's 5k documents, 2.5× under sf1's 50k). */
   val KernelSpread = Tier("kernel-spread", (2L << 20) - 1, 20L * 1000 - 1)
 
-  /** One decision, as logged: `small` is the branch taken. */
+  /** Branch names of the size gates ([[fits]], [[onePartition]]). */
+  val Small = "small"
+  val AtScale = "at-scale"
+
+  /** One decision, as logged: `branch` is the branch taken. */
   final case class Decision(tier: String, input: String, statistics: String,
-                            small: Boolean) {
+                            branch: String) {
     override def toString: String =
-      s"scale tier=$tier input=$input $statistics " +
-        s"branch=${if (small) "small" else "at-scale"}"
+      s"scale tier=$tier input=$input $statistics branch=$branch"
   }
 
   private val log = LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
@@ -89,7 +98,7 @@ object ScalePolicy {
       tables.mkString("+") + (if (columns.isEmpty) "" else columns.mkString("(", ",", ")")),
       s"bytes=$bytes rows=$rows caps=${tier.maxBytes}/${tier.maxRows}" +
         (if (forced) s" $Conf=large" else ""),
-      !forced && tier.admits(bytes, rows)))
+      if (!forced && tier.admits(bytes, rows)) Small else AtScale)) == Small
   }
 
   /** Whether `df` is already ONE physical partition, so a caller may take
@@ -97,11 +106,19 @@ object ScalePolicy {
     * the planned RDD). Under `large` the answer is no without planning. */
   def onePartition(input: String, df: DataFrame): Boolean =
     if (large(df.sparkSession))
-      decide(Decision("one-partition", input, s"$Conf=large", small = false))
+      decide(Decision("one-partition", input, s"$Conf=large", AtScale)) == Small
     else {
       val n = df.rdd.getNumPartitions
-      decide(Decision("one-partition", input, s"partitions=$n cap=1", n == 1))
+      decide(Decision("one-partition", input, s"partitions=$n cap=1",
+        if (n == 1) Small else AtScale)) == Small
     }
+
+  /** Records the route an operator chose on a statistic of its own
+    * (`statistics` names it and the cap it was held against) and returns
+    * `branch`. */
+  def route(tier: String, input: String, statistics: String,
+            branch: String): String =
+    decide(Decision(tier, input, statistics, branch))
 
   /** Runs `body` and returns the decisions it made on this thread. */
   def recorded[T](body: => T): (T, Seq[Decision]) = {
@@ -113,9 +130,9 @@ object ScalePolicy {
     } finally sink.remove()
   }
 
-  private def decide(d: Decision): Boolean = {
+  private def decide(d: Decision): String = {
     log.info(d.toString)
     Option(sink.get).foreach(_ += d)
-    d.small
+    d.branch
   }
 }

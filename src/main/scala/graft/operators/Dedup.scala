@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.ScalePolicy
 import graft.functions.{Portable, VectorFunctions}
 import graft.functions.Portable.{Spark => SparkD, Duck => DuckD}
 
@@ -77,8 +78,8 @@ object Dedup {
       graft.functions.TextHashFunctions.simhash(col(textCol)).as("simhash"))
 
   /** The band-key columns `k0..k{Bands-1}` over a packed minhash signature
-    * column — THE one derivation every consumer (near-dup pairs, X18Probe)
-    * must share, or banding changes silently desync them.
+    * column — THE one derivation every consumer must share, or banding
+    * changes silently desync them.
     *
     * Band keys are `xxhash64` of the band's 8 minhashes (8-byte join keys)
     * rather than the oracle's concat-string keys: a hash collision across
@@ -121,7 +122,8 @@ object Dedup {
     *    always carry the same est_jaccard. */
   def minhashNearDupPairs(docs: DataFrame, minEstJaccard: Double,
                           textCol: String = "text"): DataFrame = {
-    // r17 (VERDICT r16 directive 1, measured with tools/X18Probe at sf1):
+    // r17 (VERDICT r16 directive 1, measured at sf1; BASELINE.md "Round-17:
+    // x18's sort-tail re-execution fixed" and "Profile, 4-core sf1"):
     // the callers' orderBy tail re-executes its CHILD up to three times —
     // range sampler, skew resample, final pass — and the child here is the
     // whole corpus pipeline (signature kernel, sig aggregation, band
@@ -400,15 +402,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Embedding-cosine near-dup pairs at scale: candidates limited to pairs
-    * sharing at least one hyperplane-LSH band key (banded OR-of-ANDs, see
-    * [[Similarity]]). Each vector is shuffled once per band on its key; a
-    * pair matching in several bands is emitted only at its first matching
-    * band (no distinct pass), mirroring minhashNearDupPairs. Recall for a
-    * pair at angle θ is 1-(1-p^r)^b with p = 1-θ/π — tuned via
-    * Similarity.Bands / RowsPerBand at real scale. */
-  @volatile private[graft] var lastLshRoute: String = ""
-
   /** Oversized (band, key) buckets beyond this count route the WHOLE call
     * to the join: a corpus where >64 buckets each exceed the kernel byte
     * budget is join-shaped anyway, and the cap keeps both the routing
@@ -416,7 +409,15 @@ object Dedup {
     * collect bounded by a constant, never by data. */
   val MaxHotBuckets: Int = 64
 
-  /** Banded-LSH near-dup pairs with PER-BUCKET route selection (round 11;
+  /** Embedding-cosine near-dup pairs at scale: candidates limited to pairs
+    * sharing at least one hyperplane-LSH band key (banded OR-of-ANDs, see
+    * [[Similarity]]). Each vector is shuffled once per band on its key; a
+    * pair matching in several bands is emitted only at its first matching
+    * band (no distinct pass), mirroring minhashNearDupPairs. Recall for a
+    * pair at angle θ is 1-(1-p^r)^b with p = 1-θ/π — tuned via
+    * Similarity.Bands / RowsPerBand at real scale.
+    *
+    * Banded-LSH near-dup pairs with PER-BUCKET route selection (round 11;
     * round 10 shipped the two routes but picked one globally off the single
     * largest bucket — one hot (band, key) demoted every in-contract bucket
     * to the slow join). The join route MATERIALIZES two d-dim arrays into
@@ -467,7 +468,8 @@ object Dedup {
     if (maxKernelBucket <= 0) {
       // a zero row budget makes EVERY non-empty bucket oversized — skip
       // the probe, the corpus is join-shaped by declaration
-      lastLshRoute = "join"
+      ScalePolicy.route("hot-buckets", "embeddingNearDupLsh",
+        s"unprobed maxKernelBucket=$maxKernelBucket", "join")
       return lshPairsJoin(keyed, threshold, None)
     }
     // bounded collect: limit(MaxHotBuckets + 1) caps the driver at 65 slim
@@ -478,14 +480,16 @@ object Dedup {
       .where(col("c") > maxKernelBucket ||
         col("c") * col("d") * 8L > kernelCellBytes)
       .select("band", "key").limit(MaxHotBuckets + 1).collect()
-    if (hot.isEmpty) {
-      lastLshRoute = "kernel"
+    val route =
+      if (hot.isEmpty) "kernel" else if (hot.length > MaxHotBuckets) "join" else "mixed"
+    ScalePolicy.route("hot-buckets", "embeddingNearDupLsh",
+      (if (hot.length > MaxHotBuckets) s"hot>$MaxHotBuckets" else s"hot=${hot.length}") +
+        s" cap=$MaxHotBuckets", route)
+    if (route == "kernel") {
       lshPairsKernel(keyed, threshold, None)
-    } else if (hot.length > MaxHotBuckets) {
-      lastLshRoute = "join"
+    } else if (route == "join") {
       lshPairsJoin(keyed, threshold, None)
     } else {
-      lastLshRoute = "mixed"
       val hotPred = hot.map(r => col("band") === r.getInt(0) &&
         col("key") === r.getLong(1)).reduce(_ || _)
       lshPairsKernel(keyed, threshold, Some(!hotPred))
@@ -694,10 +698,6 @@ object Dedup {
     * 32 MB of vector doubles (the measured-safe size at 64 dims). */
   val KernelCellBytes: Long = 32L << 20
 
-  /** Test-only observability: which pair route the most recent
-    * [[semanticDedup]] call on this JVM took ("kernel" | "join"). */
-  @volatile private[graft] var lastSemanticRoute: String = ""
-
   def semanticDedup(emb: DataFrame, cents: DataFrame, threshold: Double,
                     saltParts: Int = 8,
                     maxKernelCell: Int = MaxKernelCellRows,
@@ -742,11 +742,10 @@ object Dedup {
     val dim = Option(stats.get(1)).map(_.asInstanceOf[Int]).getOrElse(1).max(1)
     val effectiveCap = math.min(maxKernelCell.toLong,
       kernelCellBytes / (dim.toLong * 8L))
-    if (maxCell <= effectiveCap) {
-      lastSemanticRoute = "kernel"
+    if (ScalePolicy.route("kernel-cell", "semanticDedup",
+        s"cell=$maxCell cap=$effectiveCap",
+        if (maxCell <= effectiveCap) "kernel" else "join") == "kernel")
       return semanticDedupKernel(cells, threshold)
-    }
-    lastSemanticRoute = "join"
     // Salted pair join: colocating by cell alone caps parallelism at k
     // cells — fine at corpus scale (k ≥ cores by construction), a 3-task
     // bottleneck locally where k = 8 < 32. The b side is replicated
@@ -890,11 +889,10 @@ object Dedup {
     val dim = Option(stats.get(1)).map(_.asInstanceOf[Int]).getOrElse(1).max(1)
     val cap = math.min(maxKernelCell.toLong,
       kernelCellBytes / (dim.toLong * 8L))
-    if (maxCell <= cap) {
-      lastSemanticRoute = "kernel"
+    if (ScalePolicy.route("kernel-cell", "semanticClaimedIds",
+        s"cell=$maxCell cap=$cap",
+        if (maxCell <= cap) "kernel" else "join") == "kernel")
       return semanticClaimedKernel(cells, threshold)
-    }
-    lastSemanticRoute = "join"
     // x83's salted pair join with the id order generalized to the
     // (tag, vec_id) struct: a = claimants (every row), b = batch rows;
     // each qualifying pair meets exactly once at s = pmod(a_id).
@@ -1113,8 +1111,6 @@ object Dedup {
   val BloomBitCap: Long = 1L << 26
   val BloomBitsPerItem: Long = 16L
 
-  @volatile private[graft] var lastDecontamRoute: String = ""
-
   /** Per-eval-doc contamination counts: for each doc in `eval`, how many of
     * its distinct 3-gram shingles appear anywhere in `train` — the
     * benchmark-decontamination primitive (the GPT-3/PaLM n-gram-overlap
@@ -1158,11 +1154,11 @@ object Dedup {
     val trainSh = train.select(explode(sh).as("sh"))
     val evalSh = eval.select(col(idCol), explode(sh).as("sh"))
     val trainMatch =
-      if (expectedEvalShingles > maxBloomItems) {
-        lastDecontamRoute = "exact"
+      if (ScalePolicy.route("bloom-items", "contaminationCounts",
+          s"shingles=$expectedEvalShingles cap=$maxBloomItems",
+          if (expectedEvalShingles > maxBloomItems) "exact" else "bloom") == "exact") {
         trainSh.distinct()
       } else {
-        lastDecontamRoute = "bloom"
         val bloom = evalShingleBloom(eval, expectedEvalShingles, textCol, shsCol)
         trainSh.where(bloomProbe(train.sparkSession, bloom)(col("sh"))).distinct()
       }

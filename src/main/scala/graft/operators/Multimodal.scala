@@ -136,9 +136,10 @@ object Multimodal {
     * Why: `ImageIO.read` walks the provider registry (`getImageReaders`
     * probe loop over a fresh SPI iterator) and `ImageIO
     * .getImageWritersByFormatName` + `createImageOutputStream` repeat the
-    * same dance on the encode side — PER CALL. Measured by
-    * [[graft.tools.X82Codec]] at the x82 frame shape (32–80 px JPEG),
-    * 32 threads: decode 45.1 → 2.6 µs/frame and encode 57.5 → 8.8 µs/frame
+    * same dance on the encode side — PER CALL. Measured by a pure-JVM
+    * codec A/B at the x82 frame shape (32–80 px JPEG; BASELINE.md,
+    * "Round-13: x82's 1190 s sf25 wall profiled"), 32 threads: decode
+    * 45.1 → 2.6 µs/frame and encode 57.5 → 8.8 µs/frame
     * with per-thread cached instances — the per-call path is ~10× plumbing,
     * ~1× codec, and it was the bulk of x82's 1190 s sf25 Verify wall
     * (4.375M frames × ~103 µs ≈ 450 s of registry/SPI overhead). */

@@ -18,19 +18,11 @@ object Relational {
     * distributed. */
   val DefaultMaxDriverBlocks: Long = 1L << 17
 
-  /** Test-only observability: which offset route the most recent
-    * [[keyedRowNumbers]] call on this JVM took ("driver" | "distributed"). */
-  @volatile private[graft] var lastKeyedRoute: String = ""
-
   /** [[orderedRunningTotal]] single-window row cap: up to 2²⁰ slim rows
     * sort in one task in well under a second, so the two-pass's extra
     * jobs are pure scheduling floor below it; anything bigger keeps the
     * distributed two-pass. */
   val MaxSingleWindowRows: Long = 1L << 20
-
-  /** Test-only observability: which route the most recent
-    * [[orderedRunningTotal]] call on this JVM took ("window" | "two-pass"). */
-  @volatile private[graft] var lastRunningTotalRoute: String = ""
 
   /** Keep the latest row per key group (E3/E8 "dedup-keep-latest").
     * One shuffle on the partition keys; ranking is per-partition. */
@@ -196,7 +188,6 @@ object Relational {
     // scale policy decides, so `spark.graft.scale=large` pins the two-pass
     // even on a tiny single-file scan.
     if (graft.engine.ScalePolicy.onePartition("keyedRowNumbers", df)) {
-      lastKeyedRoute = "window"
       val byKey = Window.partitionBy(keys.map(col): _*)
       return df
         .withColumn("__n", count(lit(1)).over(byKey))
@@ -258,9 +249,12 @@ object Relational {
         StructField("__minMid", LongType) :+
         StructField("__off", LongType) :+
         StructField("__n", LongType))
+    val onDriver = nBlocks <= maxDriverBlocks
+    graft.engine.ScalePolicy.route("driver-blocks", "keyedRowNumbers",
+      s"blocks=$nBlocks cap=$maxDriverBlocks",
+      if (onDriver) "driver" else "distributed")
     val blockDf =
-      if (nBlocks <= maxDriverBlocks) {
-        lastKeyedRoute = "driver"
+      if (onDriver) {
         val augmented = blockRdd.collect().groupBy(_._2).valuesIterator
           .flatMap { blocks =>
             val ordered = blocks.sortBy(_._1)
@@ -276,7 +270,6 @@ object Relational {
             scala.jdk.CollectionConverters.SeqHasAsJava(augmented).asJava),
           blockSchema))
       } else {
-        lastKeyedRoute = "distributed"
         val raw = spark.createDataFrame(
           blockRdd.map(t => org.apache.spark.sql.Row.fromSeq(
             t._1 +: t._2 :+ t._3 :+ t._4)),
@@ -413,9 +406,14 @@ object Relational {
         org.apache.spark.sql.types.LongType,
       s"orderedRunningTotal: value column '$valueCol' must be BIGINT, got " +
         s"${df.schema(valueCol).dataType.simpleString} — cast('bigint') first")
-    if (maxSingleWindow > 0 &&
-        graft.engine.Actions.boundedCount(df, maxSingleWindow).isDefined) {
-      lastRunningTotalRoute = "window"
+    val rows =
+      if (maxSingleWindow > 0) graft.engine.Actions.boundedCount(df, maxSingleWindow)
+      else None
+    graft.engine.ScalePolicy.route("single-window", "orderedRunningTotal",
+      rows.fold(if (maxSingleWindow > 0) s"rows>$maxSingleWindow" else "unprobed")(
+        n => s"rows=$n") + s" cap=$maxSingleWindow",
+      if (rows.isDefined) "window" else "two-pass")
+    if (rows.isDefined) {
       // coalesce: a leading run of NULL values leaves the window sum NULL
       // where the two-pass emits 0 — pin the two routes to identical output
       return df.withColumn("__cum",
@@ -423,7 +421,6 @@ object Relational {
           org.apache.spark.sql.expressions.Window.orderBy(order: _*)),
           lit(0L)))
     }
-    lastRunningTotalRoute = "two-pass"
     val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
     val sorted = df.repartitionByRange(p, order: _*)
       .sortWithinPartitions(order: _*)

@@ -15,7 +15,8 @@ object Tables {
 
   /** Session-scoped relation cache, the same role as Spark's catalog relation
     * cache for `read.table`: building a parquet relation costs ~50 ms of file
-    * listing + footer schema read per call (measured, tools/FloorProbe), and
+    * listing + footer schema read per call (measured; BASELINE.md, "Floor
+    * decomposition"), and
     * a DataFrame is an immutable plan — safe to reuse. Keyed by the session
     * instance so concurrent sessions (tests) never share file indexes.
     * Entries for sessions whose SparkContext has stopped are evicted on the

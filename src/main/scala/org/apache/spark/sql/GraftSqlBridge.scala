@@ -12,6 +12,16 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Blocks until every listener event posted so far has been delivered,
+    * so listener counts read afterwards hold exactly the work done before
+    * the call. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** Whether a stage writes shuffle output (a map stage, not a result). */
+  def isShuffleMapStage(s: org.apache.spark.scheduler.StageInfo): Boolean =
+    s.shuffleDepId.isDefined
+
   /** Bounded top-k aggregate (`CollectTopK`): keeps at most `num` values of
     * `c` in a bounded priority queue — partial-agg friendly with state
     * capped at `num` elements per group regardless of group size, the

@@ -47,11 +47,6 @@ class DriverBoundSpec extends AnyFunSuite {
         "MaxHotBuckets + 1 slim (band, key) rows"),
     "HiveCatalogDemo.scala" -> (1,
       "two-JVM demo main: bounded daily-count reports"),
-    "X34Probe.scala" -> (1,
-      "scratch profiler: ONE (rows, pairs, dots, hits, secs) counter row " +
-        "per partition — bounded by partition count"),
-    "X102Probe.scala" -> (1,
-      "route-stats aggregate .head() — ONE (count, sum) row per probe run"),
     "Sharding.scala" -> (2,
       "expected-count and write-audit aggregates — one row per shard, " +
         "bounded by nShards"),

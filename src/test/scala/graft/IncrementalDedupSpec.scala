@@ -11,7 +11,7 @@ import graft.pipeline.IncrementalDedup
   * batch returns the identical survivor set — the naive append design
   * returns the empty set on redelivery). */
 class IncrementalDedupSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{routes, spark}
   import spark.implicits._
 
   test("within-batch keep-first, cross-batch exclusion, idempotent retry") {
@@ -210,10 +210,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (11L, Array(0.99f, 0.1f, 0f, 0f)), // cos(10,11) ≈ 0.995 → dropped
       (12L, Array(0f, 1f, 0f, 0f)))     // cell 1, kept
       .toDF("vec_id", "embedding")
-    val s1 = IncrementalDedup.semanticBatch(b1, hist, "b1", cents, 0.95)
+    val (s1, s1Route) = routes("semanticClaimedIds")(
+      IncrementalDedup.semanticBatch(b1, hist, "b1", cents, 0.95))
     assert(s1.select("vec_id").as[Long].collect().sorted.toSeq ==
       Seq(10L, 12L))
-    assert(graft.operators.Dedup.lastSemanticRoute == "kernel")
+    assert(s1Route == Seq("kernel"))
     assert(spark.read.parquet(s"$hist/vectors").count() == 2) // survivors only
 
     val b2 = Seq(
@@ -253,13 +254,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (1L, 1, 8L, Array(0.01, 1.0)),
       (1L, 1, 9L, Array(0.0, 0.0)))
       .toDF("cell", "tag", "vec_id", "v")
-    def ids(maxCell: Int) = graft.operators.Dedup
-      .semanticClaimedIds(cells, 0.95, maxKernelCell = maxCell)
-      .as[Long].collect().sorted.toSeq
-    val kernel = ids(1 << 16)
-    assert(graft.operators.Dedup.lastSemanticRoute == "kernel")
-    val join = ids(0)
-    assert(graft.operators.Dedup.lastSemanticRoute == "join")
+    def ids(maxCell: Int) = routes("semanticClaimedIds")(
+      graft.operators.Dedup
+        .semanticClaimedIds(cells, 0.95, maxKernelCell = maxCell)
+        .as[Long].collect().sorted.toSeq)
+    val (kernel, kernelRoute) = ids(1 << 16)
+    assert(kernelRoute == Seq("kernel"))
+    val (join, joinRoute) = ids(0)
+    assert(joinRoute == Seq("join"))
     assert(kernel == Seq(5L, 8L, 9L))
     assert(join == kernel)
   }

@@ -8,7 +8,7 @@ import graft.functions.{TextAnalysis, VectorFunctions => V}
 import graft.operators.{BpeTrainer, Dedup, Multimodal, Relational, Similarity}
 
 class OperatorsSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{routes, spark}
   import spark.implicits._
 
   test("dedupKeepLatest keeps exactly the newest row per key") {
@@ -69,16 +69,18 @@ class OperatorsSpec extends AnyFunSuite {
     val df = Seq((0L, None), (1L, Some(5L)), (2L, None), (3L, Some(2L)))
       .toDF("k", "v")
     val want = Set((0L, 0L), (1L, 5L), (2L, 5L), (3L, 7L))
-    val win = Relational.orderedRunningTotal(df, Seq(col("k")), "v", parts = 2)
-      .select("k", "__cum").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(Relational.lastRunningTotalRoute == "window")
+    val (win, winRoute) = routes("orderedRunningTotal")(
+      Relational.orderedRunningTotal(df, Seq(col("k")), "v", parts = 2)
+        .select("k", "__cum").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(winRoute == Seq("window"))
     assert(win == want)
-    val twoPass = Relational.orderedRunningTotal(df, Seq(col("k")), "v",
-        parts = 2, maxSingleWindow = 0)
-      .select("k", "__cum").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(Relational.lastRunningTotalRoute == "two-pass")
+    val (twoPass, twoPassRoute) = routes("orderedRunningTotal")(
+      Relational.orderedRunningTotal(df, Seq(col("k")), "v",
+          parts = 2, maxSingleWindow = 0)
+        .select("k", "__cum").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(twoPassRoute == Seq("two-pass"))
     assert(twoPass == want)
   }
 
@@ -102,9 +104,10 @@ class OperatorsSpec extends AnyFunSuite {
       .select(col("event_id"), col("user_id"))
     // maxSingleWindow = 0 forces the two-pass; the reference window IS
     // the small route's plan, so this doubles as the route A/B oracle
-    val got = Relational.orderedRunningTotal(ev, Seq(col("event_id")),
-      "user_id", parts = 7, maxSingleWindow = 0)
-    assert(Relational.lastRunningTotalRoute == "two-pass")
+    val (got, route) = routes("orderedRunningTotal")(
+      Relational.orderedRunningTotal(ev, Seq(col("event_id")),
+        "user_id", parts = 7, maxSingleWindow = 0))
+    assert(route == Seq("two-pass"))
     val want = ev.withColumn("__cum", sum("user_id").over(
       Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding,
         Window.currentRow)))
@@ -260,13 +263,14 @@ class OperatorsSpec extends AnyFunSuite {
     val zeros = Seq((900L, Array.fill(8)(0f), 0L), (901L, Array.fill(8)(0f), 0L))
     val emb = (base ++ zeros).toDF("vec_id", "embedding", "label")
     // NaN != NaN would break set equality — canonicalize via raw bits
-    def pairs(cap: Int) = Dedup.embeddingNearDupLsh(emb, 0.9, cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    val kernel = pairs(Dedup.MaxKernelCellRows)
-    assert(Dedup.lastLshRoute == "kernel")
-    val join = pairs(0)
-    assert(Dedup.lastLshRoute == "join")
+    def pairs(cap: Int) = routes("embeddingNearDupLsh")(
+      Dedup.embeddingNearDupLsh(emb, 0.9, cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet)
+    val (kernel, kernelRoute) = pairs(Dedup.MaxKernelCellRows)
+    assert(kernelRoute == Seq("kernel"))
+    val (join, joinRoute) = pairs(0)
+    assert(joinRoute == Seq("join"))
     assert(kernel == join)
     assert(kernel.nonEmpty, "the planted twins must surface")
     assert(kernel.exists { case (a, b, c) => a == 900L && b == 901L &&
@@ -288,15 +292,16 @@ class OperatorsSpec extends AnyFunSuite {
     val hot = (0 until 30).map(i => (i.toLong, vec(7)))
     val rest = (0 until 60).map(i => (100L + i, vec(1000 + i)))
     val emb = (hot ++ rest).toDF("vec_id", "embedding")
-    def pairs(cap: Int) = Dedup.embeddingNearDupLsh(emb, 0.9, cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    val mixed = pairs(16)
-    assert(Dedup.lastLshRoute == "mixed",
+    def pairs(cap: Int) = routes("embeddingNearDupLsh")(
+      Dedup.embeddingNearDupLsh(emb, 0.9, cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet)
+    val (mixed, mixedRoute) = pairs(16)
+    assert(mixedRoute == Seq("mixed"),
       "30 identical vectors over a 16-row cap with ≤ MaxHotBuckets hot " +
         "buckets must take the per-bucket split, not the global join")
-    val join = pairs(0)
-    assert(Dedup.lastLshRoute == "join")
+    val (join, joinRoute) = pairs(0)
+    assert(joinRoute == Seq("join"))
     assert(mixed == join)
     // the hot cluster's C(30,2) = 435 identity pairs all survive (cos 1.0)
     assert(mixed.count { case (a, b, _) => a < 30 && b < 30 } == 435)
@@ -318,16 +323,14 @@ class OperatorsSpec extends AnyFunSuite {
     } :+ (200L, (1 to 20).map(k => s"only$k").mkString(" ")) // zero overlap
     val trainDf = train.toDF("doc_id", "text")
     val evalDf = evalDocs.toDF("doc_id", "text")
-    def run(maxItems: Long) = {
-      val out = Dedup.contaminationCounts(trainDf, evalDf, 4096,
+    def run(maxItems: Long) = routes("contaminationCounts")(
+      Dedup.contaminationCounts(trainDf, evalDf, 4096,
           maxBloomItems = maxItems)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      out
-    }
-    val bloom = run(Dedup.MaxBloomItems)
-    assert(Dedup.lastDecontamRoute == "bloom")
-    val exact = run(0)
-    assert(Dedup.lastDecontamRoute == "exact")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val (bloom, bloomRoute) = run(Dedup.MaxBloomItems)
+    assert(bloomRoute == Seq("bloom"))
+    val (exact, exactRoute) = run(0)
+    assert(exactRoute == Seq("exact"))
     assert(bloom == exact)
     // each planted eval doc shares exactly the 8 prefix shingles; the
     // disjoint doc is absent (inner-join semantics)
@@ -490,15 +493,15 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     // maxKernelCell = 0 forces the salted-join route (every cell is bigger)
     def runJoin(p: Int) = {
-      val r = Dedup.semanticDedup(emb, cents, 0.9, saltParts = p,
-        maxKernelCell = 0).orderBy("cell").collect().toSeq
-      assert(Dedup.lastSemanticRoute == "join"); r
+      val (r, route) = routes("semanticDedup")(Dedup.semanticDedup(emb, cents,
+        0.9, saltParts = p, maxKernelCell = 0).orderBy("cell").collect().toSeq)
+      assert(route == Seq("join")); r
     }
     val joined = runJoin(1)
     assert(joined == runJoin(8))
-    val kernel = Dedup.semanticDedup(emb, cents, 0.9)
-      .orderBy("cell").collect().toSeq
-    assert(Dedup.lastSemanticRoute == "kernel")
+    val (kernel, kernelRoute) = routes("semanticDedup")(
+      Dedup.semanticDedup(emb, cents, 0.9).orderBy("cell").collect().toSeq)
+    assert(kernelRoute == Seq("kernel"))
     assert(kernel == joined)
     val kernel7 = Dedup.semanticDedup(emb.repartition(7), cents, 0.9)
       .orderBy("cell").collect().toSeq
@@ -509,9 +512,10 @@ class OperatorsSpec extends AnyFunSuite {
     // rows < the ~20-row cells), the same data routes to the salted join
     // even though maxKernelCell would admit it — the wide-embedding OOM
     // guard from the round-6 advice.
-    val narrow = Dedup.semanticDedup(emb, cents, 0.9,
-        kernelCellBytes = 256L).orderBy("cell").collect().toSeq
-    assert(Dedup.lastSemanticRoute == "join")
+    val (narrow, narrowRoute) = routes("semanticDedup")(
+      Dedup.semanticDedup(emb, cents, 0.9,
+        kernelCellBytes = 256L).orderBy("cell").collect().toSeq)
+    assert(narrowRoute == Seq("join"))
     assert(narrow == joined)
   }
 

@@ -23,19 +23,21 @@ import graft.operators.{Dedup, Relational}
   * direction: a future off-by-one can't quietly tax every small input with
   * the multi-job scale plan either. */
 class RouteScaleSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{routes, spark}
 
   test("orderedRunningTotal: input one row over MaxSingleWindowRows takes " +
     "the two-pass at the DEFAULT cap; exactly at cap keeps the window", Slow) {
     val cap = Relational.MaxSingleWindowRows
     val over = spark.range(cap + 1)
       .select(col("id"), lit(1L).as("v"))
-    Relational.orderedRunningTotal(over, Seq(col("id")), "v")
-    assert(Relational.lastRunningTotalRoute == "two-pass",
+    val (_, overRoute) = routes("orderedRunningTotal")(
+      Relational.orderedRunningTotal(over, Seq(col("id")), "v"))
+    assert(overRoute == Seq("two-pass"),
       s"${cap + 1} rows must not run through a single-partition window")
     val at = spark.range(cap).select(col("id"), lit(1L).as("v"))
-    Relational.orderedRunningTotal(at, Seq(col("id")), "v")
-    assert(Relational.lastRunningTotalRoute == "window",
+    val (_, atRoute) = routes("orderedRunningTotal")(
+      Relational.orderedRunningTotal(at, Seq(col("id")), "v"))
+    assert(atRoute == Seq("window"),
       s"exactly $cap rows is in-contract for the one-window plan")
   }
 
@@ -51,8 +53,9 @@ class RouteScaleSpec extends AnyFunSuite {
           lit(0f), lit(0f)).as("embedding"))
     val cents = Seq((0L, Array(1f, 0f, 0f, 0f)),
       (1L, Array(-1f, 0f, 0f, 0f))).toDF("cid", "cv")
-    Dedup.semanticDedup(emb, cents, 0.999999)
-    assert(Dedup.lastSemanticRoute == "join",
+    val (_, route) = routes("semanticDedup")(
+      Dedup.semanticDedup(emb, cents, 0.999999))
+    assert(route == Seq("join"),
       s"${Dedup.MaxKernelCellRows + 1} rows in one cell must not buffer " +
         "in a single kernel task")
   }
@@ -70,8 +73,9 @@ class RouteScaleSpec extends AnyFunSuite {
     val cents = spark.range(2).select(col("id").as("cid"))
       .select(col("cid"), expr(s"transform(sequence(1, $dim), " +
         "i -> CAST(IF(cid = 0, 1.0, -1.0) AS FLOAT))").as("cv"))
-    Dedup.semanticDedup(emb, cents, 0.999999)
-    assert(Dedup.lastSemanticRoute == "join",
+    val (_, route) = routes("semanticDedup")(
+      Dedup.semanticDedup(emb, cents, 0.999999))
+    assert(route == Seq("join"),
       "a 4096-dim cell of 1025 rows (~33.6 MB of doubles) must not buffer " +
         "in one kernel task under the 32 MB budget")
   }
@@ -89,11 +93,12 @@ class RouteScaleSpec extends AnyFunSuite {
     val vec = expr(s"transform(sequence(1, $dim), i -> CAST(1.0 AS FLOAT))")
     val emb = spark.range(bytesCap + 1)
       .select(col("id").as("vec_id"), vec.as("embedding"))
-    Dedup.embeddingNearDupLsh(emb, 0.999999)
+    val (_, route) = routes("embeddingNearDupLsh")(
+      Dedup.embeddingNearDupLsh(emb, 0.999999))
     // identical vectors share ONE bucket per band → Bands oversized
     // buckets, all inside MaxHotBuckets → the mixed route sends exactly
     // those to the join and keeps the (here empty) remainder on the kernel
-    assert(Dedup.lastLshRoute == "mixed",
+    assert(route == Seq("mixed"),
       s"a 4096-dim bucket of ${bytesCap + 1} rows (~33.6 MB of doubles) " +
         "must not buffer in one kernel task")
   }
@@ -107,15 +112,17 @@ class RouteScaleSpec extends AnyFunSuite {
     import spark.implicits._
     val train = Seq((1L, "a b c d e")).toDF("doc_id", "text")
     val ev = Seq((2L, "a b c x y")).toDF("doc_id", "text")
-    Dedup.contaminationCounts(train, ev, Dedup.MaxBloomItems + 1)
-      .write.mode("overwrite").format("noop").save()
-    assert(Dedup.lastDecontamRoute == "exact",
+    val (_, overRoute) = routes("contaminationCounts")(
+      Dedup.contaminationCounts(train, ev, Dedup.MaxBloomItems + 1)
+        .write.mode("overwrite").format("noop").save())
+    assert(overRoute == Seq("exact"),
       s"${Dedup.MaxBloomItems + 1} expected eval shingles saturate a " +
         "conf-capped sketch — the prefilter would pass everything while " +
         "still paying its scan")
-    Dedup.contaminationCounts(train, ev, Dedup.MaxBloomItems)
-      .write.mode("overwrite").format("noop").save()
-    assert(Dedup.lastDecontamRoute == "bloom",
+    val (_, atRoute) = routes("contaminationCounts")(
+      Dedup.contaminationCounts(train, ev, Dedup.MaxBloomItems)
+        .write.mode("overwrite").format("noop").save())
+    assert(atRoute == Seq("bloom"),
       s"exactly ${Dedup.MaxBloomItems} is in-contract for the sketch route")
   }
 

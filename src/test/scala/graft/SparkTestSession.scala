@@ -21,4 +21,11 @@ object SparkTestSession {
     spark.conf.set(ScalePolicy.Conf, "large")
     try body finally spark.conf.unset(ScalePolicy.Conf)
   }
+
+  /** Runs `body` and returns its result with the branch of every decision
+    * `input` recorded on this thread meanwhile, in order. */
+  def routes[T](input: String)(body: => T): (T, Seq[String]) = {
+    val (out, decisions) = ScalePolicy.recorded(body)
+    (out, decisions.filter(_.input == input).map(_.branch))
+  }
 }

@@ -20,7 +20,7 @@ import graft.operators.Relational
   * running total id(id+1)/2 exactly.
   */
 class TwoPassScaleSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{routes, spark}
 
   private def timed[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -76,10 +76,11 @@ class TwoPassScaleSpec extends AnyFunSuite {
     val keys = 150000L
     val df = spark.range(n).select(col("id"),
       concat(lit("d"), col("id") % keys).as("k"))
-    val ranked = Relational.keyedRowNumbers(df, Seq("k"), Seq(col("id")))
+    val (ranked, route) = routes("keyedRowNumbers")(
+      Relational.keyedRowNumbers(df, Seq("k"), Seq(col("id"))))
     val bad = ranked.where(col("__rn") =!= expr(s"id div $keys") + 1 ||
       col("__n") =!= lit(n / keys)).count()
-    assert(Relational.lastKeyedRoute == "distributed",
+    assert(route == Seq("at-scale", "distributed"),
       s"150k keys should exceed the ${Relational.DefaultMaxDriverBlocks} cap")
     assert(bad == 0)
   }
@@ -91,16 +92,14 @@ class TwoPassScaleSpec extends AnyFunSuite {
       // a NULL-keyed group and a value column to carry through
       when(col("id") % 11 === 0, lit(null).cast("string"))
         .otherwise(concat(lit("g"), col("id") % 13)).as("g"))
-    def run(cap: Long) = {
-      val out = Relational.keyedRowNumbers(df, Seq("k", "g"),
+    def run(cap: Long) = routes("keyedRowNumbers")(
+      Relational.keyedRowNumbers(df, Seq("k", "g"),
           Seq(col("id")), maxDriverBlocks = cap)
         .select("id", "__rn", "__n").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-      (out.toSeq, Relational.lastKeyedRoute)
-    }
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq)
     val (viaDriver, r1) = run(Long.MaxValue)
     val (viaDist, r2) = run(1L)
-    assert(r1 == "driver" && r2 == "distributed")
+    assert(r1 == Seq("at-scale", "driver") && r2 == Seq("at-scale", "distributed"))
     assert(viaDriver == viaDist)
   }
 

@@ -14,7 +14,7 @@ thresholds).
 
 Layout: <dst>/embeddings.parquet plus symlinks to every other <src>
 table, so the directory drops into SPARK_GRAFT_SF_DIR / check_oracle /
-X34Buckets unchanged.
+JobProfile unchanged.
 
 Usage: make_natural_embeddings.py [src_sf_dir] [dst_dir] [n_vectors]
 """

@@ -12,8 +12,9 @@ import graft.sources.Tables
   * branch a build took.
   *
   * Every small-input branch in the engine — the catalog's one-task floor
-  * fusion, its per-row kernel spreads, x34's pair-sort merge and
-  * `Relational.keyedRowNumbers`' window route — asks this object, and
+  * fusion, its per-row kernel spreads, x34's pair-sort merge,
+  * `Relational.keyedRowNumbers`' window route and
+  * `PartitionIncremental`'s one-task recompute — asks this object, and
   * nothing else reads a size or row statistic to choose a plan shape.
   * Operators that route on a statistic of their own probe job (a bucket,
   * cell or block count, an eval-size estimate, a bounded row count)
@@ -60,7 +61,8 @@ object ScalePolicy {
     * 2 MiB or 20k rows (4× sf0.1's 5k documents, 2.5× under sf1's 50k). */
   val KernelSpread = Tier("kernel-spread", (2L << 20) - 1, 20L * 1000 - 1)
 
-  /** Branch names of the size gates ([[fits]], [[onePartition]]). */
+  /** Branch names of the size gates ([[fits]], [[onePartition]],
+    * [[oneScanTask]]). */
   val Small = "small"
   val AtScale = "at-scale"
 
@@ -105,12 +107,24 @@ object ScalePolicy {
     * its serial route instead of the distributed one (a zero-job check on
     * the planned RDD). Under `large` the answer is no without planning. */
   def onePartition(input: String, df: DataFrame): Boolean =
-    if (large(df.sparkSession))
+    single(df.sparkSession, input, "partitions", df.rdd.getNumPartitions)
+
+  /** Whether a file scan that Spark plans as `tasks` tasks is ONE task, so
+    * a caller may read its input as one partition without losing any
+    * parallelism (the caller counts the tasks from its own listing, with no
+    * job, footer read or planning pass). Under `large` the answer is no
+    * without counting. */
+  def oneScanTask(s: SparkSession, input: String, tasks: => Int): Boolean =
+    single(s, input, "scan-tasks", tasks)
+
+  private def single(s: SparkSession, input: String, statistic: String,
+                     n: => Int): Boolean =
+    if (large(s))
       decide(Decision("one-partition", input, s"$Conf=large", AtScale)) == Small
     else {
-      val n = df.rdd.getNumPartitions
-      decide(Decision("one-partition", input, s"partitions=$n cap=1",
-        if (n == 1) Small else AtScale)) == Small
+      val k = n
+      decide(Decision("one-partition", input, s"$statistic=$k cap=1",
+        if (k == 1) Small else AtScale)) == Small
     }
 
   /** Records the route an operator chose on a statistic of its own

@@ -13,13 +13,15 @@ import com.fasterxml.jackson.databind.node.{BooleanNode, IntNode, JsonNodeFactor
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, PartitionedFileUtil}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.{CatalogFileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{CatalogFileIndex, FilePartition, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.slf4j.LoggerFactory
+
+import graft.engine.ScalePolicy
 
 /** A per-partition aggregate served from cached per-partition result rows,
   * recomputing only the partitions whose files changed.
@@ -38,11 +40,16 @@ import org.slf4j.LoggerFactory
   *     Hadoop filesystem, on the driver, with no Spark job;
   *  4. collects `perPartition` of the table filtered to the partitions
   *     whose fingerprint differs from the cached one (unfiltered when every
-  *     partition differs). The filter is on `partCol`, so the optimizer
-  *     pushes it below the aggregate and the scan reads only those
-  *     partitions. Each recomputed partition's rows are stored under the
-  *     fingerprint of the files that query's scan read, so a partition that
-  *     changes during the call recomputes on the next one;
+  *     partition differs). The filter is on `partCol`, so the scan reads
+  *     only those partitions. When Spark's split arithmetic over the listed
+  *     files of those partitions plans that scan as one task (recorded as a
+  *     [[graft.engine.ScalePolicy]] decision, `scan-tasks=N cap=1`; never
+  *     under `spark.graft.scale=large`), the filtered table is read as
+  *     `coalesce(1)`: narrow, and no less parallel than the scan, while a
+  *     grouped aggregate over one partition plans no exchange, so the
+  *     recompute is one job. Each recomputed partition's rows are stored
+  *     under the fingerprint of the files that query's scan read, so a
+  *     partition that changes during the call recomputes on the next one;
   *  5. writes the cache back, to a temporary name renamed into place, only
   *     when its content changed;
   *  6. returns every listed partition's rows, sorted by `partCol`, as a
@@ -112,8 +119,7 @@ object PartitionIncremental {
         s"(partitioned by ${partSchema.fieldNames.mkString(", ")})")
     val partIdx = partSchema.fieldIndex(partCol)
     val partType = partSchema(partIdx).dataType
-    val all = perPartition(df)
-    val resultSchema = all.schema
+    val resultSchema = perPartition(df).schema
     require(resultSchema.fieldNames.contains(partCol),
       s"partitionIncremental: the per-partition result has no $partCol column")
     resultSchema.foreach(f => require(storable(f.dataType),
@@ -134,7 +140,8 @@ object PartitionIncremental {
       case c: CatalogFileIndex => c.filterPartitions(Nil)
       case other => other
     }
-    val listed = fingerprints(index.listFiles(Nil, Nil).flatMap(p =>
+    val dirs = index.listFiles(Nil, Nil)
+    val listed = fingerprints(dirs.flatMap(p =>
       p.files.map(f => p.values.get(partIdx, partType) -> f.fileStatus)))
 
     val (cached, readState) = read(fs, file, header, partType, resultSchema)
@@ -146,9 +153,14 @@ object PartitionIncremental {
     var unstored = Seq.empty[InternalRow]
     var recomputedRows = 0
     if (changed.nonEmpty) {
-      // the filter on the partition column pushes below the aggregate to
-      // the scan, which then reads only the changed partitions
-      val query = if (kept.isEmpty) all else all.where(in(col(partCol), changed, partType))
+      // the filter on the partition column prunes the scan to the changed
+      // partitions; a scan of one task is read as one partition, so the
+      // aggregate above it plans no exchange
+      val pruned = if (kept.isEmpty) df else df.where(in(col(partCol), changed, partType))
+      val changedSet = changed.toSet
+      val oneTask = ScalePolicy.oneScanTask(spark, s"$table/$name", scanTasks(spark, fsRelation,
+        dirs.filter(p => changedSet(p.values.get(partIdx, partType)))))
+      val query = perPartition(if (oneTask) pruned.coalesce(1) else pruned)
       val toInternal = CatalystTypeConverters.createToCatalystConverter(resultSchema)
       val rows = query.collect().map(r => toInternal(r).asInstanceOf[InternalRow]).toSeq
       recomputedRows = rows.size
@@ -191,6 +203,16 @@ object PartitionIncremental {
     val (nulls, present) = values.partition(_ == null)
     val isIn = c.isin(present.map(toScala): _*)
     if (nulls.isEmpty) isIn else isIn || c.isNull
+  }
+
+  /** How many tasks Spark's file scan plans over `dirs`: the scan's own
+    * split arithmetic over the listed file statuses. */
+  private def scanTasks(spark: SparkSession, relation: HadoopFsRelation,
+                        dirs: Seq[PartitionDirectory]): Int = {
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = dirs.flatMap(p => p.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+      relation.fileFormat.isSplitable(spark, relation.options, f.getPath), maxSplit, p.values)))
+    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplit).size
   }
 
   /** Per partition value, a digest of its data files sorted by path. */

@@ -335,17 +335,15 @@ object LaunchPipeline {
     * Deleting the cache is always safe: a missing or unreadable cache makes
     * the call run the aggregate over the whole table. No conf turns it off.
     *
-    * The plain aggregate hash-partitions the scan on `net` once and runs the
-    * whole distinct aggregation (dedup by `(net, id)`, then count by `net`)
-    * inside those partitions: `net` clustering satisfies both steps, so the
-    * plan has one exchange where `COUNT(DISTINCT)` alone plans two. It gives
-    * up only the partial `(net, id)` dedup before the shuffle, which saves
-    * little when ids rarely repeat within a day.
+    * The plain aggregate is the reference's own. A changed day whose scan
+    * is one task recomputes with no exchange at all; a larger recompute
+    * takes Spark's distinct plan, which hashes the scan on `(net, id)`, so
+    * a hot day spreads across reducers.
     *
     * `salted = true` swaps in [[graft.operators.Relational.saltedDistinctCount]]
-    * — the 100 TB form: hashing on `net` makes the hottest day one
-    * straggler reducer, salting bounds it at 1/nSalts (same exact result,
-    * per-salt value sets are disjoint). */
+    * — the 100 TB form: it counts distinct ids per `(net, salt)` and sums
+    * the counts per `net`, which bounds one reducer's share of a hot day at
+    * 1/nSalts (same exact result, per-salt value sets are disjoint). */
   def dailyCounts(spark: SparkSession, table: String = "launch_events",
                   salted: Boolean = false): DataFrame =
     graft.operators.PartitionIncremental(spark, table, "net",
@@ -353,8 +351,7 @@ object LaunchPipeline {
       if (salted)
         graft.operators.Relational.saltedDistinctCount(
           events, Seq(col("net")), col("id"), "event_count")
-      else events.repartition(col("net"))
-        .groupBy("net").agg(countDistinct("id").as("event_count"))
+      else events.groupBy("net").agg(countDistinct("id").as("event_count"))
     }
 
   /** Per-run hardening, opt-in so the default run stays byte-equivalent to

@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.NioLocalFileSystem
+import graft.engine.{NioLocalFileSystem, ScalePolicy}
 import graft.operators.PartitionIncremental
 import graft.pipeline.{LaunchPipeline => LP}
 
@@ -105,6 +105,11 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     LP.transform(spark, z, d)
     LP.publish(spark, z, d)
   }
+
+  /** Data files of the reports zone's partition of `d`. */
+  def published(z: LP.Zones, d: LocalDate): Int =
+    Option(new java.io.File(s"${z.reports}/net=$d").listFiles()).toSeq.flatten
+      .count(_.getName.endsWith(".parquet"))
 
   test("raw landing is at-most-once (C5 semantics)") {
     val z = freshZones()
@@ -234,9 +239,9 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("daily interval job shape past 32 partitions: no listing job, publish " +
-    "and registerTable run none; serving runs at most two jobs and scans " +
-    "one partition on a day that publishes one, none on an empty day, and " +
-    "recomputes only a re-run day; served counts exact") {
+    "and registerTable run none; serving runs one job with no shuffle and " +
+    "scans one partition on a day that publishes one file, none on an empty " +
+    "day, and recomputes only a re-run day; served counts exact") {
     val z = freshZones()
     val table = s"launch_events_jobs_${math.abs(z.base.hashCode)}"
     val days = 40 // every 10th day empty: 36 partitions, past Spark's 32
@@ -256,10 +261,24 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       bodyFor(start, launches(start.toEpochDay.toInt - day.toEpochDay.toInt), "a")
 
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    // shuffle bytes read and written, by phase
+    val stagePhase = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val shuffled = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.phase")))
           .foreach(ph => jobs.add(ph -> e.properties.getProperty("spark.job.description", "")))
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.phase")))
+          .foreach(stagePhase.put(e.stageInfo.stageId, _))
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(stagePhase.get(e.stageInfo.stageId)).foreach { ph =>
+          val m = e.stageInfo.taskMetrics
+          shuffled.merge(ph, m.shuffleReadMetrics.totalBytesRead +
+            m.shuffleWriteMetrics.bytesWritten, (a, b) => a + b)
+        }
     }
     val sc = spark.sparkContext
     def phase[T](name: String)(body: => T): T = {
@@ -296,6 +315,7 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         phase("ingest")(LP.ingest(z, d, fetch))
         phase("transform")(LP.transform(spark, z, d))
         phase(s"publish $d")(LP.publish(spark, z, d))
+        assert(published(z, d) == (if (launches(i) == 0) 0 else 1), s"day $d files")
         assert(served() == expected(i), s"day $d served wrong counts")
       }
       // re-run a served day with new content through the backfill driver:
@@ -303,6 +323,7 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val d = dayOf(days - 2)
       Files.delete(java.nio.file.Paths.get(z.raw(d)))
       LP.runRange(spark, z, d, d.plusDays(1), (start, _, _) => bodyFor(start, 5, "b"))
+      assert(published(z, d) == 1, s"re-run day $d files")
       assert(served() == expected(days - 1).updated(d, 5L))
       assert(PartitionIncremental.lastReport.changed == 1, PartitionIncremental.lastReport)
       org.apache.spark.GraftListenerBus.drain(sc)
@@ -321,7 +342,9 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(serveJobs(serve) == 0, s"$serve (nothing published) ran jobs: $serveJobs")
         assert(scansPerServe(serve).isEmpty, s"$serve scanned: ${scansPerServe(serve)}")
       } else {
-        assert(serveJobs(serve) >= 1 && serveJobs(serve) <= 2, s"$serve jobs: $serveJobs")
+        assert(serveJobs(serve) == 1, s"$serve jobs: $serveJobs")
+        assert(Option(shuffled.get(serve)).contains(0L),
+          s"$serve shuffled ${shuffled.get(serve)} bytes")
         assert(scansPerServe(serve) == Seq(1),
           s"$serve should recompute exactly the published day: ${scansPerServe(serve)}")
       }
@@ -333,6 +356,83 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val publishJobs = seen.filter(_._1.startsWith("publish"))
     assert(publishJobs.isEmpty, s"publish jobs: ${publishJobs.map(_._1)}")
     assert(!seen.exists(_._1 == "register"))
+  }
+
+  test("the one-task recompute and the forced exchange route serve identical " +
+    "exact rows on a cold cache, a re-published day, a day written as several " +
+    "files and a cold whole table; each call records its scan-tasks decision, " +
+    "which equals the tasks of the scan Spark plans") {
+    for (salted <- Seq(false, true)) { // each arm on its own zones and table
+      val z = freshZones()
+      val table = s"launch_events_route_${math.abs(z.base.hashCode)}"
+      val cacheName = if (salted) "daily_counts_salted" else "daily_counts"
+      /** Serves under `auto`, then from the same cache state under
+        * `spark.graft.scale=large`; both must equal the full query. Returns
+        * the scan-tasks statistic and branch the `auto` call recorded. */
+      def serveBoth(what: String): (String, String) = {
+        LP.registerTable(spark, z, table)
+        val cache = java.nio.file.Paths.get(s"${z.reports}/_serving/$cacheName")
+        val before = if (Files.exists(cache)) Some(Files.readAllBytes(cache)) else None
+        val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+        val capture = new QueryExecutionListener {
+          def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+            new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+              case s: FileSourceScanExec => s.inputRDDs().head.getNumPartitions
+            }.foreach(scans.add)
+          def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        }
+        def serve(): (Seq[Row], Seq[ScalePolicy.Decision], Int) = {
+          spark.listenerManager.register(capture)
+          scans.clear()
+          val (rows, decisions) = try ScalePolicy.recorded(
+            LP.dailyCounts(spark, table, salted).collect().toSeq)
+          finally {
+            org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+            spark.listenerManager.unregister(capture)
+          }
+          assert(scans.size == 1, s"$what: scans ${scans.asScala}")
+          (rows, decisions.filter(_.input == s"$table/$cacheName"), scans.peek())
+        }
+        val (auto, autoDecisions, _) = serve()
+        val changed = PartitionIncremental.lastReport.changed
+        before match {
+          case Some(bytes) => Files.write(cache, bytes)
+          case None => Files.deleteIfExists(cache)
+        }
+        val (forced, forcedDecisions, tasks) = SparkTestSession.atScale(serve())
+        assert(PartitionIncremental.lastReport.changed == changed, what)
+        assert(auto == fullCounts(table) && forced == auto,
+          s"$what (salted=$salted): auto $auto, forced $forced")
+        assert(forcedDecisions.map(d => s"${d.statistics} ${d.branch}") ==
+          Seq(s"${ScalePolicy.Conf}=large ${ScalePolicy.AtScale}"), s"$what: $forcedDecisions")
+        assert(autoDecisions.map(_.statistics) == Seq(s"scan-tasks=$tasks cap=1"),
+          s"$what: the scan planned $tasks tasks: $autoDecisions")
+        autoDecisions.head.statistics -> autoDecisions.head.branch
+      }
+      /** Lands `d` with one launch per id, transformed into `files` files. */
+      def publishFiles(d: LocalDate, ids: Seq[String], files: Int): Unit = {
+        publishDay(z, d, ids)
+        LP.launchEvents(LP.readRaw(spark, z, d)).repartition(files)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("net").parquet(z.processed)
+        LP.publish(spark, z, d)
+      }
+      val small = "scan-tasks=1 cap=1" -> ScalePolicy.Small
+      try {
+        publishDay(z, day, Seq("a", "b", "a"))
+        assert(serveBoth("cold cache, one day") == small)
+        publishDay(z, day.plusDays(1), Seq("a", "c"))
+        assert(serveBoth("a new day") == small)
+        publishDay(z, day, Seq("a"))
+        assert(serveBoth("re-published day") == small)
+        publishFiles(day.plusDays(2), Seq("a", "b", "c", "d", "e", "f"), files = 3)
+        assert(published(z, day.plusDays(2)) == 3)
+        assert(serveBoth("a day of three files") ==
+          ("scan-tasks=3 cap=1" -> ScalePolicy.AtScale))
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"${z.reports}/_serving"))
+        assert(serveBoth("cold whole table")._2 == ScalePolicy.AtScale)
+      } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
   }
 
   test("incremental serving equals the full query after a re-publish with " +

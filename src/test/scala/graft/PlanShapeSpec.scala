@@ -423,10 +423,11 @@ class PlanShapeSpec extends AnyFunSuite {
       s"q01's table-sized output must keep the parallel range sort:\n$q01")
   }
 
-  test("launch serving recomputes a changed day with one shuffle, hashed on " +
-    "net, and no range sort (plain and salted) and returns a local relation; " +
-    "publish runs no query and no job and leaves every other partition " +
-    "byte-identical") {
+  test("launch serving recomputes a one-task changed day with no exchange " +
+    "(plain and salted) and returns a local relation; at scale the scan " +
+    "hashes on (net, id) plain and (net, salt) salted, and an exchange on " +
+    "net alone moves only partial counts; publish runs no query and no job " +
+    "and leaves every other partition byte-identical") {
     import graft.pipeline.{LaunchPipeline => LP}
     val day = java.time.LocalDate.parse("2024-12-01")
     val z = LP.Zones(Files.createTempDirectory("graft_lp_plan").toString)
@@ -478,36 +479,59 @@ class PlanShapeSpec extends AnyFunSuite {
     LP.registerTable(spark, z, table)
     // the recompute query: the aggregate over the days whose files changed
     val recomputed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val stages = new AdaptiveSparkPlanHelper {}
     val capture = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                     ns: Long): Unit = recomputed.add(qe.executedPlan)
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                     e: Exception): Unit = ()
     }
-    try for (salted <- Seq(false, true)) {
-      LP.dailyCounts(spark, table, salted) // cold: the whole table
+    /** Re-publishes the day and serves it: the recompute's plan, its
+      * exchanges' partitionings and the call's decisions on the table. */
+    def recompute(salted: Boolean): (SparkPlan, Seq[ShuffleExchangeExec], Seq[String]) = {
       LP.publish(spark, z, day) // the day's files change
       LP.registerTable(spark, z, table)
       spark.listenerManager.register(capture)
       recomputed.clear()
-      val served = try LP.dailyCounts(spark, table, salted) finally {
-        org.apache.spark.GraftListenerBus.drain(sc)
-        spark.listenerManager.unregister(capture)
-      }
+      val (served, decisions) = try ScalePolicy.recorded(LP.dailyCounts(spark, table, salted))
+        finally {
+          org.apache.spark.GraftListenerBus.drain(sc)
+          spark.listenerManager.unregister(capture)
+        }
       assert(served.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
         s"dailyCounts(salted=$salted) should return a local relation:\n" +
           served.queryExecution.optimizedPlan)
       assert(recomputed.size == 1, s"dailyCounts(salted=$salted) ran ${recomputed.size} queries")
       val plan = recomputed.peek()
-      val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) {
-        case e: ShuffleExchangeExec => e.outputPartitioning.toString
-      }
-      assert(!exchanges.exists(_.startsWith("rangepartitioning")),
+      val exchanges = stages.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(!exchanges.exists(_.outputPartitioning.toString.startsWith("rangepartitioning")),
         s"dailyCounts(salted=$salted) should not range-sort its per-day rows:\n$plan")
-      if (!salted)
-        assert(exchanges.size == 1 && exchanges.head.matches("hashpartitioning\\(net#\\d+, \\d+\\)"),
-          s"dailyCounts should shuffle once, on net alone: $exchanges\n$plan")
+      (plan, exchanges, decisions.filter(_.input.startsWith(s"$table/")).map(_.toString))
+    }
+    def hashesOn(e: ShuffleExchangeExec, keys: String*): Boolean =
+      e.outputPartitioning.toString.matches(
+        keys.map(k => s"$k#\\d+, ").mkString("hashpartitioning\\(", "", "\\d+\\)"))
+    try for (salted <- Seq(false, true)) {
+      LP.dailyCounts(spark, table, salted) // cold: the whole table
+      val (plan, exchanges, decisions) = recompute(salted)
+      assert(exchanges.isEmpty,
+        s"a one-task recompute (salted=$salted) should plan no exchange:\n$plan")
+      assert(decisions.size == 1 && decisions.head.contains("scan-tasks=1 cap=1 branch=small"),
+        s"salted=$salted: $decisions")
+      // at scale the scan's rows never funnel through a reducer per day: an
+      // exchange on net alone only moves the partial counts of a dedup that
+      // an exchange below it already spread
+      val (scaled, large, _) = atScale(recompute(salted))
+      val onNet = large.filter(hashesOn(_, "net"))
+      assert(onNet.forall(e => stages.collect(e.child) { case x: ShuffleExchangeExec => x }.nonEmpty),
+        s"salted=$salted: an exchange on net alone moves the scan's rows:\n$scaled")
+      if (salted) // the salt is a pulled-out grouping expression
+        assert(large.exists(hashesOn(_, "net", "_groupingexpression")),
+          s"the salted arm should hash on (net, salt):\n$scaled")
+      else
+        assert(large.exists(hashesOn(_, "net", "id")),
+          s"the plain arm should hash the scan on (net, id):\n$scaled")
     } finally spark.sql(s"DROP TABLE $table")
   }
 }

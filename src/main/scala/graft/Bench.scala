@@ -193,6 +193,7 @@ object Bench {
 
     // headline set first ("metric"/"value" keep their round-1 meaning, so
     // totals stay comparable across rounds); extended tier reported beside it
+    floorProbe(spark) // the first probe of a fresh JVM only warms it
     val floorFirst = floorProbe(spark)
     val (floorPre, floorRetry) =
       if (floorFirst > DegradedFloor) {

@@ -2,7 +2,9 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 import org.slf4j.LoggerFactory
 
@@ -11,11 +13,20 @@ import graft.sources.Tables
 /** The one answer to "is this input small?", and the one record of every
   * branch a build took.
   *
-  * Every small-input branch in the engine — the catalog's one-task floor
-  * fusion, its per-row kernel spreads, x34's pair-sort merge,
-  * `Relational.keyedRowNumbers`' window route and
-  * `PartitionIncremental`'s one-task recompute — asks this object, and
-  * nothing else reads a size or row statistic to choose a plan shape.
+  * Every small-input branch in the engine asks this object, and nothing
+  * else reads a size or row statistic to choose a plan shape:
+  *  - the catalog's one-task plans, derived from each query's at-scale
+  *    plan by one rewrite ([[oneTask]]);
+  *  - the named forks, whose small branch runs another algorithm, so a
+  *    layout rewrite cannot derive it; they ask [[fits]] for [[OneTask]]
+  *    directly: x34's one-task sort tail, x62's array funnel, x84's
+  *    window-layered `TextAnalysis.mixtureSample` and x102's
+  *    `Dedup.contaminationCounts` over a coalesced scan instead of a
+  *    kernel-once checkpoint;
+  *  - the catalog's per-row kernel spreads ([[KernelSpread]]; x91's
+  *    join-free `TextAnalysis.pmiCollocations` follows that decision);
+  *  - `Relational.keyedRowNumbers`' window route and
+  *    `PartitionIncremental`'s one-task recompute.
   * Operators that route on a statistic of their own probe job (a bucket,
   * cell or block count, an eval-size estimate, a bounded row count)
   * report the route they took through [[route]], with that statistic and
@@ -24,7 +35,8 @@ import graft.sources.Tables
   * Statistics are the two zero-job ones: the optimizer's size estimate
   * (`optimizedPlan.stats.sizeInBytes`, compressed parquet bytes scaled by
   * any column projection) and the parquet-footer row count
-  * ([[Tables.rowCount]]), each summed over the named tables. An input is
+  * ([[Tables.rowCount]]), each summed over the named tables, or over the
+  * scanned relations for [[oneTask]]. An input is
   * small for a [[Tier]] iff BOTH statistics are at most the tier's caps:
   * compressed bytes drift with codec and corpus, row counts do not, and a
   * wide-row corpus under the row cap is still only small if its bytes are.
@@ -61,8 +73,8 @@ object ScalePolicy {
     * 2 MiB or 20k rows (4× sf0.1's 5k documents, 2.5× under sf1's 50k). */
   val KernelSpread = Tier("kernel-spread", (2L << 20) - 1, 20L * 1000 - 1)
 
-  /** Branch names of the size gates ([[fits]], [[onePartition]],
-    * [[oneScanTask]]). */
+  /** Branch names of the size gates ([[fits]], [[oneTask]],
+    * [[onePartition]], [[oneScanTask]]). */
   val Small = "small"
   val AtScale = "at-scale"
 
@@ -95,12 +107,38 @@ object ScalePolicy {
       in.queryExecution.optimizedPlan.stats.sizeInBytes
     }.sum
     val rows = tables.map(Tables.rowCount(s, dir, _)).sum
+    sized(s, tier, tables.mkString("+") +
+      (if (columns.isEmpty) "" else columns.mkString("(", ",", ")")), bytes, rows)
+  }
+
+  private def sized(s: SparkSession, tier: Tier, input: String, bytes: BigInt,
+                    rows: Long): Boolean = {
     val forced = large(s)
-    decide(Decision(tier.name,
-      tables.mkString("+") + (if (columns.isEmpty) "" else columns.mkString("(", ",", ")")),
+    decide(Decision(tier.name, input,
       s"bytes=$bytes rows=$rows caps=${tier.maxBytes}/${tier.maxRows}" +
         (if (forced) s" $Conf=large" else ""),
       if (!forced && tier.admits(bytes, rows)) Small else AtScale)) == Small
+  }
+
+  /** `df` as ONE task when its inputs fit [[OneTask]], else `df` itself.
+    * The inputs are the file-scan leaves of the analyzed plan, subqueries
+    * and views included; a relation read twice counts once. Small inputs
+    * get the plan rewrite of `GraftSqlBridge.oneTaskRewrite`: the whole query
+    * plans as one single-task stage with no exchange, where the at-scale
+    * body keeps its exchanges and broadcasts. A leaf that is not a file
+    * scan (a checkpoint, a local relation) leaves `df` as it is, with no
+    * decision. */
+  def oneTask(df: DataFrame): DataFrame = {
+    val leaves = df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }
+    val scans = leaves.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs }
+    val files = scans.distinctBy(_.location.rootPaths)
+    val roots = files.flatMap(_.location.rootPaths)
+    if (scans.size == leaves.size && sized(df.sparkSession, OneTask,
+        roots.map(_.getName.stripSuffix(".parquet")).mkString("+"),
+        files.map(f => BigInt(f.sizeInBytes)).sum,
+        roots.map(p => Tables.footerRows(df.sparkSession, p.toString)).sum))
+      GraftSqlBridge.oneTaskRewrite(df)
+    else df
   }
 
   /** Whether `df` is already ONE physical partition, so a caller may take

@@ -424,16 +424,9 @@ object Similarity {
     * at its FIRST matching band only (later bands require every earlier band
     * to be outside probe distance), so no distinct pass and no join back to
     * the vectors — the only shuffles are the top-k window and final sort. */
-  def lshTopK(emb: DataFrame, maxQueryId: Long, k: Int, probe: Int = 1,
-              fuseOneTask: Boolean = false): DataFrame = {
+  def lshTopK(emb: DataFrame, maxQueryId: Long, k: Int, probe: Int = 1): DataFrame = {
     require(probe <= 1, s"lshTopK supports probe 0 or 1, got $probe")
-    // fuseOneTask (r15): below the caller's one-task floor the broadcast
-    // build job + the ranking-tail repartition(1) exchange are the whole
-    // cost (the scoring join is sub-ms at that size) — a single-partition
-    // input with a shuffle_hash probe build plans the entire query as ONE
-    // task with zero exchanges. At scale the broadcast probe side and the
-    // parallel candidate scan stay the plan.
-    val keyed = withBandKeys(if (fuseOneTask) emb.coalesce(1) else emb)
+    val keyed = withBandKeys(emb)
     val earlier = 0 until (Bands - 1)
     val cand = bandRows(keyed, Seq("embedding") ++ earlier.map(b => s"k$b"))
       .select(col("vec_id") +: col("embedding") +: col("band") +: col("key") +:
@@ -453,8 +446,7 @@ object Similarity {
     // (within a band at most one probe key can equal the candidate key)
     val firstMatch = firstMatchingBand(Bands,
       i => expr(s"bit_count(qk$i ^ ck$i) > $probe"))
-    val probesB = if (fuseOneTask) probes.hint("shuffle_hash") else broadcast(probes)
-    val scored = cand.join(probesB, Seq("band", "key"))
+    val scored = cand.join(broadcast(probes), Seq("band", "key"))
       .where(col("vec_id") =!= col("qid") && firstMatch)
       .select(col("qid"), col("vec_id"),
         V.cosine4(col("qv"), col("embedding")).as("cos"))
@@ -467,9 +459,7 @@ object Similarity {
     // behind the exchange.
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    // fused: the scored set is already one partition — repartition(1) would
-    // re-introduce the exchange the fusion removed (the x49 reportSort lesson)
-    (if (fuseOneTask) scored else scored.repartition(1))
+    scored.repartition(1)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .select(col("qid"), col("rn"), col("vec_id"), col("cos"))

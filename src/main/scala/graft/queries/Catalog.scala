@@ -70,14 +70,6 @@ object Catalog {
   private def reportSort(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(1).sortWithinPartitions(cols: _*)
 
-  /** [[reportSort]] that follows a query's [[oneTaskPlan]] decision: in the
-    * fused branch everything is already one partition, so the coalesce(1)
-    * variant ([[Relational.reportSortFused]]) is a no-op narrow sort
-    * (repartition(1) would re-introduce the one exchange the fusion
-    * removed); at scale it is plain [[reportSort]]. */
-  private def reportSortAuto(fused: Boolean)(df: DataFrame, cols: Column*): DataFrame =
-    if (fused) reportSortFused(df, cols: _*) else reportSort(df, cols: _*)
-
   /** Ordered (doc_id, text) for the per-document text-feature queries
     * (x19, x23–x26, x52, x59, x69, x81). Sorting the raw projection first
     * makes the range sampler read scan rows, so the kernels run once, after
@@ -147,36 +139,22 @@ object Catalog {
     * keeps the fully-distributed shuffle-join plan. */
   private val MaxBroadcastLmEntries: Int = 1 << 20
 
-  /** ONE-TASK floor fusion for cheap-expression relational queries: when
-    * the named tables together fit the one-task tier, callers
-    * `coalesce(1)` the scans. A 1-partition child reports
-    * `SinglePartition`, which satisfies every required distribution, so
-    * the whole query (scan, join, agg, window, total sort, sink) plans as
-    * ONE single-task stage with zero exchanges; above the tier the plan is
-    * the ungated one. Kernel, codec and dedup tiers keep their own spreads,
-    * because a byte statistic cannot see per-row CPU (measurements:
-    * BASELINE.md, "Scale gate ledgers"). */
-  private def oneTaskPlan(s: SparkSession, d: String, tables: String*): Boolean =
-    ScalePolicy.fits(s, ScalePolicy.OneTask, d, tables)
-
-  /** [[oneTaskPlan]]-gated single-table loader: the common case where the
-    * query reads one table (multi-table queries gate on the sum explicitly
-    * so a fused side never meets an unfused one across a join). */
-  private def tF(s: SparkSession, d: String, n: String): DataFrame = {
-    val df = t(s, d, n)
-    if (oneTaskPlan(s, d, n)) df.coalesce(1) else df
+  /** The build of a cheap-expression relational query: its at-scale
+    * `body`, run through [[ScalePolicy.oneTask]], which plans the whole
+    * query (scan, join, agg, window, total sort, sink) as ONE single-task
+    * stage when its input tables fit the one-task tier. Kernel, codec and
+    * dedup queries keep their own spreads, because a size statistic cannot
+    * see per-row CPU (measurements: BASELINE.md, "Scale gate ledgers"). */
+  private[graft] final case class OneTaskBuild(body: (SparkSession, String) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, d: String): DataFrame = ScalePolicy.oneTask(body(s, d))
   }
 
   /** events spread for the per-user window tails (q11/x36/x45/x46/x58/x73):
-    * at scale, ONE range exchange on user_id satisfies the window's
-    * clustering and pre-orders the output; below the [[oneTaskPlan]] cap the
-    * single partition satisfies the same distributions with ZERO exchanges
-    * (and no range-sampling job). */
-  private def eventsByUser(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events")
-    if (oneTaskPlan(s, d, "events")) ev.coalesce(1)
-    else ev.repartitionByRange(col("user_id"))
-  }
+    * ONE range exchange on user_id satisfies the window's clustering and
+    * pre-orders the output. */
+  private def eventsByUser(s: SparkSession, d: String): DataFrame =
+    t(s, d, "events").repartitionByRange(col("user_id"))
 
   // ------------------------------------------------------------------ core
 
@@ -188,8 +166,7 @@ object Catalog {
     // returnflags (8 at sf0.1, 80 at sf1), and on a non-total key the two
     // engines ordered the ties differently at sf1 (caught by the round-7
     // sf1 oracle gate; sf0.01/sf0.1 passed by luck)
-    // NOT tF-fused (r14 A/B: +0.04 s): the table-shaped 600k-row output
-    // wants the parallel range sort even at the bench SF
+    // not one-task: the 600k-row output wants the parallel range sort (r14)
     (s, d) => t(s, d, "lineitem")
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("pkey"),
         col("l_returnflag").as("rflag"), col("l_linenumber"))
@@ -201,30 +178,27 @@ object Catalog {
 
   /** Q2 — C12 timestamp→date cast (dags/rocket_launch_etl.py:102). */
   val q02 = Q("q02_cast_date",
-    // tF tail note (applies to every fused query ending in orderBy): a
-    // global Sort over a SinglePartition child needs no range exchange and
-    // therefore no sampling job — the tail self-fuses into the scan task.
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .select(col("event_id"), to_date(col("ts")).as("d"))
-      .orderBy("event_id"),
+      .orderBy("event_id")),
     Some("SELECT event_id, CAST(ts AS DATE) AS d FROM events ORDER BY event_id"))
 
   /** Q3 — C3 equality date filter (partition-filter analog,
     * dags/rocket_launch_etl.py:129). */
   val q03 = Q("q03_eq_filter",
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .where(to_date(col("ts")) === lit(java.sql.Date.valueOf("2024-01-02")))
-      .select("event_id", "user_id").orderBy("event_id"),
+      .select("event_id", "user_id").orderBy("event_id")),
     Some("""SELECT event_id, user_id FROM events
            |WHERE CAST(ts AS DATE) = DATE '2024-01-02' ORDER BY event_id""".stripMargin))
 
   /** Q4 — C1′ half-open interval range predicate
     * (dags/rocket_launch_etl.py:37-41). */
   val q04 = Q("q04_range_filter",
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .where(expr("ts >= TIMESTAMP '2024-01-02 00:00:00' AND " +
         "ts < TIMESTAMP '2024-01-03 00:00:00'"))
-      .select("event_id").orderBy("event_id"),
+      .select("event_id").orderBy("event_id")),
     Some("""SELECT event_id FROM events
            |WHERE ts >= TIMESTAMP '2024-01-02 00:00:00'
            |  AND ts < TIMESTAMP '2024-01-03 00:00:00' ORDER BY event_id""".stripMargin))
@@ -232,9 +206,9 @@ object Catalog {
   /** Q5 — C13 grouped distinct count, the reference's one analytical query
     * (src/sql/query/daily_launch_events.sql:1-5). */
   val q05 = Q("q05_daily_distinct",
-    (s, d) => reportSortFused(tF(s, d, "events")
+    OneTaskBuild((s, d) => reportSortFused(t(s, d, "events")
       .groupBy(to_date(col("ts")).as("d"))
-      .agg(countDistinct(col("user_id")).as("event_count")), col("d")),
+      .agg(countDistinct(col("user_id")).as("event_count")), col("d"))),
     Some("""SELECT CAST(ts AS DATE) AS d, COUNT(DISTINCT user_id) AS event_count
            |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
 
@@ -247,17 +221,17 @@ object Catalog {
     // props, so sorting after extraction shuffles 16 B/row instead of the
     // JSON string — the double kernel eval in the sampling pass is ~50 ns/row
     // and loses to the extra shuffle bytes (measured: 0.21 s vs 0.39 s)
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .select(col("event_id"),
         graft.functions.TextHashFunctions.jsonLong(col("props"), "k").as("k"))
-      .orderBy("event_id"),
+      .orderBy("event_id")),
     Some("""SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
            |FROM events ORDER BY event_id""".stripMargin))
 
   /** Q7 — plain grouped count. */
   val q07 = Q("q07_group_count",
-    (s, d) => reportSortFused(tF(s, d, "events")
-      .groupBy("event_type").agg(count(lit(1)).as("n")), col("event_type")),
+    OneTaskBuild((s, d) => reportSortFused(t(s, d, "events")
+      .groupBy("event_type").agg(count(lit(1)).as("n")), col("event_type"))),
     Some("SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1 ORDER BY 1"))
 
   /** Q8 — C6/C7 partitioned write→read round trip, run twice to prove
@@ -293,22 +267,11 @@ object Catalog {
   /** Q9 — E1 equi join + agg. Customer is a dim → broadcast; the money sum
     * goes through DECIMAL so both engines sum exactly, then one cast. */
   val q09 = Q("q09_join_agg",
-    (s, d) => {
-      // fused route: both sides single-partition, and the dim takes a
-      // shuffle_hash hint instead of broadcast — SinglePartition satisfies
-      // the hash join's clustering on both sides, so the whole query is one
-      // job (a broadcast build would be a second job for nothing on a
-      // 1-task stream side). At scale: broadcast dim, as before.
-      val fused = oneTaskPlan(s, d, "orders", "customer")
-      val fact = if (fused) t(s, d, "orders").coalesce(1) else t(s, d, "orders")
-      val dim = if (fused) t(s, d, "customer").coalesce(1).hint("shuffle_hash")
-                else broadcast(t(s, d, "customer"))
-      reportSortFused(fact
-        .join(dim, col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev")),
-        col("c_mktsegment"))
-    },
+    OneTaskBuild((s, d) => reportSortFused(t(s, d, "orders")
+      .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
+      .groupBy("c_mktsegment")
+      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev")),
+      col("c_mktsegment"))),
     Some("""SELECT c_mktsegment,
            |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
            |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -316,15 +279,9 @@ object Catalog {
 
   /** Q10 — E2 anti join (customers with no orders). */
   val q10 = Q("q10_anti_join",
-    (s, d) => {
-      val fused = oneTaskPlan(s, d, "customer", "orders")
-      val (cust, ords) =
-        if (fused) (t(s, d, "customer").coalesce(1),
-          t(s, d, "orders").coalesce(1).hint("shuffle_hash"))
-        else (t(s, d, "customer"), t(s, d, "orders"))
-      Relational.antiJoinKeys(cust, ords, "c_custkey", "o_custkey")
-        .select("c_custkey").orderBy("c_custkey")
-    },
+    OneTaskBuild((s, d) => Relational.antiJoinKeys(t(s, d, "customer"),
+        t(s, d, "orders"), "c_custkey", "o_custkey")
+      .select("c_custkey").orderBy("c_custkey")),
     // NOT EXISTS, not NOT IN: a single NULL o_custkey would make NOT IN
     // return zero rows while the left-anti join (and this form) still
     // returns every unmatched customer
@@ -340,10 +297,10 @@ object Catalog {
     // clustering (equal keys co-locate) AND pre-orders the output, so the
     // usual window-exchange + final orderBy (two shuffles of the same rows
     // plus a sampling job) collapses into window + in-partition sort
-    (s, d) => Relational.dedupKeepLatest(eventsByUser(s, d),
+    OneTaskBuild((s, d) => Relational.dedupKeepLatest(eventsByUser(s, d),
         Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
       .select("user_id", "event_id", "event_type", "value")
-      .sortWithinPartitions("user_id"),
+      .sortWithinPartitions("user_id")),
     Some("""SELECT user_id, event_id, event_type, value FROM (
            |  SELECT user_id, event_id, event_type, value, row_number() OVER (
            |    PARTITION BY user_id
@@ -353,16 +310,16 @@ object Catalog {
 
   /** Q12 — E8 exact dedup cardinality. */
   val q12 = Q("q12_distinct_count",
-    (s, d) => tF(s, d, "documents").agg(countDistinct(col("text")).as("n")),
+    OneTaskBuild((s, d) => t(s, d, "documents").agg(countDistinct(col("text")).as("n"))),
     Some("SELECT COUNT(DISTINCT text) AS n FROM documents"))
 
   /** Q13 — E5 tokenize/explode/top-20 terms (one-pass AllTokens kernel —
     * the HOF empty-token filter lambda ran per token on the single-file
     * scan task). */
   val q13 = Q("q13_top_tokens",
-    // kernelDocsAuto (r16): under the spread gate this is the same fused
-    // one-task shape tF gave; above it the kernel + partial agg runs on
-    // the pinned 32-way spread instead of the raw row-group splits
+    // kernelDocsAuto (r16): one task under the spread gate; above it the
+    // kernel + partial agg runs on the pinned 32-way spread instead of the
+    // raw row-group splits
     (s, d) => kernelDocsAuto(s, d)
       .select(explode(
         graft.functions.TextHashFunctions.allTokens(col("text"))).as("token"))
@@ -386,11 +343,11 @@ object Catalog {
 
   /** Q15 — E10 set op (EXCEPT = distinct semantics in both engines). */
   val q15 = Q("q15_set_except",
-    (s, d) => tF(s, d, "events").where(col("event_type") === "purchase")
+    OneTaskBuild((s, d) => t(s, d, "events").where(col("event_type") === "purchase")
       .select("user_id")
-      .except(tF(s, d, "events").where(col("event_type") === "error")
+      .except(t(s, d, "events").where(col("event_type") === "error")
         .select("user_id"))
-      .orderBy("user_id"),
+      .orderBy("user_id")),
     Some("""SELECT user_id FROM events WHERE event_type = 'purchase'
            |EXCEPT
            |SELECT user_id FROM events WHERE event_type = 'error'
@@ -398,18 +355,11 @@ object Catalog {
 
   /** Q16 — E1+E3 join + ranking window: top-2 customers per nation. */
   val q16 = Q("q16_join_window",
-    (s, d) => {
-      val fused = oneTaskPlan(s, d, "customer", "nation")
-      val cust = if (fused) t(s, d, "customer").coalesce(1) else t(s, d, "customer")
-      val nat = if (fused) t(s, d, "nation").coalesce(1).hint("shuffle_hash")
-                else broadcast(t(s, d, "nation"))
-      val top = Relational.topKPerGroup(
-          cust.join(nat, col("c_nationkey") === col("n_nationkey")),
-          Seq("n_name"), Seq(col("c_acctbal").desc, col("c_custkey")), 2)
-        .select("n_name", "rn", "c_custkey", "c_acctbal")
-      if (fused) top.sortWithinPartitions(col("n_name"), col("rn"))
-      else reportSort(top, col("n_name"), col("rn"))
-    },
+    OneTaskBuild((s, d) => reportSort(Relational.topKPerGroup(
+        t(s, d, "customer").join(broadcast(t(s, d, "nation")),
+          col("c_nationkey") === col("n_nationkey")),
+        Seq("n_name"), Seq(col("c_acctbal").desc, col("c_custkey")), 2)
+      .select("n_name", "rn", "c_custkey", "c_acctbal"), col("n_name"), col("rn"))),
     Some("""SELECT n_name, rn, c_custkey, c_acctbal FROM (
            |  SELECT n.n_name, c.c_custkey, c.c_acctbal, row_number() OVER (
            |    PARTITION BY n.n_name ORDER BY c.c_acctbal DESC, c.c_custkey) AS rn
@@ -436,9 +386,9 @@ object Catalog {
     // At 100 TB the same ordering holds harder: a corpus re-scan per run
     // and a text-width exchange are both unaffordable; two digest-width
     // exchanges are noise.
-    (s, d) => Dedup.exactGroups(
-        tF(s, d, "documents").select("doc_id", "text"))
-      .orderBy("h"),
+    OneTaskBuild((s, d) => Dedup.exactGroups(
+        t(s, d, "documents").select("doc_id", "text"))
+      .orderBy("h")),
     Some("""SELECT md5(text) AS h, MIN(doc_id) AS keep_id, COUNT(*) AS n
            |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin))
 
@@ -544,10 +494,8 @@ object Catalog {
     * synthetic corpus peaks around cos≈0.5, so threshold 0.4). */
   val x21 = Q("x21_dedup_embedding",
     // reportSort: threshold-bounded pair report over a bounded probe set.
-    // NOT reportSortAuto-fused (r15 A/B: +0.095 s): the repartition(1)
-    // boundary here separates the kernel stage from the sort stage; fusing
-    // them into one narrow task measured WORSE — reverted, the usual
-    // per-kernel trade only measurement settles
+    // not one-task: fusing the kernel stage into the sort task measured
+    // worse (r15; BASELINE.md, "Scale gate ledgers")
     (s, d) => reportSort(
       Dedup.embeddingNearDupPairs(t(s, d, "embeddings"), 500L, 0.4),
       col("a"), col("b")),
@@ -570,9 +518,8 @@ object Catalog {
     * (multi-probe). */
   val x22 = Q("x22_sim_lsh",
     // lshTopK's single-partition ranking tail already emits (qid, rn) total
-    // order — no report sort on top; fused below the one-task cap (r15)
-    (s, d) => Similarity.lshTopK(t(s, d, "embeddings"), 5L, 3, probe = 1,
-      fuseOneTask = oneTaskPlan(s, d, "embeddings")),
+    // order — no report sort on top
+    OneTaskBuild((s, d) => Similarity.lshTopK(t(s, d, "embeddings"), 5L, 3, probe = 1)),
     Some {
       val anyBandProbe = (0 until Similarity.Bands)
         .map(b => s"bit_count(xor(q.k$b, c.k$b)) <= 1").mkString(" OR ")
@@ -595,14 +542,12 @@ object Catalog {
     * the banded shuffle-per-band variant of x21 (which brute-forces a
     * bounded probe set). */
   val x34 = Q("x34_dedup_embedding_lsh",
-    // the sort tail follows the pair set's size: below the one-task tier
-    // the report-sized pairs merge on one task; above it the eagerly
-    // checkpointed pair set feeds a PARALLEL range sort, so the sampler
-    // reads memory instead of re-running the banded cosine join
-    // (measurements: BASELINE.md, "Scale gate ledgers")
     (s, d) => {
       val pairs = Dedup.embeddingNearDupLsh(t(s, d, "embeddings"), 0.3)
-      if (oneTaskPlan(s, d, "embeddings")) reportSort(pairs, col("a"), col("b"))
+      // fork: a one-task merge of small pair sets, a checkpoint + parallel
+      // range sort at scale (BASELINE.md, "Scale gate ledgers")
+      if (ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("embeddings")))
+        reportSort(pairs, col("a"), col("b"))
       else pairs.localCheckpoint(true).orderBy(col("a"), col("b"))
     },
     Some {
@@ -722,8 +667,8 @@ object Catalog {
 
   /** E10 remaining set ops: UNION (distinct) then INTERSECT. */
   val x30 = Q("x30_set_ops",
-    (s, d) => {
-      val ev = tF(s, d, "events")
+    OneTaskBuild { (s, d) =>
+      val ev = t(s, d, "events")
       def users(tpe: String) = ev.where(col("event_type") === tpe).select("user_id")
       users("signup").union(users("purchase")).distinct()
         .intersect(users("error"))
@@ -740,8 +685,7 @@ object Catalog {
   /** Multi-level aggregation: ROLLUP over (event_type, day). NULLS FIRST is
     * pinned explicitly — Spark defaults there for ASC, DuckDB doesn't. */
   val x31 = Q("x31_rollup_agg",
-    // NOT tF-fused (r14 A/B twice: +0.024/+0.010 s): the rollup's ×3 row
-    // expansion prefers the parallel partial agg even on the tiny corpus
+    // not one-task: the rollup's ×3 rows want the parallel partial agg (r14)
     (s, d) => reportSortFused(t(s, d, "events")
       .withColumn("d", to_date(col("ts")))
       .rollup("event_type", "d")
@@ -755,8 +699,8 @@ object Catalog {
     * event. Output is epoch-µs of the matched timestamp (deterministic even
     * when several errors share an instant; no raw timestamp emitted). */
   val x32 = Q("x32_asof_join",
-    (s, d) => {
-      val ev = tF(s, d, "events")
+    OneTaskBuild { (s, d) =>
+      val ev = t(s, d, "events")
       val p = ev.where(col("event_type") === "purchase")
         .select("event_id", "user_id", "ts")
       val e = ev.where(col("event_type") === "error").select("user_id", "ts")
@@ -777,12 +721,12 @@ object Catalog {
   val x33 = Q("x33_percentiles",
     // array-form percentile plan (r15): see Relational.exactPercentiles —
     // one builtin map for all three qs
-    (s, d) => reportSortFused(
-      Relational.exactPercentiles(tF(s, d, "events"), Seq("event_type"),
+    OneTaskBuild((s, d) => reportSortFused(
+      Relational.exactPercentiles(t(s, d, "events"), Seq("event_type"),
           col("value"), Seq(0.5 -> "p50r", 0.9 -> "p90r", 0.99 -> "p99r"))
         .select(col("event_type"), round(col("p50r"), 4).as("p50"),
           round(col("p90r"), 4).as("p90"), round(col("p99r"), 4).as("p99")),
-      col("event_type")),
+      col("event_type"))),
     Some("""SELECT event_type,
            |  round(quantile_cont(value, 0.5), 4) AS p50,
            |  round(quantile_cont(value, 0.9), 4) AS p90,
@@ -792,12 +736,10 @@ object Catalog {
   /** Full-outer join: per-customer order counts unioned with order keys that
     * have no customer row (and vice versa). */
   val x35 = Q("x35_full_outer",
-    (s, d) => {
-      val fused = oneTaskPlan(s, d, "orders", "customer")
-      def side(n: String) = if (fused) t(s, d, n).coalesce(1) else t(s, d, n)
-      val oc = side("orders").groupBy(col("o_custkey").as("k"))
+    OneTaskBuild { (s, d) =>
+      val oc = t(s, d, "orders").groupBy(col("o_custkey").as("k"))
         .agg(count(lit(1)).as("n"))
-      side("customer").join(oc, col("c_custkey") === col("k"), "full_outer")
+      t(s, d, "customer").join(oc, col("c_custkey") === col("k"), "full_outer")
         .select(coalesce(col("c_custkey"), col("k")).as("k"),
           coalesce(col("n"), lit(0L)).as("n_orders"),
           col("c_custkey").isNotNull.as("known_customer"))
@@ -814,7 +756,7 @@ object Catalog {
   /** Offset window (lag): µs gap between a user's consecutive events.
     * Timestamps leave as epoch-µs arithmetic, never raw. */
   val x36 = Q("x36_window_lag",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       // ONE exchange (same fusion as q11): range partitions on user_id feed
@@ -834,11 +776,11 @@ object Catalog {
 
   /** CUBE over (event_type, day): all four grouping levels. */
   val x37 = Q("x37_cube_agg",
-    (s, d) => reportSortFused(tF(s, d, "events")
+    OneTaskBuild((s, d) => reportSortFused(t(s, d, "events")
       .withColumn("d", to_date(col("ts")))
       .cube("event_type", "d")
       .agg(count(lit(1)).as("n")),
-      col("event_type").asc_nulls_first, col("d").asc_nulls_first),
+      col("event_type").asc_nulls_first, col("d").asc_nulls_first)),
     Some("""SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
            |FROM events GROUP BY CUBE(event_type, CAST(ts AS DATE))
            |ORDER BY event_type ASC NULLS FIRST, d ASC NULLS FIRST""".stripMargin))
@@ -846,11 +788,11 @@ object Catalog {
   /** E10 multiset difference (EXCEPT ALL): keeps multiplicity. Duplicate
     * user_ids are identical whole rows, so ORDER BY user_id is hash-total. */
   val x38 = Q("x38_except_all",
-    (s, d) => tF(s, d, "events").where(col("event_type") === "purchase")
+    OneTaskBuild((s, d) => t(s, d, "events").where(col("event_type") === "purchase")
       .select("user_id")
-      .exceptAll(tF(s, d, "events").where(col("event_type") === "error")
+      .exceptAll(t(s, d, "events").where(col("event_type") === "error")
         .select("user_id"))
-      .orderBy("user_id"),
+      .orderBy("user_id")),
     Some("""SELECT user_id FROM events WHERE event_type = 'purchase'
            |EXCEPT ALL
            |SELECT user_id FROM events WHERE event_type = 'error'
@@ -974,12 +916,12 @@ object Catalog {
     * value list pinned (never inferred — an inference scan is an extra pass
     * and nondeterministic column order at scale). */
   val x42 = Q("x42_pivot",
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .withColumn("d", to_date(col("ts")))
       .groupBy("d").pivot("event_type", eventTypes).agg(count(lit(1)))
       .select(col("d") +: eventTypes.map(tp =>
         coalesce(col(tp), lit(0L)).as(tp)): _*)
-      .transform(reportSortAuto(oneTaskPlan(s, d, "events"))(_, col("d"))),
+      .transform(reportSort(_, col("d")))),
     Some {
       val cols = eventTypes.map(tp =>
         s"COUNT(CASE WHEN event_type = '$tp' THEN 1 END) AS $tp").mkString(",\n  ")
@@ -993,8 +935,8 @@ object Catalog {
     * via pure spark.sql over the registered corpus views. */
   val x43 = Q("x43_grouping_sets",
     (s, d) => {
-      // NOT tF-fused (r14 A/B twice: +0.018/+0.013 s): grouping-sets
-      // expansion, like x31's rollup, prefers the parallel partial agg
+      // not one-task: like x31's rollup, grouping sets want the parallel
+      // partial agg (r14)
       graft.sources.Tables.registerAll(s, d)
       s.sql("""SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
               |FROM events
@@ -1012,21 +954,12 @@ object Catalog {
   /** Correlated EXISTS subquery (planned by Catalyst as a left-semi join —
     * the subquery surface q10's NOT IN complement). */
   val x44 = Q("x44_exists_subquery",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       graft.sources.Tables.registerAll(s, d)
-      // fused views live under x44-private names (ADVICE r14): overwriting
-      // the registered 'customer'/'orders' views with coalesce(1) variants
-      // would leak the fused layout into any later spark.sql query that
-      // skips registerAll
-      val (cv, ov) = if (oneTaskPlan(s, d, "customer", "orders")) {
-        t(s, d, "customer").coalesce(1).createOrReplaceTempView("customer_x44")
-        t(s, d, "orders").coalesce(1).createOrReplaceTempView("orders_x44")
-        ("customer_x44", "orders_x44")
-      } else ("customer", "orders")
-      s.sql(s"""SELECT c_custkey FROM $cv c
-               |WHERE EXISTS (SELECT 1 FROM $ov o
-               |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-               |ORDER BY c_custkey""".stripMargin)
+      s.sql("""SELECT c_custkey FROM customer c
+              |WHERE EXISTS (SELECT 1 FROM orders o
+              |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
+              |ORDER BY c_custkey""".stripMargin)
     },
     Some("""SELECT c_custkey FROM customer c
            |WHERE EXISTS (SELECT 1 FROM orders o
@@ -1038,7 +971,7 @@ object Catalog {
     * runs in DECIMAL so frame-order float effects cannot exist; the cast to
     * double of an exact decimal is engine-independent. */
   val x45 = Q("x45_window_frame",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id")).rowsBetween(-2, 0)
@@ -1061,7 +994,7 @@ object Catalog {
     * consecutive events (the batch analog of the streaming sessionizer in
     * graft.streaming.EventStreams). */
   val x46 = Q("x46_sessionize",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       // ONE exchange: the range partitioning feeds the window AND the
@@ -1166,13 +1099,9 @@ object Catalog {
     * has_toks flag (their quality is NaN-safe: doc_id decides the min
     * before the comparison ever reaches it). */
   val x49 = Q("x49_curation",
-    (s, d) => {
-      // tF-fused (r15, VERDICT r14 directive 3): JobProfile showed 4 jobs —
-      // 3 AQE exchange-stage hops between 1-TASK stages (the 0.6 MB scan is
-      // one partition regardless, so the exchanges bought no parallelism).
-      // The kernel-tier exclusion doesn't apply: x49 has no spread to lose.
-      val fused = oneTaskPlan(s, d, "documents")
-      val docs = tF(s, d, "documents")
+    // one-task although it runs kernels: x49 has no spread to lose (r15)
+    OneTaskBuild { (s, d) =>
+      val docs = t(s, d, "documents")
       val hitCols = TextAnalysis.profiles.zipWithIndex.map { case ((l, _), i) =>
         element_at(col("st"), i + 1).cast("int").as(s"${l}_hits") }
       docs
@@ -1192,7 +1121,7 @@ object Catalog {
         .agg(count(lit(1)).as("n_kept"),
           sum(col("k.quality").cast("decimal(18,6)")).cast("double")
             .as("total_quality"))
-        .transform(reportSortAuto(fused)(_, col("lang_pred")))
+        .transform(reportSort(_, col("lang_pred")))
     },
     Some(s"""WITH keep AS (SELECT MIN(doc_id) AS doc_id FROM documents
             |  GROUP BY md5(text)),
@@ -1224,8 +1153,8 @@ object Catalog {
     * each purchase, per user — the equi-join-on-bins shape that replaces the
     * nested-loop plan Spark would pick for a raw inequality join. */
   val x50 = Q("x50_range_join",
-    (s, d) => {
-      val ev = tF(s, d, "events")
+    OneTaskBuild { (s, d) =>
+      val ev = t(s, d, "events")
       val p = ev.where(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"))
       val e = ev.where(col("event_type") === "error")
@@ -1261,8 +1190,9 @@ object Catalog {
     * first-(n mod 4)-buckets-get-one-extra rule closed-form. */
   val x51 = Q("x51_rank_distribution",
     (s, d) => {
-      val ranked = Relational.keyedRowNumbers(
-        tF(s, d, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice"),
+      // one task on small inputs: keyedRowNumbers takes its window route
+      val ranked = Relational.keyedRowNumbers(ScalePolicy.oneTask(
+        t(s, d, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")),
         Seq("o_orderpriority"), Seq(col("o_totalprice").desc, col("o_orderkey")))
       val rn = col("__rn"); val n = col("__n")
       ranked
@@ -1340,9 +1270,8 @@ object Catalog {
     * the 0.9 multiply is identical arithmetic, so the boundary cannot drift
     * between engines. */
   val x53 = Q("x53_scalar_subquery",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       graft.sources.Tables.registerAll(s, d)
-      tF(s, d, "customer").createOrReplaceTempView("customer")
       s.sql("""SELECT c_custkey, c_acctbal FROM customer
               |WHERE c_acctbal >= (SELECT MAX(c_acctbal) FROM customer) * 0.9
               |ORDER BY c_custkey""".stripMargin)
@@ -1368,7 +1297,7 @@ object Catalog {
     // A split exact-subtree + approx-subtree + join variant measured WORSE
     // (0.42 vs 0.33 s) — two scans through the interpreted aggregate stage
     // cost more than the per-map savings; reverted.
-    (s, d) => reportSortFused(tF(s, d, "events")
+    OneTaskBuild((s, d) => reportSortFused(t(s, d, "events")
       .groupBy("event_type")
       .agg(expr("percentile(value, array(0.5, 0.9))").as("ps"),
         expr("approx_percentile(value, array(0.5, 0.9), 1000)").as("aps"))
@@ -1382,7 +1311,7 @@ object Catalog {
             lit(0.05) * greatest(abs(col("p50")), lit(1.0)) &&
           abs(col("a90") - col("p90")) <=
             lit(0.05) * greatest(abs(col("p90")), lit(1.0))).as("within_tol")),
-      col("event_type")),
+      col("event_type"))),
     Some("""SELECT event_type,
            |  round(quantile_cont(value, 0.5), 4) AS p50,
            |  round(quantile_cont(value, 0.9), 4) AS p90,
@@ -1394,8 +1323,8 @@ object Catalog {
     * variants, x38 EXCEPT ALL — this is the remaining set operator).
     * Duplicates are kept min(countL, countR) times by both engines. */
   val x55 = Q("x55_intersect_all",
-    (s, d) => {
-      val ev = tF(s, d, "events")
+    OneTaskBuild { (s, d) =>
+      val ev = t(s, d, "events")
       def users(tpe: String) = ev.where(col("event_type") === tpe).select("user_id")
       users("purchase").intersectAll(users("click")).orderBy("user_id")
     },
@@ -1411,11 +1340,11 @@ object Catalog {
     * (collect_list order is partition-dependent; array_sort pins it —
     * equal elements are interchangeable, so ties cannot drift). */
   val x56 = Q("x56_string_agg",
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .groupBy("user_id")
       .agg(array_join(array_sort(collect_list(col("event_type"))), ",")
         .as("types"))
-      .orderBy("user_id"),
+      .orderBy("user_id")),
     Some("""SELECT user_id,
            |  string_agg(event_type, ',' ORDER BY event_type) AS types
            |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
@@ -1425,7 +1354,7 @@ object Catalog {
     * (d, event_type, n) rows — the inverse of x42's pivot. Spark side uses
     * the `stack` generator; the oracle uses the portable UNION ALL form. */
   val x57 = Q("x57_unpivot",
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .groupBy(to_date(col("ts")).as("d"))
       .agg(
         sum(when(col("event_type") === "signup", 1L).otherwise(0L)).as("signup"),
@@ -1434,7 +1363,7 @@ object Catalog {
       .select(col("d"), expr(
         "stack(3, 'signup', signup, 'purchase', purchase, 'error', error)")
         .as(Seq("event_type", "n")))
-      .orderBy("d", "event_type"),
+      .orderBy("d", "event_type")),
     Some("""WITH w AS (SELECT CAST(ts AS DATE) AS d,
            |    CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
            |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
@@ -1452,7 +1381,7 @@ object Catalog {
     * peers at the same instant always share a frame, so ties cannot drift.
     * DECIMAL accumulation, like x45, keeps the sum order-independent. */
   val x58 = Q("x58_window_range_frame",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("us"))
         .rangeBetween(-600000000L, 0L)
@@ -1565,7 +1494,7 @@ object Catalog {
     * engines' merge orders (values are O(1)–O(1e4), double carries ~15
     * significant digits). */
   val x61 = Q("x61_stats_kit",
-    (s, d) => tF(s, d, "lineitem")
+    OneTaskBuild((s, d) => t(s, d, "lineitem")
       .groupBy(col("l_returnflag").as("rflag"))
       .agg(
         round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qp"),
@@ -1573,7 +1502,7 @@ object Catalog {
         round(stddev_samp(col("l_discount")), 4).as("sd_disc"),
         round(var_samp(col("l_tax")), 4).as("var_tax"),
         round(regr_slope(col("l_extendedprice"), col("l_quantity")), 4).as("slope_pq"))
-      .transform(reportSortAuto(oneTaskPlan(s, d, "lineitem"))(_, col("rflag"))),
+      .transform(reportSort(_, col("rflag")))),
     Some("""SELECT l_returnflag AS rflag,
            |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qp,
            |  round(covar_samp(l_quantity, l_extendedprice), 4) AS covar_qp,
@@ -1607,17 +1536,13 @@ object Catalog {
       // The bounded O(users) report takes the usual reportSort tail.
       val eRaw = t(s, d, "events").select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-      if (oneTaskPlan(s, d, "events")) {
-        // ONE-TASK branch (r14): per-user event array + three conditional
-        // array scans — one agg, zero joins, zero exchanges. The identical
-        // funnel semantics: t1 = min signup time, t2 = min click time
-        // strictly after t1, t3 = min purchase strictly after t2 (a null tN
-        // nulls everything later: filter(_ > null) is empty, array_min of
-        // empty is null). The join form below is the at-scale plan —
-        // collect_list per user is bounded only below the one-task cap, and
-        // fusing the join chain is not even possible (Spark re-shuffles SHJ
-        // children whose subtrees contain joins, measured r14: 4 exchanges
-        // on 1-partition children).
+      // fork: one task runs a join-free array funnel, an algorithm of its
+      // own (BASELINE.md, "Scale gate ledgers")
+      if (ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("events"))) {
+        // per-user event array + three conditional array scans: t1 = min
+        // signup time, t2 = min click time strictly after t1, t3 = min
+        // purchase strictly after t2 (a null tN nulls everything later:
+        // filter(_ > null) is empty, array_min of empty is null)
         reportSortFused(eRaw.coalesce(1)
           .groupBy("user_id")
           .agg(collect_list(struct(col("us"), col("event_type"))).as("evs"))
@@ -1682,7 +1607,7 @@ object Catalog {
     * posture) overflow and ANSI mode kills the query. Per-stratum keep
     * counts plus id-range fingerprints verify the identical row selection. */
   val x63 = Q("x63_stratified_sample",
-    (s, d) => tF(s, d, "events")
+    OneTaskBuild((s, d) => t(s, d, "events")
       .withColumn("h",
         ((col("event_id") % lit(1000000007L)) * lit(2654435761L))
           % lit(1000000007L) % lit(1000L))
@@ -1695,7 +1620,7 @@ object Catalog {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_kept"), min("event_id").as("min_id"),
         max("event_id").as("max_id"))
-      .transform(reportSortAuto(oneTaskPlan(s, d, "events"))(_, col("event_type"))),
+      .transform(reportSort(_, col("event_type")))),
     Some("""SELECT event_type, COUNT(*) AS n_kept, min(event_id) AS min_id,
            |  max(event_id) AS max_id
            |FROM (SELECT event_type, event_id,
@@ -1847,9 +1772,8 @@ object Catalog {
     * itself is unchanged — only the bounds estimator routes. Exact is kept
     * here because the oracle hash-checks exact values. */
   val x67 = Q("x67_winsorize",
-    (s, d) => {
-      val fused = oneTaskPlan(s, d, "events")
-      val e = tF(s, d, "events")
+    OneTaskBuild { (s, d) =>
+      val e = t(s, d, "events")
       // Clip bounds rounded to 4 decimals — the DECLARED winsorize
       // semantics since round 7: the interpolated percentile of 2-decimal
       // values is an exact ≤4-decimal rational, but each engine computes
@@ -1863,11 +1787,8 @@ object Catalog {
           col("value"), Seq(0.01 -> "loR", 0.99 -> "hiR"))
         .select(col("event_type"), round(col("loR"), 4).as("lo"),
           round(col("hiR"), 4).as("hi"))
-      // fused: the bounds aggregate is single-partition like the stream, so
-      // a hash join needs no broadcast build job and no exchange at all
-      val boundsJ = if (fused) bounds.hint("shuffle_hash") else broadcast(bounds)
-      reportSortAuto(fused)(
-        e.join(boundsJ, "event_type")
+      reportSort(
+        e.join(broadcast(bounds), "event_type")
           .withColumn("clipped", least(greatest(col("value"), col("lo")), col("hi")))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
@@ -1897,13 +1818,13 @@ object Catalog {
     * per-row arithmetic (no quantile pass); count + decimal-exact sum per
     * bucket. */
   val x68 = Q("x68_histogram",
-    (s, d) => reportSortAuto(oneTaskPlan(s, d, "events"))(tF(s, d, "events")
+    OneTaskBuild((s, d) => reportSort(t(s, d, "events")
       .withColumn("bucket", width_bucket(col("value"), lit(0.0), lit(100.0), lit(10)))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         round(sum(col("value").cast("decimal(28,10)")).cast("double"), 4)
           .as("sum_v")),
-      col("bucket")),
+      col("bucket"))),
     // DuckDB 1.0 has no width_bucket; the CASE below IS its arithmetic for
     // these constant edges — bucket width (100-0)/10 = 10.0 exactly, so both
     // engines evaluate the identical floor(value/10.0) on every boundary
@@ -1956,13 +1877,13 @@ object Catalog {
     * spread, and total characters — the slice a curation run reviews before
     * admitting a source. Pure integer outputs; one partial-agg shuffle. */
   val x70 = Q("x70_source_report",
-    (s, d) => reportSortAuto(oneTaskPlan(s, d, "documents"))(tF(s, d, "documents")
+    OneTaskBuild((s, d) => reportSort(t(s, d, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(md5(col("text"))).as("n_uniq_texts"),
         countDistinct(col("lang")).as("n_langs"),
         sum(col("n_chars")).as("sum_chars")),
-      col("source")),
+      col("source"))),
     Some("""SELECT source, COUNT(*) AS n_docs,
            |  COUNT(DISTINCT md5(text)) AS n_uniq_texts,
            |  COUNT(DISTINCT lang) AS n_langs,
@@ -1978,7 +1899,7 @@ object Catalog {
     * set; at scale the candidate pass would swap in the x22/x48 ANN tiers
     * unchanged, since only the scoring join differs. */
   val x71 = Q("x71_knn_label",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       // norms ONCE per vector, below the join (round 10, sf5 profile):
       // cosine4(e, qv) expands to THREE DotProduct kernels per pair —
       // dot(e,qv) plus both norms recomputed for every (vector, probe)
@@ -1992,7 +1913,7 @@ object Catalog {
       // would run per PAIR (the 10-row probe side: 1M casts of the same
       // 10 arrays). On the pre-cast column SimplifyCasts drops the
       // kernel's inner no-op cast.
-      val emb = tF(s, d, "embeddings")
+      val emb = t(s, d, "embeddings")
         .withColumn("ed", V.asDouble(col("embedding")))
         .withColumn("nrm", V.norm(col("ed")))
       val probes = emb.where(col("vec_id") < 10)
@@ -2020,7 +1941,7 @@ object Catalog {
         .agg(count(lit(1)).as("votes"))
       val winner = Relational.topKPerGroup(votes, Seq("qid"),
         Seq(col("votes").desc, col("label")), 1)
-      reportSortAuto(oneTaskPlan(s, d, "embeddings"))(winner.select(col("qid"),
+      reportSort(winner.select(col("qid"),
         col("label").cast("bigint").as("pred_label"), col("votes")),
         col("qid"))
     },
@@ -2048,7 +1969,7 @@ object Catalog {
     * per-segment sequence(explode) between consecutive observations,
     * never a calendar cross join. */
   val x72 = Q("x72_gapfill",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       // x98's round-6 segment-explode shape, applied to gap fill: each
       // consecutive-observation segment [d, next d) emits its own days via
       // one lead window over OBSERVED days + sequence explode — no spine
@@ -2060,14 +1981,9 @@ object Catalog {
       // not the single-task report merge (the x74 sf1 lesson).
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy("d")
-      val spread = {
-        val ev = t(s, d, "events")
-          .select(col("user_id"), to_date(col("ts")).as("d"))
-        if (oneTaskPlan(s, d, "events")) ev.coalesce(1)
-        else ev.repartitionByRange(s.sparkContext.defaultParallelism,
-          col("user_id"))
-      }
-      spread
+      t(s, d, "events")
+        .select(col("user_id"), to_date(col("ts")).as("d"))
+        .repartitionByRange(s.sparkContext.defaultParallelism, col("user_id"))
         .groupBy("user_id", "d")
         .agg(count(lit(1)).as("n"))
         .withColumn("nd", lead(col("d"), 1).over(w))
@@ -2097,7 +2013,7 @@ object Catalog {
     * self-join. Values pass through both engines bit-identically (no
     * arithmetic), rows before a user's first purchase stay null. */
   val x73 = Q("x73_forward_fill",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2132,15 +2048,14 @@ object Catalog {
     * within-partition sort yields the same global order in parallel, and
     * the range sampling sees only the raw scan projection. */
   val x74 = Q("x74_debounce",
-    (s, d) => { val ev = t(s, d, "events")
-        .withColumn("w", expr("unix_micros(ts) div 600000000"))
-      if (oneTaskPlan(s, d, "events")) ev.coalesce(1)
-      else ev.repartitionByRange(s.sparkContext.defaultParallelism,
-        col("user_id"), col("event_type"), col("w")) }
+    OneTaskBuild((s, d) => t(s, d, "events")
+      .withColumn("w", expr("unix_micros(ts) div 600000000"))
+      .repartitionByRange(s.sparkContext.defaultParallelism,
+        col("user_id"), col("event_type"), col("w"))
       .groupBy("user_id", "event_type", "w")
       .agg(min("event_id").as("first_event_id"),
         (count(lit(1)) - 1).as("n_suppressed"))
-      .sortWithinPartitions("user_id", "event_type", "w"),
+      .sortWithinPartitions("user_id", "event_type", "w")),
     Some("""SELECT user_id, event_type,
            |  epoch_us(CAST(ts AS TIMESTAMP)) // 600000000 AS w,
            |  min(event_id) AS first_event_id,
@@ -2155,9 +2070,9 @@ object Catalog {
     * report, so the 100 TB posture holds (contrast x51/x76, whose
     * low-cardinality windows over raw tables were reshaped away). */
   val x75 = Q("x75_share_of_total",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      reportSortAuto(oneTaskPlan(s, d, "events"))(tF(s, d, "events")
+      reportSort(t(s, d, "events")
         .groupBy(to_date(col("ts")).as("d"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .withColumn("share", round(col("n") /
@@ -2178,7 +2093,7 @@ object Catalog {
     * order, so the output is deterministic without a unique sort key inside
     * the window. */
   val x76 = Q("x76_rank_ties",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       // Scale note (x51-class audit): this window partitions the customer
       // table by a ~5-value key — a documented BOUNDED-INPUT trade, kept
@@ -2193,7 +2108,7 @@ object Catalog {
       // buckets — exactly x51's reshape.
       val w = Window.partitionBy("c_mktsegment")
         .orderBy(col("bucket").desc)
-      tF(s, d, "customer")
+      t(s, d, "customer")
         .select(col("c_mktsegment"), col("c_custkey"),
           floor(col("c_acctbal") / 1000).cast("bigint").as("bucket"))
         .select(col("c_mktsegment"), col("c_custkey"), col("bucket"),
@@ -2220,18 +2135,16 @@ object Catalog {
     * mergeable, one pass, bounded reducer memory — keeping the
     * broadcast-join shape intact. Exact kept here for the hash oracle. */
   val x77 = Q("x77_mad",
-    (s, d) => {
-      val fused = oneTaskPlan(s, d, "events")
-      val e = tF(s, d, "events")
+    OneTaskBuild { (s, d) =>
+      val e = t(s, d, "events")
       // r14 two-agg shape kept (r15 A/B): a helper-based med + dev + mad
       // three-join variant measured worse (0.41 vs 0.31 s) AND re-shuffled
       // — the mad-side SHJ child contains the med join, tripping the known
       // Spark re-shuffle quirk on join-bearing subtrees (1 stage → 3).
       val med = e.groupBy("event_type")
         .agg(expr("percentile(value, 0.5)").as("med"))
-      val medJ = if (fused) med.hint("shuffle_hash") else broadcast(med)
-      reportSortAuto(fused)(
-        e.join(medJ, "event_type")
+      reportSort(
+        e.join(broadcast(med), "event_type")
           .withColumn("dev", abs(col("value") - col("med")))
           .groupBy("event_type")
           .agg(round(max("med"), 4).as("med"),
@@ -2589,11 +2502,11 @@ object Catalog {
     // x96's LangStats (wash) and opposite of x85's chunk+md5 (1.76→1.12
     // WITH the spread) — the trade is per-kernel and only measurement
     // settles it.
-    // fused one-task branch below the floor cap (r15): window-layered rates,
-    // zero joins, one kernel pass — see TextAnalysis.mixtureSampleFused
+    // fork: the one-task branch computes the rates with windows, not a
+    // collect and joins (TextAnalysis.mixtureSampleFused)
     (s, d) => reportSortFused(
       TextAnalysis.mixtureSample(t(s, d, "documents"), budgetPermille = 250,
-        fuseOneTask = oneTaskPlan(s, d, "documents")),
+        fuseOneTask = ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("documents"))),
       col("source")),
     Some(s"""WITH t AS (SELECT doc_id, source,
             |    CAST(length(${Portable.tokens(DuckD, "text")}) AS BIGINT)
@@ -2697,8 +2610,9 @@ object Catalog {
     * one node, the x51 trap on a cluster; the two-pass produces the
     * identical ranks with a parallel range sort. */
   val x87 = Q("x87_shuffle_shards",
+    // one task on small inputs: keyedRowNumbers takes its window route
     (s, d) => Relational.shuffleShards(
-        tF(s, d, "documents").select("doc_id"), "doc_id", nShards = 8)
+        ScalePolicy.oneTask(t(s, d, "documents").select("doc_id")), "doc_id", nShards = 8)
       .select(col("doc_id"), col("shard"), col("pos"), col("shard_rows"))
       .sortWithinPartitions("shard", "pos"),
     Some("""WITH h AS (SELECT doc_id,
@@ -2859,8 +2773,10 @@ object Catalog {
     * [[Relational.groupCaps]] — scale-safe two-pass ranks, never a
     * per-domain window. cap = 20 drops documents at every SF. */
   val x92 = Q("x92_domain_caps",
+    // one task on small inputs: keyedRowNumbers takes its window route
     (s, d) => reportSortFused(
-      Relational.groupCaps(tF(s, d, "documents"), "source", "doc_id", cap = 20),
+      Relational.groupCaps(ScalePolicy.oneTask(t(s, d, "documents")), "source",
+        "doc_id", cap = 20),
       col("source")),
     Some("""WITH h AS (SELECT doc_id, source,
            |    (doc_id % 1000000007) * 2654435761 % 1000000007 AS h
@@ -2948,16 +2864,11 @@ object Catalog {
   val x94 = Q("x94_centroid_outliers",
     // pinned hash spread of the byte-tiny embeddings scan (the kernelDocs
     // rationale): the 64-way posexplode and both downstream partial aggs
-    // otherwise run on the scan's single input split. Below the one-task
-    // cap the spread is pure floor (the posexplode is 64×|rows| cheap
-    // arithmetic) and the whole map-reduce fuses instead.
-    (s, d) => reportSortFused(
-      Similarity.labelCentroidOutliers({
-        val emb = t(s, d, "embeddings")
-        if (oneTaskPlan(s, d, "embeddings")) emb.coalesce(1)
-        else emb.repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      }),
-      col("label")),
+    // otherwise run on the scan's single input split
+    OneTaskBuild((s, d) => reportSortFused(
+      Similarity.labelCentroidOutliers(t(s, d, "embeddings")
+        .repartition(s.sparkContext.defaultParallelism, col("vec_id"))),
+      col("label"))),
     Some("""WITH e AS (SELECT vec_id, label,
            |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
            |ex AS (SELECT vec_id, label, i, v[i] AS x
@@ -3129,10 +3040,9 @@ object Catalog {
     * groupBy → lead → explode. The last observation (lead = NULL) emits
     * exactly itself, so endpoints stay observed. */
   val x98 = Q("x98_interpolate",
-    (s, d) => {
+    OneTaskBuild { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy("d")
-      val fusedX98 = oneTaskPlan(s, d, "events")
       val seg = t(s, d, "events")
         // range BEFORE the to_date + DECIMAL-round projection (x64/x72's
         // rule, applied here in round 9): the range sampler re-executes
@@ -3146,9 +3056,7 @@ object Catalog {
         // table-shaped output (O(users × days)) sort in PARALLEL within
         // partitions instead of the single-task report merge (x74's sf1
         // lesson)
-        .transform(df => if (fusedX98) df.coalesce(1)
-          else df.repartitionByRange(s.sparkContext.defaultParallelism,
-            col("user_id")))
+        .repartitionByRange(s.sparkContext.defaultParallelism, col("user_id"))
         .select(col("user_id"), to_date(col("ts")).as("d"),
           expr("CAST(round(value, 4) AS DECIMAL(18,4))").as("v4"))
         .groupBy("user_id", "d").agg(sum(col("v4")).as("vd"))
@@ -3475,42 +3383,21 @@ object Catalog {
     * incompressible text inflates it toward the exact route earlier. */
   val x102 = Q("x102_bloom_decontamination",
     (s, d) => {
-      // fused below the one-task cap (r15): the 32-partition shingle
-      // shuffles (distinct + join) on a 0.6 MB corpus were pure AQE stage
-      // floor — SinglePartition scans plan them exchange-free (bloom build
-      // + one main job instead of 4 jobs / 132 tasks)
       val est = (t(s, d, "documents")
         .queryExecution.optimizedPlan.stats.sizeInBytes / 2).toLong
-      // Gate probed at sf1 and KEPT on oneTaskPlan (r17 session 2): the
-      // sf1 pair showed fused x102 at 1.00x of duck while the twin x66
-      // ran its at-scale shape at 0.58x, suggesting the kernel-spread
-      // gate (docsUnderSpread) should decide here too — MEASURED, and the
-      // at-scale branch LOSES at sf1 (same-window JobProfile pair: fused
-      // 2.02 vs checkpoint+bloom 2.97): the bloom build is an extra
-      // serialized eval pass + driver collect that only pays once the
-      // distinct exchange it prefilters carries real volume (sf5+, where
-      // the byte cap unfuses anyway: 3.39 -> 2.30 there). The r15
-      // calibration stands.
-      val fused = oneTaskPlan(s, d, "documents")
-      if (fused) {
-        // fused branch unchanged: SinglePartition scans, SHJ hint, one job
-        val docs = tF(s, d, "documents").withColumn("h",
+      // fork: one task runs the kernels per side into a shuffle_hash build;
+      // at scale a kernel-once checkpoint, which no layout rewrite can
+      // undo, feeds an unhinted build (BASELINE.md, "Scale gate ledgers")
+      if (ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("documents"))) {
+        val docs = t(s, d, "documents").coalesce(1).withColumn("h",
           graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
         graft.operators.Dedup.contaminationCounts(
             docs.where(col("h") < 80), docs.where(col("h") >= 90), est,
             fuseOneTask = true)
           .orderBy("doc_id")
       } else {
-        // at-scale branch (r17 session 2): kernel-once packed checkpoint
-        // over the gated spread — the old two-branch form ran fingerprint
-        // at both scans, ShingleSet over train + eval + the bloom build
-        // (~2x the corpus), all on the one-row-group scan splits (sf5: a
-        // 2.1-2.2 s 7-to-39-task job dominating the 3.4 s wall, same
-        // disease as x66/x20). One pass now computes (h, shs)
-        // defaultParallelism-wide; the bloom build and both sides explode
-        // the packed arrays. Measured (JobProfile best-of-5): sf5
-        // 3.39 -> 2.30 s; the fused sf0.1 branch is byte-identical
-        // (2 jobs / 2 tasks both sides of the A/B).
+        // one kernel pass computes (h, shs) defaultParallelism-wide; the
+        // bloom build and both sides explode the packed arrays
         val packed = dedupDocs(s, d)
           .select(col("doc_id"),
             (graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
@@ -3554,13 +3441,13 @@ object Catalog {
     * Measured errors go to Verify's tolerance.json via
     * [[toleranceReport]].) */
   val x28 = Q("x28_approx_distinct",
-    (s, d) => reportSortFused(tF(s, d, "events")
+    OneTaskBuild((s, d) => reportSortFused(t(s, d, "events")
       .groupBy(to_date(col("ts")).as("d"))
       .agg(approx_count_distinct(col("user_id")).as("approx_users"),
         countDistinct(col("user_id")).as("exact_users"))
       .select(col("d"), col("exact_users"),
         (abs(col("approx_users") - col("exact_users")) <=
-          lit(0.15) * col("exact_users")).as("within_tol")), col("d")),
+          lit(0.15) * col("exact_users")).as("within_tol")), col("d"))),
     Some("""SELECT CAST(ts AS DATE) AS d,
            |  COUNT(DISTINCT user_id) AS exact_users,
            |  TRUE AS within_tol

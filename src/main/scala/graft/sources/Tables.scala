@@ -57,7 +57,7 @@ object Tables {
 
   /** Exact row count from the parquet FOOTER — a zero-job, driver-side
     * statistic (same cost class as the relation cache's listing + schema
-    * read), cached per (dir, table) since testdata files are immutable
+    * read), cached per path since testdata files are immutable
     * within a session. Exists because `optimizedPlan.stats.sizeInBytes`
     * is COMPRESSED file bytes: the 2026-08-13 corpus regeneration
     * compressed events-sf1 (1M rows) under the 16 MB one-task cap that
@@ -65,19 +65,24 @@ object Tables {
     * silently ran 1M-row single-task plans at sf1 (r16 pair-O find). Row
     * count is compression-invariant; byte caps alone are not. */
   private val rowCountCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), Long]
+    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
 
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     require(all.contains(name), s"unknown table: $name")
+    footerRows(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** [[rowCount]] of the parquet file or directory at `path`. */
+  def footerRows(spark: SparkSession, path: String): Long = {
     // Session-scoped like relationCache (ADVICE r16): a JVM that regenerates
     // testdata at the same path gets fresh counts with its fresh session, and
     // stopped sessions' entries are evicted on the miss path.
-    rowCountCache.getOrElseUpdate((spark, sfDir, name), {
+    rowCountCache.getOrElseUpdate((spark, path), {
       rowCountCache.keySet.filter(_._1.sparkContext.isStopped)
         .foreach(rowCountCache.remove)
       val conf = spark.sessionState.newHadoopConf()
-      val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = path.getFileSystem(conf)
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(conf)
       // RECURSIVE listing (ADVICE r16 medium): a nested or Hive-partitioned
       // layout that spark.read.parquet reads fine would list 0 top-level
       // *.parquet files and silently report 0 rows — defeating the row cap
@@ -85,8 +90,8 @@ object Tables {
       // tree, skip hidden/metadata files the parquet source also skips, and
       // fail LOUDLY if no data file is found.
       val files: Seq[org.apache.hadoop.fs.FileStatus] =
-        if (fs.getFileStatus(path).isDirectory) {
-          val it = fs.listFiles(path, true)
+        if (fs.getFileStatus(root).isDirectory) {
+          val it = fs.listFiles(root, true)
           val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
           while (it.hasNext) {
             val st = it.next()
@@ -95,9 +100,9 @@ object Tables {
                 !n.startsWith("_") && !n.startsWith(".")) buf += st
           }
           buf.toSeq
-        } else Seq(fs.getFileStatus(path))
+        } else Seq(fs.getFileStatus(root))
       require(files.nonEmpty,
-        s"rowCount($sfDir/$name.parquet): no parquet data files found — " +
+        s"rowCount($path): no parquet data files found — " +
           "unexpected layout; refusing to report 0 rows")
       files.map { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile

@@ -60,6 +60,47 @@ object GraftSqlBridge {
         catalyst.expressions.Literal(numBits))
         .toAggregateExpression())
 
+  /** `df` with its analyzed plan rewritten to run as ONE task, for a query
+    * whose inputs [[graft.engine.ScalePolicy.oneTask]] found small. Three
+    * layout rewrites, applied to the main plan and to every subquery and
+    * view plan:
+    *  - a file-scan leaf becomes `coalesce(1)`: a one-partition child
+    *    reports `SinglePartition`, which satisfies every required
+    *    distribution, so no exchange is planned above it;
+    *  - a user `repartition`/`repartitionByRange` becomes `coalesce(1)`
+    *    (where only per-row operators separate it from a scan, the scan
+    *    keeps no coalesce of its own);
+    *  - a `broadcast` hint on an equi-join side becomes `shuffle_hash`: the
+    *    hash join builds inline, where a broadcast would be a second job.
+    *    A cross join keeps its broadcast. */
+  def oneTaskRewrite(df: Dataset[Row]): DataFrame = {
+    import catalyst.plans.logical._
+    def one(p: LogicalPlan) = Repartition(1, shuffle = false, p)
+    def overScan(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Filter => overScan(p.children.head)
+      case execution.datasources.LogicalRelation(
+        _: execution.datasources.HadoopFsRelation, _, _, _, _) => true
+      case _ => false
+    }
+    def shuffleHash(p: LogicalPlan): LogicalPlan = p match {
+      case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
+        h.copy(hints = h.hints.copy(strategy = Some(SHUFFLE_HASH)))
+      case other => other
+    }
+    def oneTask(p: LogicalPlan): LogicalPlan = (p match {
+      case r: RepartitionOperation if r.shuffle =>
+        one(if (overScan(r.child)) r.child else oneTask(r.child))
+      case l: LeafNode if overScan(l) => one(l)
+      case j: Join if catalyst.planning.ExtractEquiJoinKeys.unapply(j).isDefined =>
+        j.copy(left = shuffleHash(oneTask(j.left)), right = shuffleHash(oneTask(j.right)))
+      case other => other.withNewChildren(other.children.map(oneTask))
+    }).transformExpressions {
+      case s: catalyst.expressions.SubqueryExpression => s.withNewPlan(oneTask(s.plan))
+    }
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession, oneTask(ds.queryExecution.analyzed))
+  }
+
   /** Each checkpoint's prepared plan, kept alive while its RDD is: the
     * plan owns the SQL metrics its tasks report into, and a collected
     * metric fails every task's accumulator update on the driver. The plan

@@ -76,17 +76,22 @@ class DriverBoundSpec extends AnyFunSuite {
     }.toMap
   }
 
-  test("every driver-side collect/head/first in main is a declared bounded site") {
-    val found = siteCounts("src/main/scala/graft",
-      "\\.collect\\(\\)|collectAsList|\\.head\\(\\)|\\.first\\(\\)")
+  /** Every site in `found` is declared with its count in `allowed`, and
+    * every declared file still has sites. */
+  private def audit(found: Map[String, Int], allowed: Map[String, (Int, String)],
+                    what: String, fix: String): Unit = {
     val undeclared = found.filterNot { case (name, n) =>
       allowed.get(name).exists(_._1 == n)
     }
-    assert(undeclared.isEmpty,
-      s"undeclared or count-changed driver collect sites: $undeclared — " +
-        "add/adjust the allowlist entry WITH a boundedness argument")
+    assert(undeclared.isEmpty, s"undeclared or count-changed $what: $undeclared — $fix")
     val stale = allowed.keySet -- found.keySet
-    assert(stale.isEmpty, s"stale allowlist entries (sites removed): $stale")
+    assert(stale.isEmpty, s"stale entries for $what (sites removed): $stale")
+  }
+
+  test("every driver-side collect/head/first in main is a declared bounded site") {
+    audit(siteCounts("src/main/scala/graft",
+      "\\.collect\\(\\)|collectAsList|\\.head\\(\\)|\\.first\\(\\)"), allowed,
+      "driver collect sites", "add/adjust the allowlist entry WITH a boundedness argument")
   }
 
   /** file name → (expected site count, why the write is needed). Building
@@ -99,15 +104,26 @@ class DriverBoundSpec extends AnyFunSuite {
         "local disk, Spark's listing job elsewhere"))
 
   test("every session-conf write in main is a declared site") {
-    val found = siteCounts("src/main/scala",
-      "conf\\.(set|unset)\\(|setConf\\(|setConfString\\(")
-    val undeclared = found.filterNot { case (name, n) =>
-      confWrites.get(name).exists(_._1 == n)
-    }
-    assert(undeclared.isEmpty,
-      s"undeclared or count-changed session-conf writes: $undeclared — " +
-        "express the decision in the plan, or declare the site with its reason")
-    val stale = confWrites.keySet -- found.keySet
-    assert(stale.isEmpty, s"stale conf-write entries (sites removed): $stale")
+    audit(siteCounts("src/main/scala",
+      "conf\\.(set|unset)\\(|setConf\\(|setConfString\\("), confWrites,
+      "session-conf writes", "express the decision in the plan, or declare the site with its reason")
+  }
+
+  /** file name → (expected site count, why the one-task tier is read
+    * there). `ScalePolicy.oneTask` decides for every query whose one-task
+    * plan is a layout rewrite of its at-scale plan; a query reads the tier
+    * itself only in a named fork, a branch that runs another algorithm. */
+  val oneTaskSites: Map[String, (Int, String)] = Map(
+    "ScalePolicy.scala" -> (2,
+      "the tier's definition and the rewrite's decision on it"),
+    "Catalog.scala" -> (4,
+      "named forks: x34's pair-sort tail, x62's array funnel, x84's " +
+        "window-layered mixture sample, x102's route around a kernel-once " +
+        "checkpoint"))
+
+  test("the one-task tier is read only by the rewrite and the named forks") {
+    audit(siteCounts("src/main/scala", "\\bOneTask\\b"), oneTaskSites,
+      "one-task tier reads", "derive the branch with ScalePolicy.oneTask, " +
+        "or declare the fork with its reason")
   }
 }

@@ -383,6 +383,16 @@ class OperatorsSpec extends AnyFunSuite {
     val lsh = Similarity.lshTopK(df, 1L, 3).where(col("rn") === 1).collect()
     assert(lsh.length == 1 && lsh(0).getLong(2) == 7L &&
       lsh(0).getDouble(3) == 1.0) // twin shares every band key → rank 1
+    // the one-task rewrite of the same query over a parquet scan: same rows,
+    // one task, no exchange (the broadcast probe side builds inline)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh").toString
+    df.write.mode("overwrite").parquet(dir)
+    val (fused, decisions) = graft.engine.ScalePolicy.recorded(
+      graft.engine.ScalePolicy.oneTask(Similarity.lshTopK(spark.read.parquet(dir), 1L, 3)))
+    assert(decisions.map(_.branch) == Seq(graft.engine.ScalePolicy.Small), decisions)
+    val plan = fused.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && plan.contains("ShuffledHashJoin"), plan)
+    assert(fused.collect().toSeq == Similarity.lshTopK(df, 1L, 3).collect().toSeq)
     val ivf = Similarity.ivfTopK(df, numCentroids = 4, maxQueryId = 1, k = 3)
       .where(col("rn") === 1).collect()
     assert(ivf.length == 1 && ivf(0).getLong(2) == 7L &&

@@ -408,6 +408,77 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("one-task rewrite: every query built through it plans no exchange " +
+    "under auto but the listed layouts, and under large its plan is its " +
+    "at-scale body's") {
+    val stages = new AdaptiveSparkPlanHelper {}
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      stages.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }.size
+    def formatted(df: org.apache.spark.sql.DataFrame): String =
+      graft.tools.JobProfile.normalise(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    // layouts the rewrite keeps: an equi-join the planner broadcasts by
+    // size (the body has no hint to turn), a cross join's broadcast, and
+    // operators whose output reports no partitioning (Expand, a full
+    // outer join), so the aggregate or sort above them exchanges
+    val kept = Map(
+      "q10_anti_join" -> "anti join broadcast by size",
+      "q15_set_except" -> "anti join broadcast by size",
+      "x30_set_ops" -> "semi joins broadcast by size",
+      "x44_exists_subquery" -> "semi join broadcast by size",
+      "x50_range_join" -> "bin join broadcast by size",
+      "x71_knn_label" -> "cross join keeps its broadcast",
+      "x35_full_outer" -> "full outer join output sorts through a range exchange",
+      "x37_cube_agg" -> "cube's Expand aggregates through an exchange",
+      "x70_source_report" -> "distinct aggregates' Expand aggregate through exchanges")
+    val wrapped = Catalog.all.collect {
+      case Catalog.Q(name, b: Catalog.OneTaskBuild, _, _) => name -> b.body
+    }
+    assert(wrapped.size == 48, wrapped.map(_._1))
+    assert(kept.keySet.subsetOf(wrapped.map(_._1).toSet))
+    for ((name, body) <- wrapped) {
+      val (df, decisions) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
+      assert(decisions.exists(d => d.tier == ScalePolicy.OneTask.name &&
+        d.branch == ScalePolicy.Small), s"$name: $decisions")
+      val n = exchanges(df)
+      assert((n == 0) != kept.contains(name),
+        s"$name plans $n exchanges under auto:\n${planOf(df)}")
+      atScale {
+        assert(formatted(Catalog.queries(name)(spark, sf0001)) ==
+          formatted(body(spark, sf0001)), s"$name: the at-scale plan moved")
+      }
+    }
+    // queries that wrap one operator's input: keyedRowNumbers sees one
+    // partition and takes its window route
+    for (name <- Seq("x51_rank_distribution", "x87_shuffle_shards", "x92_domain_caps")) {
+      val (df, decisions) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
+      assert(exchanges(df) == 0, s"$name under auto:\n${planOf(df)}")
+      assert(decisions.map(d => (d.tier, d.branch)) == Seq(
+        ScalePolicy.OneTask.name -> ScalePolicy.Small, "one-partition" -> ScalePolicy.Small),
+        s"$name: $decisions")
+    }
+  }
+
+  test("x44's one-task rewrite reaches its views and EXISTS subquery") {
+    val df = Catalog.queries("x44_exists_subquery")(spark, sf0001)
+    val plan = planOf(df)
+    val stages = new AdaptiveSparkPlanHelper {}
+    assert(stages.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e }.isEmpty, s"x44 shuffles under auto:\n$plan")
+    // both scans, the outer customer and the subquery's orders, coalesced
+    val formatted = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    for (table <- Seq("customer", "orders"))
+      assert(s"(?s)\\(\\d+\\) Coalesce\\s*\\nInput \\[\\d+\\]: \\[${table.head}_".r
+        .findFirstIn(formatted).nonEmpty, s"x44's $table scan is not one task:\n$formatted")
+    // the rewrite leaves the session's views as registered, also after
+    // x53, which reads the same 'customer' view
+    Catalog.queries("x53_scalar_subquery")(spark, sf0001)
+    assert(!planOf(spark.table("customer")).contains("Coalesce"))
+  }
+
   test("report queries sort on one partition, no range-sampling exchange; " +
     "table-shaped queries keep the parallel range sort") {
     // bounded report: single-partition sort — no rangepartitioning anywhere

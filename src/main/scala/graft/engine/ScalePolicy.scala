@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 import org.slf4j.LoggerFactory
@@ -19,14 +20,19 @@ import graft.sources.Tables
   *    plan by one rewrite ([[oneTask]]);
   *  - the named forks, whose small branch runs another algorithm, so a
   *    layout rewrite cannot derive it; they ask [[fits]] for [[OneTask]]
-  *    directly: x34's one-task sort tail, x62's array funnel, x84's
-  *    window-layered `TextAnalysis.mixtureSample` and x102's
-  *    `Dedup.contaminationCounts` over a coalesced scan instead of a
-  *    kernel-once checkpoint;
-  *  - the catalog's per-row kernel spreads ([[KernelSpread]]; x91's
-  *    join-free `TextAnalysis.pmiCollocations` follows that decision);
-  *  - `Relational.keyedRowNumbers`' window route and
-  *    `PartitionIncremental`'s one-task recompute.
+  *    on their input table: x34's one-task sort tail, x62's array funnel
+  *    and x102's `Dedup.contaminationCounts` over a coalesced scan instead
+  *    of a kernel-once checkpoint;
+  *  - the catalog's per-row kernel spreads, derived from the built input
+  *    each kernel query spreads ([[kernelSpread]], one [[KernelSpread]]
+  *    decision per query);
+  *  - operators with a one-task algorithm of their own, which take it when
+  *    their input is planned as one partition ([[onePartition]]):
+  *    `Relational.keyedRowNumbers`' window route,
+  *    `TextAnalysis.pmiCollocations`' join-free tail,
+  *    `TextAnalysis.mixtureSample`'s window rates and
+  *    `Dedup.contaminationCounts`' inline build; no caller passes a flag;
+  *  - `PartitionIncremental`'s one-task recompute.
   * Operators that route on a statistic of their own probe job (a bucket,
   * cell or block count, an eval-size estimate, a bounded row count)
   * report the route they took through [[route]], with that statistic and
@@ -35,8 +41,9 @@ import graft.sources.Tables
   * Statistics are the two zero-job ones: the optimizer's size estimate
   * (`optimizedPlan.stats.sizeInBytes`, compressed parquet bytes scaled by
   * any column projection) and the parquet-footer row count
-  * ([[Tables.rowCount]]), each summed over the named tables, or over the
-  * scanned relations for [[oneTask]]. An input is
+  * ([[Tables.rowCount]]), each summed over the input's file-scan
+  * relations ([[oneTask]] sums the relations' own bytes, since a whole
+  * query's estimate is not an input size). An input is
   * small for a [[Tier]] iff BOTH statistics are at most the tier's caps:
   * compressed bytes drift with codec and corpus, row counts do not, and a
   * wide-row corpus under the row cap is still only small if its bytes are.
@@ -96,19 +103,41 @@ object ScalePolicy {
       s"$Conf=$other: expected 'auto' or 'large'")
   }
 
-  /** Whether the named tables of `dir` together fit `tier`. `columns`
-    * projects a single table before its bytes are estimated, for gates
-    * whose input is a column subset (the kernel tier's (doc_id, text)). */
-  def fits(s: SparkSession, tier: Tier, dir: String, tables: Seq[String],
-           columns: Seq[String] = Nil): Boolean = {
-    val bytes = tables.map { n =>
-      val df = Tables(s, dir, n)
-      val in = if (columns.isEmpty) df else df.select(columns.map(col): _*)
-      in.queryExecution.optimizedPlan.stats.sizeInBytes
-    }.sum
-    val rows = tables.map(Tables.rowCount(s, dir, _)).sum
-    sized(s, tier, tables.mkString("+") +
-      (if (columns.isEmpty) "" else columns.mkString("(", ",", ")")), bytes, rows)
+  /** Whether the built input `df` fits `tier`, on its own statistics: the
+    * optimized plan's size estimate, which already scales the relation
+    * bytes by any column projection, and the footer rows of its file-scan
+    * leaves. The decision's input names those leaves. An input with a leaf
+    * that is not a file scan is not small, with no decision. */
+  def fits(tier: Tier, df: DataFrame): Boolean = fitsAs(tier, df, "")
+
+  /** `df` laid out for a per-row kernel: ONE partition when it [[fits]]
+    * [[KernelSpread]] (`coalesce(1)` reports `SinglePartition`, so the
+    * consumers fuse into one task), else hash-spread on `key` across
+    * `defaultParallelism` partitions. A user-specified count is exempt from
+    * AQE's size-based coalescing, which cannot see per-row kernel cost. The
+    * decision's input names the columns `df` spreads. */
+  def kernelSpread(df: DataFrame, key: String): DataFrame =
+    if (fitsAs(KernelSpread, df, df.columns.mkString("(", ",", ")"))) df.coalesce(1)
+    else df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
+
+  private def fitsAs(tier: Tier, df: DataFrame, columns: String): Boolean =
+    sizedScans(tier, df, columns, _ => df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .contains(true)
+
+  /** The decision of `tier` on the file-scan leaves of `df`'s analyzed plan,
+    * subqueries and views included, each relation once: `bytes` of them and
+    * their footer rows. None, with no decision, when a leaf is not a file
+    * scan. */
+  private def sizedScans(tier: Tier, df: DataFrame, columns: String,
+                         bytes: Seq[HadoopFsRelation] => BigInt): Option[Boolean] = {
+    val leaves = df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }
+    val scans = leaves.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs }
+    Option.when(scans.size == leaves.size) {
+      val files = scans.distinctBy(_.location.rootPaths)
+      val roots = files.flatMap(_.location.rootPaths)
+      sized(df.sparkSession, tier, roots.map(_.getName.stripSuffix(".parquet")).mkString("+") +
+        columns, bytes(files), roots.map(p => Tables.footerRows(df.sparkSession, p.toString)).sum)
+    }
   }
 
   private def sized(s: SparkSession, tier: Tier, input: String, bytes: BigInt,
@@ -128,24 +157,22 @@ object ScalePolicy {
     * body keeps its exchanges and broadcasts. A leaf that is not a file
     * scan (a checkpoint, a local relation) leaves `df` as it is, with no
     * decision. */
-  def oneTask(df: DataFrame): DataFrame = {
-    val leaves = df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }
-    val scans = leaves.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs }
-    val files = scans.distinctBy(_.location.rootPaths)
-    val roots = files.flatMap(_.location.rootPaths)
-    if (scans.size == leaves.size && sized(df.sparkSession, OneTask,
-        roots.map(_.getName.stripSuffix(".parquet")).mkString("+"),
-        files.map(f => BigInt(f.sizeInBytes)).sum,
-        roots.map(p => Tables.footerRows(df.sparkSession, p.toString)).sum))
+  def oneTask(df: DataFrame): DataFrame =
+    if (sizedScans(OneTask, df, "", _.map(f => BigInt(f.sizeInBytes)).sum).contains(true))
       GraftSqlBridge.oneTaskRewrite(df)
     else df
-  }
 
   /** Whether `df` is already ONE physical partition, so a caller may take
-    * its serial route instead of the distributed one (a zero-job check on
-    * the planned RDD). Under `large` the answer is no without planning. */
+    * its serial route instead of the distributed one. The count is the
+    * planned one and no job runs: a plan with an exchange answers from the
+    * adaptive plan's input (executing it, as `Dataset.rdd` would, runs its
+    * map stages), any other plan from its RDD. Under `large` the answer is
+    * no without planning. */
   def onePartition(input: String, df: DataFrame): Boolean =
-    single(df.sparkSession, input, "partitions", df.rdd.getNumPartitions)
+    single(df.sparkSession, input, "partitions", df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan.outputPartitioning.numPartitions
+      case _ => df.rdd.getNumPartitions
+    })
 
   /** Whether a file scan that Spark plans as `tasks` tasks is ONE task, so
     * a caller may read its input as one partition without losing any

@@ -194,10 +194,12 @@ object TextAnalysis {
     * vocabulary-bounded and lazily checkpointed ONCE for its four
     * consumers (both join sides, both grand totals); totals ride 1-row
     * broadcast cross joins; the unigram joins AQE-broadcast; top-k is
-    * TakeOrderedAndProject. */
+    * TakeOrderedAndProject. An input that is already one partition
+    * ([[graft.engine.ScalePolicy.onePartition]]) takes a join-free window
+    * tail instead. */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, topK: Int = 20,
-                      textCol: String = "text",
-                      fuseOneTask: Boolean = false): DataFrame = {
+                      textCol: String = "text"): DataFrame = {
+    val oneTask = graft.engine.ScalePolicy.onePartition("pmiCollocations", docs)
     val cnt = docs
       // one-pass byte-level AllTokens kernel (r16): same ORDERED token
       // array as filter(split(text,' '), t -> t <> '') — order matters
@@ -227,10 +229,10 @@ object TextAnalysis {
       // once; every consumer then reads the cached vocabulary-bounded
       // block.
       .localCheckpoint(true)
-    // fuseOneTask (r15, reshaped r16): below the caller's floor gate the
-    // whole tail is JOIN-FREE — the grand totals ride UNBOUNDED-frame
-    // windows over the single partition (the x84/x93 pattern), and the
-    // unigram lookups ride per-word windows over the SAME partition: the
+    // one-partition input (r15, reshaped r16): the whole tail is JOIN-FREE
+    // — the grand totals ride UNBOUNDED-frame windows over the single
+    // partition (the x84/x93 pattern), and the unigram lookups ride
+    // per-word windows over the SAME partition: the
     // unigram row of any pair word necessarily exists in the count table
     // (a bigram's words are tokens too), so max(c where w2 IS NULL) over
     // partitionBy(word) IS the unigram count. r15's fused form kept the
@@ -241,7 +243,7 @@ object TextAnalysis {
     // At scale the joins + 1-row broadcast cross joins stay: a global
     // window would funnel the vocabulary through one task.
     val withTotals =
-      if (fuseOneTask) {
+      if (oneTask) {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy()
         val uniC = max(when(col("w2").isNull, col("c")))
@@ -374,14 +376,16 @@ object TextAnalysis {
     * checkpointed so the tokens kernel runs ONCE for both passes; the
     * per-source aggregate is collected in one bounded job (rates are
     * O(sources) driver arithmetic, mirroring the SQL oracle's integer
-    * division exactly); the rate table rides a broadcast. */
+    * division exactly); the rate table rides a broadcast. An input that
+    * is already one partition ([[graft.engine.ScalePolicy.onePartition]])
+    * takes [[mixtureSampleFused]] instead. */
   def mixtureSample(docs: DataFrame, budgetPermille: Long = 250,
-                    textCol: String = "text",
-                    fuseOneTask: Boolean = false): DataFrame = {
+                    textCol: String = "text"): DataFrame = {
     require(budgetPermille >= 0 && budgetPermille <= 1000,
       s"budgetPermille must be in [0, 1000], got $budgetPermille")
     val s = docs.sparkSession
-    if (fuseOneTask) return mixtureSampleFused(docs, budgetPermille, textCol)
+    if (graft.engine.ScalePolicy.onePartition("mixtureSample", docs))
+      return mixtureSampleFused(docs, budgetPermille, textCol)
     val toks = docs.select(col("doc_id"), col("source"),
       expr(s"size(${Portable.tokens(SparkD, textCol)})").cast("bigint")
         .as("n_toks"))
@@ -421,18 +425,15 @@ object TextAnalysis {
   }
 
   /** ONE-TASK branch of [[mixtureSample]] (r15, VERDICT r14 directive 4 —
-    * the x62 move): callers that know the input is below the one-task floor
-    * (`fuseOneTask = true`) get the whole report as ONE job / ONE task with
-    * ZERO joins — where the at-scale shape needs a checkpoint (kernel-once),
+    * the x62 move): an input that is already one partition gets the whole
+    * report as ONE job / ONE task with ZERO joins — where the at-scale shape needs a checkpoint (kernel-once),
     * a bounded driver collect (rates arithmetic) and a broadcast join, and
     * pays 7 floor-billed jobs on a 0.6 MB corpus (JobProfile r15). Here the
     * per-source totals, grand total and source count are WINDOW layers over
     * the same single partition (the x93 zipf fusion pattern):
     * rate arithmetic runs per-row in exact BIGINT `div`s identical to the
     * driver's, and the sampled counts fold into the same final aggregate as
-    * conditional sums — the tokens kernel runs once, nothing shuffles.
-    * Never taken at scale: the caller's gate is the same optimizedPlan-stats
-    * cap that keeps every other fused branch off real corpora. */
+    * conditional sums — the tokens kernel runs once, nothing shuffles. */
   private def mixtureSampleFused(docs: DataFrame, budgetPermille: Long,
                                  textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1137,12 +1137,13 @@ object Dedup {
     *
     * An empty train or eval side yields an empty result on both routes (an
     * empty-input bloom aggregate is NULL, which probes to NULL and the
-    * filter drops — empty-set membership). */
+    * filter drops — empty-set membership). A train side that is already
+    * one partition ([[ScalePolicy.onePartition]]) builds the final join
+    * inline, as a shuffled hash join, instead of broadcasting it. */
   def contaminationCounts(train: DataFrame, eval: DataFrame,
                           expectedEvalShingles: Long,
                           idCol: String = "doc_id", textCol: String = "text",
                           maxBloomItems: Long = MaxBloomItems,
-                          fuseOneTask: Boolean = false,
                           shsCol: Option[String] = None): DataFrame = {
     // shsCol (r17): callers that already hold a PACKED shingle-set column
     // (x102's kernel-once checkpoint) pass its name — the per-side kernel
@@ -1162,14 +1163,13 @@ object Dedup {
         val bloom = evalShingleBloom(eval, expectedEvalShingles, textCol, shsCol)
         trainSh.where(bloomProbe(train.sparkSession, bloom)(col("sh"))).distinct()
       }
-    // fuseOneTask (r15): callers whose inputs are below the one-task floor
-    // pass single-partition frames — a broadcast build there costs one
+    // a one-partition train side (r15): a broadcast build there costs one
     // extra job for a hash map the single task could build inline, so the
-    // fused branch hints shuffle_hash (SinglePartition satisfies the SHJ's
+    // build is hinted shuffle_hash (SinglePartition satisfies the SHJ's
     // distribution: zero exchanges, one job). At scale the broadcast of the
     // result-sized trainMatch side is the right plan and stays the default.
-    val buildSide = if (fuseOneTask) trainMatch.hint("shuffle_hash") else trainMatch
-    evalSh.join(buildSide, "sh")
+    val oneTask = ScalePolicy.onePartition("contaminationCounts.train", train)
+    evalSh.join(if (oneTask) trainMatch.hint("shuffle_hash") else trainMatch, "sh")
       .groupBy(idCol).agg(count(lit(1)).as("n_shared"))
   }
 

@@ -99,40 +99,6 @@ object Catalog {
       .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
       .sortWithinPartitions("doc_id")
 
-  /** (doc_id, text) for CPU-heavy per-row kernel chains (x85 chunk+md5,
-    * x89 winnowing, x90/x95 bm25, x91 pmi): above the kernel tier, a hash
-    * spread with a PINNED partition count (exempt from AQE coalescing,
-    * which cannot see per-row kernel cost — the [[codecDocIds]] lesson);
-    * below it, the one or two input splits cost less than the exchange and
-    * its AQE stage jobs (measurements: BASELINE.md, "Scale gate ledgers"). */
-  private def kernelDocsAuto(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "documents").select("doc_id", "text")
-    if (!docsUnderSpread(s, d))
-      base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    // a bare FileScan reports UnknownPartitioning; coalesce(1) is a no-op
-    // narrow that reports SinglePartition, so the consumer fuses into one task
-    else base.coalesce(1)
-  }
-
-  /** The kernel tier's decision on the corpus. Kernel queries that add
-    * window-total tails gate them on this same decision, so a corpus never
-    * spreads for the kernel and then funnels back through a global window. */
-  private def docsUnderSpread(s: SparkSession, d: String): Boolean =
-    ScalePolicy.fits(s, ScalePolicy.KernelSpread, d, Seq("documents"),
-      Seq("doc_id", "text"))
-
-  /** (doc_id, text) input for x20's shingle-set corpus pass: hash-spread
-    * above the kernel tier, because the corpus is one parquet row group per
-    * file and one task reads a row group, so the kernel and every consumer
-    * of its checkpoint would otherwise run single-task. Package-private so
-    * PlanShapeSpec can pin both branches (the checkpoint hides the spread
-    * exchange from the query's own plan). */
-  private[graft] def dedupDocs(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "documents").select("doc_id", "text")
-    if (docsUnderSpread(s, d)) base
-    else base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-  }
-
   /** Cap on the bigram-LM entries x81 will pull to the driver and broadcast
     * (same role and magnitude as [[Dedup.MaxBroadcastShingles]]): ~60 MB of
     * (bigram, logprob) rows. A corpus whose bigram vocabulary exceeds this
@@ -317,10 +283,8 @@ object Catalog {
     * the HOF empty-token filter lambda ran per token on the single-file
     * scan task). */
   val q13 = Q("q13_top_tokens",
-    // kernelDocsAuto (r16): one task under the spread gate; above it the
-    // kernel + partial agg runs on the pinned 32-way spread instead of the
-    // raw row-group splits
-    (s, d) => kernelDocsAuto(s, d)
+    // kernel tier: the token kernel + partial agg spread above it
+    (s, d) => ScalePolicy.kernelSpread(t(s, d, "documents").select("doc_id", "text"), "doc_id")
       .select(explode(
         graft.functions.TextHashFunctions.allTokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
@@ -426,24 +390,8 @@ object Catalog {
     * them — the complete linear-ish dedup pipeline, not just candidate
     * generation. */
   val x18 = Q("x18_dedup_minhash",
-    // PARALLEL range sort, not reportSort (round 10, profiled at sf5): the
-    // pair set is NOT report-sized — it grows quadratically in near-dup
-    // CLASS sizes (14k rows at sf0.01 → 1.4M at sf0.1 → 65.2M at sf5 on
-    // this dup-heavy corpus), so repartition(1) funneled it through ONE
-    // sort task: 50-68 s
-    // of a 55-62 s query against 3-8 s of actual compute (X18Probe, 3
-    // rounds). orderBy's range sampler does re-execute the join child (the
-    // original reason reportSort was chosen) but that child is the CHEAP
-    // part; measured tails at sf5: repartition(1) 49-69 s, orderBy 14-21 s,
-    // localCheckpoint+orderBy 51-57 s (materializing 65M rows costs more
-    // than re-running the 4 s pipeline — the x20 checkpoint lesson). At
-    // 100 TB the one-task sort is an OOM, not just a straggler; output
-    // that scales with data takes the table-shaped treatment (x74 lesson).
-    // NOT dedupDocs-spread (r17 session 2, measured): x18's signature pass
-    // is lighter than x20's shingle-set pass and feeds groupBy(sig)
-    // directly — the spread exchange moved the kernel into the 96-task
-    // band job (+0.5 s) for exactly the scan job it saved (0.87→0.15 s);
-    // JobProfile best-of-5 at sf1: 3.473 → 3.794 s, a wash-to-loss.
+    // parallel range sort (the pair set grows with near-dup class sizes),
+    // raw scan with no kernel spread (measured a wash; BASELINE.md)
     (s, d) => Dedup.minhashNearDupPairs(t(s, d, "documents"), 0.9)
       .orderBy(col("a"), col("b")),
     Some(duckMinhashSql))
@@ -471,7 +419,8 @@ object Catalog {
     * Threshold 0.8 — the synthetic corpus has a handful of ≥0.98 pairs. */
   val x20 = Q("x20_dedup_ngram",
     // reportSort: pair report bounded by the 0.8 Jaccard threshold
-    (s, d) => reportSort(Dedup.ngramJaccardPairs(dedupDocs(s, d), 0.8),
+    (s, d) => reportSort(Dedup.ngramJaccardPairs(ScalePolicy.kernelSpread(
+        t(s, d, "documents").select("doc_id", "text"), "doc_id"), 0.8),
       col("a"), col("b")),
     Some(s"""WITH t0 AS (SELECT doc_id, ${Portable.tokens(DuckD, "text")} AS toks
             |  FROM documents),
@@ -546,7 +495,7 @@ object Catalog {
       val pairs = Dedup.embeddingNearDupLsh(t(s, d, "embeddings"), 0.3)
       // fork: a one-task merge of small pair sets, a checkpoint + parallel
       // range sort at scale (BASELINE.md, "Scale gate ledgers")
-      if (ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("embeddings")))
+      if (ScalePolicy.fits(ScalePolicy.OneTask, t(s, d, "embeddings")))
         reportSort(pairs, col("a"), col("b"))
       else pairs.localCheckpoint(true).orderBy(col("a"), col("b"))
     },
@@ -1034,12 +983,8 @@ object Catalog {
     // whole map side ran on the single-file scan task, so kernel cost was
     // wall-clock); the document-frequency count then needs only the one
     // partial-agg exchange and a TakeOrdered tail
-    // kernelDocsAuto (r16, pair-N sf5 profile): the plain scan ran the
-    // kernel + partial agg on the 7 row-group splits — 5.8–8.8 s of the
-    // 6.1 s wall on 7 of 32 cores. Above the gate the pinned hash spread
-    // runs it 32-way; below it the fused one-task branch drops the floor
-    // jobs, same as x89.
-    (s, d) => kernelDocsAuto(s, d)
+    // kernel tier: the kernel + partial agg spread above it (BASELINE.md)
+    (s, d) => ScalePolicy.kernelSpread(t(s, d, "documents").select("doc_id", "text"), "doc_id")
       .select(explode(
         graft.functions.TextHashFunctions.shingleStrings(col("text"))).as("sh"))
       .groupBy("sh").agg(count(lit(1)).as("n_docs"))
@@ -1538,7 +1483,7 @@ object Catalog {
         unix_micros(col("ts")).as("us"))
       // fork: one task runs a join-free array funnel, an algorithm of its
       // own (BASELINE.md, "Scale gate ledgers")
-      if (ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("events"))) {
+      if (ScalePolicy.fits(ScalePolicy.OneTask, t(s, d, "events"))) {
         // per-user event array + three conditional array scans: t1 = min
         // signup time, t2 = min click time strictly after t1, t3 = min
         // purchase strictly after t2 (a null tN nulls everything later:
@@ -1687,9 +1632,8 @@ object Catalog {
     // one-pass TokenPairs kernel (with multiplicity; empty under 2 tokens,
     // so no size filter and no kernel-bearing pushdown) — the HOF
     // transform+concat form ran serially on the single-file scan task
-    // kernelDocsAuto (r16, same pair-N sf5 profile as x47: the kernel +
-    // partial agg sat on the 7 row-group splits, 1.7–2.2 s of the wall)
-    (s, d) => kernelDocsAuto(s, d)
+    // kernel tier: the kernel + partial agg spread above it (BASELINE.md)
+    (s, d) => ScalePolicy.kernelSpread(t(s, d, "documents").select("doc_id", "text"), "doc_id")
       .select(explode(
         graft.functions.TextHashFunctions.tokenPairs(col("text"))).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
@@ -1712,21 +1656,15 @@ object Catalog {
     * shingle strings — identical counts absent a 2^-64 collision (same
     * contract as x20). */
   val x66 = Q("x66_decontamination",
-    // r17 session 2: ONE kernel pass over [[dedupDocs]] (gated spread),
-    // checkpointed — the old two-branch form evaluated fingerprint twice
-    // (both h filters pushed to the scan) and ShingleSet over 90% of the
-    // corpus, all bound to the one-row-group scan splits (sf5: a 2.2 s
-    // 7-task stage, 25 cores idle). Both kernels now run once per doc,
-    // `defaultParallelism`-wide above the gate, and the train/eval branches
-    // filter the packed checkpoint. Same packed-multi-consumer shape as
-    // x20. Measured (JobProfile best-of-5): sf5 3.35 -> 2.40-2.50 s,
-    // sf0.1 a wash (0.69 -> 0.68, same-window interleaved pair).
+    // ONE kernel pass over the kernel tier's layout, checkpointed for the
+    // train and eval branches (BASELINE.md, "Scale gate ledgers")
     // Identical output: h and the shingle sets are
     // computed by the same kernels, the h in [80,90) dead zone was never
     // emitted by either branch, and shingleSet rows for it are discarded
     // by the same filters.
     (s, d) => {
-      val packed = dedupDocs(s, d)
+      val packed = ScalePolicy.kernelSpread(
+          t(s, d, "documents").select("doc_id", "text"), "doc_id")
         .select(col("doc_id"),
           (graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
             .as("h"),
@@ -2319,7 +2257,7 @@ object Catalog {
     * route on any corpus, so both routes can be checked on the same data. */
   private[graft] def x81Build(lmCap: Int)(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // NOT dedupDocs-spread (r17 session 2, measured): unlike x20's
+    // NOT kernel-spread (r17 session 2, measured): unlike x20's
     // multi-consumer ShingleSet checkpoint, the LM-build probe is ONE
     // TokenPairs pass feeding a partial agg — the text exchange costs
     // what the kernel parallelization saves (JobProfile sf5 2.85 -> 2.93,
@@ -2493,20 +2431,11 @@ object Catalog {
     * rate-gated sample aggregate), each one scan + one source-bounded
     * aggregate; the rate table rides a broadcast; nothing driver-side. */
   val x84 = Q("x84_mixture_sample",
-    // no kernel spread (r9 A/B): the tokenize projection behind
-    // mixtureSample's checkpoint runs as a ~0.4 s 1-stage 2-task job at
-    // sf1 — the usual spread signature — but the size-gated repartition
-    // measured WORSE same-session (1.17 no-spread vs 1.30 spread):
-    // whitespace tokenization over 28 MB of text is still cheaper than
-    // exchanging that text + the extra AQE stage jobs. Same verdict as
-    // x96's LangStats (wash) and opposite of x85's chunk+md5 (1.76→1.12
-    // WITH the spread) — the trade is per-kernel and only measurement
-    // settles it.
-    // fork: the one-task branch computes the rates with windows, not a
-    // collect and joins (TextAnalysis.mixtureSampleFused)
+    // no kernel spread (measured worse; BASELINE.md); one task below the
+    // one-task tier, where mixtureSample takes its window-layered route
     (s, d) => reportSortFused(
-      TextAnalysis.mixtureSample(t(s, d, "documents"), budgetPermille = 250,
-        fuseOneTask = ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("documents"))),
+      TextAnalysis.mixtureSample(ScalePolicy.oneTask(t(s, d, "documents")),
+        budgetPermille = 250),
       col("source")),
     Some(s"""WITH t AS (SELECT doc_id, source,
             |    CAST(length(${Portable.tokens(DuckD, "text")}) AS BIGINT)
@@ -2546,17 +2475,10 @@ object Catalog {
     * for the window (key cardinality = distinct passages), one doc_id agg;
     * the x51-audit is clean on both keys. */
   val x85 = Q("x85_passage_dedup",
-    // kernelDocs spread RE-ADDED in round 7 (bytes-gated): the round-6 A/B
-    // measured it as a wash, but profiling showed why — passageChunks' old
-    // where(size(toks) > 0) pushed the token split below the exchange
-    // (trap (a)), so the corpus tokenized on the 2 parquet input splits
-    // anyway and the exchange was pure cost. With the filter rewritten to
-    // the scan-cheap trim predicate the chunk+md5 stage genuinely runs on
-    // 32 tasks: 1.76 → 1.12 s at sf1 (JobProfile, same session). The gate
-    // (kernelDocsAuto) keeps sf0.1 off the spread, where the exchange +
-    // AQE stage jobs measured +0.33 s of pure floor against a 0.15 s
-    // 2-task chunk stage.
-    (s, d) => Dedup.passageDedup(kernelDocsAuto(s, d)).orderBy("doc_id"),
+    // kernel tier: chunk+md5 spread above it (BASELINE.md)
+    (s, d) => Dedup.passageDedup(ScalePolicy.kernelSpread(
+        t(s, d, "documents").select("doc_id", "text"), "doc_id"))
+      .orderBy("doc_id"),
     Some(s"""WITH t AS (SELECT doc_id, ${Portable.tokens(DuckD, "text")}
             |    AS toks FROM documents),
             |t2 AS (SELECT doc_id, toks, length(toks) AS n FROM t
@@ -2665,10 +2587,10 @@ object Catalog {
     * w = 5 ⇒ any ≥ 8-token shared run yields a shared fingerprint at
     * expected density 1/3. Per-doc output keeps the parallel range sort. */
   val x89 = Q("x89_winnowing",
-    // kernelDocsAuto (r15 A/B): the unconditional spread on a 0.6 MB corpus
-    // was x85's measured +0.33 s floor pattern; the gate keeps the sf1+
-    // spread where the winnow kernel earns it
-    (s, d) => Dedup.winnowingDedup(kernelDocsAuto(s, d)).orderBy("doc_id"),
+    // kernel tier: the winnow kernel spread above it (BASELINE.md)
+    (s, d) => Dedup.winnowingDedup(ScalePolicy.kernelSpread(
+        t(s, d, "documents").select("doc_id", "text"), "doc_id"))
+      .orderBy("doc_id"),
     Some(s"""WITH h AS (SELECT doc_id,
             |    ${Portable.tokenHashes(DuckD, "text", distinctTokens = false)}
             |      AS hs FROM documents),
@@ -2724,8 +2646,9 @@ object Catalog {
     * [[TextAnalysis.bm25]]. The corpus-stats row rides a 1-row broadcast
     * cross join (q14/x39's pattern); top-k is TakeOrderedAndProject. */
   val x90 = Q("x90_bm25",
-    // kernelDocsAuto (r15 A/B, same rationale as x89)
-    (s, d) => TextAnalysis.bm25(kernelDocsAuto(s, d), SearchTerms),
+    // kernel tier: the bm25 token pass spread above it (BASELINE.md)
+    (s, d) => TextAnalysis.bm25(ScalePolicy.kernelSpread(
+      t(s, d, "documents").select("doc_id", "text"), "doc_id"), SearchTerms),
     Some(bm25OracleSql(SearchTerms, 50)),
     bench = false)
 
@@ -2733,22 +2656,10 @@ object Catalog {
     * [[TextAnalysis.pmiCollocations]] — vocabulary-bounded count joins,
     * 1-row broadcast totals, TakeOrderedAndProject top-k. */
   val x91 = Q("x91_pmi_collocations",
-    // kernelDocsAuto (r15 A/B, measured under static planning, where the
-    // 32-task post-shuffle stages never coalesced): the fused
-    // SinglePartition input removes them
-    // r17 (VERDICT r16 directive 4): spreading the under-gate corpus pass
-    // (repartition(32, doc_id) for the kernel+explode+partial agg, with
-    // only the FINAL count aggregation coalesced to one partition so the
-    // join-free window tail keeps its zero-exchange shape) was measured
-    // and REVERTED: JobProfile best-of-5 0.832 vs 0.730 same session —
-    // the raw-text exchange + 3 serialized stage launches (~0.12 s floor
-    // each) cost more than the 0.35-0.45 s single-core explode+agg they
-    // parallelize, even though the shuffled partials are vocabulary-
-    // bounded (962 count rows vs the 536k-struct stream at sf0.1). Above
-    // the gate the pass already spreads (kernelDocsAuto), so there is no
-    // at-scale upside to buy.
-    (s, d) => TextAnalysis.pmiCollocations(kernelDocsAuto(s, d),
-      fuseOneTask = docsUnderSpread(s, d)),
+    // kernel tier: spread above it; one partition below it, where the
+    // count tail runs join-free on windows (BASELINE.md)
+    (s, d) => TextAnalysis.pmiCollocations(ScalePolicy.kernelSpread(
+      t(s, d, "documents").select("doc_id", "text"), "doc_id")),
     Some(s"""WITH t AS (SELECT ${Portable.tokens(DuckD, "text")} AS toks
             |    FROM documents),
             |u AS (SELECT unnest(toks) AS w FROM t),
@@ -2906,9 +2817,9 @@ object Catalog {
     * coverage contract). Identical double arithmetic on both engines. */
   val x95 = Q("x95_hybrid_search",
     (s, d) => {
-      // kernelDocsAuto (r15, same rationale as x89/x90): the unconditional
-      // 32-way spread inside the bm25 stage was pure floor at sf0.1
-      val hits = TextAnalysis.bm25(kernelDocsAuto(s, d), SearchTerms, topK = 50)
+      // kernel tier: the bm25 token pass spread above it (BASELINE.md)
+      val hits = TextAnalysis.bm25(ScalePolicy.kernelSpread(
+        t(s, d, "documents").select("doc_id", "text"), "doc_id"), SearchTerms, topK = 50)
       val e = t(s, d, "embeddings")
       val q = e.where(col("vec_id") === 0L).select(col("embedding").as("qv"))
       // smax as an unbounded window over the ≤50-row hit list, not a
@@ -2949,14 +2860,7 @@ object Catalog {
     * see [[TextAnalysis.qualityGate]] (keep the top 70% of each source by
     * the x24 quality score). */
   val x96 = Q("x96_quality_gate",
-    // no kernelDocs spread, at ANY size: the sf0.1 A/B measured 0.50→0.63
-    // against the unconditional spread (exchange + AQE stage jobs exceed
-    // the 2-split kernel pass), and a round-9 same-session sf1 A/B of the
-    // SIZE-GATED spread measured a wash (1.37 ungated vs 1.38 gated) —
-    // the 2-task LangStats job its profile shows is ~0.5 s, but spreading
-    // it ships the full text bytes through an exchange that costs the
-    // same. The spread pays off for winnowing/codec-class kernels (x85:
-    // 1.76→1.12 at sf1), not a one-pass byte-scan kernel.
+    // no kernel spread at any size: a one-pass byte-scan kernel (BASELINE.md)
     (s, d) => reportSortFused(
       TextAnalysis.qualityGate(t(s, d, "documents")), col("source")),
     Some(s"""WITH t0 AS (SELECT doc_id, source,
@@ -2988,12 +2892,10 @@ object Catalog {
     * report is O(|sources|²). */
   val x97 = Q("x97_source_overlap",
     (s, d) => {
-      // the kernel tier decides, as in kernelDocsAuto: above it the winnow
-      // kernel earns the spread; below it one partition fuses the self-join
-      val raw = t(s, d, "documents").select("doc_id", "source", "text")
-      val spread =
-        if (docsUnderSpread(s, d)) raw.coalesce(1)
-        else raw.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // kernel tier: the winnow kernel spread above it; one partition
+      // below it fuses the self-join
+      val spread = ScalePolicy.kernelSpread(
+        t(s, d, "documents").select("doc_id", "source", "text"), "doc_id")
       val fps = spread
         .select(col("source"), explode(graft.functions.TextHashFunctions
           .winnowSet(col("text"), 4, 5)).as("fp"))
@@ -3306,13 +3208,9 @@ object Catalog {
     * rank — no window anywhere in the plan. */
   val x101 = Q("x101_topk_exemplars",
     (s, d) => {
-      // the kernelDocsAuto discipline inline (x101 needs `source` too):
-      // pinned 32-way kernel spread above the byte gate, fused single
-      // partition below it
-      val base0 = t(s, d, "documents").select("doc_id", "source", "text")
-      val spread =
-        if (docsUnderSpread(s, d)) base0.coalesce(1)
-        else base0.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // kernel tier: the LangStats kernel spread above it
+      val spread = ScalePolicy.kernelSpread(
+        t(s, d, "documents").select("doc_id", "source", "text"), "doc_id")
       val q = spread
         // raw-text token-bearing filter (r16): the post-kernel
         // where(n_tokens > 0) pushed a LangStats-bearing predicate into
@@ -3388,17 +3286,17 @@ object Catalog {
       // fork: one task runs the kernels per side into a shuffle_hash build;
       // at scale a kernel-once checkpoint, which no layout rewrite can
       // undo, feeds an unhinted build (BASELINE.md, "Scale gate ledgers")
-      if (ScalePolicy.fits(s, ScalePolicy.OneTask, d, Seq("documents"))) {
+      if (ScalePolicy.fits(ScalePolicy.OneTask, t(s, d, "documents"))) {
         val docs = t(s, d, "documents").coalesce(1).withColumn("h",
           graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
         graft.operators.Dedup.contaminationCounts(
-            docs.where(col("h") < 80), docs.where(col("h") >= 90), est,
-            fuseOneTask = true)
+            docs.where(col("h") < 80), docs.where(col("h") >= 90), est)
           .orderBy("doc_id")
       } else {
         // one kernel pass computes (h, shs) defaultParallelism-wide; the
         // bloom build and both sides explode the packed arrays
-        val packed = dedupDocs(s, d)
+        val packed = ScalePolicy.kernelSpread(
+            t(s, d, "documents").select("doc_id", "text"), "doc_id")
           .select(col("doc_id"),
             (graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
               .as("h"),

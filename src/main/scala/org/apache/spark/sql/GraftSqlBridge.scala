@@ -72,7 +72,12 @@ object GraftSqlBridge {
     *    keeps no coalesce of its own);
     *  - a `broadcast` hint on an equi-join side becomes `shuffle_hash`: the
     *    hash join builds inline, where a broadcast would be a second job.
-    *    A cross join keeps its broadcast. */
+    *    An inner or one-sided outer equi-join with no hint on either side
+    *    gets `shuffle_hash` on both, so the planner builds the smaller side
+    *    inline instead of broadcasting it by size. A semi or anti join is
+    *    left to the planner: the optimizer pushes it below its stream
+    *    side's `coalesce(1)`, so a hash join there would exchange both
+    *    sides. A cross join keeps its broadcast. */
   def oneTaskRewrite(df: Dataset[Row]): DataFrame = {
     import catalyst.plans.logical._
     def one(p: LogicalPlan) = Repartition(1, shuffle = false, p)
@@ -82,9 +87,10 @@ object GraftSqlBridge {
         _: execution.datasources.HadoopFsRelation, _, _, _, _) => true
       case _ => false
     }
-    def shuffleHash(p: LogicalPlan): LogicalPlan = p match {
+    def shuffleHash(p: LogicalPlan, unhinted: Boolean): LogicalPlan = p match {
       case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
         h.copy(hints = h.hints.copy(strategy = Some(SHUFFLE_HASH)))
+      case other if unhinted => ResolvedHint(other, HintInfo(Some(SHUFFLE_HASH)))
       case other => other
     }
     def oneTask(p: LogicalPlan): LogicalPlan = (p match {
@@ -92,7 +98,11 @@ object GraftSqlBridge {
         one(if (overScan(r.child)) r.child else oneTask(r.child))
       case l: LeafNode if overScan(l) => one(l)
       case j: Join if catalyst.planning.ExtractEquiJoinKeys.unapply(j).isDefined =>
-        j.copy(left = shuffleHash(oneTask(j.left)), right = shuffleHash(oneTask(j.right)))
+        val unhinted = !Seq(j.left, j.right).exists(_.isInstanceOf[ResolvedHint]) &&
+          Seq(catalyst.plans.Inner, catalyst.plans.LeftOuter, catalyst.plans.RightOuter)
+            .contains(j.joinType)
+        j.copy(left = shuffleHash(oneTask(j.left), unhinted),
+          right = shuffleHash(oneTask(j.right), unhinted))
       case other => other.withNewChildren(other.children.map(oneTask))
     }).transformExpressions {
       case s: catalyst.expressions.SubqueryExpression => s.withNewPlan(oneTask(s.plan))

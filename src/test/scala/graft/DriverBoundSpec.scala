@@ -116,14 +116,24 @@ class DriverBoundSpec extends AnyFunSuite {
   val oneTaskSites: Map[String, (Int, String)] = Map(
     "ScalePolicy.scala" -> (2,
       "the tier's definition and the rewrite's decision on it"),
-    "Catalog.scala" -> (4,
-      "named forks: x34's pair-sort tail, x62's array funnel, x84's " +
-        "window-layered mixture sample, x102's route around a kernel-once " +
-        "checkpoint"))
+    "Catalog.scala" -> (3,
+      "named forks: x34's pair-sort tail, x62's array funnel, x102's route " +
+        "around a kernel-once checkpoint"))
 
   test("the one-task tier is read only by the rewrite and the named forks") {
     audit(siteCounts("src/main/scala", "\\bOneTask\\b"), oneTaskSites,
       "one-task tier reads", "derive the branch with ScalePolicy.oneTask, " +
         "or declare the fork with its reason")
+  }
+
+  test("the kernel tier is read only by ScalePolicy.kernelSpread") {
+    audit(siteCounts("src/main/scala", "\\bKernelSpread\\b"),
+      Map("ScalePolicy.scala" -> (2, "the tier's definition and kernelSpread's decision")),
+      "kernel tier reads", "lay the kernel input out with ScalePolicy.kernelSpread")
+  }
+
+  test("operators route on their input's partitioning, not a flag") {
+    audit(siteCounts("src/main/scala", "fuseOneTask"), Map.empty,
+      "one-task flags", "ask ScalePolicy.onePartition about the operator's input")
   }
 }

@@ -69,7 +69,7 @@ class JobProfileSpec extends AnyFunSuite {
         assert(lsh.get(5, TimeUnit.MINUTES).map(d => (d.input, d.branch)) ==
           Seq(("embeddingNearDupLsh", "kernel")))
         assert(decontam.get(5, TimeUnit.MINUTES).map(d => (d.input, d.branch)) ==
-          Seq(("contaminationCounts", "bloom")))
+          Seq(("contaminationCounts", "bloom"), ("contaminationCounts.train", "at-scale")))
       } finally pool.shutdownNow()
     }
     (1 to 3).foreach(_ => both())

@@ -337,6 +337,23 @@ class OperatorsSpec extends AnyFunSuite {
     assert(bloom == (0 until 6).map(j => (100L + j, 8L)))
   }
 
+  test("contaminationCounts: a one-partition train side gives the same rows") {
+    val docs = (0 until 40).map { i =>
+      (i.toLong, (0 until 12).map(k => s"w${(i * 5 + k) % 23}").mkString(" "))
+    }.toDF("doc_id", "text")
+    def run(in: org.apache.spark.sql.DataFrame) = {
+      val (rows, ds) = graft.engine.ScalePolicy.recorded(Dedup.contaminationCounts(
+          in.where(col("doc_id") % 4 =!= 0), in.where(col("doc_id") % 4 === 0), 4096)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+      (rows, ds.filter(_.tier == "one-partition").map(_.branch))
+    }
+    val (one, oneRoute) = run(docs.coalesce(1))
+    val (three, threeRoute) = run(docs.repartition(3))
+    assert(oneRoute == Seq(graft.engine.ScalePolicy.Small))
+    assert(threeRoute == Seq(graft.engine.ScalePolicy.AtScale))
+    assert(one.nonEmpty && one == three)
+  }
+
   test("contaminationCounts: empty train and empty eval are empty results " +
     "on both routes (NULL bloom ≡ empty-set membership)") {
     val docs = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
@@ -928,6 +945,19 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got.forall(r => !r.getDouble(2).isNaN && !r.getDouble(2).isInfinite))
   }
 
+  test("mixtureSample: a one-partition input takes the window route, same rows") {
+    val docs = (1L to 60L).map(i => (i, s"src${i % 3}",
+      (1 to (i % 7).toInt).map(k => s"w$k").mkString(" "))).toDF("doc_id", "source", "text")
+    def run(in: org.apache.spark.sql.DataFrame) = routes("mixtureSample")(
+      TextAnalysis.mixtureSample(in, budgetPermille = 300).collect()
+        .map(r => (0 to 5).map(r.get)).sortBy(_.head.toString).toSeq)
+    val (one, oneRoute) = run(docs.coalesce(1))
+    val (three, threeRoute) = run(docs.repartition(3))
+    assert(oneRoute == Seq(graft.engine.ScalePolicy.Small))
+    assert(threeRoute == Seq(graft.engine.ScalePolicy.AtScale))
+    assert(one.size == 3 && one == three)
+  }
+
   test("mixtureSample: zero budget keeps only zero-token sources; " +
     "bounds validated") {
     val docs = Seq(
@@ -1014,9 +1044,9 @@ class OperatorsSpec extends AnyFunSuite {
     val expect = BigDecimal(math.log((6.0 * nTu * nTu) / (nTb * 6.0 * 6.0)))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(math.abs(got.head._4 - expect) < 1e-9)
-    // fused arm (r16: join-free window tail) must emit the identical table
+    // one-partition arm (r16: join-free window tail) must emit the identical table
     val fusedGot = TextAnalysis.pmiCollocations(docs.coalesce(1), minCount = 5,
-        topK = 10, fuseOneTask = true)
+        topK = 10)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getDouble(3)))
     assert(fusedGot.toSeq == got.toSeq)

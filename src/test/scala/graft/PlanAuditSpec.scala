@@ -41,8 +41,8 @@ class PlanAuditSpec extends AnyFunSuite {
       "both prefix-join sides, both verify sides); one lazy localCheckpoint " +
       "replaces five kernel scans — every consumer is still Catalyst-planned"),
     "x66_decontamination" -> ("packed (doc_id, h, shs) feeds the train and " +
-      "eval branches; one lazy localCheckpoint over the gated dedupDocs " +
-      "spread replaces two fingerprint scans + ~2x-corpus ShingleSet " +
+      "eval branches; one lazy localCheckpoint over the kernel tier's " +
+      "layout replaces two fingerprint scans + ~2x-corpus ShingleSet " +
       "evaluation (r17 session 2; x102's at-scale branch shares the shape " +
       "behind its one-task gate) — every consumer is still Catalyst-planned"),
     "x60_dedup_clusters" -> ("iterative fixpoint: the label state is " +

@@ -99,27 +99,85 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.unset(ScalePolicy.Conf)
   }
 
-  test("kernel-spread gate also triggers on doc COUNT, not only compressed " +
-    "bytes (r16: the same compression-fragility class as the one-task cap)") {
+  test("kernel tier: every kernelSpread caller decides once on what it spreads") {
     // bytes under the cap with rows over it is NOT small
     val tier = ScalePolicy.KernelSpread
     assert(!tier.admits(bytes = 1, rows = tier.maxRows + 1))
     assert(tier.admits(bytes = 1, rows = tier.maxRows))
-    // the decision reads the corpus' footer doc count
     val docs = Tables.rowCount(spark, sf0001, "documents")
-    val (_, decisions) = ScalePolicy.recorded(
-      Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
-    assert(decisions.exists(d => d.tier == tier.name &&
-      d.statistics.contains(s" rows=$docs ")),
-      s"x47's kernel-spread decision must carry rows=$docs: $decisions")
-    val plan = atScale {
-      planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001)) }
-    assert(plan.contains("Exchange hashpartitioning(doc_id"),
-      s"the at-scale branch must force the kernel spread:\n$plan")
-    // default at sf0.001: fused, zero exchanges
-    val fused = planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
-    assert(!fused.contains("Exchange"),
-      s"x47 under the spread gate must plan zero exchanges:\n$fused")
+    val text = "documents(doc_id,text)"
+    val withSource = "documents(doc_id,source,text)"
+    val callers = Seq("q13_top_tokens", "x20_dedup_ngram", "x47_boilerplate_ngrams",
+      "x65_bpe_pairs", "x66_decontamination", "x85_passage_dedup", "x89_winnowing",
+      "x90_bm25", "x91_pmi_collocations", "x95_hybrid_search").map(_ -> text) ++
+      Seq("x97_source_overlap", "x101_topk_exemplars").map(_ -> withSource)
+    def kernel(ds: Seq[ScalePolicy.Decision]) = ds.filter(_.tier == tier.name)
+    val sc = spark.sparkContext
+    val n = sc.defaultParallelism
+    val hashSpread = s"hashpartitioning\\(doc_id#\\d+L?, $n\\), REPARTITION_BY_NUM".r
+    val stages = new AdaptiveSparkPlanHelper {}
+    // a checkpoint hides the spread exchange from the query's own plan: a
+    // Dataset checkpoint (x66, x91, x102) plans it in its own execution, and
+    // x20's partitioned checkpoint is read as the spread's n partitions
+    val checkpointed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          checkpointed.add(x.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    def spreads(df: org.apache.spark.sql.DataFrame): Boolean = {
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+      val plan = df.queryExecution.executedPlan
+      (plan.toString +: checkpointed.toArray(Array.empty[String]).toSeq)
+        .exists(hashSpread.findFirstIn(_).isDefined) ||
+        stages.collect(plan) { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd }
+          .exists(_.getNumPartitions == n)
+    }
+    for ((name, input) <- callers) {
+      val (df, ds) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
+      assert(kernel(ds).map(d => (d.input, d.branch)) == Seq(input -> ScalePolicy.Small) &&
+        kernel(ds).head.statistics.contains(s" rows=$docs "), s"$name: $ds")
+      assert(!planOf(df).contains("Exchange hashpartitioning(doc_id"),
+        s"$name spreads under the kernel tier:\n${planOf(df)}")
+    }
+    // x102 asks the kernel tier only on its at-scale branch
+    assert(kernel(ScalePolicy.recorded(Catalog.queries("x102_bloom_decontamination")(
+      spark, sf0001))._2).isEmpty)
+    sc.addSparkListener(listener)
+    try atScale {
+      for ((name, input) <- callers :+ ("x102_bloom_decontamination" -> text)) {
+        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+        checkpointed.clear()
+        val (df, ds) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
+        assert(kernel(ds).map(d => (d.input, d.branch)) == Seq(input -> ScalePolicy.AtScale),
+          s"$name: $ds")
+        assert(spreads(df), s"$name must spread its kernel input:\n${planOf(df)}")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("onePartition answers an adaptive input from its plan, with no job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val spread = spark.range(1000).toDF().repartition(4, col("id"))
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val (one, ds) = ScalePolicy.recorded(ScalePolicy.onePartition("probe", spread))
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+      assert(!one && ds.map(d => (d.statistics, d.branch)) ==
+        Seq("partitions=4 cap=1" -> ScalePolicy.AtScale), ds)
+      assert(jobs.get == 0, "onePartition ran a job on an adaptive input")
+    } finally sc.removeSparkListener(listener)
+    val (single, ds) = ScalePolicy.recorded(
+      ScalePolicy.onePartition("probe", spread.coalesce(1)))
+    assert(single && ds.map(_.branch) == Seq(ScalePolicy.Small), ds)
   }
 
   test("r15 fused branches (x49/x84/x102): zero exchanges under the cap; " +
@@ -149,7 +207,7 @@ class PlanShapeSpec extends AnyFunSuite {
         Catalog.queries("x102_bloom_decontamination")(spark, sf0001))
       assert(x102.contains("Exchange"),
         s"x102's at-scale branch must keep its shingle exchanges:\n$x102")
-      // the corpus spread (dedupDocs) runs inside the packed checkpoint
+      // the corpus spread runs inside the packed checkpoint
       assert(x102.contains("ExistingRDD"),
         s"x102's at-scale branch must read its kernel-once checkpoint:\n$x102")
     }
@@ -252,22 +310,6 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected the broadcast-df prefix expression in:\n$plan")
     assert(!plan.contains("Window"),
       s"x20's default path must not rank prefixes with a window:\n$plan")
-  }
-
-  test("x20 corpus pass (dedupDocs) hash-spreads above the kernel-spread " +
-    "gate and keeps the raw scan below it (r17)") {
-    // at-scale branch: the checkpoint input must be hash-spread across
-    // defaultParallelism so the ShingleSet kernel and every checkpoint
-    // consumer parallelize (the one-row-group corpus otherwise serializes
-    // them; JobProfile sf1: 3.32 -> 1.48 s)
-    val plan = atScale { planOf(Catalog.dedupDocs(spark, sf0001)) }
-    assert(plan.contains("Exchange hashpartitioning(doc_id"),
-      s"the at-scale branch must force the x20 corpus spread:\n$plan")
-    // bench-SF branch: no exchange — the r16 sf0.1 adjudication (exchange +
-    // 32-task scheduling costs more than the one-task kernel saves) stands
-    val under = planOf(Catalog.dedupDocs(spark, sf0001))
-    assert(!under.contains("Exchange"),
-      s"x20's corpus pass under the spread gate must not exchange:\n$under")
   }
 
   test("x34 sort tail: one-task merge below the pair-sort gate, " +
@@ -419,16 +461,17 @@ class PlanShapeSpec extends AnyFunSuite {
     def formatted(df: org.apache.spark.sql.DataFrame): String =
       graft.tools.JobProfile.normalise(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    // layouts the rewrite keeps: an equi-join the planner broadcasts by
-    // size (the body has no hint to turn), a cross join's broadcast, and
-    // operators whose output reports no partitioning (Expand, a full
-    // outer join), so the aggregate or sort above them exchanges
+    // layouts the rewrite keeps: a semi or anti join the planner broadcasts
+    // by size (the optimizer makes it from a set operation or subquery
+    // after the rewrite, or pushes it below its stream side's coalesce), a
+    // cross join's broadcast, and operators whose output reports no
+    // partitioning (Expand, a full outer join), so the aggregate or sort
+    // above them exchanges
     val kept = Map(
-      "q10_anti_join" -> "anti join broadcast by size",
-      "q15_set_except" -> "anti join broadcast by size",
-      "x30_set_ops" -> "semi joins broadcast by size",
-      "x44_exists_subquery" -> "semi join broadcast by size",
-      "x50_range_join" -> "bin join broadcast by size",
+      "q10_anti_join" -> "anti join pushed below its stream side's coalesce",
+      "q15_set_except" -> "EXCEPT becomes an anti join after the rewrite",
+      "x30_set_ops" -> "INTERSECT and EXCEPT become semi and anti joins after the rewrite",
+      "x44_exists_subquery" -> "EXISTS becomes a semi join after the rewrite",
       "x71_knn_label" -> "cross join keeps its broadcast",
       "x35_full_outer" -> "full outer join output sorts through a range exchange",
       "x37_cube_agg" -> "cube's Expand aggregates through an exchange",

@@ -99,26 +99,15 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.unset(ScalePolicy.Conf)
   }
 
-  test("kernel tier: every kernelSpread caller decides once on what it spreads") {
-    // bytes under the cap with rows over it is NOT small
-    val tier = ScalePolicy.KernelSpread
-    assert(!tier.admits(bytes = 1, rows = tier.maxRows + 1))
-    assert(tier.admits(bytes = 1, rows = tier.maxRows))
-    val docs = Tables.rowCount(spark, sf0001, "documents")
-    val text = "documents(doc_id,text)"
-    val withSource = "documents(doc_id,source,text)"
-    val callers = Seq("q13_top_tokens", "x20_dedup_ngram", "x47_boilerplate_ngrams",
-      "x65_bpe_pairs", "x66_decontamination", "x85_passage_dedup", "x89_winnowing",
-      "x90_bm25", "x91_pmi_collocations", "x95_hybrid_search").map(_ -> text) ++
-      Seq("x97_source_overlap", "x101_topk_exemplars").map(_ -> withSource)
-    def kernel(ds: Seq[ScalePolicy.Decision]) = ds.filter(_.tier == tier.name)
+  /** The kernel-tier decisions catalog query `name` records as it is built,
+    * and whether it hash-spreads its kernel input across defaultParallelism.
+    * A checkpoint hides the spread exchange from the query's own plan: a
+    * Dataset checkpoint (x66, x91, x102) plans it in its own execution, and
+    * x20's partitioned checkpoint is read as the spread's n partitions. */
+  def kernelRun(name: String): (Seq[ScalePolicy.Decision], Boolean, String) = {
     val sc = spark.sparkContext
     val n = sc.defaultParallelism
     val hashSpread = s"hashpartitioning\\(doc_id#\\d+L?, $n\\), REPARTITION_BY_NUM".r
-    val stages = new AdaptiveSparkPlanHelper {}
-    // a checkpoint hides the spread exchange from the query's own plan: a
-    // Dataset checkpoint (x66, x91, x102) plans it in its own execution, and
-    // x20's partitioned checkpoint is read as the spread's n partitions
     val checkpointed = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
@@ -127,35 +116,68 @@ class PlanShapeSpec extends AnyFunSuite {
         case _ =>
       }
     }
-    def spreads(df: org.apache.spark.sql.DataFrame): Boolean = {
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val (df, ds) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
       org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
       val plan = df.queryExecution.executedPlan
-      (plan.toString +: checkpointed.toArray(Array.empty[String]).toSeq)
+      val spreads = (plan.toString +: checkpointed.toArray(Array.empty[String]).toSeq)
         .exists(hashSpread.findFirstIn(_).isDefined) ||
-        stages.collect(plan) { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd }
+        new AdaptiveSparkPlanHelper {}
+          .collect(plan) { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd }
           .exists(_.getNumPartitions == n)
-    }
+      (ds.filter(_.tier == ScalePolicy.KernelSpread.name), spreads, plan.toString)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("kernel-spread gate also triggers on doc COUNT, not only compressed " +
+    "bytes (r16: the same compression-fragility class as the one-task cap)") {
+    // bytes under the cap with rows over it is NOT small
+    val tier = ScalePolicy.KernelSpread
+    assert(!tier.admits(bytes = 1, rows = tier.maxRows + 1))
+    assert(tier.admits(bytes = 1, rows = tier.maxRows))
+    // the decision reads the corpus' footer doc count
+    val docs = Tables.rowCount(spark, sf0001, "documents")
+    val (_, decisions) = ScalePolicy.recorded(
+      Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
+    assert(decisions.exists(d => d.tier == tier.name &&
+      d.statistics.contains(s" rows=$docs ")),
+      s"x47's kernel-spread decision must carry rows=$docs: $decisions")
+    val plan = atScale {
+      planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001)) }
+    assert(plan.contains("Exchange hashpartitioning(doc_id"),
+      s"the at-scale branch must force the kernel spread:\n$plan")
+    // default at sf0.001: fused, zero exchanges
+    val fused = planOf(Catalog.queries("x47_boilerplate_ngrams")(spark, sf0001))
+    assert(!fused.contains("Exchange"),
+      s"x47 under the spread gate must plan zero exchanges:\n$fused")
+  }
+
+  test("kernel tier: every kernelSpread caller decides once on what it spreads") {
+    val docs = Tables.rowCount(spark, sf0001, "documents")
+    val text = "documents(doc_id,text)"
+    val withSource = "documents(doc_id,source,text)"
+    val callers = Seq("q13_top_tokens", "x20_dedup_ngram", "x47_boilerplate_ngrams",
+      "x65_bpe_pairs", "x66_decontamination", "x85_passage_dedup", "x89_winnowing",
+      "x90_bm25", "x91_pmi_collocations", "x95_hybrid_search").map(_ -> text) ++
+      Seq("x97_source_overlap", "x101_topk_exemplars").map(_ -> withSource)
     for ((name, input) <- callers) {
-      val (df, ds) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
-      assert(kernel(ds).map(d => (d.input, d.branch)) == Seq(input -> ScalePolicy.Small) &&
-        kernel(ds).head.statistics.contains(s" rows=$docs "), s"$name: $ds")
-      assert(!planOf(df).contains("Exchange hashpartitioning(doc_id"),
-        s"$name spreads under the kernel tier:\n${planOf(df)}")
+      val (kernel, spreads, plan) = kernelRun(name)
+      assert(kernel.map(d => (d.input, d.branch)) == Seq(input -> ScalePolicy.Small) &&
+        kernel.head.statistics.contains(s" rows=$docs "), s"$name: $kernel")
+      assert(!spreads, s"$name spreads under the kernel tier:\n$plan")
     }
     // x102 asks the kernel tier only on its at-scale branch
-    assert(kernel(ScalePolicy.recorded(Catalog.queries("x102_bloom_decontamination")(
-      spark, sf0001))._2).isEmpty)
-    sc.addSparkListener(listener)
-    try atScale {
+    assert(kernelRun("x102_bloom_decontamination")._1.isEmpty)
+    atScale {
       for ((name, input) <- callers :+ ("x102_bloom_decontamination" -> text)) {
-        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
-        checkpointed.clear()
-        val (df, ds) = ScalePolicy.recorded(Catalog.queries(name)(spark, sf0001))
-        assert(kernel(ds).map(d => (d.input, d.branch)) == Seq(input -> ScalePolicy.AtScale),
-          s"$name: $ds")
-        assert(spreads(df), s"$name must spread its kernel input:\n${planOf(df)}")
+        val (kernel, spreads, plan) = kernelRun(name)
+        assert(kernel.map(d => (d.input, d.branch)) == Seq(input -> ScalePolicy.AtScale),
+          s"$name: $kernel")
+        assert(spreads, s"$name must spread its kernel input:\n$plan")
       }
-    } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("onePartition answers an adaptive input from its plan, with no job") {
@@ -310,6 +332,22 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected the broadcast-df prefix expression in:\n$plan")
     assert(!plan.contains("Window"),
       s"x20's default path must not rank prefixes with a window:\n$plan")
+  }
+
+  test("x20 corpus pass (dedupDocs) hash-spreads above the kernel-spread " +
+    "gate and keeps the raw scan below it (r17)") {
+    // at-scale branch: x20's kernelSpread of documents(doc_id, text) must
+    // hash-spread across defaultParallelism so the ShingleSet kernel and
+    // every checkpoint consumer parallelize (the one-row-group corpus
+    // otherwise serializes them; JobProfile sf1: 3.32 -> 1.48 s)
+    val (above, spread, plan) = atScale { kernelRun("x20_dedup_ngram") }
+    assert(above.map(_.branch) == Seq(ScalePolicy.AtScale) && spread,
+      s"the at-scale branch must force the x20 corpus spread: $above\n$plan")
+    // bench-SF branch: no spread — the r16 sf0.1 adjudication (exchange +
+    // 32-task scheduling costs more than the one-task kernel saves) stands
+    val (under, spreadUnder, raw) = kernelRun("x20_dedup_ngram")
+    assert(under.map(_.branch) == Seq(ScalePolicy.Small) && !spreadUnder,
+      s"x20's corpus pass under the spread gate must not spread: $under\n$raw")
   }
 
   test("x34 sort tail: one-task merge below the pair-sort gate, " +

@@ -15,28 +15,15 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object Actions {
 
-  /** Collect up to `cap` rows in exactly ONE job, or None when the input
-    * has more. Per-partition `take(cap + 1)` bounds what any executor sends,
-    * and the driver-side result handler DISCARDS partition results as soon
-    * as the running total exceeds the cap — so driver heap is bounded by
-    * `cap` retained rows plus one in-flight partition result (≤ cap + 1),
-    * independent of partition count. (A plain per-partition-take collect()
-    * would hold up to numPartitions × (cap + 1) rows on the driver before
-    * the over-cap decision — with a 2²⁰ cap and 32 shuffle partitions that
-    * is the driver-OOM path the cap exists to prevent.)
-    *
-    * Exactness: if the job completes under the cap, no partition was
-    * truncated — a partition only truncates when it holds > cap + 1 rows,
-    * which alone already pushes the total past the cap and returns None. */
   /** Count up to `cap` rows in exactly ONE job, or None when the input has
     * more — [[boundedRows]]'s shape with NOTHING shipped to the driver but
     * one long per partition. Per-partition iteration stops at cap + 1 rows,
     * so over-cap inputs never pay a full scan of any one partition past the
     * point the answer is known to be "too big". The probe EXECUTES the
-    * input's plan (bounded per partition); callers whose input is expensive
-    * to recompute should localCheckpoint it first — every Auto-gated caller
-    * in this repo already materializes the slim probe frame for its own
-    * two-pass anyway. */
+    * input's plan (bounded per partition): a caller whose input is
+    * expensive to recompute and read again after the probe passes it
+    * through [[Materialize]] first, so the probe's job fills the blocks the
+    * later reads use. */
   def boundedCount(df: DataFrame, cap: Long): Option[Long] = {
     val n = cap + 1
     val counts = df.rdd.mapPartitions { it =>
@@ -51,6 +38,19 @@ object Actions {
     }
   }
 
+  /** Collect up to `cap` rows in exactly ONE job, or None when the input
+    * has more. Per-partition `take(cap + 1)` bounds what any executor sends,
+    * and the driver-side result handler DISCARDS partition results as soon
+    * as the running total exceeds the cap — so driver heap is bounded by
+    * `cap` retained rows plus one in-flight partition result (≤ cap + 1),
+    * independent of partition count. (A plain per-partition-take collect()
+    * would hold up to numPartitions × (cap + 1) rows on the driver before
+    * the over-cap decision — with a 2²⁰ cap and 32 shuffle partitions that
+    * is the driver-OOM path the cap exists to prevent.)
+    *
+    * Exactness: if the job completes under the cap, no partition was
+    * truncated — a partition only truncates when it holds > cap + 1 rows,
+    * which alone already pushes the total past the cap and returns None. */
   def boundedRows(df: DataFrame, cap: Int): Option[Array[Row]] = {
     val rdd = df.rdd
     val sc = rdd.sparkContext

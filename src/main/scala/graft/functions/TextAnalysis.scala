@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Materialize
 import Portable.{Dialect, Spark => SparkD, Duck => DuckD}
 
 /** Text-analysis operators for the training-data-pipeline tier: language ID
@@ -152,14 +153,13 @@ object TextAnalysis {
            textCol: String = "text"): DataFrame = {
     require(terms.nonEmpty && terms.size <= 8, s"1-8 query terms, got ${terms.size}")
     require(terms.forall(_.matches("[A-Za-z0-9_]+")), "terms must be plain words")
-    val tf = docs
+    val tf = Materialize(docs
       .select(col("doc_id"), expr(Portable.tokens(SparkD, textCol)).as("toks"))
       .select(col("doc_id") +:
         expr("CAST(size(toks) AS BIGINT)").as("dl") +:
         terms.zipWithIndex.map { case (t, i) =>
           expr(s"CAST(size(filter(toks, x -> x = '$t')) AS BIGINT)").as(s"tf$i")
-        }: _*)
-      .localCheckpoint(false)
+        }: _*))
     val statAggs = sum(col("dl")).as("sumdl") +:
       terms.indices.map(i =>
         sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
@@ -200,7 +200,7 @@ object TextAnalysis {
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, topK: Int = 20,
                       textCol: String = "text"): DataFrame = {
     val oneTask = graft.engine.ScalePolicy.onePartition("pmiCollocations", docs)
-    val cnt = docs
+    val cnt = Materialize.now(docs
       // one-pass byte-level AllTokens kernel (r16): same ORDERED token
       // array as filter(split(text,' '), t -> t <> '') — order matters
       // here (adjacent pairs) and the kernel preserves it, unlike the
@@ -218,17 +218,12 @@ object TextAnalysis {
           "ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>) END)"))
         .as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      // EAGER checkpoint (r16 JobProfile find): the count table has
-      // MULTIPLE CONCURRENT first consumers — the two unigram joins
-      // AQE-broadcast, and the at-scale path adds the tu/tb grand-total
-      // builds, all racing on Spark's broadcast thread pool. A lazy
-      // checkpoint materializes per racer (none sees a cached block yet),
-      // re-running the corpus tokenize pass 2× at sf0.1 (two concurrent
-      // 0.42 s jobs profiled) and up to 4× at scale. Eager runs it exactly
-      // once; every consumer then reads the cached vocabulary-bounded
-      // block.
-      .localCheckpoint(true)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c")),
+      // the two unigram joins broadcast, and the at-scale path adds the
+      // tu/tb grand-total builds, all racing on Spark's broadcast pool: a
+      // lazy fill would re-run the corpus tokenize pass once per racer
+      // (two concurrent 0.42 s jobs profiled at sf0.1, up to 4× at scale)
+      Materialize.ConcurrentConsumers)
     // one-partition input (r15, reshaped r16): the whole tail is JOIN-FREE
     // — the grand totals ride UNBOUNDED-frame windows over the single
     // partition (the x84/x93 pattern), and the unigram lookups ride
@@ -342,7 +337,7 @@ object TextAnalysis {
     require(keepPermille > 0 && keepPermille <= 1000,
       s"keepPermille in (0,1000], got $keepPermille")
     val dropPm = 1000 - keepPermille
-    val scored = docs
+    val scored = Materialize(docs
       // raw-text token-bearing filter, same rationale as [[quality]]
       .where(col(textCol).rlike("[^ ]"))
       .select(col("doc_id"), col("source"),
@@ -351,8 +346,7 @@ object TextAnalysis {
         element_at(col("st"), profiles.length + 1).cast("int").as("n_tokens"),
         element_at(col("st"), 1).cast("int").as("en_hits"))
       .select(col("doc_id"), col("source"),
-        expr(qualityScore("n_tokens", "en_hits")).as("quality"))
-      .localCheckpoint(false)
+        expr(qualityScore("n_tokens", "en_hits")).as("quality")))
     val thr = discreteThreshold(scored, dropPm)
     scored.join(broadcast(thr), Seq("source"))
       .groupBy("source")
@@ -386,10 +380,9 @@ object TextAnalysis {
     val s = docs.sparkSession
     if (graft.engine.ScalePolicy.onePartition("mixtureSample", docs))
       return mixtureSampleFused(docs, budgetPermille, textCol)
-    val toks = docs.select(col("doc_id"), col("source"),
+    val toks = Materialize(docs.select(col("doc_id"), col("source"),
       expr(s"size(${Portable.tokens(SparkD, textCol)})").cast("bigint")
-        .as("n_toks"))
-      .localCheckpoint(false)
+        .as("n_toks")))
     val bySource = toks.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_toks").cast("bigint").as("toks_total"))

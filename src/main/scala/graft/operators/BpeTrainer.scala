@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Materialize
 import graft.functions.Portable
 import graft.functions.Portable.{Spark => SparkD}
 
@@ -23,8 +24,8 @@ import graft.functions.Portable.{Spark => SparkD}
   *  3. a narrow per-row fold rewrites each word's symbol array, merging
   *     the winning pair greedily left-to-right (typed-literal Columns, so
   *     arbitrary symbol text never reaches a SQL string);
-  *  4. the vocab state is lazily localCheckpoint-ed — the Clusters-loop
-  *     lineage pattern (2^rounds plan growth otherwise).
+  *  4. the vocab state goes through [[graft.engine.Materialize]] — the
+  *     Clusters-loop lineage pattern (2^rounds plan growth otherwise).
   *
   * Scale: rounds × (one vocab-table aggregate + a narrow map). Web-corpus
   * word-frequency tables are ~10⁷ rows — comfortably distributed; the
@@ -45,13 +46,12 @@ object BpeTrainer {
     // word-frequency table → character symbols, end-of-word marker fused
     // onto the final character (the paper's formulation: '</w>' makes
     // word-final merges distinct from word-internal ones)
-    var vocab = docs
+    var vocab = Materialize(docs
       .select(explode(expr(Portable.tokens(SparkD, textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("weight"))
       .select(col("weight"), expr(
         "transform(split(w, ''), (c, i) -> " +
-          s"if(i = length(w) - 1, concat(c, '$EndMark'), c))").as("syms"))
-      .localCheckpoint(false)
+          s"if(i = length(w) - 1, concat(c, '$EndMark'), c))").as("syms")))
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var exhausted = false
@@ -86,8 +86,7 @@ object BpeTrainer {
             size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(fused)))
             .otherwise(concat(acc, array(x))))
-        vocab = vocab.select(col("weight"), merged.as("syms"))
-          .localCheckpoint(false)
+        vocab = Materialize(vocab.select(col("weight"), merged.as("syms")))
       }
       round += 1
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Materialize
 
 /** Cluster formation over a near-duplicate pair list — the step AFTER pair
   * generation in every dedup pipeline: x17/x18/x20-style operators emit
@@ -99,12 +100,11 @@ object Clusters {
     * iteration order. Nodes with no edges are absent (callers union
     * singletons back if needed). */
   def connectedComponents(edges: DataFrame, maxRounds: Int = MaxRounds): DataFrame = {
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(false) // materialized by the first consuming job
-    var labels = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(false)
+    // both filled by the first checksum probe
+    val sym = Materialize(edges.select(col("a").as("src"), col("b").as("dst"))
+      .union(edges.select(col("b").as("src"), col("a").as("dst"))))
+    var labels = Materialize(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     // convergence probe: labels only ever DECREASE, so the label multiset
     // changes iff any label changed — one order-independent checksum
     // aggregate per round replaces the round-3 join-against-previous +
@@ -126,11 +126,10 @@ object Clusters {
     while (!converged && rounds < maxRounds) {
       val msgs = sym.join(labels, sym("src") === labels("node"))
         .select(col("dst").as("node"), col("label"))
-      // lazy checkpoint: the checksum probe is the materializing action, so
-      // each round costs ONE job (state write rides the probe)
-      labels = labels.union(msgs)
-        .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint(false)
+      // the checksum probe fills the round's state, so each round costs
+      // ONE job
+      labels = Materialize(labels.union(msgs)
+        .groupBy("node").agg(min("label").as("label")))
       val next = checksum(labels)
       converged = next == cur
       cur = next
@@ -180,12 +179,11 @@ object Clusters {
     // singletons at the end (left-anti against the star forest's nodes)
     val selfLoopNodes = longEdges.where(col("a") === col("b"))
       .select(col("a").as("node")).distinct()
-    var e = longEdges
+    var e = Materialize(longEdges
       .where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
       .select(col("hi").as("a"), col("lo").as("b"))
-      .distinct()
-      .localCheckpoint(false) // materialized by the first probe
+      .distinct()) // filled by the first probe
 
     // one-row convergence probe: edge-set cardinality + order-independent
     // XOR checksum of per-edge hashes (bit_xor never overflows under ANSI,
@@ -225,7 +223,7 @@ object Clusters {
     var rounds = 0
     var converged = cur._1 == 0L // probe already counted the edges — no extra job
     while (!converged && rounds < maxRounds) {
-      e = smallStar(largeStar(e)).localCheckpoint(false) // probe materializes
+      e = Materialize(smallStar(largeStar(e))) // filled by the probe
       val next = probe(e)
       converged = next == cur
       cur = next

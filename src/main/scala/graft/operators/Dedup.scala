@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.engine.ScalePolicy
+import graft.engine.{Materialize, ScalePolicy}
 import graft.functions.{Portable, VectorFunctions}
 import graft.functions.Portable.{Spark => SparkD, Duck => DuckD}
 
@@ -122,27 +122,15 @@ object Dedup {
     *    always carry the same est_jaccard. */
   def minhashNearDupPairs(docs: DataFrame, minEstJaccard: Double,
                           textCol: String = "text"): DataFrame = {
-    // r17 (VERDICT r16 directive 1, measured at sf1; BASELINE.md "Round-17:
-    // x18's sort-tail re-execution fixed" and "Profile, 4-core sf1"):
-    // the callers' orderBy tail re-executes its CHILD up to three times —
-    // range sampler, skew resample, final pass — and the child here is the
+    // The callers' orderBy tail re-executes its child up to three times
+    // (range sampler, skew resample, final pass), and the child here is the
     // whole corpus pipeline (signature kernel, sig aggregation, band
-    // self-join, verification): 2.0 s of pair production billed ~3x made
-    // the query 6-7 s at sf1. Materializing the exploded doc-pair set
-    // instead was measured WORSE in r10 (65M rows at sf5, 51-57 s vs 14-21
-    // for orderBy re-execution). The asymmetry this exploits: group pairs
-    // BEFORE id expansion are a tiny, survivor-only table (21k group rows
-    // at sf1 vs 14M doc pairs), so an EAGER localCheckpoint of the merged
-    // group-pair table runs the corpus pipeline exactly ONCE, and the
-    // sort's three passes re-run only the checkpoint read + id explode.
-    // Same posture as x91's eager vocabulary checkpoint (r16): constructed
-    // inside the timed region on every run, keyed on nothing. Measured
-    // (JobProfile best-of-5): sf1 5.1-6.3 → 3.40 s back-to-back; sf5
-    // interleaved medians 11.56 → 9.15; sf0.1 a WASH within the query's
-    // ±0.4 s draw noise (4 interleaved pairs, medians 1.42 → 1.32) — the
-    // win scales with the corpus pipeline the checkpoint stops re-running.
-    val groupPairs = minhashGroupPairs(docs, minEstJaccard, textCol)
-      .localCheckpoint(true)
+    // self-join, verification). Group pairs BEFORE id expansion are a
+    // tiny, survivor-only table (21k group rows at sf1 vs 14M doc pairs),
+    // so materializing them runs the corpus pipeline once and the sort's
+    // passes re-run only the checkpoint read and the id explode
+    // (BASELINE.md, "Round-17: x18's sort-tail re-execution fixed").
+    val groupPairs = Materialize(minhashGroupPairs(docs, minEstJaccard, textCol))
 
     groupPairs
       .select(col("est_jaccard"), col("gmin_a"), col("gmin_b"),
@@ -318,19 +306,14 @@ object Dedup {
     // TWO kernel-bearing DataFilters (size(shingleSet)>0, isnotnull), making
     // the one-pass kernel evaluate 3× per row (measured in the r2 plan)
     //
-    // localCheckpoint: packed feeds FIVE consumers (df aggregate, both sides
-    // of the prefix candidate join, and both verify sides), and none of them
-    // are reusable exchanges — the round-3 plan re-ran the shingle-set
-    // kernel + parquet scan once per consumer. One LAZY narrow
-    // materialization makes every consumer a cache read (the df aggregate
-    // below is always the first action, so its map stage doubles as the
-    // checkpoint writer — no dedicated materialization job); at scale this
-    // is the standard multi-consumer spill-to-disk materialization (the
-    // alternative recomputes the kernel over the full corpus 5×). The
-    // checkpointed RDD is dropped by the ContextCleaner with the DataFrame.
-    // It keeps a doc_id-spread input's partitioning, so the verify joins on
-    // doc_id do not shuffle the packed sets again.
-    val packed = org.apache.spark.sql.GraftSqlBridge.localCheckpointPartitioned(
+    // packed feeds FIVE consumers (df aggregate, both sides of the prefix
+    // candidate join, and both verify sides), and none of them are
+    // reusable exchanges: materialized, every consumer reads the blocks the
+    // first one (the df aggregate's map stage) filled, instead of
+    // re-running the shingle-set kernel over the corpus 5×. It keeps a
+    // doc_id-spread input's partitioning, so the verify joins on doc_id do
+    // not shuffle the packed sets again.
+    val packed = Materialize(
       docs.select(col("doc_id"),
           graft.functions.TextHashFunctions.shingleSet(col(textCol)).as("shs"))
         .withColumn("nsh", size(col("shs"))))
@@ -717,12 +700,11 @@ object Dedup {
     // The cell table feeds three consumers (both pair sides + the size
     // report): one lazy narrow materialization instead of three assignment
     // passes (k dots per row each).
-    val cells = Similarity.cellsRankedAuto(emb, cents, 1)
+    val cells = Materialize(Similarity.cellsRankedAuto(emb, cents, 1)
       .select(col("vec_id"),
         VectorFunctions.asDouble(col("embedding")).as("v"),
         col("cid").as("cell"))
-      .withColumn("nrm", VectorFunctions.norm(col("v")))
-      .localCheckpoint(false)
+      .withColumn("nrm", VectorFunctions.norm(col("v"))))
     // Route on the LARGEST cell (one slim aggregate over the checkpointed
     // cell table — the connectedComponentsAuto/boundedRows probe pattern).
     // The declarative pair join materializes |cell|²/2 join rows each

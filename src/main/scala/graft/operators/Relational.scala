@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Materialize
 
 /** Reusable relational building blocks (SURVEY.md §2.11 E1–E3, E10).
   * All are thin, declarative compositions — Catalyst picks the physical
@@ -106,27 +107,6 @@ object Relational {
   def reportSortFused(df: DataFrame, cols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols: _*)
 
-  /** Skew-safe exact distinct count: salt by `hash(valueCol) % nSalts` so one
-    * hot group key fans out over `nSalts` reducers, then sum the per-salt
-    * distinct counts. Exactness holds because each VALUE maps to exactly one
-    * salt — per-salt distinct sets are disjoint, so their counts add.
-    *
-    * This is the 100 TB form of the reference's daily distinct-count query
-    * (SURVEY.md C13): a plain `COUNT(DISTINCT id)` makes the hottest day a
-    * single straggler reducer; salting bounds any reducer at 1/nSalts of the
-    * hot key (AQE's skew handling covers joins, not distinct aggregation).
-    */
-  def saltedDistinctCount(df: DataFrame, groupKeys: Seq[Column], valueCol: Column,
-                          outName: String, nSalts: Int = 64): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions.min(nSalts)
-    val perSalt = df
-      .groupBy(groupKeys :+ pmod(hash(valueCol), lit(n)).as("__salt"): _*)
-      .agg(count_distinct(valueCol).as("__partial"))
-    val keyNames = perSalt.columns.dropRight(2) // groupKeys as materialized names
-    perSalt.groupBy(keyNames.map(col): _*)
-      .agg(sum("__partial").as(outName))
-  }
-
   /** Per-key global row numbers WITHOUT a per-key window sort — the
     * scale-safe plan for distribution windows (ntile / percent_rank /
     * cume_dist) whose natural `Window.partitionBy(key)` has few distinct
@@ -145,8 +125,8 @@ object Relational {
     *     rank = local position − block start + block offset + 1.
     *
     * Pass 2 is CARDINALITY-GATED (round-6; the round-5 verdict's second
-    * scale finding): the block table is counted in one slim job on its
-    * cached RDD, and
+    * scale finding): the block table is materialized and read back in one
+    * bounded job ([[graft.engine.Actions.boundedRows]]), and
     *  - at ≤ `maxDriverBlocks` blocks (shards, rank buckets, bounded key
     *    sets) the offsets are computed on the driver and the block table
     *    broadcast-joins back — ZERO extra exchange of the data;
@@ -198,17 +178,16 @@ object Relational {
     }
     val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
     val sortExprs = keys.map(col) ++ order
-    // materialized by the block-stats pass below; the checkpoint keeps the
-    // range partitioning and sort order for the callers' consumers
-    val sorted = org.apache.spark.sql.GraftSqlBridge.localCheckpointPartitioned(
+    // filled by the block-stats job below; the checkpoint keeps the range
+    // partitioning and sort order for the callers' consumers
+    val sorted = Materialize(
       df.repartitionByRange(p, sortExprs: _*)
         .sortWithinPartitions(sortExprs: _*)
         .withColumn("__pid", spark_partition_id())
         .withColumn("__mid", monotonically_increasing_id()))
-    // block stats in ONE fused job (which also materializes the checkpoint):
-    // within a sorted partition each (keys) block is a contiguous run, so a
-    // linear per-partition scan replaces the groupBy's exchange + the AQE
-    // stage jobs it would schedule. Driver receives one tuple per block.
+    // block stats in one pass: within a sorted partition each (keys) block
+    // is a contiguous run, so a linear per-partition scan replaces the
+    // groupBy's exchange. One row per block.
     val nKeys = keys.length
     // boxed java.lang.Double/Float equals() distinguishes -0.0 from 0.0 while
     // Spark's sort and <=> treat them equal — normalize so one logical key
@@ -221,74 +200,72 @@ object Relational {
         java.lang.Float.valueOf(0.0f)
       case other => other
     }
-    val blockRdd = sorted
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val blocks = Materialize(spark.createDataFrame(sorted
       .select(("__pid" +: "__mid" +: keys).map(col): _*)
       .rdd.mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Any], Long, Long)]
+        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
         var curKey: Seq[Any] = null
         var pid = -1; var minMid = 0L; var cnt = 0L
         it.foreach { r =>
           val k = (2 until 2 + nKeys).map(i => normKey(r.get(i)))
           if (curKey == null || k != curKey) {
-            if (curKey != null) out += ((pid, curKey, minMid, cnt))
+            if (curKey != null) out += Row.fromSeq(pid +: curKey :+ minMid :+ cnt)
             curKey = k; pid = r.getInt(0); minMid = r.getLong(1); cnt = 0L
           }
           cnt += 1
         }
-        if (curKey != null) out += ((pid, curKey, minMid, cnt))
+        if (curKey != null) out += Row.fromSeq(pid +: curKey :+ minMid :+ cnt)
         out.iterator
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one slim job prices the route (and materializes the checkpoint);
-    // the cached block RDD is then read once more by whichever route wins
-    // and reclaimed by the ContextCleaner when the plan is collected
-    val nBlocks = blockRdd.count()
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+      },
+      StructType(StructField("__pid", IntegerType) +:
+        keys.map(k => df.schema(k)) :+
+        StructField("__minMid", LongType) :+
+        StructField("__cnt", LongType))))
+    // one bounded job prices the route and fills both checkpoints: the
+    // blocks come back when they fit on the driver
+    val onDriver = graft.engine.Actions.boundedRows(blocks,
+      math.min(maxDriverBlocks, Int.MaxValue - 1L).toInt)
+    graft.engine.ScalePolicy.route("driver-blocks", "keyedRowNumbers",
+      onDriver.fold(s"blocks>$maxDriverBlocks")(b => s"blocks=${b.length}") +
+        s" cap=$maxDriverBlocks",
+      if (onDriver.isDefined) "driver" else "distributed")
     val blockSchema = StructType(
       StructField("__pid", IntegerType) +:
         keys.map(k => df.schema(k)) :+
         StructField("__minMid", LongType) :+
         StructField("__off", LongType) :+
         StructField("__n", LongType))
-    val onDriver = nBlocks <= maxDriverBlocks
-    graft.engine.ScalePolicy.route("driver-blocks", "keyedRowNumbers",
-      s"blocks=$nBlocks cap=$maxDriverBlocks",
-      if (onDriver) "driver" else "distributed")
-    val blockDf =
-      if (onDriver) {
-        val augmented = blockRdd.collect().groupBy(_._2).valuesIterator
-          .flatMap { blocks =>
-            val ordered = blocks.sortBy(_._1)
-            val total = ordered.map(_._4).sum
+    val blockDf = onDriver match {
+      case Some(rows) =>
+        val augmented = rows.groupBy(r => r.toSeq.slice(1, 1 + nKeys)).valuesIterator
+          .flatMap { group =>
+            val ordered = group.sortBy(_.getInt(0))
+            val total = ordered.map(_.getLong(nKeys + 2)).sum
             var off = 0L
-            ordered.map { case (pid, key, minMid, c) =>
-              val o = off; off += c
-              org.apache.spark.sql.Row.fromSeq(pid +: key :+ minMid :+ o :+ total)
+            ordered.map { r =>
+              val o = off; off += r.getLong(nKeys + 2)
+              Row.fromSeq(r.toSeq.dropRight(1) :+ o :+ total)
             }
           }.toSeq
         broadcast(spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
+          new java.util.ArrayList[Row](
             scala.jdk.CollectionConverters.SeqHasAsJava(augmented).asJava),
           blockSchema))
-      } else {
-        val raw = spark.createDataFrame(
-          blockRdd.map(t => org.apache.spark.sql.Row.fromSeq(
-            t._1 +: t._2 :+ t._3 :+ t._4)),
-          StructType(StructField("__pid", IntegerType) +:
-            keys.map(k => df.schema(k)) :+
-            StructField("__minMid", LongType) :+
-            StructField("__cnt", LongType)))
+      case None =>
         // per-key offsets without ANY driver state: each key has at most
         // `parts` blocks (a key after a range sort is a contiguous span of
         // partitions), so both windows run over bounded partitions of the
         // SLIM block frame — never over the data rows
         val byKey = Window.partitionBy(keys.map(col): _*)
-        raw
+        blocks
           .withColumn("__off", coalesce(
             sum(col("__cnt")).over(byKey.orderBy(col("__pid"))
               .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
           .withColumn("__n", sum(col("__cnt")).over(byKey))
           .select(blockSchema.fieldNames.map(col): _*)
-      }
+    }
     // null-SAFE key equality: a NULL key is an ordinary group for
     // Window.partitionBy, so it must match its block row here too (a
     // name-based equi-join would silently drop every null-keyed row)
@@ -393,8 +370,8 @@ object Relational {
     * single task ever sees the whole corpus. The route probe is one
     * bounded-count job ([[graft.engine.Actions.boundedCount]]) that
     * re-executes the input plan bounded per partition — callers with an
-    * expensive input should localCheckpoint the slim projection first
-    * (x79 does). `maxSingleWindow = 0` forces the two-pass (the
+    * expensive input should pass the slim projection through
+    * [[graft.engine.Materialize]] first (x79 does). `maxSingleWindow = 0` forces the two-pass (the
     * scale-proof specs and the route A/B test do). */
   def orderedRunningTotal(df: DataFrame, order: Seq[Column], valueCol: String,
                           parts: Int = 0,
@@ -422,10 +399,9 @@ object Relational {
           lit(0L)))
     }
     val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
-    val sorted = df.repartitionByRange(p, order: _*)
+    val sorted = Materialize(df.repartitionByRange(p, order: _*)
       .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false) // materialized by the sums pass below
+      .withColumn("__pid", spark_partition_id())) // materialized by the sums pass below
     val pidIdx = sorted.schema.fieldIndex("__pid")
     val vIdx = sorted.schema.fieldIndex(valueCol)
     val partSums: Array[(Int, Long)] = sorted

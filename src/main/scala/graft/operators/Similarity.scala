@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Materialize
 import graft.functions.{Portable, VectorFunctions => V}
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -325,8 +326,7 @@ object Similarity {
     // materialization instead of running the assignment kernel (k dots per
     // row) twice per execution — the same rationale as semanticDedup's
     // checkpoint
-    val ranked = cellsRankedAuto(emb, cents, math.max(1, nprobe))
-      .localCheckpoint(false)
+    val ranked = Materialize(cellsRankedAuto(emb, cents, math.max(1, nprobe)))
     val cells = ranked.where(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("cid").as("cell"))
     val probes = ranked.where(col("vec_id") < maxQueryId && col("crn") <= nprobe)

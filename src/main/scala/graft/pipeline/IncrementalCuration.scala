@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.Materialize
 import graft.operators.Relational
 import graft.streaming.EventStreams
 
@@ -174,9 +175,9 @@ object IncrementalCuration {
       lit(1000000007L)
     // the heap keeps the cap's worth of best draws; the slice then takes
     // only the remaining budget — remaining ≤ cap always, so the heap
-    // never under-collects. localCheckpoint: the kept set feeds the counts
+    // never under-collects. Materialized: the kept set feeds the counts
     // write AND the survivor join (the tier's two-consumer rule).
-    val kept = gated
+    val kept = Materialize(gated
       .select(col("source"), struct(h.as("__h"), col(idCol).as("__id")).as("__s"))
       .groupBy("source")
       .agg(Relational.smallestK(col("__s"), capPerSource).as("__top"))
@@ -185,8 +186,7 @@ object IncrementalCuration {
         s"slice(__top, 1, CAST(GREATEST(0L, $capPerSource - " +
           "coalesce(__used, 0L)) AS INT))").as("__keep"))
       .select(col("source"), explode(col("__keep")).as("__k"))
-      .select(col("source"), col("__k.__id").as(idCol))
-      .localCheckpoint(false)
+      .select(col("source"), col("__k.__id").as(idCol)))
     kept.groupBy("source").agg(count(lit(1)).as("n_kept"))
       .withColumn("batch", lit(batchId))
       .write.mode("overwrite")

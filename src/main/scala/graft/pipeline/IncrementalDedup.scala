@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Materialize
 import graft.operators.Dedup
 
 /** Incremental exact dedup across ingest batches — the production shape of
@@ -78,7 +79,7 @@ object IncrementalDedup {
       else firstPerDig
     // the fresh set is consumed twice (digest write + survivor join);
     // checkpoint so the dedup joins run once (x20's trick, slim rows only)
-    val pinned = fresh.localCheckpoint(false)
+    val pinned = Materialize(fresh)
     pinned.select("dig").withColumn("batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -147,7 +148,7 @@ object IncrementalDedup {
       } else spark.emptyDataFrame.select(lit(0L).as(idCol)).limit(0)
     val dropped = droppedWithin.union(droppedCross).distinct()
     val survivors = sigs.join(dropped, Seq(idCol), "left_anti")
-    val pinned = survivors.select("sig").distinct().localCheckpoint(false)
+    val pinned = Materialize(survivors.select("sig").distinct())
     pinned.withColumn("batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -188,10 +189,9 @@ object IncrementalDedup {
       spark.sessionState.newHadoopConf())
     // the fingerprint table feeds the claim check AND the state write —
     // checkpoint so the kernel scan runs once (slim (id, fp) rows only)
-    val fps = batch.select(col(idCol),
+    val fps = Materialize(batch.select(col(idCol),
         explode(graft.functions.TextHashFunctions.winnowSet(
-          col(textCol), k, w)).as("fp"))
-      .localCheckpoint(false)
+          col(textCol), k, w)).as("fp")))
     val hist =
       if (fs.exists(new Path(historyPath)))
         // explicit schema, not inference: a first batch whose docs all fall
@@ -215,8 +215,8 @@ object IncrementalDedup {
         sum(when(col("claimed"), 1L).otherwise(0L)).as("n_cl"))
       .where(claimedAtLeast(col("n_cl"), col("n_fp"), dupFrac))
       .select(idCol)
-    val pinned = fps.join(dropped, Seq(idCol), "left_anti")
-      .select("fp").distinct().localCheckpoint(false)
+    val pinned = Materialize(fps.join(dropped, Seq(idCol), "left_anti")
+      .select("fp").distinct())
     pinned.withColumn("batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -259,10 +259,9 @@ object IncrementalDedup {
       spark.sessionState.newHadoopConf())
     // slim (id, off, digest) rows feed the claim check AND the state
     // write — checkpoint so the tokenize+md5 chunk pass runs once
-    val chunks = Dedup.passageChunks(
+    val chunks = Materialize(Dedup.passageChunks(
         batch.select(col(idCol), col(textCol)), chunkTokens, textCol)
-      .select(col(idCol), col("off"), col("h"))
-      .localCheckpoint(false)
+      .select(col(idCol), col("off"), col("h")))
     val hist =
       if (fs.exists(new Path(historyPath)))
         spark.read.schema("h BINARY, batch STRING").parquet(historyPath)
@@ -288,8 +287,8 @@ object IncrementalDedup {
         col("__n_chunks") - coalesce(col("__n_fresh"), lit(0L)),
         col("__n_chunks"), dupFrac))
       .select(idCol)
-    val pinned = chunks.join(dropped, Seq(idCol), "left_anti")
-      .select("h").distinct().localCheckpoint(false)
+    val pinned = Materialize(chunks.join(dropped, Seq(idCol), "left_anti")
+      .select("h").distinct())
     pinned.withColumn("batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -353,13 +352,12 @@ object IncrementalDedup {
       }
     // slim (cell, vec_id, v) rows feed the route probe, the claim check
     // AND the state write — checkpoint so assignment runs once
-    val assigned = graft.operators.Similarity.cellsRankedAuto(
+    val assigned = Materialize(graft.operators.Similarity.cellsRankedAuto(
         batch.select(col(idCol).as("vec_id"), col(embCol).as("embedding")),
         pinnedCents, 1)
       .select(col("vec_id"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"),
-        col("cid").as("cell"))
-      .localCheckpoint(false)
+        col("cid").as("cell")))
     val hist =
       if (fs.exists(new Path(vecPath)))
         // explicit schema ([[winnowBatch]]'s guard): a first batch of
@@ -374,8 +372,7 @@ object IncrementalDedup {
     val cells = hist.unionByName(assigned
       .select(col("cell"), lit(1).as("tag"), col("vec_id"), col("v")))
     val dropped = Dedup.semanticClaimedIds(cells, threshold)
-    val pinned = assigned.join(dropped, Seq("vec_id"), "left_anti")
-      .localCheckpoint(false)
+    val pinned = Materialize(assigned.join(dropped, Seq("vec_id"), "left_anti"))
     pinned.withColumn("batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

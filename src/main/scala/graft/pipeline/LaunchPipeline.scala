@@ -328,30 +328,19 @@ object LaunchPipeline {
     * rows as a local relation, so collecting it runs no job. The rows come
     * from [[graft.operators.PartitionIncremental]]: each day's count is
     * cached under a fingerprint of that day's files in
-    * `<table location>/_serving/daily_counts` (`daily_counts_salted` for the
-    * salted arm), and a call recomputes only the days whose files changed
-    * since (the run date's, in a daily run), through the same aggregate
-    * pruned to those days. A day whose files did not change runs no job.
+    * `<table location>/_serving/daily_counts`, and a call recomputes only
+    * the days whose files changed since (the run date's, in a daily run),
+    * through the same aggregate pruned to those days. A day whose files did not change runs no job.
     * Deleting the cache is always safe: a missing or unreadable cache makes
     * the call run the aggregate over the whole table. No conf turns it off.
     *
-    * The plain aggregate is the reference's own. A changed day whose scan
-    * is one task recomputes with no exchange at all; a larger recompute
-    * takes Spark's distinct plan, which hashes the scan on `(net, id)`, so
-    * a hot day spreads across reducers.
-    *
-    * `salted = true` swaps in [[graft.operators.Relational.saltedDistinctCount]]
-    * — the 100 TB form: it counts distinct ids per `(net, salt)` and sums
-    * the counts per `net`, which bounds one reducer's share of a hot day at
-    * 1/nSalts (same exact result, per-salt value sets are disjoint). */
-  def dailyCounts(spark: SparkSession, table: String = "launch_events",
-                  salted: Boolean = false): DataFrame =
-    graft.operators.PartitionIncremental(spark, table, "net",
-        if (salted) "daily_counts_salted" else "daily_counts") { events =>
-      if (salted)
-        graft.operators.Relational.saltedDistinctCount(
-          events, Seq(col("net")), col("id"), "event_count")
-      else events.groupBy("net").agg(countDistinct("id").as("event_count"))
+    * The aggregate is the reference's own. A changed day whose scan is one
+    * task recomputes with no exchange at all; a larger recompute takes
+    * Spark's distinct plan, which hashes the scan on `(net, id)`, so a hot
+    * day spreads across reducers without salting. */
+  def dailyCounts(spark: SparkSession, table: String = "launch_events"): DataFrame =
+    graft.operators.PartitionIncremental(spark, table, "net", "daily_counts") { events =>
+      events.groupBy("net").agg(countDistinct("id").as("event_count"))
     }
 
   /** Per-run hardening, opt-in so the default run stays byte-equivalent to

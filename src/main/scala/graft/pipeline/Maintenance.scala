@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.engine.Materialize
 
 /** Table maintenance for hive-partitioned parquet: small-file compaction.
   *
@@ -63,18 +64,17 @@ object Maintenance {
       .map(esc.unescapePathName)
     val pred = Merge.partitionPredicate(col(partitionCol),
       if (rawNames.contains(NullDir)) values :+ null else values)
-    // materialize before the write: Spark (correctly) refuses a plan that
-    // reads from the same path it is overwriting.
     // mergeSchema: after a provenance [[foldHistory]] the label partition's
     // files carry `obatch` while unfolded partitions' files don't; the
     // default single-footer schema pick could then compact the label
     // partition THROUGH the narrower schema and silently drop the
     // provenance column — corrupting the (source, origin-batch) identity
     // the curation budget reader dedups on (lifecycle spec pins this).
-    val compacted = spark.read.option("mergeSchema", "true").parquet(path)
-      .where(pred) // partition-pruned scan
-      .repartition(col(partitionCol))
-      .localCheckpoint()
+    val compacted = Materialize.now(
+      spark.read.option("mergeSchema", "true").parquet(path)
+        .where(pred) // partition-pruned scan
+        .repartition(col(partitionCol)),
+      Materialize.WriteReplacesInput)
     compacted.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
@@ -159,16 +159,14 @@ object Maintenance {
     require(provenance || aggCols.isEmpty,
       s"$path carries aggregated count column(s) ${aggCols.mkString(", ")}; " +
         "folding without provenance = true would corrupt reader SUMs")
-    val merged = (if (provenance) {
+    val merged = Materialize.now((if (provenance) {
         val withO =
           if (base.columns.contains("obatch"))
             base.withColumn("obatch", coalesce(col("obatch"), col("batch")))
           else base.withColumn("obatch", col("batch"))
         withO.drop("batch")
       } else base.drop("batch"))
-      .distinct()
-      // materialize before the write: same-path overwrite rule
-      .localCheckpoint()
+      .distinct(), Materialize.WriteReplacesInput)
     merged.withColumn("batch", lit(label)).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(path)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Materialize
 
 /** Row-level MERGE (upsert) into a hive-partitioned parquet table — the
   * generalization of the reference's partition-level re-run story
@@ -69,9 +70,8 @@ object Merge {
     val survivors = target.join(
       updates.select(col(key).as("__mk")).distinct(),
       target(key) <=> col("__mk"), "left_anti")
-    // materialize before the write: Spark (correctly) refuses a plan that
-    // reads from the same path it is overwriting
-    val merged = survivors.unionByName(updates).localCheckpoint()
+    val merged = Materialize.now(survivors.unionByName(updates),
+      Materialize.WriteReplacesInput)
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)

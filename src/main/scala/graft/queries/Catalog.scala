@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.ScalePolicy
+import graft.engine.{Materialize, ScalePolicy}
 import graft.functions.{Portable, TextAnalysis, VectorFunctions => V}
 import graft.functions.Portable.{Spark => SparkD, Duck => DuckD}
 import graft.operators.{Dedup, Multimodal, Relational, Similarity}
@@ -497,7 +497,7 @@ object Catalog {
       // range sort at scale (BASELINE.md, "Scale gate ledgers")
       if (ScalePolicy.fits(ScalePolicy.OneTask, t(s, d, "embeddings")))
         reportSort(pairs, col("a"), col("b"))
-      else pairs.localCheckpoint(true).orderBy(col("a"), col("b"))
+      else Materialize(pairs).orderBy(col("a"), col("b"))
     },
     Some {
       val anyBand = (0 until Similarity.Bands)
@@ -1472,12 +1472,10 @@ object Catalog {
   val x62 = Q("x62_funnel",
     (s, d) => {
       // ONE data exchange: hash-partition the slim event projection by
-      // user_id once and MATERIALIZE it (lazy localCheckpoint, the x20
-      // multi-consumer pattern — e feeds four consumers, and without the
-      // checkpoint each reference replans its own scan + exchange). The
-      // checkpoint carries the partitioning under AQE too
-      // (localCheckpointPartitioned), so the three per-user aggregates and
-      // all four user_id joins downstream are exchange-free.
+      // user_id once and materialize it (e feeds four consumers, and
+      // without it each reference replans its own scan + exchange). The
+      // relation keeps the partitioning, so the three per-user aggregates
+      // and all four user_id joins downstream are exchange-free.
       // The bounded O(users) report takes the usual reportSort tail.
       val eRaw = t(s, d, "events").select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -1503,8 +1501,7 @@ object Catalog {
               + when(col("t3").isNotNull, 1L).otherwise(0L)).as("depth")),
           col("user_id"))
       } else {
-      val e = org.apache.spark.sql.GraftSqlBridge
-        .localCheckpointPartitioned(eRaw.repartition(col("user_id")))
+      val e = Materialize(eRaw.repartition(col("user_id")))
       val s1 = e.where(col("event_type") === "signup")
         .groupBy("user_id").agg(min("us").as("t1"))
       val s2 = e.join(s1, "user_id")
@@ -1663,13 +1660,12 @@ object Catalog {
     // emitted by either branch, and shingleSet rows for it are discarded
     // by the same filters.
     (s, d) => {
-      val packed = ScalePolicy.kernelSpread(
+      val packed = Materialize(ScalePolicy.kernelSpread(
           t(s, d, "documents").select("doc_id", "text"), "doc_id")
         .select(col("doc_id"),
           (graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
             .as("h"),
-          graft.functions.TextHashFunctions.shingleSet(col("text")).as("shs"))
-        .localCheckpoint(false)
+          graft.functions.TextHashFunctions.shingleSet(col("text")).as("shs")))
       val trainSh = packed.where(col("h") < 80)
         .select(explode(col("shs")).as("sh"))
         .distinct()
@@ -2136,7 +2132,7 @@ object Catalog {
     * right place for it. */
   val x79 = Q("x79_sequence_packing",
     (s, d) => {
-      val nTok = t(s, d, "documents")
+      val nTok = Materialize(t(s, d, "documents")
         .select(col("doc_id"),
           // TokenCount kernel: one byte scan, no array — the running-total
           // two-pass evaluates this scan TWICE (block stats + final), so
@@ -2149,8 +2145,7 @@ object Catalog {
           // projection at the sampling job makes every later pass read
           // 16-byte rows instead of re-scanning text
           graft.functions.TextHashFunctions.tokenCount(col("text"))
-            .as("n_tokens"))
-        .localCheckpoint(false)
+            .as("n_tokens")))
       // parallel range sort on the tail, NOT reportSortFused: the bin count
       // is O(corpus_tokens / 512) — it grows with the input, so the
       // single-task fused tail would be exactly the shape this query's
@@ -3090,7 +3085,7 @@ object Catalog {
       // raw-text exchange on the md5 key (kernel 32-way, no second
       // exchange — hashpartitioning(h, N) satisfies the groupBy) measured
       // WORSE at sf5, 1.75 → 2.26 s best-of-5: unlike the x101/x64
-      // shapes, this kernel pass feeds a localCheckpoint, and the
+      // shapes, this kernel pass feeds a materialization, and the
       // checkpoint materializes the exchange's output anyway — the extra
       // shuffle write of full text costs more than the split-bound map
       // stage it parallelized. The split-bound 7-task job is the known
@@ -3103,7 +3098,7 @@ object Catalog {
       // shuffle + text-bearing min-agg buffers cost more than the ~2.5×
       // kernel-eval saving — the guide-§8 "decide with small rows" shape
       // (digests through the exchange, kernel pre-dedup) stays.
-      val scored = docs
+      val scored = Materialize(docs
         .select(md5(col("text")).as("h"), col("doc_id"), col("source"),
           graft.functions.TextHashFunctions.langStats(col("text")).as("st"))
         .select(col("h"), struct(col("doc_id"), col("source"),
@@ -3115,8 +3110,7 @@ object Catalog {
         .select(col("k.doc_id").as("doc_id"), col("k.source").as("source"),
           col("k.n_tokens").cast("bigint").as("n_toks"),
           expr(TextAnalysis.qualityScore("k.n_tokens", "k.en_hits"))
-            .as("quality"))
-        .localCheckpoint(false)
+            .as("quality")))
       val thr = TextAnalysis.discreteThreshold(scored, dropPermille = 300)
       // every scored source has a threshold (it was computed from scored),
       // so the broadcast join preserves rows and ONE aggregate yields the
@@ -3295,13 +3289,12 @@ object Catalog {
       } else {
         // one kernel pass computes (h, shs) defaultParallelism-wide; the
         // bloom build and both sides explode the packed arrays
-        val packed = ScalePolicy.kernelSpread(
+        val packed = Materialize(ScalePolicy.kernelSpread(
             t(s, d, "documents").select("doc_id", "text"), "doc_id")
           .select(col("doc_id"),
             (graft.functions.TextHashFunctions.fingerprint(col("text")) % 100)
               .as("h"),
-            graft.functions.TextHashFunctions.shingleSet(col("text")).as("shs"))
-          .localCheckpoint(false)
+            graft.functions.TextHashFunctions.shingleSet(col("text")).as("shs")))
         graft.operators.Dedup.contaminationCounts(
             packed.where(col("h") < 80), packed.where(col("h") >= 90), est,
             shsCol = Some("shs"))
@@ -3369,10 +3362,9 @@ object Catalog {
     * posture ([[graft.engine.GraftSession]]), and a `SPARK_GRAFT_CONF`
     * override of the AQE flag turns it off for the whole session. A plan
     * shape that needs a fixed partitioning carries it in the plan: x72/x98
-    * range-partition to a pinned count, which AQE never coalesces, and x62
-    * and [[Relational.keyedRowNumbers]] (x51, x87) checkpoint through
-    * `GraftSqlBridge.localCheckpointPartitioned`, whose relation keeps the
-    * planned partitioning. The per-query A/B of the retired static-planning
+    * range-partition to a pinned count, which AQE never coalesces, and every
+    * reused intermediate goes through [[graft.engine.Materialize]], whose
+    * relation keeps the planned partitioning. The per-query A/B of the retired static-planning
     * list is in BASELINE.md, "Planning posture". */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap

@@ -111,32 +111,25 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(ds.sparkSession, oneTask(ds.queryExecution.analyzed))
   }
 
-  /** Each checkpoint's prepared plan, kept alive while its RDD is: the
-    * plan owns the SQL metrics its tasks report into, and a collected
-    * metric fails every task's accumulator update on the driver. The plan
-    * does not reference the mapped RDD, so entries go with their RDDs. */
-  private val preparedPlans = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], execution.SparkPlan]())
-
-  /** Lazy local checkpoint that carries `df`'s planned physical partitioning
-    * and ordering under any AQE setting. `Dataset.localCheckpoint` takes
-    * them from the executed plan, which under AQE is an
-    * `AdaptiveSparkPlanExec` reporting `UnknownPartitioning`, so every
-    * consumer re-shuffles; executing that adaptive plan also runs its
-    * shuffle stages at build time. Here the checkpointed subtree is prepared
-    * without the adaptive rule: its exchanges keep their planned partition
-    * counts (nothing coalesces them), nothing runs until the first consuming
-    * job, and consumers keyed like the partitioning (aggregates,
-    * co-partitioned joins, windows) plan no exchange. Statistics and
-    * constraints are carried as `Dataset.localCheckpoint` carries them. */
-  def localCheckpointPartitioned(df: Dataset[Row]): DataFrame = {
+  /** `df` as a relation over a local checkpoint of its physical plan, and
+    * the checkpointed RDD, whose first job fills the blocks (the one
+    * mechanism behind [[graft.engine.Materialize]]). The plan is prepared
+    * without the adaptive rule, so its exchanges keep their planned
+    * partition counts and the relation reports the plan's partitioning and
+    * ordering; `Dataset.localCheckpoint` takes both from an
+    * `AdaptiveSparkPlanExec`, which reports `UnknownPartitioning`, and
+    * executes that plan's shuffle stages when it is called. Here the plan
+    * executes only when a job first asks for the RDD's partitions, so range
+    * samples, broadcasts and subqueries below the checkpoint run in that
+    * job's thread too. Statistics and constraints are carried as
+    * `Dataset.localCheckpoint` carries them. */
+  def checkpointed(df: Dataset[Row]): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
     val plan = execution.QueryExecution.prepareExecutedPlan(
       spark, ds.queryExecution.sparkPlan.clone())
-    val rdd = plan.execute().map(_.copy())
+    val rdd = new PlannedRDD(spark.sparkContext, plan)
     rdd.localCheckpoint()
-    preparedPlans.put(rdd, plan)
     def firstLeaf(p: catalyst.plans.physical.Partitioning)
         : catalyst.plans.physical.Partitioning = p match {
       case c: catalyst.plans.physical.PartitioningCollection =>
@@ -145,8 +138,32 @@ object GraftSqlBridge {
     }
     val (stats, constraints) = execution.LogicalRDD.rewriteStatsAndConstraints(
       ds.logicalPlan, ds.queryExecution.optimizedPlan)
-    classic.Dataset.ofRows(spark, execution.LogicalRDD(
+    (classic.Dataset.ofRows(spark, execution.LogicalRDD(
       ds.logicalPlan.output, rdd, firstLeaf(plan.outputPartitioning),
-      plan.outputOrdering, isStreaming = false)(spark, stats, constraints))
+      plan.outputOrdering, isStreaming = false)(spark, stats, constraints)), rdd)
+  }
+
+  /** The rows of a prepared `plan`, executed when the RDD's dependencies are
+    * first asked for (job submission), not when the RDD is made. It holds
+    * the plan's SQL metrics while it lives: tasks report into them, and a
+    * collected metric fails every task's accumulator update on the driver.
+    * The plan itself is dropped once executed, so a checkpoint over an
+    * earlier checkpoint (an iterative loop) does not keep it alive. */
+  private final class PlannedRDD(
+      sc: org.apache.spark.SparkContext,
+      @transient private var plan: execution.SparkPlan)
+    extends org.apache.spark.rdd.RDD[catalyst.InternalRow](sc, Nil) {
+    @transient private val metrics =
+      plan.collectWithSubqueries { case p => p.metrics.values }.flatten
+    override protected def getDependencies: Seq[org.apache.spark.Dependency[_]] = {
+      val rows = plan.execute().map(_.copy())
+      plan = null
+      Seq(new org.apache.spark.OneToOneDependency(rows))
+    }
+    override protected def getPartitions: Array[org.apache.spark.Partition] =
+      firstParent[catalyst.InternalRow].partitions
+    override def compute(split: org.apache.spark.Partition,
+                         context: org.apache.spark.TaskContext): Iterator[catalyst.InternalRow] =
+      firstParent[catalyst.InternalRow].iterator(split, context)
   }
 }

@@ -26,9 +26,7 @@ class DriverBoundSpec extends AnyFunSuite {
       "probe/centroid sets capped by maxQueryId/numCentroids parameters"),
     "Clusters.scala" -> (2,
       "one-row convergence aggregates (.head) — (count, checksum) pairs"),
-    "Relational.scala" -> (2,
-      "keyedRowNumbers blockStats ≤ parts × |key values|; " +
-        "orderedRunningTotal partSums ≤ parts"),
+    "Relational.scala" -> (1, "orderedRunningTotal partSums ≤ parts"),
     "PartitionIncremental.scala" -> (1,
       "recompute of the partitions whose files changed — the per-partition " +
         "aggregate's rows for those partitions only (one row per changed " +
@@ -130,6 +128,22 @@ class DriverBoundSpec extends AnyFunSuite {
     audit(siteCounts("src/main/scala", "\\bKernelSpread\\b"),
       Map("ScalePolicy.scala" -> (2, "the tier's definition and kernelSpread's decision")),
       "kernel tier reads", "lay the kernel input out with ScalePolicy.kernelSpread")
+  }
+
+  test("every held intermediate goes through Materialize, eager only at a " +
+    "named site") {
+    audit(siteCounts("src/main/scala",
+      "\\.localCheckpoint\\(|\\.persist\\(|\\.cache\\(\\)|\\.checkpoint\\("),
+      Map("GraftSqlBridge.scala" -> (1, "the checkpoint behind Materialize")),
+      "materializations", "pass the intermediate through graft.engine.Materialize")
+    audit(siteCounts("src/main/scala/graft", "Materialize\\.now\\("), Map(
+      "Merge.scala" -> (1, "upsertByKey: the merge overwrites the partitions it reads"),
+      "Maintenance.scala" -> (2, "compactPartitions and foldHistory overwrite " +
+        "the partitions they read"),
+      "TextAnalysis.scala" -> (1, "pmiCollocations: the count table's first " +
+        "consumers are broadcast builds racing on Spark's broadcast pool")),
+      "eager materializations", "use the lazy Materialize, or declare the " +
+        "site with its Materialize.Reason")
   }
 
   test("operators route on their input's partitioning, not a flag") {

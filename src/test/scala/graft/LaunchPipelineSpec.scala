@@ -160,17 +160,15 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql(s"DROP TABLE $table")
   }
 
-  test("hardened run registers serving table, validates schema; salted " +
-    "daily count is exact (opt-in 100TB hardening on the pipeline path)") {
+  test("hardened run registers the serving table and validates its schema " +
+    "(opt-in hardening on the pipeline path)") {
     val z = freshZones()
     val fetch: LP.PageFetcher = (_, _, _) => fixtureA1
     // validateSchema implies registration; a clean run must pass the gate
     LP.run(spark, z, day, fetch, LP.RunHardening(validateSchema = true))
     assert(spark.catalog.tableExists("launch_events"))
-    val plain = LP.dailyCounts(spark).collect().toSeq
-    val salted = LP.dailyCounts(spark, salted = true).collect().toSeq
-    assert(plain == Seq(Row(java.sql.Date.valueOf("2024-12-01"), 2L)))
-    assert(salted == plain) // salting changes the plan, never the answer
+    assert(LP.dailyCounts(spark).collect().toSeq ==
+      Seq(Row(java.sql.Date.valueOf("2024-12-01"), 2L)))
     spark.sql("DROP TABLE launch_events")
   }
 
@@ -362,77 +360,75 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     "exact rows on a cold cache, a re-published day, a day written as several " +
     "files and a cold whole table; each call records its scan-tasks decision, " +
     "which equals the tasks of the scan Spark plans") {
-    for (salted <- Seq(false, true)) { // each arm on its own zones and table
-      val z = freshZones()
-      val table = s"launch_events_route_${math.abs(z.base.hashCode)}"
-      val cacheName = if (salted) "daily_counts_salted" else "daily_counts"
-      /** Serves under `auto`, then from the same cache state under
-        * `spark.graft.scale=large`; both must equal the full query. Returns
-        * the scan-tasks statistic and branch the `auto` call recorded. */
-      def serveBoth(what: String): (String, String) = {
-        LP.registerTable(spark, z, table)
-        val cache = java.nio.file.Paths.get(s"${z.reports}/_serving/$cacheName")
-        val before = if (Files.exists(cache)) Some(Files.readAllBytes(cache)) else None
-        val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-        val capture = new QueryExecutionListener {
-          def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-            new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
-              case s: FileSourceScanExec => s.inputRDDs().head.getNumPartitions
-            }.foreach(scans.add)
-          def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-        }
-        def serve(): (Seq[Row], Seq[ScalePolicy.Decision], Int) = {
-          spark.listenerManager.register(capture)
-          scans.clear()
-          val (rows, decisions) = try ScalePolicy.recorded(
-            LP.dailyCounts(spark, table, salted).collect().toSeq)
-          finally {
-            org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-            spark.listenerManager.unregister(capture)
-          }
-          assert(scans.size == 1, s"$what: scans ${scans.asScala}")
-          (rows, decisions.filter(_.input == s"$table/$cacheName"), scans.peek())
-        }
-        val (auto, autoDecisions, _) = serve()
-        val changed = PartitionIncremental.lastReport.changed
-        before match {
-          case Some(bytes) => Files.write(cache, bytes)
-          case None => Files.deleteIfExists(cache)
-        }
-        val (forced, forcedDecisions, tasks) = SparkTestSession.atScale(serve())
-        assert(PartitionIncremental.lastReport.changed == changed, what)
-        assert(auto == fullCounts(table) && forced == auto,
-          s"$what (salted=$salted): auto $auto, forced $forced")
-        assert(forcedDecisions.map(d => s"${d.statistics} ${d.branch}") ==
-          Seq(s"${ScalePolicy.Conf}=large ${ScalePolicy.AtScale}"), s"$what: $forcedDecisions")
-        assert(autoDecisions.map(_.statistics) == Seq(s"scan-tasks=$tasks cap=1"),
-          s"$what: the scan planned $tasks tasks: $autoDecisions")
-        autoDecisions.head.statistics -> autoDecisions.head.branch
+    val z = freshZones()
+    val table = s"launch_events_route_${math.abs(z.base.hashCode)}"
+    val cacheName = "daily_counts"
+    /** Serves under `auto`, then from the same cache state under
+      * `spark.graft.scale=large`; both must equal the full query. Returns
+      * the scan-tasks statistic and branch the `auto` call recorded. */
+    def serveBoth(what: String): (String, String) = {
+      LP.registerTable(spark, z, table)
+      val cache = java.nio.file.Paths.get(s"${z.reports}/_serving/$cacheName")
+      val before = if (Files.exists(cache)) Some(Files.readAllBytes(cache)) else None
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val capture = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+            case s: FileSourceScanExec => s.inputRDDs().head.getNumPartitions
+          }.foreach(scans.add)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
-      /** Lands `d` with one launch per id, transformed into `files` files. */
-      def publishFiles(d: LocalDate, ids: Seq[String], files: Int): Unit = {
-        publishDay(z, d, ids)
-        LP.launchEvents(LP.readRaw(spark, z, d)).repartition(files)
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("net").parquet(z.processed)
-        LP.publish(spark, z, d)
+      def serve(): (Seq[Row], Seq[ScalePolicy.Decision], Int) = {
+        spark.listenerManager.register(capture)
+        scans.clear()
+        val (rows, decisions) = try ScalePolicy.recorded(
+          LP.dailyCounts(spark, table).collect().toSeq)
+        finally {
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+          spark.listenerManager.unregister(capture)
+        }
+        assert(scans.size == 1, s"$what: scans ${scans.asScala}")
+        (rows, decisions.filter(_.input == s"$table/$cacheName"), scans.peek())
       }
-      val small = "scan-tasks=1 cap=1" -> ScalePolicy.Small
-      try {
-        publishDay(z, day, Seq("a", "b", "a"))
-        assert(serveBoth("cold cache, one day") == small)
-        publishDay(z, day.plusDays(1), Seq("a", "c"))
-        assert(serveBoth("a new day") == small)
-        publishDay(z, day, Seq("a"))
-        assert(serveBoth("re-published day") == small)
-        publishFiles(day.plusDays(2), Seq("a", "b", "c", "d", "e", "f"), files = 3)
-        assert(published(z, day.plusDays(2)) == 3)
-        assert(serveBoth("a day of three files") ==
-          ("scan-tasks=3 cap=1" -> ScalePolicy.AtScale))
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"${z.reports}/_serving"))
-        assert(serveBoth("cold whole table")._2 == ScalePolicy.AtScale)
-      } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+      val (auto, autoDecisions, _) = serve()
+      val changed = PartitionIncremental.lastReport.changed
+      before match {
+        case Some(bytes) => Files.write(cache, bytes)
+        case None => Files.deleteIfExists(cache)
+      }
+      val (forced, forcedDecisions, tasks) = SparkTestSession.atScale(serve())
+      assert(PartitionIncremental.lastReport.changed == changed, what)
+      assert(auto == fullCounts(table) && forced == auto,
+        s"$what: auto $auto, forced $forced")
+      assert(forcedDecisions.map(d => s"${d.statistics} ${d.branch}") ==
+        Seq(s"${ScalePolicy.Conf}=large ${ScalePolicy.AtScale}"), s"$what: $forcedDecisions")
+      assert(autoDecisions.map(_.statistics) == Seq(s"scan-tasks=$tasks cap=1"),
+        s"$what: the scan planned $tasks tasks: $autoDecisions")
+      autoDecisions.head.statistics -> autoDecisions.head.branch
     }
+    /** Lands `d` with one launch per id, transformed into `files` files. */
+    def publishFiles(d: LocalDate, ids: Seq[String], files: Int): Unit = {
+      publishDay(z, d, ids)
+      LP.launchEvents(LP.readRaw(spark, z, d)).repartition(files)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("net").parquet(z.processed)
+      LP.publish(spark, z, d)
+    }
+    val small = "scan-tasks=1 cap=1" -> ScalePolicy.Small
+    try {
+      publishDay(z, day, Seq("a", "b", "a"))
+      assert(serveBoth("cold cache, one day") == small)
+      publishDay(z, day.plusDays(1), Seq("a", "c"))
+      assert(serveBoth("a new day") == small)
+      publishDay(z, day, Seq("a"))
+      assert(serveBoth("re-published day") == small)
+      publishFiles(day.plusDays(2), Seq("a", "b", "c", "d", "e", "f"), files = 3)
+      assert(published(z, day.plusDays(2)) == 3)
+      assert(serveBoth("a day of three files") ==
+        ("scan-tasks=3 cap=1" -> ScalePolicy.AtScale))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"${z.reports}/_serving"))
+      assert(serveBoth("cold whole table")._2 == ScalePolicy.AtScale)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("incremental serving equals the full query after a re-publish with " +
@@ -538,15 +534,13 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       publishDay(z, day.plusDays(i), Seq("a", "b", "c").take(1 + i % 3))
       LP.registerTable(spark, z, table)
       val want = fullCounts(table)
-      for (salted <- Seq(false, true)) {
-        val calls = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[Row]] {
-          def call(): Seq[Row] = LP.dailyCounts(spark, table, salted).collect().toSeq
-        }))
-        calls.foreach(c => assert(c.get() == want, s"day $i salted=$salted"))
-      }
+      val calls = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[Row]] {
+        def call(): Seq[Row] = LP.dailyCounts(spark, table).collect().toSeq
+      }))
+      calls.foreach(c => assert(c.get() == want, s"day $i"))
     } finally pool.shutdown()
-    try for (salted <- Seq(false, true)) {
-      val (got, events) = cacheLog(LP.dailyCounts(spark, table, salted).collect().toSeq)
+    try {
+      val (got, events) = cacheLog(LP.dailyCounts(spark, table).collect().toSeq)
       assert(got == fullCounts(table))
       assert(!events.exists(_._1 == Level.WARN), events)
       assert(PartitionIncremental.lastReport.state == "hit" &&

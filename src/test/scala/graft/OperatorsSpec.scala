@@ -130,16 +130,6 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("saltedDistinctCount is exactly COUNT(DISTINCT) on the real corpus") {
-    val ev = graft.sources.Tables.events(spark, SparkTestSession.sf0001)
-    val salted = Relational.saltedDistinctCount(ev,
-      Seq(to_date(col("ts")).as("d")), col("user_id"), "event_count")
-    val plain = ev.groupBy(to_date(col("ts")).as("d"))
-      .agg(countDistinct(col("user_id")).as("event_count"))
-    assert(salted.except(plain).count() == 0)
-    assert(plain.except(salted).count() == 0)
-  }
-
   test("asOfJoin matches the most recent prior right row, ties count as prior") {
     import java.sql.Timestamp
     def ts(m: Int) = new Timestamp(1704067200000L + m * 60000L)

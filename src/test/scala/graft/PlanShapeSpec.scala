@@ -317,10 +317,10 @@ class PlanShapeSpec extends AnyFunSuite {
     val plan = planOf(Catalog.queries("x20_dedup_ngram")(spark, sf0001))
     assert(plan.contains("graft_sorted_intersect_count"),
       s"expected packed-set merge verification in:\n$plan")
-    // round-4: the one-pass shingle kernel no longer appears in the query
-    // plan because packed is localCheckpoint-ed at build time — the kernel
-    // runs ONCE in the checkpoint job instead of once per consumer (five
-    // scans in the round-3 plan), and every consumer reads the RDD scan
+    // the one-pass shingle kernel does not appear in the query plan because
+    // packed is materialized: the kernel runs ONCE, in the first consuming
+    // job, instead of once per consumer (five scans in the round-3 plan),
+    // and every consumer reads the RDD scan
     assert(plan.contains("ExistingRDD"),
       s"expected the checkpointed packed-set scan in:\n$plan")
     assert(!plan.contains("graft_shingle_set"),
@@ -466,8 +466,8 @@ class PlanShapeSpec extends AnyFunSuite {
     for (name <- Seq("x62_funnel")) {
       // at-scale branch
       val plan = atScale { planOf(Catalog.queries(name)(spark, sf0001)) }
-      // the repartition(user_id) ran once inside the localCheckpoint
-      // materialization; every consumer reads the partitioning-preserving
+      // the repartition(user_id) runs once, inside the materialization;
+      // every consumer reads the partitioning-preserving
       // RDD scan, so aggregates and user_id joins need NO further shuffle
       val dataExchanges = "Exchange (range|hash)partitioning".r
         .findAllIn(plan).length
@@ -576,9 +576,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("launch serving recomputes a one-task changed day with no exchange " +
-    "(plain and salted) and returns a local relation; at scale the scan " +
-    "hashes on (net, id) plain and (net, salt) salted, and an exchange on " +
-    "net alone moves only partial counts; publish runs no query and no job " +
+    "and returns a local relation; at scale the scan hashes on (net, id), " +
+    "and an exchange on net alone moves only partial counts; publish runs no query and no job " +
     "and leaves every other partition byte-identical") {
     import graft.pipeline.{LaunchPipeline => LP}
     val day = java.time.LocalDate.parse("2024-12-01")
@@ -640,50 +639,46 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     /** Re-publishes the day and serves it: the recompute's plan, its
       * exchanges' partitionings and the call's decisions on the table. */
-    def recompute(salted: Boolean): (SparkPlan, Seq[ShuffleExchangeExec], Seq[String]) = {
+    def recompute(): (SparkPlan, Seq[ShuffleExchangeExec], Seq[String]) = {
       LP.publish(spark, z, day) // the day's files change
       LP.registerTable(spark, z, table)
       spark.listenerManager.register(capture)
       recomputed.clear()
-      val (served, decisions) = try ScalePolicy.recorded(LP.dailyCounts(spark, table, salted))
+      val (served, decisions) = try ScalePolicy.recorded(LP.dailyCounts(spark, table))
         finally {
           org.apache.spark.GraftListenerBus.drain(sc)
           spark.listenerManager.unregister(capture)
         }
       assert(served.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
-        s"dailyCounts(salted=$salted) should return a local relation:\n" +
+        s"dailyCounts should return a local relation:\n" +
           served.queryExecution.optimizedPlan)
-      assert(recomputed.size == 1, s"dailyCounts(salted=$salted) ran ${recomputed.size} queries")
+      assert(recomputed.size == 1, s"dailyCounts ran ${recomputed.size} queries")
       val plan = recomputed.peek()
       val exchanges = stages.collect(plan) { case e: ShuffleExchangeExec => e }
       assert(!exchanges.exists(_.outputPartitioning.toString.startsWith("rangepartitioning")),
-        s"dailyCounts(salted=$salted) should not range-sort its per-day rows:\n$plan")
+        s"dailyCounts should not range-sort its per-day rows:\n$plan")
       (plan, exchanges, decisions.filter(_.input.startsWith(s"$table/")).map(_.toString))
     }
     def hashesOn(e: ShuffleExchangeExec, keys: String*): Boolean =
       e.outputPartitioning.toString.matches(
         keys.map(k => s"$k#\\d+, ").mkString("hashpartitioning\\(", "", "\\d+\\)"))
-    try for (salted <- Seq(false, true)) {
-      LP.dailyCounts(spark, table, salted) // cold: the whole table
-      val (plan, exchanges, decisions) = recompute(salted)
+    try {
+      LP.dailyCounts(spark, table) // cold: the whole table
+      val (plan, exchanges, decisions) = recompute()
       assert(exchanges.isEmpty,
-        s"a one-task recompute (salted=$salted) should plan no exchange:\n$plan")
+        s"a one-task recompute should plan no exchange:\n$plan")
       assert(decisions.size == 1 && decisions.head.contains("scan-tasks=1 cap=1 branch=small"),
-        s"salted=$salted: $decisions")
+        decisions)
       // at scale the scan's rows never funnel through a reducer per day: an
       // exchange on net alone only moves the partial counts of a dedup that
       // an exchange below it already spread
-      val (scaled, large, _) = atScale(recompute(salted))
+      val (scaled, large, _) = atScale(recompute())
       val onNet = large.filter(hashesOn(_, "net"))
       assert(onNet.forall(e => stages.collect(e.child) { case x: ShuffleExchangeExec => x }.nonEmpty),
-        s"salted=$salted: an exchange on net alone moves the scan's rows:\n$scaled")
-      if (salted) // the salt is a pulled-out grouping expression
-        assert(large.exists(hashesOn(_, "net", "_groupingexpression")),
-          s"the salted arm should hash on (net, salt):\n$scaled")
-      else
-        assert(large.exists(hashesOn(_, "net", "id")),
-          s"the plain arm should hash the scan on (net, id):\n$scaled")
+        s"an exchange on net alone moves the scan's rows:\n$scaled")
+      assert(large.exists(hashesOn(_, "net", "id")),
+        s"the aggregate should hash the scan on (net, id):\n$scaled")
     } finally spark.sql(s"DROP TABLE $table")
   }
 }

@@ -7,13 +7,17 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
   *
   * Every operator or query that reads an intermediate more than once, or
   * must read it before a write replaces its input, passes it through here.
-  * The relation returned reads a local checkpoint of `df`'s physical plan,
-  * which is prepared without the adaptive rule
-  * ([[GraftSqlBridge.checkpointed]]), so it keeps the planned partitioning
-  * and ordering: a consumer keyed like the plan (an aggregate, a
-  * co-partitioned join, a window) plans no exchange above it. The blocks
-  * live on the executor that computed them and are released with the RDD
-  * (Spark's `ContextCleaner`, once the relation is unreachable).
+  * The relation returned reads a local checkpoint of `df`'s physical plan
+  * ([[GraftSqlBridge.checkpointed]]). When the caller set the layout (a
+  * `repartition` or `coalesce` under per-row operators only) or the plan
+  * has no shuffle, the plan is prepared without the adaptive rule and the
+  * relation keeps its partitioning and ordering: a consumer keyed like it
+  * (an aggregate, a co-partitioned join, a window) plans no exchange above
+  * it. A plan with a shuffle the planner placed runs adaptively, so AQE
+  * coalesces it (a write fed by the relation writes as many files as AQE's
+  * partitions, not `spark.sql.shuffle.partitions`). The blocks live on the executor that
+  * computed them and are released with the RDD (Spark's `ContextCleaner`,
+  * once the relation is unreachable).
   *
   *  - [[apply]] (the default) runs nothing: the plan executes in the first
   *    job that consumes the relation, which fills the blocks every later

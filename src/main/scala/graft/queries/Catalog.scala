@@ -3364,7 +3364,7 @@ object Catalog {
     * shape that needs a fixed partitioning carries it in the plan: x72/x98
     * range-partition to a pinned count, which AQE never coalesces, and every
     * reused intermediate goes through [[graft.engine.Materialize]], whose
-    * relation keeps the planned partitioning. The per-query A/B of the retired static-planning
+    * relation keeps a layout its caller set. The per-query A/B of the retired static-planning
     * list is in BASELINE.md, "Planning posture". */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap

@@ -113,22 +113,42 @@ object GraftSqlBridge {
 
   /** `df` as a relation over a local checkpoint of its physical plan, and
     * the checkpointed RDD, whose first job fills the blocks (the one
-    * mechanism behind [[graft.engine.Materialize]]). The plan is prepared
-    * without the adaptive rule, so its exchanges keep their planned
-    * partition counts and the relation reports the plan's partitioning and
-    * ordering; `Dataset.localCheckpoint` takes both from an
-    * `AdaptiveSparkPlanExec`, which reports `UnknownPartitioning`, and
-    * executes that plan's shuffle stages when it is called. Here the plan
-    * executes only when a job first asks for the RDD's partitions, so range
-    * samples, broadcasts and subqueries below the checkpoint run in that
-    * job's thread too. Statistics and constraints are carried as
-    * `Dataset.localCheckpoint` carries them. */
+    * mechanism behind [[graft.engine.Materialize]]). The plan executes only
+    * when a job first asks for the RDD's partitions, so range samples,
+    * broadcasts, subqueries and adaptive stages below the checkpoint run in
+    * that job's thread; `Dataset.localCheckpoint` executes them when it is
+    * called. How the plan is prepared depends on what sets its layout:
+    *  - a caller's `repartition`/`coalesce` under per-row operators only,
+    *    or no shuffle at all: the plan is prepared without the adaptive
+    *    rule, so its exchanges keep their planned partition counts and the
+    *    relation reports the plan's partitioning and ordering (consumers
+    *    keyed like it, such as aggregates, co-partitioned joins and
+    *    windows, plan no exchange);
+    *  - a shuffle the planner placed: the adaptive plan, so AQE coalesces,
+    *    re-selects joins and splits skew below the checkpoint as it does in
+    *    any query, and the relation reports no partitioning, since AQE
+    *    fixes it only at run time. The plan executes as its own SQL
+    *    execution, as `Dataset.localCheckpoint`'s does, so listeners see
+    *    its plan and its adaptive updates.
+    * Statistics and constraints are carried as `Dataset.localCheckpoint`
+    * carries them. */
   def checkpointed(df: Dataset[Row]): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
+    import catalyst.plans.logical._
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
-    val plan = execution.QueryExecution.prepareExecutedPlan(
+    def callerLayout(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Filter => callerLayout(p.children.head)
+      case s: Sort => !s.global && callerLayout(s.child)
+      case _: RepartitionOperation => true
+      case _ => false
+    }
+    val static = execution.QueryExecution.prepareExecutedPlan(
       spark, ds.queryExecution.sparkPlan.clone())
-    val rdd = new PlannedRDD(spark.sparkContext, plan)
+    val (plan, adaptive) =
+      if (callerLayout(ds.queryExecution.optimizedPlan) ||
+          !static.exists(_.isInstanceOf[execution.exchange.ShuffleExchangeLike])) (static, None)
+      else (ds.queryExecution.executedPlan, Some(ds.queryExecution))
+    val rdd = new PlannedRDD(spark.sparkContext, plan, adaptive)
     rdd.localCheckpoint()
     def firstLeaf(p: catalyst.plans.physical.Partitioning)
         : catalyst.plans.physical.Partitioning = p match {
@@ -144,19 +164,25 @@ object GraftSqlBridge {
   }
 
   /** The rows of a prepared `plan`, executed when the RDD's dependencies are
-    * first asked for (job submission), not when the RDD is made. It holds
-    * the plan's SQL metrics while it lives: tasks report into them, and a
-    * collected metric fails every task's accumulator update on the driver.
-    * The plan itself is dropped once executed, so a checkpoint over an
-    * earlier checkpoint (an iterative loop) does not keep it alive. */
+    * first asked for (job submission), not when the RDD is made; an
+    * adaptive plan executes within a new SQL execution of its query. It holds
+    * the executed plan's SQL metrics, adaptive stages included, while it
+    * lives: tasks report into them, and a collected metric fails every
+    * task's accumulator update on the driver. The plan itself is dropped
+    * once executed, so a checkpoint over an earlier checkpoint (an
+    * iterative loop) does not keep it alive. */
   private final class PlannedRDD(
       sc: org.apache.spark.SparkContext,
-      @transient private var plan: execution.SparkPlan)
+      @transient private var plan: execution.SparkPlan,
+      @transient private var adaptive: Option[execution.QueryExecution])
     extends org.apache.spark.rdd.RDD[catalyst.InternalRow](sc, Nil) {
-    @transient private val metrics =
-      plan.collectWithSubqueries { case p => p.metrics.values }.flatten
+    @transient private var metrics: Seq[execution.metric.SQLMetric] = Nil
     override protected def getDependencies: Seq[org.apache.spark.Dependency[_]] = {
-      val rows = plan.execute().map(_.copy())
+      val rows = adaptive.fold(plan.execute())(qe =>
+        execution.SQLExecution.withNewExecutionId(qe)(plan.execute())).map(_.copy())
+      adaptive = None
+      metrics = new execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(plan) { case p => p.metrics.values }.flatten
       plan = null
       Seq(new org.apache.spark.OneToOneDependency(rows))
     }

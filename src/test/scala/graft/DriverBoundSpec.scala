@@ -26,7 +26,9 @@ class DriverBoundSpec extends AnyFunSuite {
       "probe/centroid sets capped by maxQueryId/numCentroids parameters"),
     "Clusters.scala" -> (2,
       "one-row convergence aggregates (.head) — (count, checksum) pairs"),
-    "Relational.scala" -> (1, "orderedRunningTotal partSums ≤ parts"),
+    "Relational.scala" -> (2,
+      "keyedRowNumbers block table, collected only when its count is " +
+        "≤ maxDriverBlocks; orderedRunningTotal partSums ≤ parts"),
     "PartitionIncremental.scala" -> (1,
       "recompute of the partitions whose files changed — the per-partition " +
         "aggregate's rows for those partitions only (one row per changed " +
@@ -134,7 +136,11 @@ class DriverBoundSpec extends AnyFunSuite {
     "named site") {
     audit(siteCounts("src/main/scala",
       "\\.localCheckpoint\\(|\\.persist\\(|\\.cache\\(\\)|\\.checkpoint\\("),
-      Map("GraftSqlBridge.scala" -> (1, "the checkpoint behind Materialize")),
+      Map("GraftSqlBridge.scala" -> (1, "the checkpoint behind Materialize"),
+        "Relational.scala" -> (1, "keyedRowNumbers' block table: an RDD of " +
+          "per-block tuples, counted to price the route and read once more by " +
+          "the route that wins; the driver route unpersists it after its " +
+          "collect, the ContextCleaner releases the distributed route's")),
       "materializations", "pass the intermediate through graft.engine.Materialize")
     audit(siteCounts("src/main/scala/graft", "Materialize\\.now\\("), Map(
       "Merge.scala" -> (1, "upsertByKey: the merge overwrites the partitions it reads"),

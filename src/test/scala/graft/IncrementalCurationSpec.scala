@@ -228,6 +228,23 @@ class IncrementalCurationSpec extends AnyFunSuite {
     assert(funnel("b1") == expected, "b2's write must not touch b1's partition")
   }
 
+  test("a small batch writes one file per batch partition of its digest, " +
+    "count and report tables") {
+    val hist = Files.createTempDirectory("graft_cur_files").toString + "/h"
+    val rep = s"$hist/report"
+    // 40 distinct docs over 8 sources: each table's rows hash to every one
+    // of the session's shuffle partitions
+    val b1 = (0 until 40).map(i =>
+      (i.toLong, s"s${i % 8}", s"the cat of war $i", "m")
+    ).toDF("doc_id", "source", "text", "meta")
+    assert(IncrementalCuration.curateBatch(b1, hist, "b1", thr("s0" -> 0.0), 2,
+      reportPath = rep).count() == 16)
+    def files(table: String) = new java.io.File(s"$table/batch=b1").listFiles()
+      .count(_.getName.startsWith("part-"))
+    assert(Seq("digests", "source_counts", "report").map(t => files(s"$hist/$t")) ==
+      Seq(1, 1, 1))
+  }
+
   test("gate population rules: unknown source passes at default −∞, " +
     "is quarantined at MaxValue; token-free docs drop") {
     val hist = Files.createTempDirectory("graft_cur_hist3").toString + "/h"

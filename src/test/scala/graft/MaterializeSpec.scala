@@ -57,6 +57,16 @@ class MaterializeSpec extends AnyFunSuite {
       keyed.groupBy("k").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
+  test("the lazy entry over a plan whose layout the caller did not set runs " +
+    "no job when built and lets AQE coalesce its shuffle") {
+    val counts = keyed.groupBy("k").agg(count(lit(1)).as("n"))
+    val (held, jobs) = jobsOf(Materialize(counts))
+    assert(jobs.isEmpty, s"building ran jobs: $jobs")
+    assert(held.rdd.getNumPartitions == 1,
+      "97 small groups should coalesce into one partition")
+    assert(held.collect().toSet == counts.collect().toSet)
+  }
+
   test("now runs its job inside the call, named after the caller, and " +
     "returns the same rows") {
     val input = keyed.repartition(6, col("k"))

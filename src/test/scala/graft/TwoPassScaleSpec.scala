@@ -103,6 +103,32 @@ class TwoPassScaleSpec extends AnyFunSuite {
     assert(viaDriver == viaDist)
   }
 
+  test("the distributed route's probe ships one count per partition, not " +
+    "the block table") {
+    // one block per key: 200k blocks against a cap one below, so the probe
+    // must decide "over the cap" without shipping the blocks it counts
+    val keys = 200000L
+    val df = spark.range(keys).select(col("id"), concat(lit("d"), col("id")).as("k"))
+    val sc = spark.sparkContext
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val (_, route) = try routes("keyedRowNumbers")(Relational.keyedRowNumbers(
+      df, Seq("k"), Seq(col("id")), parts = 4, maxDriverBlocks = keys - 1))
+    finally {
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(route == Seq("at-scale", "distributed"))
+    // the build's jobs (range sample, block count) return a few KB a task;
+    // the block table alone is several bytes a block
+    assert(bytes.get < keys, s"${bytes.get} result bytes for $keys blocks")
+  }
+
   test("shuffleShards yields exact per-shard permutations and is " +
     "near-linear 100k → 1M rows", Slow) {
     def run(n: Long): (Long, Double) = {

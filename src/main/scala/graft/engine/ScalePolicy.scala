@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -32,15 +32,19 @@ import graft.sources.Tables
   *    `TextAnalysis.pmiCollocations`' join-free tail,
   *    `TextAnalysis.mixtureSample`'s window rates and
   *    `Dedup.contaminationCounts`' inline build; no caller passes a flag;
-  *  - `PartitionIncremental`'s one-task recompute.
-  * Operators that route on a statistic of their own probe job (a bucket,
-  * cell or block count, an eval-size estimate, a bounded row count)
-  * report the route they took through [[route]], with that statistic and
-  * the cap it was held against.
+  *  - `PartitionIncremental`'s one-task recompute;
+  *  - the probe routes: an operator with a driver or kernel algorithm for
+  *    inputs whose statistic, measured by the operator's own probe job, is
+  *    at most a cap, and a distributed algorithm for the rest. The
+  *    operator names the [[Route]] and hands its probe to [[probe]] (a
+  *    counted statistic), [[probeCount]] (a bounded row count) or
+  *    [[probeRows]] (a bounded collect whose rows the small side uses);
+  *    the entry runs it, holds the statistic against the cap and records
+  *    the branch.
   *
-  * Statistics are the two zero-job ones: the optimizer's size estimate
-  * (`optimizedPlan.stats.sizeInBytes`, compressed parquet bytes scaled by
-  * any column projection) and the parquet-footer row count
+  * The size tiers' statistics are the two zero-job ones: the optimizer's
+  * size estimate (`optimizedPlan.stats.sizeInBytes`, compressed parquet
+  * bytes scaled by any column projection) and the parquet-footer row count
   * ([[Tables.rowCount]]), each summed over the input's file-scan
   * relations ([[oneTask]] sums the relations' own bytes, since a whole
   * query's estimate is not an input size). An input is
@@ -51,7 +55,8 @@ import graft.sources.Tables
   * One conf steers every decision, `spark.graft.scale`:
   *   - `auto` (default): decide on the statistics;
   *   - `large`: every decision answers "not small", so each query takes
-  *     its at-scale branch on any data (the forced oracle leg and the
+  *     its at-scale branch on any data, and every probe route its
+  *     distributed side with no probe job (the forced oracle leg and the
   *     at-scale plan pins run on tiny corpora this way).
   * Any other value fails the first decision loudly.
   *
@@ -192,12 +197,55 @@ object ScalePolicy {
         if (k == 1) Small else AtScale)) == Small
     }
 
-  /** Records the route an operator chose on a statistic of its own
-    * (`statistics` names it and the cap it was held against) and returns
-    * `branch`. */
-  def route(tier: String, input: String, statistics: String,
-            branch: String): String =
-    decide(Decision(tier, input, statistics, branch))
+  /** A probe route's names: the decision's `tier` and `input`, the
+    * `statistic` its probe measures, and its two branches. */
+  final case class Route(tier: String, input: String, statistic: String,
+                         small: String, atScale: String)
+
+  /** Whether `route` takes its small side: `measure` runs the operator's
+    * probe and returns the statistic with the cap it is held against, and
+    * a statistic at most the cap is small. Under `large` the answer is no,
+    * and `measure` does not run. */
+  def probe(s: SparkSession, route: Route)(measure: => (Long, Long)): Boolean =
+    routed(s, route) {
+      val (n, cap) = measure
+      (Option.when(n <= cap)(()), s"${route.statistic}=$n cap=$cap")
+    }.isDefined
+
+  /** Whether `df` has at most `cap` rows, counted in one job that ships one
+    * long per partition ([[Actions.boundedCount]]), for `route`'s small
+    * side. Under `large` the answer is no, with no job. */
+  def probeCount(route: Route, df: DataFrame, cap: Long): Boolean =
+    routed(df.sparkSession, route) {
+      val n = Actions.boundedCount(df, cap)
+      (n, bounded(route, n, cap))
+    }.isDefined
+
+  /** The rows of `df` when it has at most `cap` of them, collected in one
+    * job ([[Actions.boundedRows]]) for `route`'s small side to use; None,
+    * the at-scale side, when it has more, and under `large` with no job. */
+  def probeRows(route: Route, df: DataFrame, cap: Int): Option[Array[Row]] =
+    routed(df.sparkSession, route) {
+      val rows = Actions.boundedRows(df, cap)
+      (rows, bounded(route, rows.map(_.length.toLong), cap))
+    }
+
+  private def bounded(route: Route, n: Option[Long], cap: Long): String =
+    n.fold(s"${route.statistic}>$cap")(k => s"${route.statistic}=$k") + s" cap=$cap"
+
+  /** Records `route`'s decision: its small side when `measure` returns a
+    * value (with the statistics it logs), else its at-scale side. */
+  private def routed[T](s: SparkSession, route: Route)(
+      measure: => (Option[T], String)): Option[T] =
+    if (large(s)) {
+      decide(Decision(route.tier, route.input, s"$Conf=large", route.atScale))
+      None
+    } else {
+      val (out, statistics) = measure
+      decide(Decision(route.tier, route.input, statistics,
+        if (out.isDefined) route.small else route.atScale))
+      out
+    }
 
   /** Runs `body` and returns the decisions it made on this thread. */
   def recorded[T](body: => T): (T, Seq[Decision]) = {

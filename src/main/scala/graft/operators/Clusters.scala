@@ -10,36 +10,35 @@ import graft.engine.Materialize
   * connected components of that graph (near-dup similarity is not
   * transitive, so classes are components, not cliques).
   *
-  * Algorithm: iterative min-label propagation (each node repeatedly adopts
-  * the smallest label in its neighborhood) — the standard Pregel-style
-  * formulation, expressed as DataFrame joins so Catalyst/AQE plan every
-  * round. Converges in O(component diameter) rounds; near-dup components
-  * are shallow (dup classes, not social graphs), so the diameter is small
-  * in practice. At adversarial scale the round count can be driven to
-  * O(log n) with the large-star/small-star transform (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14) — same
-  * join-per-round skeleton, different message rule.
+  * Algorithm ([[connectedComponentsAuto]]): an edge set that fits on the
+  * driver takes union-find after one bounded collect; a larger one takes
+  * alternating large-star / small-star rounds (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC'14), which contract every
+  * component to a star in O(log n) rounds whatever its shape, expressed as
+  * DataFrame joins so Catalyst/AQE plan every round.
   *
-  * Scale posture: each round shuffles (node, label) pairs — two longs — and
-  * the edge list once. The label state is locally checkpointed every round:
-  * an iterative plan that references its previous state twice (message join
-  * + union) otherwise doubles its logical plan per round — 2^rounds nodes,
-  * a driver OOM long before the data is the problem. Checkpointing is the
-  * standard fixpoint pattern (GraphX does the same); each round's join/agg
-  * is still a fully Catalyst-planned query over the materialized state. The
-  * driver holds ONE boolean per round (did any label change), never the
-  * graph.
+  * Scale posture: each round shuffles slim (long, long) edges. The edge
+  * state is locally checkpointed every round: an iterative plan that
+  * references its previous state twice otherwise doubles its logical plan
+  * per round — 2^rounds nodes, a driver OOM long before the data is the
+  * problem. Checkpointing is the standard fixpoint pattern (GraphX does the
+  * same); each round's join/agg is still a fully Catalyst-planned query over
+  * the materialized state. The driver holds ONE (count, checksum) pair per
+  * round, never the graph.
   */
 object Clusters {
 
-  /** Hard ceiling on propagation rounds: a component with diameter beyond
-    * this indicates a pathological graph (or a bug); fail loudly rather
-    * than loop. */
+  /** Hard ceiling on star-contraction rounds: they converge in O(log n),
+    * so more rounds than this indicates a bug or an edge stream mutating
+    * between rounds; fail loudly rather than loop. */
   val MaxRounds: Int = 64
 
   /** Driver bound for [[connectedComponentsAuto]]'s one-job tier: 2²⁰ edges
     * ≈ 16 MB of id pairs — same order as a broadcast-join build side. */
   val MaxDriverEdges: Int = 1 << 20
+
+  private val DriverEdges = graft.engine.ScalePolicy.Route(
+    "driver-edges", "connectedComponentsAuto", "edges", "driver", "stars")
 
   /** Adaptive cluster formation — the entry point pipelines should use.
     *
@@ -47,14 +46,19 @@ object Clusters {
     * (pairs above a high similarity threshold, post-LSH): on the common
     * path it fits comfortably on the driver, where union-find computes
     * components in O(E α(E)) after ONE Spark job (the bounded collect),
-    * instead of O(diameter) join rounds each paying a full job. This is the
+    * instead of O(log n) join rounds each paying a full job. This is the
     * same adaptive posture as broadcast-vs-shuffle join selection — and
-    * like it, the decision is a runtime size check, not a guess: over-cap
-    * edge sets (web-scale dup pressure) route to the distributed
-    * star-contraction rounds, which converge in O(log n) for any component
-    * shape. Output contract identical to [[connectedComponents]]. */
-  def connectedComponentsAuto(edges: DataFrame,
-                              maxDriverEdges: Int = MaxDriverEdges): DataFrame = {
+    * like it, the decision is a runtime size check, not a guess (a
+    * [[graft.engine.ScalePolicy.probeRows]] route): over-cap edge sets
+    * (web-scale dup pressure), and every edge set under
+    * `spark.graft.scale=large`, route to the distributed star-contraction
+    * rounds, which converge in O(log n) for any component shape.
+    *
+    * Returns (node, cluster) where cluster = the smallest node id in the
+    * component — deterministic regardless of partitioning or iteration
+    * order. Nodes with no edges are absent (callers union singletons back
+    * if needed); a node whose only edges are self-loops is a singleton. */
+  def connectedComponentsAuto(edges: DataFrame): DataFrame = {
     // drop null endpoints (including non-numeric ids nulled by the cast)
     // BEFORE the route decision: the stars route's least/greatest filters
     // would silently discard them anyway, while Row.getLong on the driver
@@ -62,17 +66,14 @@ object Clusters {
     val slim = edges.select(col("a").cast("long").as("a"),
         col("b").cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
-    graft.engine.Actions.boundedRows(slim, maxDriverEdges) match {
-      // over-cap fallback: the STARS variant, not min-label — an unknown
-      // web-scale graph can carry chain-shaped components whose diameter
-      // exceeds min-label's round bound, while star contraction is
-      // O(log n) for any shape. `slim` (not `edges`) keeps the output
-      // schema BIGINT on both routes regardless of the caller's id type.
+    graft.engine.ScalePolicy.probeRows(DriverEdges, slim, MaxDriverEdges) match {
+      // `slim` (not `edges`) keeps the output schema BIGINT on both routes
+      // regardless of the caller's id type.
       case None => connectedComponentsStars(slim)
       case Some(rows) =>
         // textbook union-find with path compression; every union points the
         // LARGER root at the smaller, so each component's terminal root is
-        // its minimum node id — exactly min-label's output
+        // its minimum node id
         val parent = new java.util.HashMap[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -94,64 +95,14 @@ object Clusters {
     }
   }
 
-  /** Connected components of the undirected graph given by `edges` (columns
-    * `a`, `b`). Returns (node, cluster) where cluster = the smallest node id
-    * in the component — deterministic regardless of partitioning or
-    * iteration order. Nodes with no edges are absent (callers union
-    * singletons back if needed). */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = MaxRounds): DataFrame = {
-    // both filled by the first checksum probe
-    val sym = Materialize(edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst"))))
-    var labels = Materialize(sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")))
-    // convergence probe: labels only ever DECREASE, so the label multiset
-    // changes iff any label changed — one order-independent checksum
-    // aggregate per round replaces the round-3 join-against-previous +
-    // CollectLimit probe (two extra jobs per round, and the limit's
-    // incremental scale-up walked partitions). The exact decimal label sum
-    // rides the same one-row aggregate as a second invariant: the node set
-    // is fixed and labels only decrease, so the sum strictly decreases on
-    // ANY change — equality of (checksum, sum) therefore PROVES a fixpoint;
-    // a 64-bit hash collision alone can no longer fake convergence.
-    def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(bit_xor(xxhash64(col("node"), col("label"))),
-        sum(col("label").cast("decimal(38,0)"))).head()
-      (if (r.isNullAt(0)) 0L else r.getLong(0),
-        if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    var cur = checksum(labels)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val msgs = sym.join(labels, sym("src") === labels("node"))
-        .select(col("dst").as("node"), col("label"))
-      // the checksum probe fills the round's state, so each round costs
-      // ONE job
-      labels = Materialize(labels.union(msgs)
-        .groupBy("node").agg(min("label").as("label")))
-      val next = checksum(labels)
-      converged = next == cur
-      cur = next
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after $maxRounds rounds — " +
-          "component diameter exceeds the bound; raise maxRounds or use " +
-          "connectedComponentsStars (large-star/small-star message rule).")
-    labels.select(col("node"), col("label").as("cluster"))
-  }
-
   /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the adversarial-diameter variant of
-    * [[connectedComponents]]: min-label needs O(diameter) rounds (a
+    * SoCC'14): min-label propagation needs O(diameter) rounds (a
     * 10^6-node chain needs 10^6 rounds), star operations contract every
-    * component to a star in O(log n) rounds regardless of shape. Same
-    * skeleton as min-label: per round, two slim joins + distinct over
-    * (long, long) edges, state locally checkpointed, the driver holding
-    * only a (count, checksum) convergence probe.
+    * component to a star in O(log n) rounds regardless of shape. Per
+    * round, two slim joins + distinct over (long, long) edges, state
+    * locally checkpointed, the driver holding only a (count, checksum)
+    * convergence probe.
     *
     *  - large-star(u): every neighbor v > u re-attaches to the minimum of
     *    u's closed neighborhood. Computed as a per-node min aggregate
@@ -163,20 +114,17 @@ object Clusters {
     *    high→low.
     *
     * At the fixpoint the edge set is a star forest rooted at each
-    * component's minimum id, read out directly as (node, cluster). Output
-    * contract identical to [[connectedComponents]] (ClustersSpec pins
-    * equivalence on random graphs — self-loops included — and on a long
-    * path that min-label's round bound rejects); edgeless nodes are absent,
-    * self-loop-only nodes appear as singletons (both exactly as in
-    * min-label). */
+    * component's minimum id, read out directly as (node, cluster): the
+    * output contract of [[connectedComponentsAuto]] (PropertySpec pins
+    * equivalence with union-find on random graphs, self-loops included). */
   def connectedComponentsStars(edges: DataFrame,
                                maxRounds: Int = MaxRounds): DataFrame = {
     val longEdges = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
     // a node whose ONLY edges are self-loops carries no oriented edge below,
-    // but connectedComponents labels it (its sym pass keeps (x,x)) — keep
-    // the output contracts identical by unioning those nodes back as
-    // singletons at the end (left-anti against the star forest's nodes)
+    // but the driver route labels it — keep the output contracts identical
+    // by unioning those nodes back as singletons at the end (left-anti
+    // against the star forest's nodes)
     val selfLoopNodes = longEdges.where(col("a") === col("b"))
       .select(col("a").as("node")).distinct()
     var e = Materialize(longEdges

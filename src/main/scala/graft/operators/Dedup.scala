@@ -259,6 +259,9 @@ object Dedup {
     * numPartitions × cap. */
   val MaxBroadcastShingles: Int = 1 << 20
 
+  private val BroadcastShingles = ScalePolicy.Route(
+    "broadcast-shingles", "ngramJaccardPairs", "shingles", "broadcast", "windowed")
+
   /** Near-dup pairs by 3-gram Jaccard ≥ threshold, via prefix-filtered
     * inverted-index join (the PPJoin family: Chaudhuri et al. ICDE'06,
     * Bayardo et al. WWW'07, Xiao et al. WWW'08).
@@ -298,8 +301,7 @@ object Dedup {
     * computation the oracle runs — prefix choice affects only candidate
     * volume, never the result set. */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
-                        textCol: String = "text",
-                        maxBroadcastShingles: Int = MaxBroadcastShingles): DataFrame = {
+                        textCol: String = "text"): DataFrame = {
     val tEff = threshold - 1e-4
     // no empty-doc filter: explode() drops shingle-free docs from the join
     // anyway, and a where(nsh > 0) here gets pushed into the parquet scan as
@@ -327,7 +329,7 @@ object Dedup {
     // limit(cap+1).collect() never reached its limit on an in-cap corpus, so
     // CollectLimit's incremental scale-up walked the agg output across ~3
     // extra jobs per run — pure scheduling floor billed to every invocation
-    val collected = graft.engine.Actions.boundedRows(dfRows, maxBroadcastShingles)
+    val collected = ScalePolicy.probeRows(BroadcastShingles, dfRows, MaxBroadcastShingles)
       .getOrElse(return ngramJaccardPairsWindowed(packed, dfRows, threshold))
     val entries = collected.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     // Lifecycle: the returned (lazy) DataFrame's ShinglePrefix expression
@@ -409,13 +411,16 @@ object Dedup {
     * the kernel buffers each bucket once and loops pairs in primitive
     * arrays with zero pair-row materialization. A bucket is OVERSIZED iff
     * it breaks the kernel's buffering contract on its OWN numbers —
-    * rows > maxKernelBucket, or rows × its max dim × 8 > kernelCellBytes
-    * (per-bucket byte gate: r10's global max(dim) cap punished every
-    * low-dim bucket for one high-dim vector elsewhere). Routing: no
-    * oversized buckets → kernel; ≤ [[MaxHotBuckets]] of them → the hot
-    * buckets take the join and every other bucket keeps the kernel
-    * ("mixed"), the two branches split by the SAME predicate so the bucket
-    * partition is exact; more than that (a join-shaped corpus) → all join.
+    * rows > [[MaxKernelCellRows]], or rows × its max dim × 8 >
+    * [[KernelCellBytes]] (per-bucket byte gate: r10's global max(dim) cap
+    * punished every low-dim bucket for one high-dim vector elsewhere).
+    * Routing is a [[ScalePolicy.probeRows]] route on the oversized-bucket
+    * list: ≤ [[MaxHotBuckets]] of them is the kernel side. With none, the
+    * kernel takes every bucket; otherwise the hot buckets take the join
+    * and every other bucket keeps the kernel ("mixed", [[lshPairsSplit]]),
+    * the two branches split by the SAME predicate so the bucket partition
+    * is exact. More than that (a join-shaped corpus, or
+    * `spark.graft.scale=large`, which runs no probe) → all join.
     * Splitting is sound because first-matching-band dedup is bucket-local:
     * each emitted pair carries its own proof (all earlier band keys
     * differ), independent of which route handled its bucket. Identical
@@ -425,13 +430,11 @@ object Dedup {
     * exactly where the declarative try_divide → NULL → NaN; kernel ≡ join
     * ≡ mixed is spec-pinned and the oracle is green on all routes). The
     * routing probe is ONE slim aggregate job over (band, key, count, dim)
-    * — no vector ships through it, and the driver sees at most
-    * MaxHotBuckets + 1 rows of it (r10 ran a max-stats job AND would have
+    * — no vector ships through it, and the driver keeps at most
+    * MaxHotBuckets rows of it (r10 ran a max-stats job AND would have
     * needed a hot-list job; the per-bucket contract needs no global
     * stats, so one job decides everything). */
-  def embeddingNearDupLsh(emb: DataFrame, threshold: Double,
-                          maxKernelBucket: Int = MaxKernelCellRows,
-                          kernelCellBytes: Long = KernelCellBytes): DataFrame = {
+  def embeddingNearDupLsh(emb: DataFrame, threshold: Double): DataFrame = {
     import graft.operators.{Similarity => S}
     // `keyed` is deliberately NOT persisted even though the mixed route
     // evaluates it up to three times (probe + kernel branch + join branch;
@@ -445,40 +448,41 @@ object Dedup {
     // and the columnar reader pipeline for free. Recompute wins on I/O
     // volume at every scale where the cache wouldn't fit in memory —
     // which at 100 TB is always.
-    val keyed = S.withBandKeys(emb)
-      .select(col("vec_id") +: (0 until S.Bands).map(b => col(s"k$b")) :+
-        VectorFunctions.asDouble(col("embedding")).as("v"): _*)
-    if (maxKernelBucket <= 0) {
-      // a zero row budget makes EVERY non-empty bucket oversized — skip
-      // the probe, the corpus is join-shaped by declaration
-      ScalePolicy.route("hot-buckets", "embeddingNearDupLsh",
-        s"unprobed maxKernelBucket=$maxKernelBucket", "join")
-      return lshPairsJoin(keyed, threshold, None)
-    }
-    // bounded collect: limit(MaxHotBuckets + 1) caps the driver at 65 slim
-    // (band, key) rows no matter how many buckets are oversized
+    val keyed = lshKeyed(emb)
     val hot = S.bandRows(keyed.withColumn("dm", size(col("v"))), Seq("dm"))
       .groupBy("band", "key")
       .agg(count(lit(1)).as("c"), max(col("dm")).as("d"))
-      .where(col("c") > maxKernelBucket ||
-        col("c") * col("d") * 8L > kernelCellBytes)
-      .select("band", "key").limit(MaxHotBuckets + 1).collect()
-    val route =
-      if (hot.isEmpty) "kernel" else if (hot.length > MaxHotBuckets) "join" else "mixed"
-    ScalePolicy.route("hot-buckets", "embeddingNearDupLsh",
-      (if (hot.length > MaxHotBuckets) s"hot>$MaxHotBuckets" else s"hot=${hot.length}") +
-        s" cap=$MaxHotBuckets", route)
-    if (route == "kernel") {
-      lshPairsKernel(keyed, threshold, None)
-    } else if (route == "join") {
-      lshPairsJoin(keyed, threshold, None)
-    } else {
+      .where(col("c") > MaxKernelCellRows ||
+        col("c") * col("d") * 8L > KernelCellBytes)
+      .select("band", "key")
+    ScalePolicy.probeRows(HotBuckets, hot, MaxHotBuckets)
+      .fold(lshPairsJoin(keyed, threshold, None))(lshPairsSplit(keyed, threshold, _))
+  }
+
+  private val HotBuckets = ScalePolicy.Route(
+    "hot-buckets", "embeddingNearDupLsh", "hot", "kernel", "join")
+
+  /** `emb`'s (vec_id, k0 … k(Bands-1), v) rows: its band keys and its
+    * vector widened to doubles. */
+  private[graft] def lshKeyed(emb: DataFrame): DataFrame = {
+    import graft.operators.{Similarity => S}
+    S.withBandKeys(emb)
+      .select(col("vec_id") +: (0 until S.Bands).map(b => col(s"k$b")) :+
+        VectorFunctions.asDouble(col("embedding")).as("v"): _*)
+  }
+
+  /** [[embeddingNearDupLsh]]'s kernel side over [[lshKeyed]] rows: the
+    * `hot` (band, key) buckets take the join, every other bucket the
+    * kernel. */
+  private[graft] def lshPairsSplit(keyed: DataFrame, threshold: Double,
+                                   hot: Array[org.apache.spark.sql.Row]): DataFrame =
+    if (hot.isEmpty) lshPairsKernel(keyed, threshold, None)
+    else {
       val hotPred = hot.map(r => col("band") === r.getInt(0) &&
         col("key") === r.getLong(1)).reduce(_ || _)
       lshPairsKernel(keyed, threshold, Some(!hotPred))
         .union(lshPairsJoin(keyed, threshold, Some(hotPred)))
     }
-  }
 
   /** Declarative fallback (the pre-r10 shape): spill-safe for buckets too
     * large to buffer in one task, at the cost of materializing both vectors
@@ -668,7 +672,7 @@ object Dedup {
     * route; bigger cells keep the spill-safe salted pair join. Under the
     * SemDeDup k-growth contract cell size is roughly constant, so real
     * corpora stay far under it. The row cap is additionally DIMENSION-
-    * AWARE: the effective cap is min(maxKernelCell,
+    * AWARE: the effective cap is min(MaxKernelCellRows,
     * [[KernelCellBytes]] / (dim × 8)) with dim probed from the data in
     * the same routing aggregate — 65536 rows is ~32 MB at 64 dims but
     * would be ~400 MB at 768 dims (one-task OOM territory), and just
@@ -681,10 +685,25 @@ object Dedup {
     * 32 MB of vector doubles (the measured-safe size at 64 dims). */
   val KernelCellBytes: Long = 32L << 20
 
+  private def kernelCell(input: String) =
+    ScalePolicy.Route("kernel-cell", input, "cell", "kernel", "join")
+
+  /** The largest cell of `cells` (rows) and the kernel's row cap for it:
+    * one routing aggregate yields BOTH the largest cell and the embedding
+    * dimension, since the kernel buffers maxCell × dim doubles in one task
+    * and the row cap alone is meaningless for wide embeddings (65536 rows
+    * of 768-dim = ~400 MB). Cap = min(rows, bytes-budget / row). */
+  private def largestCell(cells: DataFrame): (Long, Long) = {
+    val stats = cells.groupBy("cell")
+      .agg(count(lit(1)).as("c"), max(size(col("v"))).as("d"))
+      .agg(max(col("c")), max(col("d"))).head
+    val maxCell = Option(stats.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val dim = Option(stats.get(1)).map(_.asInstanceOf[Int]).getOrElse(1).max(1)
+    (maxCell, math.min(MaxKernelCellRows.toLong, KernelCellBytes / (dim.toLong * 8L)))
+  }
+
   def semanticDedup(emb: DataFrame, cents: DataFrame, threshold: Double,
-                    saltParts: Int = 8,
-                    maxKernelCell: Int = MaxKernelCellRows,
-                    kernelCellBytes: Long = KernelCellBytes): DataFrame = {
+                    saltParts: Int = 8): DataFrame = {
     require(saltParts > 0, s"saltParts must be positive, got $saltParts")
     // Cell assignment is the size-gated kernel/window route shared with
     // the IVF tier ([[Similarity.cellsRankedAuto]] at p = 1): under the
@@ -713,20 +732,8 @@ object Dedup {
     // contract the per-cell kernel below scores the same pairs in a tight
     // primitive loop with zero pair-row materialization; oversized cells
     // keep the spill-safe salted join.
-    // One routing aggregate yields BOTH the largest cell and the embedding
-    // dimension: the kernel buffers maxCell × dim doubles in one task, so
-    // the row cap alone is meaningless for wide embeddings (65536 rows of
-    // 768-dim = ~400 MB). Effective cap = min(rows, bytes-budget / row).
-    val stats = cells.groupBy("cell")
-      .agg(count(lit(1)).as("c"), max(size(col("v"))).as("d"))
-      .agg(max(col("c")), max(col("d"))).head
-    val maxCell = Option(stats.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val dim = Option(stats.get(1)).map(_.asInstanceOf[Int]).getOrElse(1).max(1)
-    val effectiveCap = math.min(maxKernelCell.toLong,
-      kernelCellBytes / (dim.toLong * 8L))
-    if (ScalePolicy.route("kernel-cell", "semanticDedup",
-        s"cell=$maxCell cap=$effectiveCap",
-        if (maxCell <= effectiveCap) "kernel" else "join") == "kernel")
+    if (ScalePolicy.probe(emb.sparkSession, kernelCell("semanticDedup"))(
+        largestCell(cells)))
       return semanticDedupKernel(cells, threshold)
     // Salted pair join: colocating by cell alone caps parallelism at k
     // cells — fine at corpus scale (k ≥ cores by construction), a 3-task
@@ -861,19 +868,10 @@ object Dedup {
     * spill-safe salted pair join. NaN cosines (zero-norm vectors) count
     * as hits on both routes — Spark SQL orders NaN above every double. */
   private[graft] def semanticClaimedIds(cells: DataFrame, threshold: Double,
-      saltParts: Int = 8, maxKernelCell: Int = MaxKernelCellRows,
-      kernelCellBytes: Long = KernelCellBytes): DataFrame = {
+      saltParts: Int = 8): DataFrame = {
     require(saltParts > 0, s"saltParts must be positive, got $saltParts")
-    val stats = cells.groupBy("cell")
-      .agg(count(lit(1)).as("c"), max(size(col("v"))).as("d"))
-      .agg(max(col("c")), max(col("d"))).head
-    val maxCell = Option(stats.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val dim = Option(stats.get(1)).map(_.asInstanceOf[Int]).getOrElse(1).max(1)
-    val cap = math.min(maxKernelCell.toLong,
-      kernelCellBytes / (dim.toLong * 8L))
-    if (ScalePolicy.route("kernel-cell", "semanticClaimedIds",
-        s"cell=$maxCell cap=$cap",
-        if (maxCell <= cap) "kernel" else "join") == "kernel")
+    if (ScalePolicy.probe(cells.sparkSession, kernelCell("semanticClaimedIds"))(
+        largestCell(cells)))
       return semanticClaimedKernel(cells, threshold)
     // x83's salted pair join with the id order generalized to the
     // (tag, vec_id) struct: a = claimants (every row), b = batch rows;
@@ -1082,6 +1080,9 @@ object Dedup {
     * bloom per range, each probed only by its range's shingles. */
   val MaxBloomItems: Long = 4L * 1000 * 1000
 
+  private val BloomItems = ScalePolicy.Route(
+    "bloom-items", "contaminationCounts", "shingles", "bloom", "exact")
+
   /** Bit-size clamp of [[evalShingleBloom]]'s sketch (8 MB) and the target
     * density. The REAL saturation point is BloomBitCap / BloomBitsPerItem
     * ≈ 4.19M items; [[MaxBloomItems]] deliberately sits just under it (at
@@ -1103,7 +1104,7 @@ object Dedup {
     * Routes on `expectedEvalShingles` (an upper estimate is fine — sizing
     * affects sketch size/fpp, never correctness):
     *
-    *  - `bloom` (≤ maxBloomItems): ONE pass over the eval shingles folds
+    *  - `bloom` (≤ [[MaxBloomItems]]): ONE pass over the eval shingles folds
     *    them into a fixed-size bloom sketch (partial-agg: tasks OR-merge
     *    bit arrays; nothing shuffles but the sketch), collected as one
     *    bounded binary row and broadcast ([[bloomProbe]]). The train scan then
@@ -1114,8 +1115,9 @@ object Dedup {
     *    negatives, so every truly shared shingle survives; false positives
     *    are train shingles NOT in eval, which the final equality join drops
     *    — they can never match an eval row. Exact by construction.
-    *  - `exact` (over cap): the x66 baseline shape — distinct train
-    *    shingles, equality join, group-count.
+    *  - `exact` (over cap, and under `spark.graft.scale=large`): the x66
+    *    baseline shape — distinct train shingles, equality join,
+    *    group-count.
     *
     * An empty train or eval side yields an empty result on both routes (an
     * empty-input bloom aggregate is NULL, which probes to NULL and the
@@ -1125,7 +1127,6 @@ object Dedup {
   def contaminationCounts(train: DataFrame, eval: DataFrame,
                           expectedEvalShingles: Long,
                           idCol: String = "doc_id", textCol: String = "text",
-                          maxBloomItems: Long = MaxBloomItems,
                           shsCol: Option[String] = None): DataFrame = {
     // shsCol (r17): callers that already hold a PACKED shingle-set column
     // (x102's kernel-once checkpoint) pass its name — the per-side kernel
@@ -1137,14 +1138,11 @@ object Dedup {
     val trainSh = train.select(explode(sh).as("sh"))
     val evalSh = eval.select(col(idCol), explode(sh).as("sh"))
     val trainMatch =
-      if (ScalePolicy.route("bloom-items", "contaminationCounts",
-          s"shingles=$expectedEvalShingles cap=$maxBloomItems",
-          if (expectedEvalShingles > maxBloomItems) "exact" else "bloom") == "exact") {
-        trainSh.distinct()
-      } else {
+      if (ScalePolicy.probe(train.sparkSession, BloomItems)(
+          (expectedEvalShingles, MaxBloomItems))) {
         val bloom = evalShingleBloom(eval, expectedEvalShingles, textCol, shsCol)
         trainSh.where(bloomProbe(train.sparkSession, bloom)(col("sh"))).distinct()
-      }
+      } else trainSh.distinct()
     // a one-partition train side (r15): a broadcast build there costs one
     // extra job for a hash map the single task could build inline, so the
     // build is hinted shuffle_hash (SinglePartition satisfies the SHJ's

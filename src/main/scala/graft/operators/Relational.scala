@@ -17,13 +17,19 @@ object Relational {
     * every bounded-key caller (shards, rank buckets, sources) stays on the
     * exchange-free broadcast route. Web-domain-scale key sets route
     * distributed. */
-  val DefaultMaxDriverBlocks: Long = 1L << 17
+  val MaxDriverBlocks: Long = 1L << 17
+
+  private val DriverBlocks = graft.engine.ScalePolicy.Route(
+    "driver-blocks", "keyedRowNumbers", "blocks", "driver", "distributed")
 
   /** [[orderedRunningTotal]] single-window row cap: up to 2²⁰ slim rows
     * sort in one task in well under a second, so the two-pass's extra
     * jobs are pure scheduling floor below it; anything bigger keeps the
     * distributed two-pass. */
   val MaxSingleWindowRows: Long = 1L << 20
+
+  private val SingleWindow = graft.engine.ScalePolicy.Route(
+    "single-window", "orderedRunningTotal", "rows", "window", "two-pass")
 
   /** Keep the latest row per key group (E3/E8 "dedup-keep-latest").
     * One shuffle on the partition keys; ranking is per-partition. */
@@ -125,9 +131,9 @@ object Relational {
     *     rank = local position − block start + block offset + 1.
     *
     * Pass 2 is CARDINALITY-GATED (round-6; the round-5 verdict's second
-    * scale finding): the block table is counted in one slim job on its
-    * persisted RDD, and
-    *  - at ≤ `maxDriverBlocks` blocks (shards, rank buckets, bounded key
+    * scale finding), a [[graft.engine.ScalePolicy.probe]] route: the block
+    * table is counted in one slim job on its persisted RDD, and
+    *  - at ≤ [[MaxDriverBlocks]] blocks (shards, rank buckets, bounded key
     *    sets) the offsets are computed on the driver and the block table
     *    broadcast-joins back — ZERO extra exchange of the data;
     *  - above the cap (x92's web-domain regime: 10⁷–10⁸ registrable
@@ -136,14 +142,14 @@ object Relational {
     *    block frame (partition size ≤ `parts` blocks per key, never the
     *    data), and the offsets shuffle-join back on (partition, keys).
     *    One extra exchange of the data rows, no driver state at all.
+    *    `spark.graft.scale=large` takes this route with no count job.
     *
     * Emits the input columns plus `__rn` (1-based rank per key under
     * `order`, which callers must make UNIQUE via a tie-break column — with
     * unique order row_number = rank = dense_rank) and `__n` (key group
     * size). */
   def keyedRowNumbers(df: DataFrame, keys: Seq[String], order: Seq[Column],
-                      parts: Int = 0,
-                      maxDriverBlocks: Long = DefaultMaxDriverBlocks): DataFrame = {
+                      parts: Int = 0): DataFrame = {
     val spark = df.sparkSession
     // block runs are detected via external-value equality on the driver;
     // binary values compare by REFERENCE there (one block per ROW — an
@@ -202,9 +208,10 @@ object Relational {
     }
     // the one persist outside Materialize: the count prices the route with
     // one long per partition, and the winning route reads the blocks once
-    // more. The driver route releases them after its collect; the
-    // distributed route's plan reads them, and Spark's ContextCleaner
-    // releases them once the returned plan is unreachable.
+    // more (the first time, under `spark.graft.scale=large`). The driver
+    // route releases them after its collect; the distributed route's plan
+    // reads them, and Spark's ContextCleaner releases them once the
+    // returned plan is unreachable.
     val blockRdd = sorted
       .select(("__pid" +: "__mid" +: keys).map(col): _*)
       .rdd.mapPartitions { it =>
@@ -222,7 +229,6 @@ object Relational {
         if (curKey != null) out += ((pid, curKey, minMid, cnt))
         out.iterator
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nBlocks = blockRdd.count()
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val blockSchema = StructType(
       StructField("__pid", IntegerType) +:
@@ -230,12 +236,9 @@ object Relational {
         StructField("__minMid", LongType) :+
         StructField("__off", LongType) :+
         StructField("__n", LongType))
-    val onDriver = nBlocks <= maxDriverBlocks
-    graft.engine.ScalePolicy.route("driver-blocks", "keyedRowNumbers",
-      s"blocks=$nBlocks cap=$maxDriverBlocks",
-      if (onDriver) "driver" else "distributed")
     val blockDf =
-      if (onDriver) {
+      if (graft.engine.ScalePolicy.probe(spark, DriverBlocks)(
+          (blockRdd.count(), MaxDriverBlocks))) {
         val collected = blockRdd.collect()
         blockRdd.unpersist(blocking = false)
         val augmented = collected.groupBy(_._2).valuesIterator
@@ -366,22 +369,22 @@ object Relational {
     * the running total — the same treatment a running `SUM(v) OVER` window
     * gives them.
     *
-    * SIZE-GATED (the Auto pattern shared with connectedComponentsAuto /
-    * cellsRankedAuto / the keyedRowNumbers cardinality gate): inputs at or
-    * under `maxSingleWindow` rows take the declarative single-partition
-    * window — ONE job against the two-pass's three plus a checkpoint,
-    * which at sub-cap volume is pure scheduling floor (x79 billed 4.9×
-    * DuckDB at sf1 for exactly this). A ≤2²⁰-row slim frame sorts in one
-    * task in well under a second; REAL volume keeps the two-pass, so no
-    * single task ever sees the whole corpus. The route probe is one
+    * SIZE-GATED (a [[graft.engine.ScalePolicy.probeCount]] route, like
+    * connectedComponentsAuto / cellsRankedAuto / the keyedRowNumbers
+    * cardinality gate): inputs at or under [[MaxSingleWindowRows]] take
+    * the declarative single-partition window — ONE job against the
+    * two-pass's three plus a checkpoint, which at sub-cap volume is pure
+    * scheduling floor (x79 billed 4.9× DuckDB at sf1 for exactly this). A
+    * ≤2²⁰-row slim frame sorts in one task in well under a second; REAL
+    * volume keeps the two-pass, so no single task ever sees the whole
+    * corpus. The route probe is one
     * bounded-count job ([[graft.engine.Actions.boundedCount]]) that
     * re-executes the input plan bounded per partition — callers with an
     * expensive input should pass the slim projection through
-    * [[graft.engine.Materialize]] first (x79 does). `maxSingleWindow = 0` forces the two-pass (the
-    * scale-proof specs and the route A/B test do). */
+    * [[graft.engine.Materialize]] first (x79 does).
+    * `spark.graft.scale=large` takes the two-pass with no probe. */
   def orderedRunningTotal(df: DataFrame, order: Seq[Column], valueCol: String,
-                          parts: Int = 0,
-                          maxSingleWindow: Long = MaxSingleWindowRows): DataFrame = {
+                          parts: Int = 0): DataFrame = {
     val spark = df.sparkSession
     // the partition scans below read the value via getLong — anything else
     // would ClassCastException deep inside an executor task, so check here
@@ -389,14 +392,7 @@ object Relational {
         org.apache.spark.sql.types.LongType,
       s"orderedRunningTotal: value column '$valueCol' must be BIGINT, got " +
         s"${df.schema(valueCol).dataType.simpleString} — cast('bigint') first")
-    val rows =
-      if (maxSingleWindow > 0) graft.engine.Actions.boundedCount(df, maxSingleWindow)
-      else None
-    graft.engine.ScalePolicy.route("single-window", "orderedRunningTotal",
-      rows.fold(if (maxSingleWindow > 0) s"rows>$maxSingleWindow" else "unprobed")(
-        n => s"rows=$n") + s" cap=$maxSingleWindow",
-      if (rows.isDefined) "window" else "two-pass")
-    if (rows.isDefined) {
+    if (graft.engine.ScalePolicy.probeCount(SingleWindow, df, MaxSingleWindowRows)) {
       // coalesce: a leading run of NULL values leaves the window sum NULL
       // where the two-pass emits 0 — pin the two routes to identical output
       return df.withColumn("__cum",

@@ -284,23 +284,26 @@ object Similarity {
     * fully distributed [[cellsRanked]] plan. */
   val MaxBroadcastCentroids: Int = 1 << 17
 
+  private val BroadcastCentroids = graft.engine.ScalePolicy.Route(
+    "broadcast-centroids", "cellsRankedAuto", "centroids", "kernel", "cross-join")
+
   /** Exactly (vec_id, embedding, cid, crn ≤ p) — [[cellsRanked]]'s ranking
-    * contract with a pinned schema — produced by the size-gated route:
+    * contract with a pinned schema — produced by a
+    * [[graft.engine.ScalePolicy.probeRows]] route on the centroid table:
     * under [[MaxBroadcastCentroids]] the per-row [[graft.functions
     * .NearestCentroids]] kernel (no cross join, no window, no exchange —
-    * centroids ride one executor broadcast); over it, the declarative
-    * cross-join + window plan. NULL-embedding rows are excluded on BOTH
+    * centroids ride one executor broadcast); over it, and under
+    * `spark.graft.scale=large`, the declarative cross-join + window plan.
+    * NULL-embedding rows are excluded on BOTH
     * routes (a null vector has no nearest centroid; without the filter the
     * two routes would disagree — the kernel's null propagates out of
     * posexplode while the window ranks the null dots). */
-  def cellsRankedAuto(emb: DataFrame, cents: DataFrame, p: Int,
-                      maxBroadcastCentroids: Int = MaxBroadcastCentroids)
-      : DataFrame = {
+  def cellsRankedAuto(emb: DataFrame, cents: DataFrame, p: Int): DataFrame = {
     import org.apache.spark.sql.{GraftSqlBridge => B}
     val vecs = emb.where(col("embedding").isNotNull)
-    graft.engine.Actions.boundedRows(
+    graft.engine.ScalePolicy.probeRows(BroadcastCentroids,
         cents.select(col("cid"), V.asDouble(col("cv")).as("cv")),
-        maxBroadcastCentroids) match {
+        MaxBroadcastCentroids) match {
       case Some(rows) =>
         val sorted = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
           .sortBy(_._1)

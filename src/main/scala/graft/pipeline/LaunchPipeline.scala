@@ -54,11 +54,12 @@ object LaunchPipeline {
   // ---------------------------------------------------------------- ingest
 
   /** A page fetch: given (startDate, endDateExclusive, offset) return the
-    * JSON body of one LL2 `mode=list` page. Injectable for tests; the
-    * production implementation is an `java.net.http.HttpClient` GET of
+    * JSON body of one LL2 `mode=list` page, the page the reference GETs at
     * `.../launches/?net__gte=$start&net__lt=$end&mode=list&limit=100&offset=$o`
     * — the half-open range predicate pushed to the source exactly as the
-    * reference builds it (dags/rocket_launch_etl.py:36-41).
+    * reference builds it (dags/rocket_launch_etl.py:36-41). The caller
+    * supplies it: perfbench and the tests serve seeded pages in process,
+    * and `graft.HiveCatalogDemo` serves a fixture.
     */
   type PageFetcher = (LocalDate, LocalDate, Int) => String
 
@@ -343,30 +344,15 @@ object LaunchPipeline {
       events.groupBy("net").agg(countDistinct("id").as("event_count"))
     }
 
-  /** Per-run hardening, opt-in so the default run stays byte-equivalent to
-    * the reference's three-task chain:
-    *  - `registerServing`: run the C8+C9 serving DDL + partition sync as
-    *    part of the pipeline instead of as a separate step;
-    *  - `validateSchema`: fail the run loudly on catalog-vs-files schema
-    *    drift ([[validateServingSchema]] — the gap SURVEY §1.3 notes in the
-    *    reference, where DDL and parquet can silently diverge). Implies
-    *    table registration. */
-  final case class RunHardening(registerServing: Boolean = false,
-                                validateSchema: Boolean = false)
-
   /** Full per-day run: ingest → transform → publish (Airflow chain
-    * dags/rocket_launch_etl.py:164 collapsed to a sequential driver), plus
-    * any opt-in hardening stages. */
+    * dags/rocket_launch_etl.py:164 collapsed to a sequential driver). A
+    * caller that serves the day calls [[registerTable]] after it, and
+    * [[validateServingSchema]] to fail loudly on catalog-vs-files drift. */
   def run(spark: SparkSession, zones: Zones, runDate: LocalDate,
-          fetch: PageFetcher,
-          hardening: RunHardening = RunHardening()): Unit = {
+          fetch: PageFetcher): Unit = {
     ingest(zones, runDate, fetch)
     transform(spark, zones, runDate)
     publish(spark, zones, runDate)
-    if (hardening.registerServing || hardening.validateSchema)
-      registerTable(spark, zones)
-    if (hardening.validateSchema)
-      validateServingSchema(spark, zones)
   }
 
   /** Backfill: run every day in [start, endExclusive) — the engine-level

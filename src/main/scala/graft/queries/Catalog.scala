@@ -105,6 +105,9 @@ object Catalog {
     * keeps the fully-distributed shuffle-join plan. */
   private val MaxBroadcastLmEntries: Int = 1 << 20
 
+  private val BroadcastLm = ScalePolicy.Route(
+    "broadcast-lm", "x81_lm_score", "bigrams", "broadcast", "shuffle-join")
+
   /** The build of a cheap-expression relational query: its at-scale
     * `body`, run through [[ScalePolicy.oneTask]], which plans the whole
     * query (scan, join, agg, window, total sort, sink) as ONE single-task
@@ -1396,8 +1399,8 @@ object Catalog {
        |FROM reach GROUP BY src ORDER BY src""".stripMargin
 
   /** Dedup cluster formation — the step AFTER pair generation: connected
-    * components over a near-dup edge set ([[graft.operators.Clusters]],
-    * iterative min-label propagation). Edges are Hamming-ball pairs
+    * components over a near-dup edge set ([[graft.operators.Clusters]]:
+    * driver union-find, or star contraction at scale). Edges are Hamming-ball pairs
     * (simhash distance ≤ 1) generated WITHOUT an all-pairs join: each doc
     * posts its simhash plus the 32 one-bit flips, pairs meet on key
     * equality, then verify exactly — the same candidates+verify posture as
@@ -1422,7 +1425,7 @@ object Catalog {
       .distinct()
     // adaptive tier: the bounded edge list union-finds on the driver after
     // ONE job (broadcast-join-style size check); over-cap edge sets route
-    // to the distributed min-label rounds — see connectedComponentsAuto
+    // to the distributed star-contraction rounds — see connectedComponentsAuto
     graft.operators.Clusters.connectedComponentsAuto(edges)
       .select(col("node").as("doc_id"), col("cluster"))
   }
@@ -2221,15 +2224,16 @@ object Catalog {
     *
     * Routing (round 5, x20's gated-broadcast pattern): the LM table is
     * vocab²-bounded but the corpus is not, so the scoring join is routed at
-    * build time by an ACTUAL size probe — `Actions.boundedRows` collects the
-    * LM in one job. Under the cap the LM rides back as a LocalRelation broadcast-hash
+    * build time by an ACTUAL size probe — a [[ScalePolicy.probeRows]] route
+    * collects the LM in one job. Under the cap the LM rides back as a LocalRelation broadcast-hash
     * join: the scoring side never shuffles by bigram and the whole query is
     * lm-build + score-agg + output sort. Over the cap (a web-scale
-    * vocabulary) the original shuffle join comes back — a hot bigram
+    * vocabulary), and under `spark.graft.scale=large`, the original
+    * shuffle join comes back — a hot bigram
     * ("of the") skews the pairs-side exchange, which AQE's skew join
     * splits at runtime. The 7-job adaptive shape this replaces
     * measured 0.54 s with every job under 0.13 s — pure replan floor. */
-  val x81 = Q("x81_lm_score", x81Build(MaxBroadcastLmEntries) _,
+  val x81 = Q("x81_lm_score", x81Build,
     Some(s"""WITH t AS (SELECT doc_id, ${Portable.tokens(DuckD, "text")} AS toks
             |  FROM documents),
             |p AS (SELECT doc_id, unnest(list_transform(range(1, length(toks)),
@@ -2247,10 +2251,7 @@ object Catalog {
             |GROUP BY 1 ORDER BY 1""".stripMargin),
     bench = false)
 
-  /** x81's builder with the LM cap as a parameter: the catalog entry uses
-    * [[MaxBroadcastLmEntries]]; a cap of 0 takes the over-cap shuffle-join
-    * route on any corpus, so both routes can be checked on the same data. */
-  private[graft] def x81Build(lmCap: Int)(s: SparkSession, d: String): DataFrame = {
+  private def x81Build(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // NOT kernel-spread (r17 session 2, measured): unlike x20's
     // multi-consumer ShingleSet checkpoint, the LM-build probe is ONE
@@ -2262,7 +2263,7 @@ object Catalog {
       .select(col("doc_id"), explode(
         graft.functions.TextHashFunctions.tokenPairs(col("text"))).as("bg"))
     val bgCounts = pairs.groupBy("bg").agg(count(lit(1)).as("c2"))
-    graft.engine.Actions.boundedRows(bgCounts, lmCap) match {
+    ScalePolicy.probeRows(BroadcastLm, bgCounts, MaxBroadcastLmEntries) match {
       case Some(rows) =>
         // under-cap route: the probe job was ONE exchange (the bigram
         // count agg); the w1 prefix totals and log-probs are O(vocab²)

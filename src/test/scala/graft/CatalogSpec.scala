@@ -184,20 +184,28 @@ class CatalogSpec extends AnyFunSuite {
   test("one-task floor fusion: fused and at-scale branches return identical " +
     "rows (r14) — including x62's join-free array funnel") {
     // the suite-level forced leg: `large` takes every at-scale branch (the
-    // one-task fusions, kernel spreads, x34's pair sort, x97's spread and
-    // keyedRowNumbers' two-pass), which sf0.001 never reaches on its own.
-    // ROW-SET comparison (sorted render), not row order: the oracle
-    // compare (tools/check_oracle.py) sorts before hashing, and e.g. x87's
-    // two branches emit the same total (shard, pos) content from different
-    // partition layouts
+    // one-task fusions, kernel spreads, x34's pair sort, x97's spread) and
+    // the at-scale side of every probe route (keyedRowNumbers' distributed
+    // offsets, the two-pass running total, the windowed n-gram prefix, the
+    // LSH join, the salted semantic join, the exact decontamination, the
+    // centroid cross join, the star rounds, x81's shuffle join), which
+    // sf0.001 never reaches on its own; no decision may record a small
+    // side there. ROW-SET comparison (sorted render), not row order: the
+    // oracle compare (tools/check_oracle.py) sorts before hashing, and e.g.
+    // x87's two branches emit the same total (shard, pos) content from
+    // different partition layouts
+    val smallSides = Set(graft.engine.ScalePolicy.Small,
+      "driver", "window", "broadcast", "kernel", "bloom")
     for (q <- Catalog.all) {
       def rows() = Catalog.queries(q.name)(spark, sf0001).collect()
         .map(_.toString).sorted.toSeq
       val auto = rows()
-      val large = atScale { rows() }
+      val (large, decisions) = atScale { graft.engine.ScalePolicy.recorded(rows()) }
       assert(auto == large,
         s"${q.name}: the small-input branch diverges from the at-scale " +
           s"branch (${auto.size} vs ${large.size} rows)")
+      val small = decisions.filter(d => smallSides.contains(d.branch))
+      assert(small.isEmpty, s"${q.name} took a small side under large: $small")
     }
   }
 

@@ -23,7 +23,7 @@ import graft.operators.{Clusters, Dedup}
   * is exactly the regime the signature-grouping/prefix designs target.
   */
 class DedupScaleSpec extends AnyFunSuite {
-  import SparkTestSession.spark
+  import SparkTestSession.{atScale, spark}
   import spark.implicits._
 
   /** `nWindows` disjoint 30-token windows (stride 40 over a shared stream,
@@ -106,9 +106,8 @@ class DedupScaleSpec extends AnyFunSuite {
     val docs = dupCorpus(300, 5, 21) // 1.5k docs, vocab far under any cap
     val viaBroadcast = Dedup.ngramJaccardPairs(docs, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaFallback = Dedup.ngramJaccardPairs(docs, 0.8,
-        maxBroadcastShingles = 10) // force the windowed plan
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val viaFallback = atScale(Dedup.ngramJaccardPairs(docs, 0.8) // the windowed plan
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     assert(viaBroadcast == viaFallback)
   }
 
@@ -234,17 +233,18 @@ class DedupScaleSpec extends AnyFunSuite {
       f"superlinear step at 10x vectors: $t10%.1f s -> $t100%.1f s")
   }
 
-  test("distributed min-label CC handles a 200k-edge graph and matches union-find", Slow) {
+  test("connectedComponentsAuto's star rounds handle a 200k-edge graph and " +
+    "match the driver's union-find", Slow) {
     // 40k path components of diameter 4 (shallow, dup-class-shaped) —
-    // 200k nodes, 160k edges; forces the DISTRIBUTED rounds (not the
-    // driver tier) and checks against the auto tier's union-find output
+    // 200k nodes, 160k edges; atScale forces the DISTRIBUTED star rounds
+    // (not the driver tier), checked against the auto tier's union-find
     val edges = (0 until 40000).flatMap { c =>
       val base = c * 5L
       (0 until 4).map(i => (base + i, base + i + 1))
     }.toDF("a", "b")
-    val (viaRounds, tDist) = timed(
-      Clusters.connectedComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val (viaRounds, tDist) = timed(atScale(
+      Clusters.connectedComponentsAuto(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
     val (viaDriver, tDrv) = timed(
       Clusters.connectedComponentsAuto(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)

@@ -24,11 +24,11 @@ class DriverBoundSpec extends AnyFunSuite {
       "distinct partition values of ONE micro-batch (bounded by batch size)"),
     "Similarity.scala" -> (2,
       "probe/centroid sets capped by maxQueryId/numCentroids parameters"),
-    "Clusters.scala" -> (2,
-      "one-row convergence aggregates (.head) — (count, checksum) pairs"),
+    "Clusters.scala" -> (1,
+      "one-row convergence aggregate (.head) — a (count, checksum) pair"),
     "Relational.scala" -> (2,
       "keyedRowNumbers block table, collected only when its count is " +
-        "≤ maxDriverBlocks; orderedRunningTotal partSums ≤ parts"),
+        "≤ MaxDriverBlocks; orderedRunningTotal partSums ≤ parts"),
     "PartitionIncremental.scala" -> (1,
       "recompute of the partitions whose files changed — the per-partition " +
         "aggregate's rows for those partitions only (one row per changed " +
@@ -40,11 +40,9 @@ class DriverBoundSpec extends AnyFunSuite {
     "BpeTrainer.scala" -> (1,
       "TakeOrdered(1) round winner — exactly one (pair, weight) row per " +
         "merge round"),
-    "Dedup.scala" -> (2,
+    "Dedup.scala" -> (1,
       "contaminationCounts bloom sketch — ONE binary row of numBits/8 " +
-        "bytes (conf-capped 8 MB), size fixed by parameters not data; " +
-        "embeddingNearDupLsh hot-bucket routing list — limit-bounded at " +
-        "MaxHotBuckets + 1 slim (band, key) rows"),
+        "bytes (conf-capped 8 MB), size fixed by parameters not data"),
     "HiveCatalogDemo.scala" -> (1,
       "two-JVM demo main: bounded daily-count reports"),
     "Sharding.scala" -> (2,
@@ -150,6 +148,25 @@ class DriverBoundSpec extends AnyFunSuite {
         "consumers are broadcast builds racing on Spark's broadcast pool")),
       "eager materializations", "use the lazy Materialize, or declare the " +
         "site with its Materialize.Reason")
+  }
+
+  test("bounded probes run only through ScalePolicy's probe routes, or guard " +
+    "an input with no second algorithm") {
+    audit(siteCounts("src/main/scala", "Actions\\.bounded(Rows|Count)\\("), Map(
+      "ScalePolicy.scala" -> (2, "probeCount and probeRows: the probe routes, " +
+        "which `spark.graft.scale=large` forces to their at-scale side"),
+      "Dedup.scala" -> (1, "embeddingNearDupPairs: the caller-bounded probe " +
+        "set rides a broadcast; over the cap it fails loudly"),
+      "TextAnalysis.scala" -> (2, "mixtureSample's per-source rates and " +
+        "dsirWeights' hashed buckets: at most 2^20 sources and `buckets` " +
+        "rows by construction; over the cap they fail loudly"),
+      "EventStreams.scala" -> (1, "streamingSemanticDedup's centroid table " +
+        "rides a broadcast by the SemDeDup k-growth contract; over the cap " +
+        "it fails loudly")),
+      "bounded probes", "route through ScalePolicy.probeCount / probeRows, or " +
+        "declare the input guard with its reason")
+    audit(siteCounts("src", "ScalePolicy\\.route\\("), Map.empty,
+      "bare route records", "decide through ScalePolicy.probe, probeCount or probeRows")
   }
 
   test("operators route on their input's partitioning, not a flag") {

@@ -10,7 +10,7 @@ import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
 class EventStreamsSpec extends AnyFunSuite {
-  import SparkTestSession.{spark, sf0001}
+  import SparkTestSession.{atScale, spark, sf0001}
   import spark.implicits._
 
   /** Stage the sf0.001 events parquet as a streaming source directory. */
@@ -314,10 +314,9 @@ class EventStreamsSpec extends AnyFunSuite {
       // exact per-arrival truth from the batch operator with the frames
       // arranged so the STREAMED docs are the counted side: train = the
       // pinned suite, eval = the arrivals, forced down the exact route
-      val exact = Dedup.contaminationCounts(
-          evalDocs, arrivals.toDF("doc_id", "text"), 4096,
-          maxBloomItems = 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val exact = atScale(Dedup.contaminationCounts(
+          evalDocs, arrivals.toDF("doc_id", "text"), 4096)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
       assert(exact.keySet == (0 until 4).map(100L + _).toSet)
       for ((id, n) <- exact) assert(got(id) >= n,
         s"doc $id: bloom count ${got(id)} must bound exact $n from above")

@@ -11,7 +11,7 @@ import graft.pipeline.IncrementalDedup
   * batch returns the identical survivor set — the naive append design
   * returns the empty set on redelivery). */
 class IncrementalDedupSpec extends AnyFunSuite {
-  import SparkTestSession.{routes, spark}
+  import SparkTestSession.{atScale, routes, spark}
   import spark.implicits._
 
   test("within-batch keep-first, cross-batch exclusion, idempotent retry") {
@@ -254,13 +254,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (1L, 1, 8L, Array(0.01, 1.0)),
       (1L, 1, 9L, Array(0.0, 0.0)))
       .toDF("cell", "tag", "vec_id", "v")
-    def ids(maxCell: Int) = routes("semanticClaimedIds")(
-      graft.operators.Dedup
-        .semanticClaimedIds(cells, 0.95, maxKernelCell = maxCell)
+    def ids() = routes("semanticClaimedIds")(
+      graft.operators.Dedup.semanticClaimedIds(cells, 0.95)
         .as[Long].collect().sorted.toSeq)
-    val (kernel, kernelRoute) = ids(1 << 16)
+    val (kernel, kernelRoute) = ids()
     assert(kernelRoute == Seq("kernel"))
-    val (join, joinRoute) = ids(0)
+    val (join, joinRoute) = atScale(ids())
     assert(joinRoute == Seq("join"))
     assert(kernel == Seq(5L, 8L, 9L))
     assert(join == kernel)

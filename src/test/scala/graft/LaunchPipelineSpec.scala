@@ -164,8 +164,10 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     "(opt-in hardening on the pipeline path)") {
     val z = freshZones()
     val fetch: LP.PageFetcher = (_, _, _) => fixtureA1
-    // validateSchema implies registration; a clean run must pass the gate
-    LP.run(spark, z, day, fetch, LP.RunHardening(validateSchema = true))
+    // a clean run, registered, must pass the schema gate
+    LP.run(spark, z, day, fetch)
+    LP.registerTable(spark, z)
+    LP.validateServingSchema(spark, z)
     assert(spark.catalog.tableExists("launch_events"))
     assert(LP.dailyCounts(spark).collect().toSeq ==
       Seq(Row(java.sql.Date.valueOf("2024-12-01"), 2L)))
@@ -504,10 +506,12 @@ class LaunchPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val z = LP.Zones(s"graftro://$dir")
     val fetch: LP.PageFetcher = (start, _, _) => fixtureA1.replaceAll("2024-12-01", start.toString)
     try {
-      LP.run(spark, z, day, fetch, LP.RunHardening(registerServing = true))
+      LP.run(spark, z, day, fetch)
+      LP.registerTable(spark, z)
       LP.dailyCounts(spark).collect() // writable: the cache is written
       ReadOnlyServingFs.readOnly = true
-      LP.run(spark, z, day.plusDays(1), fetch, LP.RunHardening(registerServing = true))
+      LP.run(spark, z, day.plusDays(1), fetch)
+      LP.registerTable(spark, z)
       val (got, events) = cacheLog(LP.dailyCounts(spark).collect().toSeq)
       assert(got == fullCounts("launch_events") && got.size == 2)
       assert(events.count(_._1 == Level.WARN) == 1, events)

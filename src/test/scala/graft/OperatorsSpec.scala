@@ -8,7 +8,7 @@ import graft.functions.{TextAnalysis, VectorFunctions => V}
 import graft.operators.{BpeTrainer, Dedup, Multimodal, Relational, Similarity}
 
 class OperatorsSpec extends AnyFunSuite {
-  import SparkTestSession.{routes, spark}
+  import SparkTestSession.{atScale, routes, spark}
   import spark.implicits._
 
   test("dedupKeepLatest keeps exactly the newest row per key") {
@@ -75,11 +75,10 @@ class OperatorsSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(winRoute == Seq("window"))
     assert(win == want)
-    val (twoPass, twoPassRoute) = routes("orderedRunningTotal")(
-      Relational.orderedRunningTotal(df, Seq(col("k")), "v",
-          parts = 2, maxSingleWindow = 0)
+    val (twoPass, twoPassRoute) = routes("orderedRunningTotal")(atScale(
+      Relational.orderedRunningTotal(df, Seq(col("k")), "v", parts = 2)
         .select("k", "__cum").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet)
+        .map(r => (r.getLong(0), r.getLong(1))).toSet))
     assert(twoPassRoute == Seq("two-pass"))
     assert(twoPass == want)
   }
@@ -102,11 +101,11 @@ class OperatorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     val ev = graft.sources.Tables.events(spark, SparkTestSession.sf0001)
       .select(col("event_id"), col("user_id"))
-    // maxSingleWindow = 0 forces the two-pass; the reference window IS
-    // the small route's plan, so this doubles as the route A/B oracle
-    val (got, route) = routes("orderedRunningTotal")(
+    // atScale forces the two-pass; the reference window IS the small
+    // route's plan, so this doubles as the route A/B oracle
+    val (got, route) = routes("orderedRunningTotal")(atScale(
       Relational.orderedRunningTotal(ev, Seq(col("event_id")),
-        "user_id", parts = 7, maxSingleWindow = 0))
+        "user_id", parts = 7)))
     assert(route == Seq("two-pass"))
     val want = ev.withColumn("__cum", sum("user_id").over(
       Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding,
@@ -118,16 +117,14 @@ class OperatorsSpec extends AnyFunSuite {
   test("orderedRunningTotal: empty input and single partition, both routes") {
     val empty = spark.range(0).toDF("v").withColumn("k", col("v"))
     assert(Relational.orderedRunningTotal(empty, Seq(col("k")), "v").count() == 0)
-    assert(Relational.orderedRunningTotal(empty, Seq(col("k")), "v",
-      maxSingleWindow = 0).count() == 0)
+    assert(atScale(Relational.orderedRunningTotal(empty, Seq(col("k")), "v")
+      .count()) == 0)
     val one = Seq((1L, 5L), (2L, 7L), (3L, 2L)).toDF("k", "v")
-    for (cap <- Seq(0L, Relational.MaxSingleWindowRows)) {
-      val got = Relational.orderedRunningTotal(one, Seq(col("k")), "v",
-          parts = 1, maxSingleWindow = cap)
-        .select("k", "__cum").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def run() = Relational.orderedRunningTotal(one, Seq(col("k")), "v", parts = 1)
+      .select("k", "__cum").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    for (got <- Seq(run(), atScale(run())))
       assert(got == Set((1L, 5L), (2L, 12L), (3L, 14L)))
-    }
   }
 
   test("asOfJoin matches the most recent prior right row, ties count as prior") {
@@ -220,7 +217,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("ngram jaccard windowed fallback ≡ broadcast prefix path") {
-    // maxBroadcastShingles = 0 forces the join+window plan that over-cap
+    // atScale forces the join+window plan that over-cap
     // (web-scale-vocabulary) corpora take; results must be identical
     val rnd = new scala.util.Random(7)
     val base = (0 until 60).map { i =>
@@ -233,15 +230,18 @@ class OperatorsSpec extends AnyFunSuite {
       (100L + j, text.split(" ").dropRight(1).mkString(" ") + " changed")
     }
     val docs = (base ++ planted).toDF("doc_id", "text")
-    def pairs(cap: Int) =
-      Dedup.ngramJaccardPairs(docs, 0.5, "text", cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.MaxBroadcastShingles) == pairs(0))
-    assert(pairs(0).nonEmpty) // the corpus genuinely produces pairs
+    def pairs() = routes("ngramJaccardPairs")(Dedup.ngramJaccardPairs(docs, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    val (broadcast, broadcastRoute) = pairs()
+    val (windowed, windowedRoute) = atScale(pairs())
+    assert(broadcastRoute == Seq("broadcast") && windowedRoute == Seq("windowed"))
+    assert(broadcast == windowed)
+    assert(windowed.nonEmpty) // the corpus genuinely produces pairs
   }
 
   test("embeddingNearDupLsh: kernel route ≡ join route (forced via zero " +
     "bucket cap), including first-band dedup and NaN-norm hits") {
+    // the operator has no cap parameter: atScale forces the join route
     val rnd = new scala.util.Random(31)
     def vec(seed: Int): Array[Float] = {
       val r = new scala.util.Random(seed)
@@ -253,13 +253,13 @@ class OperatorsSpec extends AnyFunSuite {
     val zeros = Seq((900L, Array.fill(8)(0f), 0L), (901L, Array.fill(8)(0f), 0L))
     val emb = (base ++ zeros).toDF("vec_id", "embedding", "label")
     // NaN != NaN would break set equality — canonicalize via raw bits
-    def pairs(cap: Int) = routes("embeddingNearDupLsh")(
-      Dedup.embeddingNearDupLsh(emb, 0.9, cap)
+    def pairs() = routes("embeddingNearDupLsh")(
+      Dedup.embeddingNearDupLsh(emb, 0.9)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet)
-    val (kernel, kernelRoute) = pairs(Dedup.MaxKernelCellRows)
+    val (kernel, kernelRoute) = pairs()
     assert(kernelRoute == Seq("kernel"))
-    val (join, joinRoute) = pairs(0)
+    val (join, joinRoute) = atScale(pairs())
     assert(joinRoute == Seq("join"))
     assert(kernel == join)
     assert(kernel.nonEmpty, "the planted twins must surface")
@@ -275,22 +275,22 @@ class OperatorsSpec extends AnyFunSuite {
       val r = new scala.util.Random(seed)
       Array.fill(8)(r.nextFloat() * 2 - 1)
     }
-    // 30 identical vectors: ONE oversized bucket per band under cap 16
-    // (≤ MaxHotBuckets, so the call must NOT demote everything to the
-    // join — the r10 all-or-nothing bug this test pins as fixed), plus
-    // 60 distinct vectors whose buckets stay inside the cap
+    // 30 identical vectors: ONE bucket per band, declared hot (an
+    // oversized bucket is cheap to declare and dear to build: RouteScaleSpec
+    // pins that a real one at the default budget takes this split), plus
+    // 60 distinct vectors whose buckets stay on the kernel
     val hot = (0 until 30).map(i => (i.toLong, vec(7)))
     val rest = (0 until 60).map(i => (100L + i, vec(1000 + i)))
     val emb = (hot ++ rest).toDF("vec_id", "embedding")
-    def pairs(cap: Int) = routes("embeddingNearDupLsh")(
-      Dedup.embeddingNearDupLsh(emb, 0.9, cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet)
-    val (mixed, mixedRoute) = pairs(16)
-    assert(mixedRoute == Seq("mixed"),
-      "30 identical vectors over a 16-row cap with ≤ MaxHotBuckets hot " +
-        "buckets must take the per-bucket split, not the global join")
-    val (join, joinRoute) = pairs(0)
+    val keyed = Dedup.lshKeyed(emb)
+    val keys = keyed.where(col("vec_id") === 0L).head()
+    val hotBuckets = (0 until Similarity.Bands).map(b => Row(b, keys.getLong(1 + b))).toArray
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
+    val mixed = rows(Dedup.lshPairsSplit(keyed, 0.9, hotBuckets))
+    val (join, joinRoute) = routes("embeddingNearDupLsh")(
+      atScale(rows(Dedup.embeddingNearDupLsh(emb, 0.9))))
     assert(joinRoute == Seq("join"))
     assert(mixed == join)
     // the hot cluster's C(30,2) = 435 identity pairs all survive (cos 1.0)
@@ -313,13 +313,12 @@ class OperatorsSpec extends AnyFunSuite {
     } :+ (200L, (1 to 20).map(k => s"only$k").mkString(" ")) // zero overlap
     val trainDf = train.toDF("doc_id", "text")
     val evalDf = evalDocs.toDF("doc_id", "text")
-    def run(maxItems: Long) = routes("contaminationCounts")(
-      Dedup.contaminationCounts(trainDf, evalDf, 4096,
-          maxBloomItems = maxItems)
+    def run() = routes("contaminationCounts")(
+      Dedup.contaminationCounts(trainDf, evalDf, 4096)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
-    val (bloom, bloomRoute) = run(Dedup.MaxBloomItems)
+    val (bloom, bloomRoute) = run()
     assert(bloomRoute == Seq("bloom"))
-    val (exact, exactRoute) = run(0)
+    val (exact, exactRoute) = atScale(run())
     assert(exactRoute == Seq("exact"))
     assert(bloom == exact)
     // each planted eval doc shares exactly the 8 prefix shingles; the
@@ -348,12 +347,12 @@ class OperatorsSpec extends AnyFunSuite {
     "on both routes (NULL bloom ≡ empty-set membership)") {
     val docs = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     val none = docs.where(lit(false))
-    for (cap <- Seq(Dedup.MaxBloomItems, 0L)) {
-      assert(Dedup.contaminationCounts(none, docs, 64,
-        maxBloomItems = cap).count() == 0)
-      assert(Dedup.contaminationCounts(docs, none, 64,
-        maxBloomItems = cap).count() == 0)
-    }
+    def counts(train: org.apache.spark.sql.DataFrame,
+               ev: org.apache.spark.sql.DataFrame) =
+      Dedup.contaminationCounts(train, ev, 64).count()
+    for (n <- Seq(counts(none, docs), counts(docs, none),
+        atScale(counts(none, docs)), atScale(counts(docs, none))))
+      assert(n == 0)
   }
 
   test("bruteForceTopK: self is rank 1 with cosine 1.0") {
@@ -508,10 +507,10 @@ class OperatorsSpec extends AnyFunSuite {
       (i, Array(math.sin(i * 3.7).toFloat, math.cos(i * 1.3).toFloat,
         math.sin(i * 0.9).toFloat, math.cos(i * 2.1).toFloat)))
       .toDF("vec_id", "embedding")
-    // maxKernelCell = 0 forces the salted-join route (every cell is bigger)
+    // atScale forces the salted-join route
     def runJoin(p: Int) = {
-      val (r, route) = routes("semanticDedup")(Dedup.semanticDedup(emb, cents,
-        0.9, saltParts = p, maxKernelCell = 0).orderBy("cell").collect().toSeq)
+      val (r, route) = routes("semanticDedup")(atScale(Dedup.semanticDedup(emb,
+        cents, 0.9, saltParts = p).orderBy("cell").collect().toSeq))
       assert(route == Seq("join")); r
     }
     val joined = runJoin(1)
@@ -524,16 +523,6 @@ class OperatorsSpec extends AnyFunSuite {
       .orderBy("cell").collect().toSeq
     assert(kernel7 == joined)
     intercept[IllegalArgumentException](Dedup.semanticDedup(emb, cents, 0.9, 0))
-    // The kernel gate is DIMENSION-aware, not row-count-only: with a bytes
-    // budget that 4-dim cells of this size exceed (cap = 256/(4·8) = 8
-    // rows < the ~20-row cells), the same data routes to the salted join
-    // even though maxKernelCell would admit it — the wide-embedding OOM
-    // guard from the round-6 advice.
-    val (narrow, narrowRoute) = routes("semanticDedup")(
-      Dedup.semanticDedup(emb, cents, 0.9,
-        kernelCellBytes = 256L).orderBy("cell").collect().toSeq)
-    assert(narrowRoute == Seq("join"))
-    assert(narrow == joined)
   }
 
   test("cellsRankedAuto kernel route: NaN dots rank first like the window's " +
@@ -557,15 +546,18 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("cellsRankedAuto over-cap fallback ≡ kernel route (forced via a tiny cap)") {
+    // the operator has no cap parameter: atScale forces the fallback
     val emb = graft.sources.Tables(spark, SparkTestSession.sf0001, "embeddings")
     val cents = emb.where(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("vec_id", "cid", "crn").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val kernel = rows(Similarity.cellsRankedAuto(emb, cents, 3))
-    val fallback = rows(Similarity.cellsRankedAuto(emb, cents, 3,
-      maxBroadcastCentroids = 2)) // 8 centroids > 2 → the window branch
+    val (kernel, kernelRoute) = routes("cellsRankedAuto")(
+      rows(Similarity.cellsRankedAuto(emb, cents, 3)))
+    val (fallback, fallbackRoute) = routes("cellsRankedAuto")(
+      atScale(rows(Similarity.cellsRankedAuto(emb, cents, 3))))
+    assert(kernelRoute == Seq("kernel") && fallbackRoute == Seq("cross-join"))
     assert(kernel == fallback && kernel.nonEmpty)
   }
 

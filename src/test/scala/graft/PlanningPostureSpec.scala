@@ -65,12 +65,14 @@ class PlanningPostureSpec extends AnyFunSuite {
   test("x81's over-cap route (shuffle join) returns the under-cap " +
     "broadcast route's rows") {
     val underCap = Catalog.queries("x81_lm_score")(spark, sf0001).collect().toSeq
-    val overCap = Catalog.x81Build(lmCap = 0)(spark, sf0001)
+    val (plan, overCap) = atScale {
+      val df = Catalog.queries("x81_lm_score")(spark, sf0001)
+      (df.queryExecution.executedPlan.toString, df.collect().toSeq)
+    }
     // only the over-cap route computes the prefix totals in Spark (a window
     // over w1); the under-cap route does that arithmetic on the driver
-    val plan = overCap.queryExecution.executedPlan.toString
-    assert(plan.contains("Window"), s"cap 0 must take the over-cap route:\n$plan")
+    assert(plan.contains("Window"), s"atScale must take the over-cap route:\n$plan")
     assert(underCap.nonEmpty)
-    assert(overCap.collect().toSeq == underCap)
+    assert(overCap == underCap)
   }
 }

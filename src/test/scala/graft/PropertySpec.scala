@@ -274,11 +274,11 @@ class PropertySpec extends AnyFunSuite {
         n -> nodes.filter(m => find(m) == root).min
       }.toMap
       val got = graft.operators.Clusters
-        .connectedComponents(edges.toDF("a", "b"))
+        .connectedComponentsAuto(edges.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed=$seedBase edges=$edges")
-      // the large-star/small-star rule must agree with min-label (and the
-      // union-find oracle) on every graph
+      // the large-star/small-star rule must agree with the union-find
+      // oracle on every graph
       val gotStars = graft.operators.Clusters
         .connectedComponentsStars(edges.toDF("a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -4,26 +4,67 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.tagobjects.Slow
 
-import graft.operators.{Dedup, Relational}
+import graft.engine.ScalePolicy
+import graft.operators.{Dedup, Relational, Similarity}
 
 /** Scale-route assertions at the DEFAULT caps (r8 verdict stretch 8): every
-  * other route spec exercises both routes by FORCING the cap (maxSingleWindow
-  * = 0, maxKernelCell = 0, maxDriverBlocks = 1), which proves route
-  * equivalence but would not notice a future edit that raises or inverts a
-  * default gate — silently sending 100 TB inputs down a one-task/driver
-  * path. These tests generate inputs just OVER the default caps and assert
+  * other route spec exercises both routes by forcing the at-scale side
+  * (`SparkTestSession.atScale`), which proves route equivalence but would
+  * not notice a future edit that raises or inverts a default gate —
+  * silently sending 100 TB inputs down a one-task/driver path. These tests
+  * generate inputs just OVER the default caps and assert
   * the operator took the scale route, without collecting the (deliberately
   * large) result — the route is decided eagerly by the probe job, so the
   * assertion costs only the probe. The third gated operator,
   * [[Relational.keyedRowNumbers]], already has its default-cap assertion:
-  * TwoPassScaleSpec's 150k-distinct-keys test exceeds DefaultMaxDriverBlocks
+  * TwoPassScaleSpec's 150k-distinct-keys test exceeds MaxDriverBlocks
   * and asserts "distributed" with closed-form ranks.
   *
   * Boundary pins (== cap stays on the small route) guard the other
   * direction: a future off-by-one can't quietly tax every small input with
   * the multi-job scale plan either. */
 class RouteScaleSpec extends AnyFunSuite {
-  import SparkTestSession.{routes, spark}
+  import SparkTestSession.{atScale, routes, spark}
+
+  test("a probe route takes its small side at the cap and its at-scale side " +
+    "one over it; under large it runs no probe job") {
+    val route = ScalePolicy.Route("test-tier", "probe", "rows", "small-side", "at-scale-side")
+    val cap = 10
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    def probes() = {
+      var measured = 0
+      def measure(n: Long) = { measured += 1; (n, cap.toLong) }
+      val (out, decisions) = ScalePolicy.recorded(Seq(
+        ScalePolicy.probe(spark, route)(measure(cap)),
+        ScalePolicy.probe(spark, route)(measure(cap + 1)),
+        ScalePolicy.probeCount(route, spark.range(cap).toDF(), cap),
+        ScalePolicy.probeCount(route, spark.range(cap + 1).toDF(), cap),
+        ScalePolicy.probeRows(route, spark.range(cap).toDF(), cap).map(_.length),
+        ScalePolicy.probeRows(route, spark.range(cap + 1).toDF(), cap).map(_.length)))
+      org.apache.spark.GraftListenerBus.drain(sc)
+      (out, decisions.map(d => s"${d.branch} ${d.statistics}"), measured, jobs.getAndSet(0))
+    }
+    try {
+      val (auto, autoDecisions, autoMeasured, autoJobs) = probes()
+      assert(auto == Seq(true, false, true, false, Some(cap), None))
+      assert(autoDecisions == Seq(
+        "small-side rows=10 cap=10", "at-scale-side rows=11 cap=10",
+        "small-side rows=10 cap=10", "at-scale-side rows>10 cap=10",
+        "small-side rows=10 cap=10", "at-scale-side rows>10 cap=10"))
+      assert(autoMeasured == 2 && autoJobs == 4)
+      val (large, largeDecisions, largeMeasured, largeJobs) = atScale(probes())
+      assert(large == Seq(false, false, false, false, None, None))
+      assert(largeDecisions == Seq.fill(6)(s"at-scale-side ${ScalePolicy.Conf}=large"))
+      assert(largeMeasured == 0 && largeJobs == 0)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("orderedRunningTotal: input one row over MaxSingleWindowRows takes " +
     "the two-pass at the DEFAULT cap; exactly at cap keeps the window", Slow) {
@@ -93,12 +134,14 @@ class RouteScaleSpec extends AnyFunSuite {
     val vec = expr(s"transform(sequence(1, $dim), i -> CAST(1.0 AS FLOAT))")
     val emb = spark.range(bytesCap + 1)
       .select(col("id").as("vec_id"), vec.as("embedding"))
-    val (_, route) = routes("embeddingNearDupLsh")(
-      Dedup.embeddingNearDupLsh(emb, 0.999999))
+    val (_, decisions) = ScalePolicy.recorded(Dedup.embeddingNearDupLsh(emb, 0.999999))
+    val route = decisions.filter(_.input == "embeddingNearDupLsh")
+      .map(d => s"${d.branch} ${d.statistics}")
     // identical vectors share ONE bucket per band → Bands oversized
-    // buckets, all inside MaxHotBuckets → the mixed route sends exactly
-    // those to the join and keeps the (here empty) remainder on the kernel
-    assert(route == Seq("mixed"),
+    // buckets, all inside MaxHotBuckets → the kernel side's split sends
+    // exactly those to the join and keeps the (here empty) remainder on
+    // the kernel
+    assert(route == Seq(s"kernel hot=${Similarity.Bands} cap=${Dedup.MaxHotBuckets}"),
       s"a 4096-dim bucket of ${bytesCap + 1} rows (~33.6 MB of doubles) " +
         "must not buffer in one kernel task")
   }

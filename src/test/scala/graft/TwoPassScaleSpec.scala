@@ -20,7 +20,7 @@ import graft.operators.Relational
   * running total id(id+1)/2 exactly.
   */
 class TwoPassScaleSpec extends AnyFunSuite {
-  import SparkTestSession.{routes, spark}
+  import SparkTestSession.{atScale, routes, spark}
 
   private def timed[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -52,8 +52,7 @@ class TwoPassScaleSpec extends AnyFunSuite {
       val df = spark.range(n).select(col("id"), col("id").as("w"))
       // force the two-pass — the route this scale proof exists to cover
       // (the default gate would take the window plan at these row counts)
-      val cum = Relational.orderedRunningTotal(df, Seq(col("id")), "w",
-        maxSingleWindow = 0)
+      val cum = atScale(Relational.orderedRunningTotal(df, Seq(col("id")), "w"))
       // inclusive running total of 0..id = id(id+1)/2
       timed(cum.where(col("__cum") =!= expr("id * (id + 1) div 2")).count())
     }
@@ -68,7 +67,7 @@ class TwoPassScaleSpec extends AnyFunSuite {
 
   test("keyedRowNumbers routes past the driver cap: 150k distinct keys go " +
     "distributed and stay exact (closed form)", Slow) {
-    // 150k keys > DefaultMaxDriverBlocks (2^17 = 131072): the old
+    // 150k keys > MaxDriverBlocks (2^17 = 131072): the old
     // unconditional .collect() would ship one tuple per key to the driver
     // (the x92 web-domain ceiling, round-5 verdict finding 2); the gate
     // must route this to the distributed offset windows instead
@@ -81,31 +80,32 @@ class TwoPassScaleSpec extends AnyFunSuite {
     val bad = ranked.where(col("__rn") =!= expr(s"id div $keys") + 1 ||
       col("__n") =!= lit(n / keys)).count()
     assert(route == Seq("at-scale", "distributed"),
-      s"150k keys should exceed the ${Relational.DefaultMaxDriverBlocks} cap")
+      s"150k keys should exceed the ${Relational.MaxDriverBlocks} cap")
     assert(bad == 0)
   }
 
   test("distributed offset route ≡ driver route on the same input " +
     "(forced via a tiny cap)") {
+    // keyedRowNumbers has no cap parameter: atScale forces the distributed
+    // route
     val df = spark.range(5000).select(col("id"),
       (col("id") % 7).cast("string").as("k"),
       // a NULL-keyed group and a value column to carry through
       when(col("id") % 11 === 0, lit(null).cast("string"))
         .otherwise(concat(lit("g"), col("id") % 13)).as("g"))
-    def run(cap: Long) = routes("keyedRowNumbers")(
-      Relational.keyedRowNumbers(df, Seq("k", "g"),
-          Seq(col("id")), maxDriverBlocks = cap)
+    def run() = routes("keyedRowNumbers")(
+      Relational.keyedRowNumbers(df, Seq("k", "g"), Seq(col("id")))
         .select("id", "__rn", "__n").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq)
-    val (viaDriver, r1) = run(Long.MaxValue)
-    val (viaDist, r2) = run(1L)
+    val (viaDriver, r1) = run()
+    val (viaDist, r2) = atScale(run())
     assert(r1 == Seq("at-scale", "driver") && r2 == Seq("at-scale", "distributed"))
     assert(viaDriver == viaDist)
   }
 
   test("the distributed route's probe ships one count per partition, not " +
     "the block table") {
-    // one block per key: 200k blocks against a cap one below, so the probe
+    // one block per key: 200k blocks against the 2^17 cap, so the probe
     // must decide "over the cap" without shipping the blocks it counts
     val keys = 200000L
     val df = spark.range(keys).select(col("id"), concat(lit("d"), col("id")).as("k"))
@@ -117,8 +117,9 @@ class TwoPassScaleSpec extends AnyFunSuite {
     }
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
+    assert(keys > Relational.MaxDriverBlocks)
     val (_, route) = try routes("keyedRowNumbers")(Relational.keyedRowNumbers(
-      df, Seq("k"), Seq(col("id")), parts = 4, maxDriverBlocks = keys - 1))
+      df, Seq("k"), Seq(col("id")), parts = 4))
     finally {
       org.apache.spark.GraftListenerBus.drain(sc)
       sc.removeSparkListener(listener)

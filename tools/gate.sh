@@ -15,8 +15,12 @@
 # 128 GiB heap budget assumes one driver).
 #
 # The forced leg always follows: the FIRST sf dir runs a second time with
-# spark.graft.scale=large into /tmp/gate_out/<name>-large, so every
-# at-scale branch the small SFs never reach keeps an oracle check.
+# spark.graft.scale=large into /tmp/gate_out/<name>-large. Under `large`
+# every ScalePolicy decision takes its at-scale side: the size tiers'
+# at-scale plans and the distributed side of every probe route (driver
+# blocks, single window, broadcast shingles, LSH hot buckets, kernel cells,
+# bloom items, broadcast centroids, driver edges, x81's broadcast LM), so
+# the branches the small SFs never reach keep an oracle check.
 set -u
 # Zero args (e.g. a typo'd CI variable expanding empty) must NOT read as a
 # green gate — "GATE: GREEN (0 sf dirs)" would turn a misconfiguration into

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,14 +40,11 @@ import graft.streaming.EventStreams
   * slice is per-row arithmetic. No window, no full ranks, no corpus-sized
   * state anywhere.
   *
-  * Retry contract (the tier's shared discipline): both persistent tables —
-  * the digest history inside [[IncrementalDedup.dedupBatch]] and the
-  * per-source kept-counts under `historyPath/source_counts` — are
-  * hive-partitioned by batch id, written with DYNAMIC partition overwrite,
-  * and read with the writer's own partition EXCLUDED. A redelivered batch
-  * therefore sees exactly the pre-crash history at every stage and
-  * reproduces its original survivor set, whether the crash hit before,
-  * between, or after the two state writes.
+  * Both persistent tables — the digest history inside
+  * [[IncrementalDedup.dedupBatch]] and the per-source kept-counts under
+  * `historyPath/source_counts` — are [[BatchHistory]] tables, so a
+  * redelivered batch reproduces its original survivor set whether the
+  * crash hit before, between or after the state writes.
   *
   * Kept-count state records the batch's CONSUMPTION (one row per source
   * that kept ≥ 1 doc), not the survivors themselves — budgets need only
@@ -88,7 +84,7 @@ object IncrementalCuration {
     * `dedupStage` is the stage-1 operator: any [[IncrementalDedup]] tier
     * applied partially over its own knobs — it receives (batch, state
     * path, batchId) and must return surviving rows while honoring the
-    * shared retry contract (all five tiers do). Default: exact
+    * [[BatchHistory]] retry contract (all five tiers do). Default: exact
     * [[IncrementalDedup.dedupBatch]]; pass e.g.
     * `IncrementalDedup.passageBatch(_, _, _, chunkTokens = 30,
     * dupFrac = 0.8)` for a C4-style near-dup curation loop. The stage
@@ -99,9 +95,9 @@ object IncrementalCuration {
     * `reportPath` (VERDICT r9 stretch 8, curation observability): when
     * set, a per-source funnel report for THIS batch — `(source, n_raw,
     * n_deduped, n_gated, n_kept)`, x100's report shape over the batch —
-    * is written under `reportPath/batch=batchId` with the tier's dynamic
-    * overwrite, so a redelivery rewrites its own report partition and the
-    * production loop stays auditable batch by batch. Cost when enabled:
+    * is recorded under `reportPath/batch=batchId` by [[BatchHistory.record]],
+    * so a redelivery rewrites its own report partition and the production
+    * loop stays auditable batch by batch. Cost when enabled:
     * three O(sources) aggregates (the dedup stage's survivor set is
     * checkpointed slim, so re-counting it does not re-run the dedup
     * joins); zero cost when null. The report is observational output, NOT
@@ -116,16 +112,13 @@ object IncrementalCuration {
                   reportPath: String = null)
       : DataFrame = {
     require(capPerSource > 0, s"capPerSource must be positive, got $capPerSource")
-    val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(historyPath),
-      spark.sessionState.newHadoopConf())
     val countsPath = s"$historyPath/source_counts"
 
-    // stage 1: cross-batch dedup with persistent claims (its own
-    // partition-pruned read + dynamic-overwrite write live inside each
-    // tier). The pre-r9 layout kept exact digests under /digests; the
-    // default stage keeps using it so existing histories stay valid,
-    // while injected stages get the tier-neutral /dedup.
+    // stage 1: cross-batch dedup with persistent claims (each tier reads
+    // and records its own state table). The pre-r9 layout kept exact
+    // digests under /digests; the default stage keeps using it so existing
+    // histories stay valid, while injected stages get the tier-neutral
+    // /dedup.
     val deduped =
       if (dedupStage == null)
         IncrementalDedup.dedupBatch(
@@ -139,36 +132,14 @@ object IncrementalCuration {
     val gated = EventStreams.streamingQualityGate(
       deduped, thresholds, textCol, defaultThr)
 
-    // stage 3: per-source remaining budget = cap − Σ other batches' kept
-    val used =
-      if (fs.exists(new Path(countsPath)))
-        // explicit schema (winnowBatch's guard): a first batch gating out
-        // everything leaves a data-free state dir. `obatch` is the
-        // provenance column [[Maintenance.foldHistory]] adds when folding
-        // this table — absent from unfolded files, the explicit schema
-        // reads it as null there.
-        spark.read.schema("source STRING, n_kept LONG, obatch STRING, batch STRING")
-          .parquet(countsPath)
-          .where(col("batch") =!= batchId) // partition-pruned re-run guard
-          // fold-crash-window identity dedup (ADVICE r9): foldHistory
-          // writes the merged batch=__folded__ partition BEFORE deleting
-          // the folded partitions, so inside its crash window every folded
-          // row exists twice — once under its old batch partition, once
-          // under the label with obatch carrying the origin. Summing both
-          // would double-count `used` and permanently under-keep any batch
-          // curated inside the window. (source, origin-batch) is a row
-          // IDENTITY here (curateBatch writes at most one row per source
-          // per batch), so deduping on it makes the crash window invisible
-          // to budgets instead of an operational "re-run the fold first"
-          // requirement. The origin filter also keeps a (mistakenly)
-          // folded own-batch row excluded on redelivery, same contract as
-          // the partition-pruned guard above.
-          .withColumn("__ob", coalesce(col("obatch"), col("batch")))
-          .where(col("__ob") =!= batchId)
-          .dropDuplicates("source", "__ob")
-          .groupBy("source").agg(sum("n_kept").as("__used"))
-      else batch.sparkSession.emptyDataFrame
-        .select(lit("").as("source"), lit(0L).as("__used")).limit(0)
+    // stage 3: per-source remaining budget = cap − Σ other batches' kept.
+    // A count table: the read dedups the fold's crash-window copies, and
+    // (source, origin batch) is a row identity because a batch records at
+    // most one row per source, so a batch curated inside a fold's crash
+    // window is never under-kept.
+    val used = BatchHistory.history(batch.sparkSession, countsPath,
+        "source STRING, n_kept LONG", batchId)
+      .groupBy("source").agg(sum("n_kept").as("__used"))
     // x92's deterministic draw: Knuth multiplicative hash of the id,
     // tie-broken by the id itself (unique by contract)
     val h = ((col(idCol) % lit(1000000007L)) * lit(2654435761L)) %
@@ -187,25 +158,18 @@ object IncrementalCuration {
           "coalesce(__used, 0L)) AS INT))").as("__keep"))
       .select(col("source"), explode(col("__keep")).as("__k"))
       .select(col("source"), col("__k.__id").as(idCol)))
-    kept.groupBy("source").agg(count(lit(1)).as("n_kept"))
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(countsPath)
+    BatchHistory.record(kept.groupBy("source").agg(count(lit(1)).as("n_kept")),
+      countsPath, batchId)
     if (reportPath != null) {
       def cnt(df: DataFrame, as: String) =
         df.groupBy("source").agg(count(lit(1)).as(as))
       // left joins: every stage's population is a subset of the raw
       // batch's sources, so raw anchors the funnel; absent = 0
-      cnt(batch, "n_raw")
+      BatchHistory.record(cnt(batch, "n_raw")
         .join(cnt(deduped, "n_deduped"), Seq("source"), "left")
         .join(cnt(gated, "n_gated"), Seq("source"), "left")
         .join(cnt(kept, "n_kept"), Seq("source"), "left")
-        .na.fill(0L, Seq("n_deduped", "n_gated", "n_kept"))
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(reportPath)
+        .na.fill(0L, Seq("n_deduped", "n_gated", "n_kept")), reportPath, batchId)
     }
     batch.join(kept.select(idCol), Seq(idCol), "left_semi")
   }

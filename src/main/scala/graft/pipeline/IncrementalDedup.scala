@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,14 +20,9 @@ import graft.operators.Dedup
   * dwarfs the batch, exactly the asymmetry AQE's runtime broadcast handles
   * while a small history still fits).
   *
-  * Retry contract (the C6 discipline): the digest table is hive-partitioned
-  * by batch id and written with DYNAMIC partition overwrite, so re-running
-  * a batch (after a crash anywhere in this method or downstream) replaces
-  * only its own partition and — because its own digests are EXCLUDED from
-  * the history read — returns the identical survivor set, not the empty
-  * set a naive append-then-anti-join would produce on redelivery.
-  * Concurrent writers to one history path are excluded by contract, as in
-  * [[Maintenance.compactPartitions]].
+  * Every tier keeps its state in a [[BatchHistory]] table and so shares
+  * its retry contract: a redelivered batch returns its original survivor
+  * set.
   *
   * Near-duplicates across batches compose the same way with the signature
   * operators in [[graft.operators.Dedup]] — persist minhash/simhash
@@ -57,33 +52,21 @@ object IncrementalDedup {
 
   /** Dedup `batch` (tagged `batchId`) within itself and against every
     * OTHER batch recorded under `historyPath`, record the survivors'
-    * digests under `batch=batchId`, and return the surviving rows (all
-    * input columns). First call bootstraps the history. */
+    * digests as the batch's [[BatchHistory]] record, and return the
+    * surviving rows (all input columns). */
   def dedupBatch(batch: DataFrame, historyPath: String, batchId: String,
                  idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
-    val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(historyPath),
-      spark.sessionState.newHadoopConf())
     val digests = batch.select(col(idCol),
       unhex(md5(col(textCol))).as("dig"))
     // within-batch keep-first: one digest-keyed aggregate (no window sort)
-    val firstPerDig = digests.groupBy("dig").agg(min(idCol).as(idCol))
-    val fresh =
-      if (fs.exists(new Path(historyPath)))
-        firstPerDig.join(
-          spark.read.parquet(historyPath)
-            .where(col("batch") =!= batchId) // partition-pruned re-run guard
-            .select("dig"),
-          Seq("dig"), "left_anti")
-      else firstPerDig
+    val fresh = digests.groupBy("dig").agg(min(idCol).as(idCol))
+      .join(BatchHistory.history(batch.sparkSession, historyPath, "dig BINARY",
+        batchId), Seq("dig"), "left_anti")
     // the fresh set is consumed twice (digest write + survivor join);
     // checkpoint so the dedup joins run once (x20's trick, slim rows only)
     val pinned = Materialize(fresh)
-    pinned.select("dig").withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(historyPath)
+    BatchHistory.record(pinned.select("dig"), historyPath, batchId)
     batch.join(pinned.select(idCol), Seq(idCol), "left_semi")
   }
 
@@ -92,8 +75,8 @@ object IncrementalDedup {
     * estimated Jaccard (signature agreement / 16, [[Dedup]]'s estimator)
     * reaches `minEstJaccard` against (a) any LOWER-id doc of its own batch
     * — the greedy keep-lowest rule of [[Dedup.semanticDedup]] — or (b) any
-    * signature recorded by an earlier batch. Survivor signatures land under
-    * `batch=batchId` with the same dynamic-overwrite retry contract.
+    * signature recorded by an earlier batch. Survivor signatures are the
+    * batch's [[BatchHistory]] record.
     *
     * Scale shape: candidates come from an LSH band-key equi-join (batch
     * bands ⋈ history bands, shuffled on (band, key) like x18), verified in
@@ -112,9 +95,6 @@ object IncrementalDedup {
                    minEstJaccard: Double = 0.9,
                    idCol: String = "doc_id",
                    textCol: String = "text"): DataFrame = {
-    val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(historyPath),
-      spark.sessionState.newHadoopConf())
     // raw-text token gate, not where(sig.isNotNull): the latter pushes a
     // signature-kernel-bearing predicate below the Project and runs the
     // kernel twice per doc (r16; see Dedup.minhashNearDupPairs)
@@ -128,31 +108,25 @@ object IncrementalDedup {
       .select(col("b").as(idCol))
     // (b) cross-batch: semi-join against earlier batches' signatures with
     // the verification in the join condition
-    val droppedCross =
-      if (fs.exists(new Path(historyPath))) {
-        val hist = spark.read.parquet(historyPath)
-          .where(col("batch") =!= batchId) // partition-pruned re-run guard
-          .select(col("sig").as("sig_h"))
-        val bandRows = explodeBands(sigs, col("sig"))
-        val histRows = explodeBands(hist, col("sig_h"))
-          .select(col("band"), col("bkey"), col("sig_h"))
-        import org.apache.spark.sql.{GraftSqlBridge => B}
-        val agree = B.column(graft.functions.ArrayEqCount(
-          B.expression(col("sig")), B.expression(col("sig_h"))))
-        bandRows.join(histRows,
-            bandRows("band") === histRows("band") &&
-              bandRows("bkey") === histRows("bkey") &&
-              round(agree / lit(16.0), 4) >= minEstJaccard,
-            "left_semi")
-          .select(col(idCol))
-      } else spark.emptyDataFrame.select(lit(0L).as(idCol)).limit(0)
+    val hist = BatchHistory.history(batch.sparkSession, historyPath,
+        "sig ARRAY<BIGINT>", batchId)
+      .select(col("sig").as("sig_h"))
+    val bandRows = explodeBands(sigs, col("sig"))
+    val histRows = explodeBands(hist, col("sig_h"))
+      .select(col("band"), col("bkey"), col("sig_h"))
+    import org.apache.spark.sql.{GraftSqlBridge => B}
+    val agree = B.column(graft.functions.ArrayEqCount(
+      B.expression(col("sig")), B.expression(col("sig_h"))))
+    val droppedCross = bandRows.join(histRows,
+        bandRows("band") === histRows("band") &&
+          bandRows("bkey") === histRows("bkey") &&
+          round(agree / lit(16.0), 4) >= minEstJaccard,
+        "left_semi")
+      .select(col(idCol))
     val dropped = droppedWithin.union(droppedCross).distinct()
     val survivors = sigs.join(dropped, Seq(idCol), "left_anti")
-    val pinned = Materialize(survivors.select("sig").distinct())
-    pinned.withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(historyPath)
+    BatchHistory.record(Materialize(survivors.select("sig").distinct()),
+      historyPath, batchId)
     batch.join(dropped, Seq(idCol), "left_anti")
   }
 
@@ -170,8 +144,7 @@ object IncrementalDedup {
     * Scale shape: only (fp: BIGINT, doc_id) pairs shuffle; the history
     * read is a single-column scan of the other batches' partitions; the
     * claim check is one left join + x85's keep-first window; survivors'
-    * distinct fingerprints land under `batch=batchId` with the same
-    * dynamic-overwrite retry contract as [[dedupBatch]].
+    * distinct fingerprints are the batch's [[BatchHistory]] record.
     *
     * Semantics notes: greedy like [[nearDupBatch]] — fingerprints of a
     * doc DROPPED this batch still claim (the doc that claimed them was
@@ -184,25 +157,14 @@ object IncrementalDedup {
                   idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
     require(dupFrac > 0 && dupFrac <= 1, s"dupFrac must be in (0,1], got $dupFrac")
-    val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(historyPath),
-      spark.sessionState.newHadoopConf())
     // the fingerprint table feeds the claim check AND the state write —
     // checkpoint so the kernel scan runs once (slim (id, fp) rows only)
     val fps = Materialize(batch.select(col(idCol),
         explode(graft.functions.TextHashFunctions.winnowSet(
           col(textCol), k, w)).as("fp")))
-    val hist =
-      if (fs.exists(new Path(historyPath)))
-        // explicit schema, not inference: a first batch whose docs all fall
-        // under k+w−1 tokens pins ZERO fingerprints, leaving historyPath
-        // holding only _SUCCESS — schema inference on that directory throws,
-        // while an explicit schema reads it as the empty relation it is
-        spark.read.schema("fp LONG, batch STRING").parquet(historyPath)
-          .where(col("batch") =!= batchId) // partition-pruned re-run guard
-          .select("fp").distinct()
-          .withColumn("__h", lit(1))
-      else fps.select("fp").limit(0).withColumn("__h", lit(1))
+    val hist = BatchHistory.history(batch.sparkSession, historyPath, "fp LONG",
+        batchId)
+      .distinct().withColumn("__h", lit(1))
     import org.apache.spark.sql.expressions.Window
     val win = Window.partitionBy("fp").orderBy(idCol)
     val dropped = fps
@@ -215,12 +177,8 @@ object IncrementalDedup {
         sum(when(col("claimed"), 1L).otherwise(0L)).as("n_cl"))
       .where(claimedAtLeast(col("n_cl"), col("n_fp"), dupFrac))
       .select(idCol)
-    val pinned = Materialize(fps.join(dropped, Seq(idCol), "left_anti")
-      .select("fp").distinct())
-    pinned.withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(historyPath)
+    BatchHistory.record(Materialize(fps.join(dropped, Seq(idCol), "left_anti")
+      .select("fp").distinct()), historyPath, batchId)
     batch.join(dropped, Seq(idCol), "left_anti")
   }
 
@@ -242,32 +200,21 @@ object IncrementalDedup {
     * back — claimed(doc) = n_chunks(doc) − #digests first-claimed by doc
     * that are also ABSENT from history — and n_chunks is closed-form from
     * the TokenCount kernel. Only 16-byte digests + slim id pairs shuffle.
-    *
-    * Retry contract: identical to [[dedupBatch]] (partition-pruned history
-    * read + dynamic-overwrite state write → a redelivered batch reproduces
-    * its original survivor set). The history read carries an explicit
-    * schema ([[winnowBatch]]'s guard): a first batch of token-free docs
-    * pins zero digests and leaves a data-free state dir. */
+    * The surviving docs' distinct chunk digests are the batch's
+    * [[BatchHistory]] record. */
   def passageBatch(batch: DataFrame, historyPath: String, batchId: String,
                    chunkTokens: Int = 30, dupFrac: Double = 0.8,
                    idCol: String = "doc_id",
                    textCol: String = "text"): DataFrame = {
     require(dupFrac > 0 && dupFrac <= 1,
       s"dupFrac must be in (0,1], got $dupFrac")
-    val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(historyPath),
-      spark.sessionState.newHadoopConf())
     // slim (id, off, digest) rows feed the claim check AND the state
     // write — checkpoint so the tokenize+md5 chunk pass runs once
     val chunks = Materialize(Dedup.passageChunks(
         batch.select(col(idCol), col(textCol)), chunkTokens, textCol)
       .select(col(idCol), col("off"), col("h")))
-    val hist =
-      if (fs.exists(new Path(historyPath)))
-        spark.read.schema("h BINARY, batch STRING").parquet(historyPath)
-          .where(col("batch") =!= batchId) // partition-pruned re-run guard
-          .select("h").distinct()
-      else chunks.select("h").limit(0)
+    val hist = BatchHistory.history(batch.sparkSession, historyPath, "h BINARY",
+      batchId).distinct()
     // per-digest keep-first (min struct), minus digests an earlier batch
     // already claimed → each doc's count of FRESH first-claims
     val freshFirsts = chunks
@@ -287,12 +234,8 @@ object IncrementalDedup {
         col("__n_chunks") - coalesce(col("__n_fresh"), lit(0L)),
         col("__n_chunks"), dupFrac))
       .select(idCol)
-    val pinned = Materialize(chunks.join(dropped, Seq(idCol), "left_anti")
-      .select("h").distinct())
-    pinned.withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(historyPath)
+    BatchHistory.record(Materialize(chunks.join(dropped, Seq(idCol), "left_anti")
+      .select("h").distinct()), historyPath, batchId)
     batch.join(dropped, Seq(idCol), "left_anti")
   }
 
@@ -321,27 +264,22 @@ object IncrementalDedup {
     * routes per-cell kernel vs salted join on the shared dimension-aware
     * gate, and only the slim (vec_id, v, cell) rows of SURVIVORS are
     * persisted (the state grows with the kept corpus, the minimum any
-    * semantic claim can carry). History reads are partition-pruned
-    * single-pass scans of the other batches.
-    *
-    * Retry contract: identical to [[dedupBatch]] — partition-pruned
-    * history read + dynamic-overwrite state write, so a redelivered batch
-    * reproduces its original survivor set against the original pinned
-    * centroids. Null-embedding rows carry no semantic signal and PASS
-    * THROUGH unpersisted (the token-free-doc treatment in the text
-    * tiers); vec_ids must be globally unique across batches (the same
-    * doc_id contract as every other tier). */
+    * semantic claim can carry) as the batch's [[BatchHistory]] record
+    * under `historyPath/vectors`; a redelivered batch claims against the
+    * original pinned centroids. Null-embedding rows carry no semantic
+    * signal and PASS THROUGH unpersisted (the token-free-doc treatment in
+    * the text tiers); vec_ids must be globally unique across batches (the
+    * same doc_id contract as every other tier). */
   def semanticBatch(batch: DataFrame, historyPath: String, batchId: String,
                     cents: DataFrame, threshold: Double,
                     idCol: String = "vec_id",
                     embCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(historyPath),
-      spark.sessionState.newHadoopConf())
     val centPath = s"$historyPath/centroids"
     val vecPath = s"$historyPath/vectors"
     val pinnedCents =
-      if (fs.exists(new Path(centPath))) spark.read.parquet(centPath)
+      if (new Path(centPath).getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(new Path(centPath))) spark.read.parquet(centPath)
       else {
         // double-cast ONCE at pin time so every batch assigns against
         // bit-identical centroid doubles
@@ -358,25 +296,15 @@ object IncrementalDedup {
       .select(col("vec_id"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"),
         col("cid").as("cell")))
-    val hist =
-      if (fs.exists(new Path(vecPath)))
-        // explicit schema ([[winnowBatch]]'s guard): a first batch of
-        // null-embedding rows pins zero vectors → data-free state dir
-        spark.read
-          .schema("vec_id LONG, v ARRAY<DOUBLE>, cell LONG, batch STRING")
-          .parquet(vecPath)
-          .where(col("batch") =!= batchId) // partition-pruned re-run guard
-          .select(col("cell"), lit(0).as("tag"), col("vec_id"), col("v"))
-      else assigned.limit(0)
-        .select(col("cell"), lit(0).as("tag"), col("vec_id"), col("v"))
+    val hist = BatchHistory.history(spark, vecPath,
+        "vec_id LONG, v ARRAY<DOUBLE>, cell LONG", batchId)
+      .select(col("cell"), lit(0).as("tag"), col("vec_id"), col("v"))
     val cells = hist.unionByName(assigned
       .select(col("cell"), lit(1).as("tag"), col("vec_id"), col("v")))
     val dropped = Dedup.semanticClaimedIds(cells, threshold)
-    val pinned = Materialize(assigned.join(dropped, Seq("vec_id"), "left_anti"))
-    pinned.withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(vecPath)
+    BatchHistory.record(
+      Materialize(assigned.join(dropped, Seq("vec_id"), "left_anti")),
+      vecPath, batchId)
     batch.join(dropped.withColumnRenamed("vec_id", idCol),
       Seq(idCol), "left_anti")
   }

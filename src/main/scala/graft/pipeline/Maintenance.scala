@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.engine.Materialize
 
@@ -26,16 +27,28 @@ import graft.engine.Materialize
   * dates a date-partitioned CDC feed no longer updates). */
 object Maintenance {
 
-  /** NAMING CONTRACT for batch-partitioned state tables: a table whose rows
-    * are aggregated COUNTS (so that readers SUM them and distinct() would
-    * corrupt the sum) must name its count column here; presence-based claim
-    * tables (digests/signatures/fingerprints/chunks/vectors) must NOT use
-    * these names. [[foldHistory]]'s structural guard keys on this set — a
-    * new count table whose column is missing here would be silently
-    * corrupted by a provenance-less fold (ADVICE r10). Current members:
-    * `n_kept`, the curation kept-counts shape
-    * ([[IncrementalCuration.curateBatch]]'s budget state). */
-  val AggregatedCountColumns: Set[String] = Set("n_kept")
+  /** Hive's directory name for the null partition value. */
+  private val NullDir = "__HIVE_DEFAULT_PARTITION__"
+
+  /** The `partitionCol=value` directories directly under `root` (none when
+    * it does not exist), each with its value. Directory names carry
+    * HIVE-ESCAPED values (':' → '%3A'); they are unescaped here, or escaped
+    * partitions would never match a column filter. The null partition keeps
+    * its directory name, [[NullDir]]. */
+  private def partitionDirs(fs: FileSystem, root: Path,
+                            partitionCol: String): Seq[(String, Path)] = {
+    val prefix = s"$partitionCol="
+    if (!fs.exists(root)) return Nil
+    fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .map(s => ExternalCatalogUtils.unescapePathName(
+        s.getPath.getName.substring(prefix.length)) -> s.getPath)
+  }
+
+  /** The filter selecting the partitions [[partitionDirs]] named `values`. */
+  private def partitionFilter(partitionCol: String, values: Seq[String]): Column =
+    Merge.partitionPredicate(col(partitionCol),
+      values.map(v => if (v == NullDir) null else v))
 
   /** Rewrite every partition of `path` that holds at least `minFiles`
     * parquet files into a single file per partition (hash-clustered by the
@@ -47,23 +60,11 @@ object Maintenance {
                         minFiles: Int = 2): Seq[String] = {
     val fs = FileSystem.get(new java.net.URI(path),
       spark.sessionState.newHadoopConf())
-    val prefix = s"$partitionCol="
-    val dirs = fs.listStatus(new Path(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-    // directory names carry HIVE-ESCAPED partition values (':' → '%3A', the
-    // null partition → __HIVE_DEFAULT_PARTITION__); the column filter needs
-    // the UNESCAPED values or escaped/null partitions silently never match
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val NullDir = "__HIVE_DEFAULT_PARTITION__"
-    val rawNames = dirs.filter { d =>
-      fs.listStatus(d.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) >= minFiles
-    }.map(_.getPath.getName.substring(prefix.length)).toSeq
-    if (rawNames.isEmpty) return Nil
-    val values: Seq[Any] = rawNames.filterNot(_ == NullDir)
-      .map(esc.unescapePathName)
-    val pred = Merge.partitionPredicate(col(partitionCol),
-      if (rawNames.contains(NullDir)) values :+ null else values)
+    val values = partitionDirs(fs, new Path(path), partitionCol).collect {
+      case (v, dir) if fs.listStatus(dir)
+          .count(_.getPath.getName.endsWith(".parquet")) >= minFiles => v
+    }
+    if (values.isEmpty) return Nil
     // mergeSchema: after a provenance [[foldHistory]] the label partition's
     // files carry `obatch` while unfolded partitions' files don't; the
     // default single-footer schema pick could then compact the label
@@ -72,14 +73,14 @@ object Maintenance {
     // the curation budget reader dedups on (lifecycle spec pins this).
     val compacted = Materialize.now(
       spark.read.option("mergeSchema", "true").parquet(path)
-        .where(pred) // partition-pruned scan
+        .where(partitionFilter(partitionCol, values)) // partition-pruned scan
         .repartition(col(partitionCol)),
       Materialize.WriteReplacesInput)
     compacted.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path)
-    rawNames.map(n => if (n == NullDir) n else esc.unescapePathName(n))
+    values
   }
 
   /** Fold FINALIZED batch partitions of an incremental-state table
@@ -90,20 +91,26 @@ object Maintenance {
     * volume, becomes the bottleneck (the 100 TB failure mode this table
     * layout would hit first).
     *
-    * The retry contract survives because the cross-batch readers exclude
-    * only `batch =!= batchId`: rows moved under `label` remain visible as
+    * The [[BatchHistory]] retry contract survives because its reads exclude
+    * only the reader's own batch: rows moved under `label` remain visible as
     * history to every batch, and a batch still in `protect` keeps its own
     * partition so its redelivery keeps excluding its own claims.
     * `protect` MUST therefore contain every batch that may still be
     * redelivered (in the tiers' crash-retry model: the latest batch);
-    * `label` must never collide with a real batch id.
+    * neither `label` nor `label.staged` may collide with a real batch id.
     *
-    * Crash-convergent BY SEMANTICS, no transaction log: the fold writes
-    * the merged label partition first (dynamic overwrite touches only
-    * `batch=label`), then deletes the folded partitions. A crash between
-    * the two leaves rows duplicated under label AND their old partition —
-    * harmless for CLAIM tables (presence-based semi/anti-join sources)
-    * and collapsed by the next fold's `distinct`. For tables whose rows
+    * Crash-convergent BY SEMANTICS, no transaction log: the fold records
+    * the merged rows (the folded partitions' and the label's) under a new
+    * partition `batch=label.staged`, deletes the folded partitions and the
+    * label, then renames the staged partition to the label. The label is
+    * never overwritten in place: Spark's dynamic overwrite deletes a
+    * partition before it renames the new one in, and a crash between the
+    * two would lose every row of earlier folds. A staged partition exists
+    * only complete, so a fold that finds one first finishes that swap. A
+    * crash before the swap leaves rows duplicated under the staged
+    * partition AND their old partition — harmless for CLAIM tables
+    * (presence-based semi/anti-join sources) and collapsed by the next
+    * fold's `distinct`. For tables whose rows
     * are AGGREGATED by readers (kept-counts: summed), pass
     * `provenance = true`: each row keeps its origin batch in an `obatch`
     * column (cross-batch readers project specific columns, so the extra
@@ -112,11 +119,11 @@ object Maintenance {
     * removes on the retry, and the reader's SUM over the folded rows
     * stays exact AFTER the retry. A reader that sums INSIDE the crash
     * window must additionally dedup on the (key, coalesce(obatch, batch))
-    * identity, or it double-counts rows present under both the label and
-    * their not-yet-deleted old partition —
-    * [[IncrementalCuration.curateBatch]]'s budget reader does exactly
-    * this (ADVICE r9), so for the counts table the window is invisible
-    * rather than an operational ordering requirement. Forgetting
+    * identity, or it double-counts rows present under both the merged
+    * partition and their not-yet-deleted old partition —
+    * [[BatchHistory.history]] does exactly this for every count table
+    * (ADVICE r9), so for those the window is invisible rather than an
+    * operational ordering requirement. Forgetting
     * `provenance = true` on such a table is a silent corruption
     * (distinct() collapses legitimately identical (source, n_kept) rows
     * from different batches), so it is guarded structurally below, not by
@@ -130,47 +137,48 @@ object Maintenance {
       s"label '$label' cannot be a protected batch id")
     val fs = FileSystem.get(new java.net.URI(path),
       spark.sessionState.newHadoopConf())
-    val root = new Path(path)
-    if (!fs.exists(root)) return Nil
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val prefix = "batch="
-    val dirByValue: Map[String, String] = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map(_.getPath.getName)
-      .map(n => esc.unescapePathName(n.substring(prefix.length)) -> n)
-      .toMap
-    val candidates = dirByValue.keys
+    def dir(value: String) = new Path(path,
+      "batch=" + ExternalCatalogUtils.escapePathName(value))
+    val staged = s"$label.staged"
+    def swap(): Unit = {
+      fs.delete(dir(label), true)
+      if (!fs.rename(dir(staged), dir(label)))
+        throw new java.io.IOException(s"cannot rename ${dir(staged)} to ${dir(label)}")
+    }
+    if (fs.exists(dir(staged))) swap()
+    val dirs = partitionDirs(fs, new Path(path), "batch").toMap
+    val candidates = dirs.keys
       .filterNot(protect).filterNot(_ == label).toSeq.sorted
     if (candidates.isEmpty) return Nil
     // mergeSchema: after a provenance fold the label partition's files
     // carry `obatch` while unfolded batch partitions don't — a plain read
     // would pick one file's schema at random
     val base = spark.read.option("mergeSchema", "true").parquet(path)
-      .where(col("batch").isin((candidates :+ label).map(x => x: Any): _*))
+      .where(partitionFilter("batch", candidates :+ label))
     // Structural guard (ADVICE r9): an aggregated table folded without
     // provenance silently shrinks reader SUMs — drop(batch).distinct()
     // collapses legitimately distinct rows like (s1, n_kept=2) from two
     // different batches into one. The marker is the DECLARED
-    // [[AggregatedCountColumns]] set (ADVICE r10: a literal "n_kept" here
-    // would let a future count table under a different name bypass the
-    // guard silently); claim tables (digests/signatures/fingerprints/
-    // chunks/vectors) are presence-based and never carry any of them.
-    val aggCols = base.columns.toSet.intersect(AggregatedCountColumns)
+    // [[BatchHistory.AggregatedCountColumns]] set (ADVICE r10: a literal
+    // "n_kept" here would let a future count table under a different name
+    // bypass the guard silently); claim tables (digests/signatures/
+    // fingerprints/chunks/vectors) are presence-based and never carry any
+    // of them.
+    val aggCols = base.columns.toSet.intersect(BatchHistory.AggregatedCountColumns)
     require(provenance || aggCols.isEmpty,
       s"$path carries aggregated count column(s) ${aggCols.mkString(", ")}; " +
         "folding without provenance = true would corrupt reader SUMs")
-    val merged = Materialize.now((if (provenance) {
+    // no eager hold: the staged partition is not among the rows it reads
+    val merged = (if (provenance) {
         val withO =
           if (base.columns.contains("obatch"))
             base.withColumn("obatch", coalesce(col("obatch"), col("batch")))
           else base.withColumn("obatch", col("batch"))
         withO.drop("batch")
-      } else base.drop("batch"))
-      .distinct(), Materialize.WriteReplacesInput)
-    merged.withColumn("batch", lit(label)).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(path)
-    candidates.foreach(v => fs.delete(new Path(root, dirByValue(v)), true))
+      } else base.drop("batch")).distinct()
+    BatchHistory.record(merged, path, staged)
+    candidates.foreach(v => fs.delete(dirs(v), true))
+    swap()
     candidates
   }
 }

@@ -142,8 +142,8 @@ class DriverBoundSpec extends AnyFunSuite {
       "materializations", "pass the intermediate through graft.engine.Materialize")
     audit(siteCounts("src/main/scala/graft", "Materialize\\.now\\("), Map(
       "Merge.scala" -> (1, "upsertByKey: the merge overwrites the partitions it reads"),
-      "Maintenance.scala" -> (2, "compactPartitions and foldHistory overwrite " +
-        "the partitions they read"),
+      "Maintenance.scala" -> (1, "compactPartitions overwrites the partitions " +
+        "it reads"),
       "TextAnalysis.scala" -> (1, "pmiCollocations: the count table's first " +
         "consumers are broadcast builds racing on Spark's broadcast pool")),
       "eager materializations", "use the lazy Materialize, or declare the " +
@@ -167,6 +167,16 @@ class DriverBoundSpec extends AnyFunSuite {
         "declare the input guard with its reason")
     audit(siteCounts("src", "ScalePolicy\\.route\\("), Map.empty,
       "bare route records", "decide through ScalePolicy.probe, probeCount or probeRows")
+  }
+
+  test("batch state is written and its re-run guard applied only in " +
+    "BatchHistory") {
+    audit(siteCounts("src/main/scala",
+      "partitionBy\\(\"batch\"\\)|col\\(\"batch\"\\)\\s*=!=|=!=\\s*batchId"),
+      Map("BatchHistory.scala" -> (3, "record's batch-partitioned write, " +
+        "history's partition filter and its origin-batch filter for count tables")),
+      "batch-state writes and batch-exclusion filters",
+      "read and write batch state through graft.pipeline.BatchHistory")
   }
 
   test("operators route on their input's partitioning, not a flag") {

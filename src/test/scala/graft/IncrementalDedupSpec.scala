@@ -4,7 +4,9 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.IncrementalDedup
+import org.apache.spark.sql.DataFrame
+
+import graft.pipeline.{IncrementalCuration, IncrementalDedup}
 
 /** Cross-batch exact dedup over a persistent digest history: within-batch
   * keep-first, cross-batch anti-join, and the retry contract (re-running a
@@ -150,34 +152,54 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(s2r.select("doc_id").as[Long].collect().toSeq == Seq(60L))
   }
 
-  test("passageBatch bootstrap: a token-free first batch leaves a " +
-    "data-free history dir the next batch must still read") {
-    val hist = Files.createTempDirectory("graft_pg_boot").toString + "/h"
-    val b1 = Seq((10L, "   "), (20L, " ")).toDF("doc_id", "text")
-    val s1 = IncrementalDedup.passageBatch(b1, hist, "b1")
-    assert(s1.select("doc_id").as[Long].collect().sorted.toSeq ==
-      Seq(10L, 20L))
+  /** A first batch that records no state rows leaves a history dir holding
+    * only `_SUCCESS`; the next batch must still read it and keep exactly
+    * its survivors. Each case: (test name, tier over (batch, history path,
+    * batch id), first batch, its survivors, next batch, its survivors);
+    * batches are (doc_id, text) rows of source s1. */
+  private val bootstrapCases: Seq[(String, (DataFrame, String, String) => DataFrame,
+      Seq[(Long, String)], Seq[Long], Seq[(Long, String)], Seq[Long])] = {
     val w = (1 to 30).map(i => s"c$i").mkString(" ")
-    val b2 = Seq((30L, w), (40L, w)).toDF("doc_id", "text")
-    val s2 = IncrementalDedup.passageBatch(b2, hist, "b2") // must not throw
-    assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(30L))
-  }
-
-  test("winnowBatch bootstrap: an all-short first batch leaves a data-free " +
-    "history dir the next batch must still read") {
-    val hist = Files.createTempDirectory("graft_fp_boot").toString + "/h"
-    // every doc under k+w-1 = 8 tokens: zero fingerprints pinned, so the
-    // state write produces historyPath holding only _SUCCESS — schema
-    // inference on that directory would throw (ADVICE r5)
-    val b1 = Seq((10L, "too short"), (20L, "also brief")).toDF("doc_id", "text")
-    val s1 = IncrementalDedup.winnowBatch(b1, hist, "b1")
-    assert(s1.select("doc_id").as[Long].collect().sorted.toSeq == Seq(10L, 20L))
-
     val runC = (1 to 12).map(i => s"c$i").mkString(" ")
-    val b2 = Seq((30L, runC), (40L, runC)).toDF("doc_id", "text")
-    val s2 = IncrementalDedup.winnowBatch(b2, hist, "b2") // must not throw
-    assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(30L))
+    Seq(
+      ("passageBatch bootstrap: a token-free first batch leaves a " +
+        "data-free history dir the next batch must still read",
+        IncrementalDedup.passageBatch(_, _, _),
+        Seq(10L -> "   ", 20L -> " "), Seq(10L, 20L),
+        Seq(30L -> w, 40L -> w), Seq(30L)),
+      // every doc under k+w-1 = 8 tokens: zero fingerprints pinned
+      ("winnowBatch bootstrap: an all-short first batch leaves a data-free " +
+        "history dir the next batch must still read",
+        IncrementalDedup.winnowBatch(_, _, _),
+        Seq(10L -> "too short", 20L -> "also brief"), Seq(10L, 20L),
+        Seq(30L -> runC, 40L -> runC), Seq(30L)),
+      ("dedupBatch bootstrap: an empty first batch leaves a data-free " +
+        "history dir the next batch must still read",
+        IncrementalDedup.dedupBatch(_, _, _),
+        Nil, Nil, Seq(30L -> w, 40L -> w), Seq(30L)),
+      ("nearDupBatch bootstrap: a token-free first batch leaves a " +
+        "data-free history dir the next batch must still read",
+        IncrementalDedup.nearDupBatch(_, _, _),
+        Seq(10L -> "   ", 20L -> " "), Seq(10L, 20L),
+        Seq(30L -> w, 40L -> w), Seq(30L)),
+      ("curateBatch bootstrap: an empty first batch leaves data-free digest " +
+        "and count dirs the next batch must still read",
+        (b, h, id) => IncrementalCuration.curateBatch(b, h, id,
+          Seq(("s1", 0.5)).toDF("source", "thr"), 5),
+        Nil, Nil,
+        Seq(30L -> "the dog of peace", 40L -> "the dog of peace"), Seq(30L)))
   }
+
+  for ((name, tier, first, firstKept, next, nextKept) <- bootstrapCases)
+    test(name) {
+      val hist = Files.createTempDirectory("graft_boot").toString + "/h"
+      def kept(rows: Seq[(Long, String)], batchId: String) = tier(
+          rows.map { case (id, t) => (id, "s1", t) }
+            .toDF("doc_id", "source", "text"), hist, batchId)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(kept(first, "b1") == firstKept)
+      assert(kept(next, "b2") == nextKept) // must not throw
+    }
 
   test("dupFrac boundary is exact-rational, not IEEE: a doc with exactly " +
     "claimed/total == dupFrac drops even where the double product rounds up") {
@@ -238,6 +260,40 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(s2r.select("vec_id").as[Long].collect().sorted.toSeq ==
       Seq(21L, 23L))
     assert(spark.read.parquet(s"$hist/vectors").count() == 3)
+  }
+
+  test("semanticBatch on sf0.001 embeddings: the kernel and salted-join " +
+    "claim routes keep identical survivors and vectors state over three " +
+    "batches and a re-delivery") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    val emb = spark.read.parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
+    val cents = emb.where(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+    def run() = routes("semanticClaimedIds") {
+      val hist = Files.createTempDirectory("graft_sem_sf").toString + "/h"
+      val kept = Seq(0, 1, 2, 2).map { k =>
+        IncrementalDedup.semanticBatch(emb.where(pmod(col("vec_id"), lit(3)) === k),
+            hist, s"b$k", cents, 0.4)
+          .select("vec_id").as[Long].collect().sorted.toSeq
+      }
+      val vectors = spark.read.parquet(s"$hist/vectors")
+        .select("batch", "vec_id", "cell", "v")
+        .as[(String, Long, Long, Seq[Double])].collect().sortBy(r => (r._1, r._2))
+        .toSeq
+      (kept, vectors)
+    }
+    val ((kept, vectors), kernelRoutes) = run()
+    val (atScaleRun, joinRoutes) = atScale(run())
+    assert(kernelRoutes.toSet == Set("kernel") && kernelRoutes.size == 4)
+    assert(joinRoutes.toSet == Set("join") && joinRoutes.size == 4)
+    assert(atScaleRun == ((kept, vectors)))
+    assert(kept(3) == kept(2), "the re-delivered batch keeps its survivors")
+    val inputs = (0 until 3).map(k =>
+      emb.where(pmod(col("vec_id"), lit(3)) === k).count())
+    assert(kept.take(3).map(_.size.toLong).zip(inputs).forall { case (s, n) => s < n },
+      "every batch drops some vectors")
+    assert(vectors.map(_._2).sorted == kept.take(3).flatten.sorted,
+      "the state holds each batch's survivors once")
   }
 
   test("semanticClaimedIds: kernel route ≡ salted join route, history " +
